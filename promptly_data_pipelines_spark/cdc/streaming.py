@@ -23,7 +23,6 @@ from __future__ import annotations
 import glob
 import math
 import os
-import re
 import shutil
 import tempfile
 import time
@@ -34,7 +33,18 @@ from pyspark.sql import types as T
 
 from ..catalog import table
 from ..functions import ts_str
+from ..operators import snapshot_store
+from ..operators.snapshot_store import (
+    branch_snapshot,
+    changelog_frame,
+    merge_branch,
+    read_upsert_target,
+    tag_snapshot,
+    upsert_changelog,
+    upsert_history,
+)
 from ..registry import query
+from ..session import scoped_session
 from .batch import merge_upsert_frames
 from .envelope import decode_envelopes, synthesize_envelopes
 
@@ -149,760 +159,6 @@ def route_by_op(decoded: DataFrame) -> dict[str, DataFrame]:
     return {"upserts": upserts, "deletes": deletes}
 
 
-def _committed_snapshot(spark: SparkSession, target_path: str) -> str | None:
-    """Resolve the committed snapshot dir: the _LATEST pointer if
-    readable, else the highest-batch complete (``_SUCCESS``-marked)
-    ``snap-N`` dir, else None. The fallback makes pointer corruption
-    recoverable instead of fatal."""
-    from ..operators.fs import FileSystemOps
-
-    fs = FileSystemOps(spark)
-    ptr = f"{target_path}/_LATEST"
-    if fs.exists(ptr):
-        name = fs.get_text(ptr).strip()
-        if name and fs.exists(f"{target_path}/{name}/_SUCCESS"):
-            return f"{target_path}/{name}"
-    if not fs.exists(target_path):
-        return None
-    snaps = [
-        p
-        for p in fs.list_paths(target_path)
-        if p.rsplit("/", 1)[-1].startswith("snap-")
-        and fs.exists(f"{p}/_SUCCESS")
-    ]
-    if not snaps:
-        # a BRANCH root (:func:`branch_snapshot`) with no commits of
-        # its own reads as its fork base — the main-store snapshot the
-        # _BASE pointer names. The base is PINNED against main's GC
-        # while the branch exists (see _pinned_batch_ids), so a
-        # missing base is a real error, not a race to paper over.
-        base_ptr = f"{target_path}/_BASE"
-        if fs.exists(base_ptr):
-            base = fs.get_text(base_ptr).strip()
-            parent = target_path.rstrip("/").rsplit("/", 1)[0]
-            cand = f"{parent}/{base}"
-            if fs.exists(f"{cand}/_SUCCESS"):
-                return cand
-            raise FileNotFoundError(
-                f"branch base {base} under {parent} is missing or "
-                "uncommitted — the branch outlived its fork point"
-            )
-        return None
-    return max(snaps, key=lambda p: int(p.rsplit("-", 1)[-1]))
-
-
-def read_upsert_target(
-    spark: SparkSession,
-    target_path: str,
-    as_of_batch: int | None = None,
-    as_of_tag: str | None = None,
-) -> DataFrame:
-    """Read an ``upsert_sink`` target: the committed state, or — TIME
-    TRAVEL — the state exactly as of micro-batch ``as_of_batch``, or
-    as of a NAMED TAG (:func:`tag_snapshot`, the Nessie/Iceberg
-    ``VERSION AS OF 'tag'`` role; the reference's catalog is Nessie —
-    infra/trino/etc/catalog/iceberg.properties:1-5).
-    Every ``snap-N`` dir IS the full merged table after batch N (the
-    sink writes immutable snapshots and flips a pointer, the poor
-    man's Iceberg/Delta commit log), so reading history costs one
-    directory resolve, no replay. Raises a CLEAR error when the
-    requested snapshot has been expired by the sink's retention or
-    :func:`expire_snapshots` — never a silent fallback to a different
-    version (a training job reading 'yesterday's table' must fail
-    loudly if yesterday is gone, not read today's).
-
-    CONCURRENCY CONTRACT (r14 advice): the returned DataFrame is LAZY
-    — the existence check here does not pin the snapshot for the
-    reader's later action. Retention must cover in-flight readers:
-    ``keep_last``/``keep_snapshots`` protect the committed snapshot
-    and its predecessor only, so a maintenance job running
-    :func:`expire_snapshots` concurrently with an ``as_of_batch`` read
-    of an OLDER batch can delete the dir mid-read. Either size
-    ``keep_last`` to the oldest batch any live reader uses, or — the
-    durable form — :func:`tag_snapshot` the batch first and read
-    ``as_of_tag=``: tagged snapshots are pinned against both
-    :func:`expire_snapshots` and the sink's own GC until the tag is
-    deleted."""
-    if as_of_batch is not None and as_of_tag is not None:
-        raise ValueError("pass at most one of as_of_batch / as_of_tag")
-    if as_of_tag is not None:
-        as_of_batch = _resolve_tag(spark, target_path, as_of_tag)
-    snap = _committed_snapshot(spark, target_path)
-    if snap is None:
-        raise FileNotFoundError(f"no committed snapshot under {target_path}")
-    if as_of_batch is None:
-        return spark.read.parquet(snap)
-    from ..operators.fs import FileSystemOps
-
-    fs = FileSystemOps(spark)
-    committed_id = int(snap.rsplit("-", 1)[-1])
-    requested = f"{target_path}/snap-{as_of_batch}"
-    # Both conditions are required: the dir must exist AND be at or
-    # below the COMMITTED batch. A crash after snap-N's parquet write
-    # but before the pointer flip leaves an orthographically-valid
-    # snap-N that was never committed — and the engine's redelivery
-    # will overwrite it in place on restart, so serving it would hand
-    # a reader torn state (r14 review finding).
-    if as_of_batch > committed_id or not fs.exists(f"{requested}/_SUCCESS"):
-        kept = sorted(
-            h["batch_id"]
-            for h in upsert_history(spark, target_path)
-            if h["batch_id"] <= committed_id
-        )
-        raise FileNotFoundError(
-            f"snapshot snap-{as_of_batch} not available under {target_path} "
-            f"(committed: snap-{committed_id}; retained batches: "
-            f"{kept or 'none'}) — expired by retention or never committed"
-        )
-    return spark.read.parquet(requested)
-
-
-def upsert_history(spark: SparkSession, target_path: str) -> list[dict]:
-    """Observability: the retained snapshot log of an ``upsert_sink``
-    target as [{batch_id, committed}] (committed = the _LATEST
-    pointer's current target), newest first — what Iceberg exposes as
-    the snapshots metadata table."""
-    from ..operators.fs import FileSystemOps
-
-    fs = FileSystemOps(spark)
-    if not fs.exists(target_path):
-        return []
-    committed = _committed_snapshot(spark, target_path)
-    committed_name = committed.rsplit("/", 1)[-1] if committed else None
-    out = []
-    for p in fs.list_paths(target_path):
-        name = p.rsplit("/", 1)[-1]
-        if name.startswith("snap-") and fs.exists(f"{p}/_SUCCESS"):
-            out.append(
-                {
-                    "batch_id": int(name.split("-", 1)[1]),
-                    "committed": name == committed_name,
-                }
-            )
-    return sorted(out, key=lambda h: -h["batch_id"])
-
-
-_TAG_NAME_RE = re.compile(r"^[A-Za-z0-9][A-Za-z0-9._-]*$")
-
-
-def _tag_pointer(target_path: str, name: str) -> str:
-    if not _TAG_NAME_RE.match(name):
-        raise ValueError(
-            f"invalid tag name {name!r}: must be alphanumeric plus ._- "
-            "and start with an alphanumeric"
-        )
-    return f"{target_path}/_TAG-{name}"
-
-
-def _tag_tmp(target_path: str, name: str) -> str:
-    return f"{target_path}/_TAG.tmp-{name}"
-
-
-def _recover_tag_tmps(fs, target_path: str) -> None:
-    """Crash recovery for interrupted tag moves (r15 judge finding #2).
-    ``tag_snapshot`` commits via put_text(tmp) → delete(ptr) →
-    rename(tmp, ptr); a crash in the window between delete and rename
-    leaves the tag with NO pointer — and since tags are the GC pinning
-    mechanism, a maintenance pass in that state would silently delete
-    the pinned snapshot. For every ``_TAG.tmp-<name>``:
-
-    - pointer MISSING → the move was past the point of no return
-      (only the delete-then-rename window loses the pointer):
-      COMPLETE it by renaming tmp → ptr, mirroring ``_LATEST``'s
-      ``_SUCCESS``-fallback philosophy of never letting a crash
-      window lose committed intent;
-    - pointer PRESENT → the crash was before the delete (a re-point
-      intent that never reached its commit point — rename consumes the
-      tmp, so a surviving tmp never belongs to a completed move):
-      DELETE the tmp, aborting the intent cleanly — the pointer still
-      names the previously pinned snapshot.
-
-    Idempotent and safe to run from every reader and every
-    maintenance pass; without the sweep arm, a leaked tmp lives
-    forever (gc_superseded swept only ``_LATEST.tmp-*``)."""
-    if not fs.exists(target_path):
-        return
-    for p in fs.list_paths(target_path):
-        fname = p.rsplit("/", 1)[-1]
-        if not fname.startswith("_TAG.tmp-"):
-            continue
-        name = fname[len("_TAG.tmp-"):]
-        ptr = _tag_pointer(target_path, name)
-        if fs.exists(ptr):
-            fs.delete(p)
-        else:
-            fs.rename(p, ptr)
-
-
-def _resolve_tag(spark: SparkSession, target_path: str, name: str) -> int:
-    """Resolve a named tag to its pinned batch id, or raise loudly.
-    A missing pointer first runs tmp recovery (:func:`_recover_tag_tmps`)
-    so a crash mid-``tag_snapshot`` re-point never reads as a lost tag."""
-    from ..operators.fs import FileSystemOps
-
-    fs = FileSystemOps(spark)
-    ptr = _tag_pointer(target_path, name)
-    if not fs.exists(ptr):
-        _recover_tag_tmps(fs, target_path)
-    if not fs.exists(ptr):
-        known = sorted(list_tags(spark, target_path))
-        raise FileNotFoundError(
-            f"tag {name!r} not found under {target_path} "
-            f"(known tags: {known or 'none'})"
-        )
-    snap_name = fs.get_text(ptr).strip()
-    return int(snap_name.rsplit("-", 1)[-1])
-
-
-def tag_snapshot(
-    spark: SparkSession,
-    target_path: str,
-    name: str,
-    batch_id: int | None = None,
-) -> int:
-    """Create (or move) a NAMED TAG over an ``upsert_sink`` snapshot —
-    the catalog role the reference delegates to Nessie (branch/tag refs
-    over Iceberg snapshots, infra/trino/etc/catalog/iceberg.properties:
-    1-5). ``batch_id=None`` tags the currently-committed snapshot.
-    A tagged snapshot is PINNED: neither :func:`expire_snapshots` nor
-    the sink's own superseded-snapshot GC will delete it while the tag
-    exists, so ``read_upsert_target(..., as_of_tag=name)`` is safe
-    against concurrent maintenance (unlike a raw ``as_of_batch`` read
-    — see the concurrency contract there). The tag pointer commits via
-    the same temp-file+rename discipline as ``_LATEST`` (a reader or
-    crash mid-write never sees a truncated pointer), and re-pointing
-    an EXISTING tag is crash-recoverable: the delete-then-rename
-    window (local/HDFS rename won't overwrite) is covered by
-    :func:`_recover_tag_tmps`, which every resolve, listing, and
-    maintenance pass runs — a crash between delete and rename leaves
-    the tmp, and recovery completes the move instead of losing the
-    tag (r15 judge finding: a lost tag silently unpins its snapshot).
-    Returns the pinned batch id."""
-    from ..operators.fs import FileSystemOps
-
-    fs = FileSystemOps(spark)
-    ptr = _tag_pointer(target_path, name)
-    if batch_id is None:
-        snap = _committed_snapshot(spark, target_path)
-        if snap is None:
-            raise FileNotFoundError(f"no committed snapshot under {target_path}")
-        batch_id = int(snap.rsplit("-", 1)[-1])
-    snap_name = f"snap-{batch_id}"
-    if not fs.exists(f"{target_path}/{snap_name}/_SUCCESS"):
-        raise FileNotFoundError(
-            f"cannot tag {snap_name}: no committed snapshot dir under "
-            f"{target_path} (expired or never committed)"
-        )
-    tmp = _tag_tmp(target_path, name)
-    fs.put_text(tmp, snap_name)
-    fs.delete(ptr)
-    if not fs.rename(tmp, ptr):
-        # a concurrent recovery pass may have promoted (or swept) the
-        # tmp between our delete and rename; the pointer write must
-        # still win, so fall back to a direct overwrite-create — the
-        # content is a short atomic-enough single block, and losing
-        # the tag here would unpin the snapshot (the failure mode this
-        # whole dance exists to prevent)
-        fs.put_text(ptr, snap_name)
-        fs.delete(tmp)
-    return batch_id
-
-
-def delete_tag(spark: SparkSession, target_path: str, name: str) -> None:
-    """Drop a named tag. The snapshot it pinned becomes eligible for
-    the normal retention rules on the NEXT maintenance/GC pass —
-    deleting a tag never deletes data by itself. The tag's tmp file
-    (if a crashed re-point left one) is deleted FIRST: removing the
-    pointer alone would let :func:`_recover_tag_tmps` promote the
-    stale tmp and resurrect the tag."""
-    from ..operators.fs import FileSystemOps
-
-    fs = FileSystemOps(spark)
-    fs.delete(_tag_tmp(target_path, name))
-    fs.delete(_tag_pointer(target_path, name))
-
-
-def list_tags(spark: SparkSession, target_path: str) -> dict[str, int]:
-    """All named tags as {name: batch_id}, the Nessie ref listing.
-    Runs tmp recovery first so a crash-interrupted re-point
-    (:func:`_recover_tag_tmps`) is visible — critical because GC's
-    pin set is derived from this listing."""
-    from ..operators.fs import FileSystemOps
-
-    fs = FileSystemOps(spark)
-    if not fs.exists(target_path):
-        return {}
-    _recover_tag_tmps(fs, target_path)
-    out: dict[str, int] = {}
-    for p in fs.list_paths(target_path):
-        fname = p.rsplit("/", 1)[-1]
-        if fname.startswith("_TAG-"):
-            snap_name = fs.get_text(p).strip()
-            out[fname[len("_TAG-"):]] = int(snap_name.rsplit("-", 1)[-1])
-    return out
-
-
-def _tagged_batch_ids(spark: SparkSession, target_path: str) -> set[int]:
-    return set(list_tags(spark, target_path).values())
-
-
-def _branch_root(target_path: str, name: str) -> str:
-    if not _TAG_NAME_RE.match(name):
-        raise ValueError(
-            f"invalid branch name {name!r}: must be alphanumeric plus ._- "
-            "and start with an alphanumeric"
-        )
-    return f"{target_path}/_BRANCH-{name}"
-
-
-def branch_snapshot(
-    spark: SparkSession,
-    target_path: str,
-    name: str,
-    batch_id: int | None = None,
-) -> int:
-    """Create a WRITABLE BRANCH over an ``upsert_sink`` target — the
-    remaining Nessie semantic after r15's tags (the reference's
-    catalog is Nessie: infra/trino/etc/catalog/iceberg.properties:1-5;
-    branch/merge over Iceberg snapshots is its headline feature).
-    ``batch_id=None`` forks from the currently-committed snapshot.
-
-    A branch is a sub-store at ``<target>/_BRANCH-<name>`` whose
-    ``_BASE`` pointer names the main-store snapshot it forked from:
-    every store operation (``upsert_sink`` with ``branch=``,
-    ``read_upsert_target`` on the branch root via :func:`read_branch`,
-    tags, expiry) works on the branch unchanged because the branch IS
-    a snap-dir store — its first commit merges against the base
-    through ``_committed_snapshot``'s _BASE fallback, with NO copy of
-    the base data (at 100 TB a fork is one pointer file). The base
-    snapshot is PINNED against main's retention/GC while the branch
-    exists, exactly like a tag. Returns the base batch id."""
-    from ..operators.fs import FileSystemOps
-
-    fs = FileSystemOps(spark)
-    broot = _branch_root(target_path, name)
-    if fs.exists(f"{broot}/_BASE"):
-        raise ValueError(f"branch {name!r} already exists under {target_path}")
-    if batch_id is None:
-        snap = _committed_snapshot(spark, target_path)
-        if snap is None:
-            raise FileNotFoundError(f"no committed snapshot under {target_path}")
-        batch_id = int(snap.rsplit("-", 1)[-1])
-    snap_name = f"snap-{batch_id}"
-    if not fs.exists(f"{target_path}/{snap_name}/_SUCCESS"):
-        raise FileNotFoundError(
-            f"cannot branch from {snap_name}: no committed snapshot dir "
-            f"under {target_path} (expired or never committed)"
-        )
-    fs.mkdirs(broot)
-    fs.put_text(f"{broot}/_BASE", snap_name)
-    return batch_id
-
-
-def list_branches(spark: SparkSession, target_path: str) -> dict[str, int]:
-    """All live branches as {name: base_batch_id} — the Nessie ref
-    listing, writable side. A ``_BRANCH-`` dir without a ``_BASE``
-    (a crash between mkdirs and the pointer write) is not a branch."""
-    from ..operators.fs import FileSystemOps
-
-    fs = FileSystemOps(spark)
-    if not fs.exists(target_path):
-        return {}
-    out: dict[str, int] = {}
-    for p in fs.list_paths(target_path):
-        fname = p.rsplit("/", 1)[-1]
-        if fname.startswith("_BRANCH-") and fs.exists(f"{p}/_BASE"):
-            base = fs.get_text(f"{p}/_BASE").strip()
-            out[fname[len("_BRANCH-"):]] = int(base.rsplit("-", 1)[-1])
-    return out
-
-
-def delete_branch(spark: SparkSession, target_path: str, name: str) -> None:
-    """Drop a branch and every snapshot it committed. Main-store data
-    is untouched; the fork-base snapshot becomes eligible for normal
-    retention on the next maintenance pass (same contract as
-    :func:`delete_tag`)."""
-    from ..operators.fs import FileSystemOps
-
-    FileSystemOps(spark).delete(_branch_root(target_path, name), recursive=True)
-
-
-def read_branch(spark: SparkSession, target_path: str, name: str) -> DataFrame:
-    """Read a branch's committed state (the fork base until the branch
-    commits its first batch). Time travel within the branch works via
-    ``read_upsert_target(spark, <branch root>, as_of_batch=...)``."""
-    broot = _branch_root(target_path, name)
-    from ..operators.fs import FileSystemOps
-
-    if not FileSystemOps(spark).exists(f"{broot}/_BASE"):
-        raise FileNotFoundError(
-            f"branch {name!r} not found under {target_path} "
-            f"(known branches: {sorted(list_branches(spark, target_path)) or 'none'})"
-        )
-    return read_upsert_target(spark, broot)
-
-
-def merge_branch(
-    spark: SparkSession,
-    target_path: str,
-    name: str,
-    key: str | None = None,
-    allow_rebase: bool = False,
-    on_conflict: str = "fail",
-) -> int:
-    """Merge a branch back into main — Nessie's merge. Two modes:
-
-    **Fast-forward** (the default, always safe): main's committed
-    snapshot must still BE the branch's fork base. Then the branch's
-    committed state is by construction main-prefix + branch batches
-    (a pure latest-wins fold), so the merge is a zero-copy RENAME of
-    the branch's committed snap dir into main under a freshly minted
-    id, followed by the usual pointer flip. If main moved since the
-    fork, this raises a LOUD conflict — silently re-folding divergent
-    writes is exactly what a catalog must never do.
-
-    **Rebase** (``allow_rebase=True``, requires ``key``): when main
-    HAS moved, re-apply the branch's delta onto main's head — the
-    Nessie content-aware merge. The branch delta is the set of rows
-    that differ from the fork base (:func:`_changelog_frame`, so it
-    is union-schema and null-safe); a key changed on BOTH sides since
-    the base is a CONTENT CONFLICT: ``on_conflict='fail'`` (default)
-    raises with the count and sample keys, ``'branch'`` lets the
-    branch's version win on conflicting keys, ``'main'`` keeps
-    main's. Non-conflicting branch changes always apply. The merged
-    state is written as a NEW main snapshot — unlike fast-forward
-    this moves data (one write of the merged table), the honest cost
-    of a real rebase; the plan is two key-partitioned diff joins + an
-    anti-join + union, no cartesian anywhere.
-
-    The merge CONSUMES the branch (fast-forward renames its committed
-    dir away; rebase supersedes it); a crash between the pointer
-    flip and the branch delete leaves a stale branch whose next merge
-    attempt fails the conflict check — delete it with
-    :func:`delete_branch`. Returns the new committed main batch id.
-
-    Scale posture: fast-forward is rename + two pointer files — no
-    data movement at any size. The minted id is max(retained main
-    ids) + 1; the sink's id minting (``snap_id = max(engine batch id,
-    committed + 1)``) keeps main's own subsequent commits monotonic
-    past it."""
-    if on_conflict not in ("fail", "branch", "main"):
-        raise ValueError(
-            f"on_conflict must be 'fail', 'branch', or 'main', got {on_conflict!r}"
-        )
-    from ..operators.fs import FileSystemOps
-
-    fs = FileSystemOps(spark)
-    broot = _branch_root(target_path, name)
-    if not fs.exists(f"{broot}/_BASE"):
-        raise FileNotFoundError(
-            f"branch {name!r} not found under {target_path} "
-            f"(known branches: {sorted(list_branches(spark, target_path)) or 'none'})"
-        )
-    base_name = fs.get_text(f"{broot}/_BASE").strip()
-    main_snap = _committed_snapshot(spark, target_path)
-    if main_snap is None:
-        raise FileNotFoundError(f"no committed snapshot under {target_path}")
-    main_name = main_snap.rsplit("/", 1)[-1]
-    if main_name != base_name:
-        if not allow_rebase:
-            raise ValueError(
-                f"merge conflict: main committed {main_name} but branch "
-                f"{name!r} forked from {base_name} — main moved since the "
-                "fork; re-branch from the head and replay the changes, or "
-                "pass allow_rebase=True (with key=) for a content-aware "
-                "rebase merge"
-            )
-        if key is None:
-            raise ValueError("allow_rebase=True requires key= (the merge key)")
-        return _rebase_merge(spark, fs, target_path, name, broot, base_name, key,
-                             on_conflict)
-    bsnap = _committed_snapshot(spark, broot)
-    bname = bsnap.rsplit("/", 1)[-1]
-    if not fs.exists(f"{broot}/{bname}/_SUCCESS"):
-        # the branch never committed a batch of its own (resolution
-        # fell through to the base): nothing to merge
-        delete_branch(spark, target_path, name)
-        return int(base_name.rsplit("-", 1)[-1])
-    ids = [
-        int(p.rsplit("/", 1)[-1].split("-", 1)[1])
-        for p in fs.list_paths(target_path)
-        if p.rsplit("/", 1)[-1].startswith("snap-")
-    ]
-    new_id = max(ids) + 1
-    new_name = f"snap-{new_id}"
-    if not fs.rename(f"{broot}/{bname}", f"{target_path}/{new_name}"):
-        raise OSError(
-            f"rename {broot}/{bname} -> {target_path}/{new_name} failed"
-        )
-    fs.put_text(f"{target_path}/{new_name}/_BATCH", f"merge:{name}:{bname}")
-    tmp = f"{target_path}/_LATEST.tmp-merge-{new_id}"
-    fs.put_text(tmp, new_name)
-    fs.delete(f"{target_path}/_LATEST")
-    fs.rename(tmp, f"{target_path}/_LATEST")
-    delete_branch(spark, target_path, name)
-    return new_id
-
-
-def _rebase_merge(
-    spark: SparkSession,
-    fs,
-    target_path: str,
-    name: str,
-    broot: str,
-    base_name: str,
-    key: str,
-    on_conflict: str,
-) -> int:
-    """The non-fast-forward arm of :func:`merge_branch`: re-apply the
-    branch's delta-vs-base onto main's moved head. Both deltas come
-    from :func:`_changelog_frame` (union-schema, null-safe), so the
-    rebase composes with sink schema evolution on either side. The
-    snap store never deletes rows, so a delta is inserts + update
-    postimages only — each postimage carries the full row, which is
-    what gets applied. Branch rows win UNCONDITIONALLY on the keys
-    they apply to (a catalog merge is by-version, not by-timestamp —
-    latest-wins by ts would silently drop a branch fix older than a
-    main write); ``on_conflict`` decides which side's keys those are."""
-    base_id = int(base_name.rsplit("-", 1)[-1])
-    base_df = read_upsert_target(spark, target_path, as_of_batch=base_id)
-    branch_df = read_upsert_target(spark, broot)
-    main_df = read_upsert_target(spark, target_path)
-
-    def delta(new: DataFrame) -> DataFrame:
-        return (
-            _changelog_frame(base_df, new, key)
-            .filter(F.col("change_type").isin("insert", "update_postimage"))
-            .drop("change_type")
-        )
-
-    branch_new = delta(branch_df)
-    main_changed = delta(main_df).select(key)
-    conflicts = branch_new.select(key).join(main_changed, on=key, how="inner")
-    if on_conflict == "fail":
-        sample = [r[0] for r in conflicts.limit(5).collect()]
-        if sample:
-            n = conflicts.count()
-            raise ValueError(
-                f"rebase conflict merging branch {name!r}: {n} key(s) "
-                f"changed on BOTH main and the branch since {base_name} "
-                f"(sample: {sample}) — resolve with on_conflict='branch' "
-                "or 'main', or reconcile manually and re-branch"
-            )
-        apply_rows = branch_new
-    elif on_conflict == "branch":
-        apply_rows = branch_new
-    else:  # main wins on conflicting keys
-        apply_rows = branch_new.join(main_changed, on=key, how="left_anti")
-    # apply: branch rows replace main rows on their keys, main rows
-    # pass through elsewhere; unionByName with NULL-fill keeps the
-    # union schema when either side evolved
-    merged = main_df.join(apply_rows.select(key), on=key, how="left_anti").unionByName(
-        apply_rows, allowMissingColumns=True
-    )
-    ids = [
-        int(p.rsplit("/", 1)[-1].split("-", 1)[1])
-        for p in fs.list_paths(target_path)
-        if p.rsplit("/", 1)[-1].startswith("snap-")
-    ]
-    new_id = max(ids) + 1
-    new_name = f"snap-{new_id}"
-    merged.write.mode("overwrite").parquet(f"{target_path}/{new_name}")
-    fs.put_text(f"{target_path}/{new_name}/_BATCH", f"merge-rebase:{name}")
-    _commit_pointer(fs, target_path, new_name, f"merge-{new_id}")
-    delete_branch(spark, target_path, name)
-    return new_id
-
-
-def _pinned_batch_ids(spark: SparkSession, target_path: str) -> set[int]:
-    """Batch ids GC must never delete: tag pins ∪ branch fork bases.
-    A branch's base is main data the branch's own chain builds on —
-    expiring it would sever every branch read and the eventual merge."""
-    return _tagged_batch_ids(spark, target_path) | set(
-        list_branches(spark, target_path).values()
-    )
-
-
-def upsert_changelog(
-    spark: SparkSession,
-    target_path: str,
-    key: str,
-    from_batch: int | None = None,
-    to_batch: int | None = None,
-    from_tag: str | None = None,
-    to_tag: str | None = None,
-) -> DataFrame:
-    """CHANGE DATA FEED between two retained snapshots — the Delta CDF
-    / Iceberg ``changelog`` role, derivable for free because every
-    ``snap-N`` is the full table state: one full-outer join on the key
-    yields, per row, ``insert`` (key only in the newer state),
-    ``delete`` (key only in the older), or an ``update_preimage`` /
-    ``update_postimage`` pair (key in both, any column differing,
-    null-safe). Unchanged keys emit nothing.
-
-    ENDPOINTS: each side is a batch id OR a named tag
-    (:func:`tag_snapshot`) — passing BOTH forms for the same endpoint
-    raises, mirroring ``read_upsert_target``. ``None`` on either side
-    means the COMMITTED HEAD (so ``from_tag='cut'`` alone reads
-    naturally as "cut → head", and ``to_tag='cut'`` alone as
-    "head → cut"); a call with NO endpoint at all would diff the head
-    against itself — always empty, never what was meant — and raises.
-
-    SCHEMA EVOLUTION (r15 judge finding): when the feed spans an
-    ``upsert_sink(evolve_schema=True)`` boundary the two snapshots
-    have different schemas. The diff runs over the UNION of both
-    schemas, NULL-filling the side that lacks a column — so an update
-    whose only change is a newly added column IS a change (NULL →
-    value differs null-safely), inserts carry their new-column values,
-    and the output schema is the evolved (union) schema, exactly what
-    Delta's CDF emits across a mergeSchema boundary. A column present
-    on both sides with DIFFERENT types raises loudly — that is type
-    evolution, which the sink itself refuses.
-
-    Scale posture: both sides hash-partition on the key for the single
-    shuffle the full-outer join needs; the per-row change rows come
-    from a ``when``-built array + ``explode`` (one pass, no second
-    join, no driver involvement), so at 100 TB the cost is two
-    snapshot scans + one co-partitioned join — the same shape Delta's
-    CDF read amortizes by storing change files, which the snap-dir
-    target trades for storage-free derivation over its retained
-    window."""
-    if from_batch is not None and from_tag is not None:
-        raise ValueError("pass at most one of from_batch / from_tag")
-    if to_batch is not None and to_tag is not None:
-        raise ValueError("pass at most one of to_batch / to_tag")
-    if from_batch is None and from_tag is None and to_batch is None and to_tag is None:
-        raise ValueError(
-            "no endpoint given: both sides default to the committed head, "
-            "which diffs the head against itself (always empty) — pass a "
-            "batch id or tag for at least one endpoint"
-        )
-    if from_tag is not None:
-        from_batch = _resolve_tag(spark, target_path, from_tag)
-    if to_tag is not None:
-        to_batch = _resolve_tag(spark, target_path, to_tag)
-    old = read_upsert_target(spark, target_path, as_of_batch=from_batch)
-    new = read_upsert_target(spark, target_path, as_of_batch=to_batch)
-    return _changelog_frame(old, new, key)
-
-
-def _changelog_frame(old: DataFrame, new: DataFrame, key: str) -> DataFrame:
-    """The change-feed core shared by :func:`upsert_changelog` (batch,
-    between arbitrary endpoints) and the sink's per-commit streaming
-    feed (``changelog_path``): one key-equi full-outer join, change
-    rows from a when-built array + explode (plan pinned in
-    tests/test_plan_quality.py — no cartesian/BNLJ possible, unchanged
-    keys never materialize a row). Diffs over the UNION of both
-    schemas with NULL-fill so a feed spanning an evolve_schema
-    boundary neither drops added columns nor raises."""
-    old_types = dict(old.dtypes)
-    new_types = dict(new.dtypes)
-    for c in set(old_types) & set(new_types):
-        if old_types[c] != new_types[c]:
-            raise ValueError(
-                f"column {c!r} changed type across the feed window "
-                f"({old_types[c]} -> {new_types[c]}): type evolution is "
-                "not diffable — re-key or backfill explicitly"
-            )
-    cols = old.columns + [c for c in new.columns if c not in old_types]
-    old = old.select(
-        *[
-            F.col(c) if c in old_types else F.lit(None).cast(new_types[c]).alias(c)
-            for c in cols
-        ]
-    )
-    new = new.select(
-        *[
-            F.col(c) if c in new_types else F.lit(None).cast(old_types[c]).alias(c)
-            for c in cols
-        ]
-    )
-    sa = F.struct(*[F.col(f"a.{c}").alias(c) for c in cols])
-    sb = F.struct(*[F.col(f"b.{c}").alias(c) for c in cols])
-    j = old.alias("a").join(
-        new.alias("b"), F.col(f"a.{key}") == F.col(f"b.{key}"), "full_outer"
-    )
-
-    def tagged(label: str, row: F.Column) -> F.Column:
-        return F.struct(F.lit(label).alias("change_type"), row.alias("row"))
-
-    changes = (
-        F.when(F.col(f"a.{key}").isNull(), F.array(tagged("insert", sb)))
-        .when(F.col(f"b.{key}").isNull(), F.array(tagged("delete", sa)))
-        .when(
-            ~sa.eqNullSafe(sb),
-            F.array(tagged("update_preimage", sa), tagged("update_postimage", sb)),
-        )
-        # no otherwise: unchanged keys fall through to NULL, and
-        # explode() of a NULL array emits zero rows — the unchanged
-        # mass (normally ~all of the table) never materializes a row
-    )
-    return j.select(F.explode(changes).alias("e")).select(
-        F.col("e.change_type").alias("change_type"), "e.row.*"
-    )
-
-
-def expire_snapshots(
-    spark: SparkSession, target_path: str, keep_last: int = 2
-) -> list[int]:
-    """Lakehouse maintenance (Iceberg's ``expire_snapshots`` /
-    Delta VACUUM for the snap-dir target): prune history to the newest
-    ``keep_last`` snapshots. The COMMITTED snapshot is always kept
-    regardless of ``keep_last`` (expiry is storage reclamation, never
-    a rollback), and so is every snapshot pinned by a named tag
-    (:func:`tag_snapshot`) — delete the tag first to release it.
-    Crash-orphaned ``snap-N`` dirs lacking ``_SUCCESS`` whose batch id
-    is BELOW the committed id are also deleted (r14 advice): they can
-    never be served (``read_upsert_target`` refuses un-committed
-    snapshots) and the engine will never redeliver a batch below the
-    committed id, so without this they would leak storage forever.
-    An un-committed dir AT or ABOVE the committed id is left alone —
-    that is an in-flight or about-to-be-redelivered write, not
-    garbage. Returns the expired batch ids (committed snapshots only;
-    orphan cleanup is not 'expiry' of history).
-
-    ``keep_last`` floors at 2, the same guard as upsert_sink's
-    ``keep_snapshots`` and for the same race: a reader that resolved
-    the committed snapshot a moment before a new commit flipped the
-    pointer is still lazily reading the PREDECESSOR — expiring it out
-    from under that reader fails their action mid-flight (r14
-    review finding). The same race applies to TIME-TRAVEL readers of
-    arbitrary older batches: an ``as_of_batch`` read is lazy, so run
-    maintenance only when no reader holds an unexecuted plan over an
-    expirable batch — or have readers pin via :func:`tag_snapshot` /
-    ``as_of_tag``, which this function always honors."""
-    if keep_last < 2:
-        raise ValueError(f"keep_last must be >= 2, got {keep_last}")
-    from ..operators.fs import FileSystemOps
-
-    fs = FileSystemOps(spark)
-    hist = upsert_history(spark, target_path)
-    keep = (
-        {h["batch_id"] for h in hist[:keep_last]}
-        | {h["batch_id"] for h in hist if h["committed"]}
-        | _pinned_batch_ids(spark, target_path)
-    )
-    expired = []
-    for h in hist:
-        if h["batch_id"] not in keep:
-            fs.delete(f"{target_path}/snap-{h['batch_id']}", recursive=True)
-            expired.append(h["batch_id"])
-    # orphan sweep: snap dirs without _SUCCESS below the committed id
-    # (upsert_history only lists _SUCCESS-marked dirs, so these are
-    # invisible to the history-driven loop above)
-    committed = next((h["batch_id"] for h in hist if h["committed"]), None)
-    if committed is not None and fs.exists(target_path):
-        for p in fs.list_paths(target_path):
-            fname = p.rsplit("/", 1)[-1]
-            if (
-                fname.startswith("snap-")
-                and not fs.exists(f"{p}/_SUCCESS")
-                and int(fname.rsplit("-", 1)[-1]) < committed
-            ):
-                fs.delete(p, recursive=True)
-    return sorted(expired)
-
-
 def upsert_sink(
     stream: DataFrame,
     target_path: str,
@@ -915,8 +171,8 @@ def upsert_sink(
 ):
     """T3/S6 streaming form: foreachBatch MERGE. Each micro-batch is
     compacted latest-wins against the current committed snapshot and
-    written as a NEW immutable ``snap-<batch_id>`` dir; only after the
-    write completes does the ``_LATEST`` pointer move. A crash at any
+    written as a NEW immutable snapshot; only after the write
+    completes does the committed pointer move. A crash at any
     point leaves the previous snapshot committed — the
     write-new-then-flip-pointer protocol is the poor-man's metastore
     commit (an in-place ``mode("overwrite")`` of the target deletes
@@ -931,21 +187,21 @@ def upsert_sink(
     ``keep_snapshots`` is the retention window: the newest N snapshots
     survive each commit's GC (default 2 — the committed state and its
     predecessor, the minimum a concurrent reader needs). Since every
-    ``snap-N`` is the FULL merged state after batch N, a larger window
+    snapshot is the FULL merged state after batch N, a larger window
     buys TIME TRAVEL (``read_upsert_target(..., as_of_batch=N)``) at
     the cost of N table copies — the Iceberg snapshot-log trade, made
     explicit; prune later with :func:`expire_snapshots`.
 
-    ``branch=`` (r16, the Nessie writable-ref role) routes every
-    commit into the branch sub-store created by
-    :func:`branch_snapshot`: the first branch commit merges against
-    the fork base (zero-copy — the base stays in main, pinned), and
-    :func:`merge_branch` fast-forwards the result back.
+    ``branch=`` (the Nessie writable-ref role) routes every commit
+    into the branch sub-store created by :func:`branch_snapshot`: the
+    first branch commit merges against the fork base (zero-copy — the
+    base stays in main, pinned), and :func:`merge_branch`
+    fast-forwards the result back.
 
-    ``changelog_path=`` (r16) makes the sink a CHANGE-FEED PRODUCER —
-    Delta CDF's streaming ``readChangeFeed`` role: each commit also
-    writes the per-batch changelog (new snapshot vs its predecessor,
-    the same union-schema diff as :func:`upsert_changelog`) under
+    ``changelog_path=`` makes the sink a CHANGE-FEED PRODUCER — Delta
+    CDF's streaming ``readChangeFeed`` role: each commit also writes
+    the per-batch changelog (new snapshot vs its predecessor, the same
+    union-schema diff as :func:`upsert_changelog`) under
     ``<changelog_path>/commit_batch=<snap id>``. Exactly-once comes
     free from the id-keyed dirs: the diff is written mode-overwrite
     BEFORE the pointer flip, so a redelivered batch rewrites its own
@@ -955,40 +211,24 @@ def upsert_sink(
     by construction the concatenation of the per-batch partitions
     equals :func:`upsert_changelog` between the endpoints.
 
-    SNAPSHOT IDS vs ENGINE BATCH IDS (r16): snap ids are a store-local
-    monotonic sequence ``max(engine batch id, committed id + 1)`` —
-    identical to the engine batch id until a :func:`merge_branch`
-    commit (or a branch's base) pushes the store ahead of the engine's
-    counter. Each snap dir records its engine batch id in a ``_BATCH``
-    file, which is what the redelivery short-circuit keys on (name
-    equality was only correct while the two sequences coincided)."""
+    Snapshot ids, engine batch ids and the redelivery rule are the
+    store's (:func:`snapshot_store.commit`)."""
     if keep_snapshots < 2:
         # fewer than 2 would let GC delete the predecessor a concurrent
         # reader resolved a moment before the pointer flip
         raise ValueError(f"keep_snapshots must be >= 2, got {keep_snapshots}")
-    if branch is not None:
-        target_path = _branch_root(target_path, branch)
+    root = target_path if branch is None else snapshot_store.branch_root(target_path, branch)
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        from ..operators.fs import FileSystemOps
-
-        fs = FileSystemOps(spark)
-        if branch is not None and not fs.exists(f"{target_path}/_BASE"):
-            raise FileNotFoundError(
-                f"branch {branch!r} does not exist — create it with "
-                "branch_snapshot before writing to it"
-            )
-
         def transform(prev_df: DataFrame | None) -> DataFrame:
             if prev_df is None:
                 return batch_df
-            # evolve_schema (r15): a consumer redeployed with a widened
-            # decode (additive DDL upstream) delivers batches with new
-            # columns against a narrower committed snapshot — and its
-            # checkpoint may also REPLAY an old-shape batch against an
-            # already-widened snapshot. Both directions NULL-fill; the
-            # next snapshot carries the union schema (Delta's
+            # evolve_schema: a consumer redeployed with a widened decode
+            # (additive DDL upstream) delivers batches with new columns
+            # against a narrower committed snapshot — and its checkpoint
+            # may also REPLAY an old-shape batch against an already-
+            # widened snapshot. Both directions NULL-fill; the next
+            # snapshot carries the union schema (Delta's
             # mergeSchema-on-MERGE). Default strict: a mismatch fails
             # the batch loudly rather than silently widening on a typo.
             return merge_upsert_frames(
@@ -996,8 +236,6 @@ def upsert_sink(
             )
 
         def emit(prev_df: DataFrame | None, new_state: DataFrame, snap_id: int) -> None:
-            if changelog_path is None:
-                return
             # the per-commit change feed, derived from the MATERIALIZED
             # snapshots (not the lazy merge plan — one scan of written
             # parquet beats re-running the merge window) and written
@@ -1006,7 +244,7 @@ def upsert_sink(
             # durable; a crash before it re-derives identical rows
             # into the same id-keyed dir (exactly-once by overwrite)
             feed = (
-                _changelog_frame(prev_df, new_state, key)
+                changelog_frame(prev_df, new_state, key)
                 if prev_df is not None
                 else new_state.select(F.lit("insert").alias("change_type"), "*")
             )
@@ -1014,9 +252,10 @@ def upsert_sink(
                 f"{changelog_path}/commit_batch={snap_id}"
             )
 
-        _snapshot_commit(
-            spark, fs, target_path, keep_snapshots, batch_id, transform, emit,
-            run_id=checkpoint,
+        snapshot_store.commit(
+            batch_df.sparkSession, root, keep_snapshots, batch_id, transform,
+            emit if changelog_path is not None else None,
+            run_id=checkpoint, branch=branch,
         )
 
     return (
@@ -1024,159 +263,6 @@ def upsert_sink(
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
     )
-
-
-def _commit_pointer(fs, target_path: str, snap_name: str, batch_id: int) -> None:
-    # commit: temp pointer + rename (never in-place truncation of
-    # _LATEST — a reader or crash mid-write would see an empty
-    # pointer; the _SUCCESS-based fallback would still recover)
-    tmp = f"{target_path}/_LATEST.tmp-{batch_id}"
-    fs.put_text(tmp, snap_name)
-    fs.delete(f"{target_path}/_LATEST")
-    fs.rename(tmp, f"{target_path}/_LATEST")
-
-
-def _gc_superseded(
-    fs, target_path: str, keep_snapshots: int, snap_name: str, prev_name: str | None
-) -> None:
-    # best-effort GC of superseded snapshots: the newest
-    # keep_snapshots survive, and the committed snapshot plus the
-    # predecessor a concurrent reader may have just resolved are
-    # ALWAYS kept regardless of age. Compare by snap NAME, not full
-    # path: list_paths returns scheme-qualified URIs (file:/...)
-    # while prev may be unqualified — a raw `p != prev` never
-    # matches and would delete the predecessor a concurrent reader
-    # just resolved. Stale _LATEST.tmp-* files (a crash between
-    # put_text and rename) are GC'd here too — the rename consumed
-    # the current batch's tmp, so any survivor is garbage.
-    snaps = [
-        p.rsplit("/", 1)[-1]
-        for p in fs.list_paths(target_path)
-        if p.rsplit("/", 1)[-1].startswith("snap-")
-    ]
-    newest = set(
-        sorted(snaps, key=lambda n: int(n.split("-", 1)[1]))[-keep_snapshots:]
-    )
-    # named tags and branch fork bases (the Nessie refs) pin their
-    # snapshot against the sink's own GC exactly as against
-    # expire_snapshots
-    tagged = {f"snap-{b}" for b in _pinned_batch_ids(fs._spark, target_path)}
-    keep = newest | tagged | {snap_name, prev_name}
-    for p in fs.list_paths(target_path):
-        name = p.rsplit("/", 1)[-1]
-        if name.startswith("snap-") and name not in keep:
-            fs.delete(p, recursive=True)
-        elif name.startswith("_LATEST.tmp-"):
-            fs.delete(p)
-
-
-def _snapshot_commit(
-    spark: SparkSession,
-    fs,
-    target_path: str,
-    keep_snapshots: int,
-    batch_id: int,
-    transform,
-    emit=None,
-    run_id: str = "",
-) -> None:
-    """The snap-dir COMMIT PROTOCOL, shared by every foreachBatch sink
-    over the snapshot store (``upsert_sink``'s latest-wins merge,
-    ``materialized_view_sink``'s incremental aggregate): resolve the
-    committed predecessor, short-circuit crash redelivery, apply
-    ``transform(prev_df_or_None) -> new_state``, write the new
-    immutable ``snap-<id>`` dir + its ``_BATCH`` marker, run the
-    optional ``emit(prev_df, materialized_new_state, snap_id)``
-    hook (the change-feed writer — BEFORE the pointer flip, so a
-    post-flip crash redelivers with the emit already durable), then
-    flip ``_LATEST`` and GC superseded snapshots. Extracting it keeps
-    the crash matrix (pointer flip vs checkpoint commit vs emit) in
-    ONE place instead of re-deriving it per sink.
-
-    ``run_id`` scopes the redelivery short-circuit to the WRITING
-    QUERY (its checkpoint path): engine batch ids restart at 0 for
-    every fresh checkpoint, so a bare id match would swallow the
-    first batch of a *different* query appending to the same target
-    whenever the committed ``_BATCH`` happened to carry the same
-    number (found live: a rebase fixture's 'main moves' drain was
-    silently skipped as redelivery of the seed). The marker stores
-    ``<run_id>\\n<batch_id>``; redelivery requires BOTH to match.
-    Pre-run_id markers (a bare id) keep the old id-only compare so
-    existing stores read unchanged — their hazard window closes on
-    their next commit."""
-    prev = _committed_snapshot(spark, target_path)
-    prev_name = prev.rsplit("/", 1)[-1] if prev is not None else None
-    # the committed snapshot is LOCAL to this store when its dir
-    # lives under target_path; a branch root's base fallback
-    # resolves into the PARENT store, whose _BATCH marker belongs
-    # to main's engine sequence — never match redelivery against it
-    prev_is_local = prev is not None and fs.exists(
-        f"{target_path}/{prev_name}/_SUCCESS"
-    )
-    if prev_is_local:
-        marker = f"{target_path}/{prev_name}/_BATCH"
-        if fs.exists(marker):
-            raw = fs.get_text(marker)
-            if "\n" in raw:
-                prev_run, prev_engine = raw.split("\n", 1)
-                prev_run, prev_engine = prev_run.strip(), prev_engine.strip()
-            else:
-                # legacy single-line marker (or a merge commit's
-                # free-form tag): id-only compare, old behavior
-                prev_run, prev_engine = None, raw.strip()
-        else:
-            # legacy dirs predate the marker: their name IS the
-            # engine batch id
-            prev_run, prev_engine = None, prev_name.split("-", 1)[1]
-    else:
-        prev_run, prev_engine = None, None
-    if prev_engine == str(batch_id) and (prev_run is None or prev_run == run_id):
-        # Re-delivery after a crash between the pointer flip and the
-        # checkpoint commit: this batch's snapshot IS the committed
-        # state. Transforming again would lazily read the very dir the
-        # overwrite targets ("Cannot overwrite a path that is also
-        # being read from") and wedge the stream on every restart.
-        # Re-flip the pointer (covers the fallback-resolved case
-        # where _LATEST itself was lost mid-rename) and move on.
-        # GC must keep the PRIOR snapshot exactly like the normal
-        # path does (a concurrent reader may have resolved it just
-        # before the crash-interrupted flip) — recompute it as the
-        # newest other snap dir rather than passing None, so a
-        # re-commit of the same state never shrinks retention.
-        _commit_pointer(fs, target_path, prev_name, batch_id)
-        others = [
-            n
-            for n in (p.rsplit("/", 1)[-1] for p in fs.list_paths(target_path))
-            if n.startswith("snap-") and n != prev_name
-        ]
-        prior = (
-            max(others, key=lambda n: int(n.split("-", 1)[1])) if others else None
-        )
-        _gc_superseded(fs, target_path, keep_snapshots, prev_name, prior)
-        return
-    # mint the snap id: the engine's batch id unless the store is
-    # already at or past it — a merge_branch commit or a branch's
-    # fork base outruns the engine counter, and snapshot ids must
-    # stay monotonic (GC, the _SUCCESS fallback, and upsert_history
-    # all order by id)
-    snap_id = (
-        batch_id
-        if prev_name is None
-        else max(batch_id, int(prev_name.split("-", 1)[1]) + 1)
-    )
-    snap_name = f"snap-{snap_id}"
-    prev_df = spark.read.parquet(prev) if prev is not None else None
-    new_state = transform(prev_df)
-    new_state.write.mode("overwrite").parquet(f"{target_path}/{snap_name}")
-    # record the writing query (run_id = its checkpoint) and engine
-    # batch id that produced this snapshot — the redelivery
-    # short-circuit keys on the PAIR: snap ids, engine ids, and
-    # queries are three separate sequences
-    fs.put_text(f"{target_path}/{snap_name}/_BATCH", f"{run_id}\n{batch_id}")
-    if emit is not None:
-        emit(prev_df, spark.read.parquet(f"{target_path}/{snap_name}"), snap_id)
-    _commit_pointer(fs, target_path, snap_name, batch_id)
-    _gc_superseded(fs, target_path, keep_snapshots, snap_name, prev_name)
 
 
 @query(
@@ -1617,7 +703,7 @@ def merge_upsert_branch(spark: SparkSession, sf_dir: str) -> DataFrame:
     SECOND stream with its OWN checkpoint drains onto the branch via
     ``upsert_sink(..., branch='dev')`` — inserts (the %4==3 ids) plus
     updates over the evens (value+100, ts+1h) — merging against the
-    fork base through the _BASE fallback; main is then read BEFORE the
+    fork base without copying it; main is then read BEFORE the
     merge (must still be the untouched seed: fork isolation) and
     ``merge_branch`` fast-forwards, after which main's committed head
     must equal the SQL replay of seed + branch batch. Both states are
@@ -2113,7 +1199,7 @@ def materialized_view_sink(
     ``readStream`` over a sink's ``changelog_path``) maintains a
     grouped count+sum view, one :func:`maintain_grouped_agg` step per
     micro-batch, committed through the SAME snap-dir protocol as
-    ``upsert_sink`` (:func:`_snapshot_commit`) — so the view gets the
+    ``upsert_sink`` (:func:`snapshot_store.commit`) — so the view gets the
     whole catalog surface for free: crash-safe pointer-flip commits,
     redelivery short-circuit, retention, tags, time travel via
     ``read_upsert_target``. Count+sum (and avg = sum/count derived at
@@ -2141,9 +1227,6 @@ def materialized_view_sink(
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        from ..operators.fs import FileSystemOps
-
-        fs = FileSystemOps(spark)
         empty_schema = T.StructType(
             [
                 batch_df.schema[group_col],
@@ -2162,9 +1245,8 @@ def materialized_view_sink(
                 mat, batch_df, group_col=group_col, value_col=value_col
             )
 
-        _snapshot_commit(
-            spark, fs, view_path, keep_snapshots, batch_id, transform,
-            run_id=checkpoint,
+        snapshot_store.commit(
+            spark, view_path, keep_snapshots, batch_id, transform, run_id=checkpoint
         )
 
     return (
@@ -2254,7 +1336,7 @@ def stream_ivm_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         feed_stream, view, vckpt, group_col="event_type", value_col="value"
     ).start()
     drain_stream(vq, "IVM view consumer")
-    if _committed_snapshot(spark, view) is None:
+    if not upsert_history(spark, view):
         # empty corpus: the feed has no data files, the consumer
         # drains zero batches, the view store never commits
         return spark.createDataFrame(
@@ -2468,22 +1550,24 @@ def drain_stream(q, what: str, timeout_s: int = 300) -> None:
 
 
 def _state_sized_partitions(spark: SparkSession, n_rows: int) -> int:
-    """Data-sized state-store partition count (r16 verdict #3, guide
-    §2.2/§5): a stateful stream's shuffle-partition count is pinned
-    into the checkpoint at first start from spark.sql.shuffle.partitions
-    — a CORE-COUNT-derived value under the session defaults, so a
-    low-throughput stream on local[32] paid 32 state-store commits per
-    store per micro-batch for a few thousand rows of state (measured on
-    stream_exec_left_join: 36.9 s at 32 partitions vs 9.0 s at 2 —
-    the per-partition commit is the whole cost). Size to the DATA
-    instead: ceil(n_rows / rowsPerStatePartition), clamped to [1,
-    session shuffle partitions]. ``spark.pdp.stream.rowsPerStatePartition``
-    (default 50000 — the sf0.1 sweep read 36.9/10.8/9.0/9.1 s at
-    32/8/2/1 partitions for 100k replayed rows, flat below ~8, and an
-    HDFS-backed store holds tens of thousands of keys per partition
-    comfortably) is the conf knob; at production volumes the clamp cap
-    (the cluster-sized session conf) is what binds, so this is
-    local-friendly without hardcoding a local[32] constant."""
+    """Data-sized state-store partition count for a stream START, passed
+    to :func:`session.scoped_session`. A stateful stream's shuffle
+    partition count is pinned into the checkpoint at first start from
+    spark.sql.shuffle.partitions — a CORE-COUNT-derived value under the
+    session defaults, so a low-throughput stream on local[32] paid 32
+    state-store commits per store per micro-batch for a few thousand
+    rows of state (stream_exec_left_join: 36.9 s at 32 partitions vs
+    9.0 s at 2 — the per-partition commit is the whole cost). Sized to
+    the DATA instead: ceil(n_rows / rowsPerStatePartition), clamped to
+    [1, session shuffle partitions]. ``spark.pdp.stream.rowsPerStatePartition``
+    defaults to 50000 (the sf0.1 sweep read 36.9/10.8/9.0/9.1 s at
+    32/8/2/1 partitions for 100k replayed rows, flat below ~8); at
+    production volumes the cap (the cluster-sized session conf) binds.
+
+    Bounded availableNow replays only: ``n_rows`` is a count the caller
+    takes up front. An unbounded source must set its partitioning
+    explicitly, since the checkpoint pins whatever its first start
+    sees."""
     per = int(spark.conf.get("spark.pdp.stream.rowsPerStatePartition", "50000"))
     cap = int(
         spark.conf.get(
@@ -2492,28 +1576,6 @@ def _state_sized_partitions(spark: SparkSession, n_rows: int) -> int:
         )
     )
     return max(1, min(cap, -(-n_rows // max(1, per))))
-
-
-class _state_sized_shuffle:
-    """Context manager: set spark.sql.shuffle.partitions to the
-    data-sized state partition count for a stream START (the value is
-    checkpoint-pinned at start), restore the session conf after."""
-
-    def __init__(self, spark: SparkSession, n_rows: int):
-        self.spark = spark
-        self.n_rows = n_rows
-
-    def __enter__(self):
-        self.old = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(_state_sized_partitions(self.spark, self.n_rows)),
-        )
-        return self
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.old)
-        return False
 
 
 def _run_memory_sink(agg: DataFrame, name: str, ckpt: str, mode: str):
@@ -2673,20 +1735,21 @@ def stream_exec_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch checkpoints every one — at harness scale the state
     FILE count, not state size, dominates (join exec 15.4 s at 32
     partitions → 9.2 s at 8 → 3.0 s at 4, identical 1787-row output).
-    The sink run therefore drops to 4 state partitions and restores
-    the session's setting after; a cluster keeps its configured
-    parallelism (state partitioning is fixed by the FIRST micro-batch
-    per checkpoint — this knob is per-checkpoint, not global). The
-    staging write is repartitioned (single-row-group fixture would
-    otherwise serialize the JSON encode on one task — 6.5 s → ~2 s)."""
+    The stream therefore runs in a scoped session with 4 state
+    partitions; the caller's session is untouched (state partitioning
+    is fixed by the FIRST micro-batch per checkpoint — this knob is
+    per-checkpoint, not global). The staging write is repartitioned
+    (single-row-group fixture would otherwise serialize the JSON encode
+    on one task — 6.5 s → ~2 s)."""
     base = _fresh_staging_dir(spark, sf_dir, "stream_join")
     src, ckpt = os.path.join(base, "src"), os.path.join(base, "ckpt")
     par = spark.sparkContext.defaultParallelism
     synthesize_envelopes(table(spark, sf_dir, "events")).repartition(par).write.json(
         src
     )
-    lv_v = live_rows(read_envelope_stream(spark, src))
-    lv_p = live_rows(read_envelope_stream(spark, src))
+    ss = scoped_session(spark, 4)
+    lv_v = live_rows(read_envelope_stream(ss, src))
+    lv_p = live_rows(read_envelope_stream(ss, src))
     views = lv_v.filter(F.col("event_type") == "view").select(
         "user_id",
         F.col("event_id").alias("view_id"),
@@ -2700,13 +1763,8 @@ def stream_exec_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     joined = interval_join(views, purchases)
     sink = f"pdp_stream_join_{os.path.basename(sf_dir.rstrip('/'))}".replace(".", "_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        _run_memory_sink(joined, sink, ckpt, "append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(sink).select(
+    _run_memory_sink(joined, sink, ckpt, "append")
+    return ss.table(sink).select(
         "user_id",
         "view_id",
         "purchase_id",
@@ -2997,7 +2055,11 @@ def stream_exec_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     src, ckpt = os.path.join(base, "src"), os.path.join(base, "ckpt")
     ev = table(spark, sf_dir, "events")
     synthesize_envelopes(ev).write.json(src)
-    rows = live_rows(read_envelope_stream(spark, src))
+    # state partitions sized to the replayed volume, not the core count
+    # — partitioning never changes a join's row set, only where state
+    # lives
+    ss = scoped_session(spark, _state_sized_partitions(spark, ev.count()))
+    rows = live_rows(read_envelope_stream(ss, src))
     clicks = (
         rows.filter(F.col("event_id") % 2 == 0)
         .select(
@@ -3029,12 +2091,8 @@ def stream_exec_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.unix_millis("click_ts") - F.unix_millis("view_ts")).alias("gap_ms"),
     )
     name = f"pdp_stream_ij_{os.path.basename(sf_dir.rstrip('/'))}".replace(".", "_")
-    # r17: state partitions sized to the replayed volume, not the core
-    # count (see _state_sized_partitions) — partitioning never changes
-    # a join's row set, only where state lives
-    with _state_sized_shuffle(spark, ev.count()):
-        _run_memory_sink(joined, name, ckpt, "append")
-    return spark.table(name)
+    _run_memory_sink(joined, name, ckpt, "append")
+    return ss.table(name)
 
 
 @query(
@@ -3096,8 +2154,13 @@ def stream_exec_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
       joins deployable at all."""
     base = _fresh_staging_dir(spark, sf_dir, "stream_loj")
     src = stage_arrival_batches(spark, sf_dir, base, inject_late=False)
+    # the outer join's wall time is per-partition state-store commits
+    # (8 micro-batches × 4 join state stores × partitions), so state is
+    # sized to the replayed volume, not the core count
+    n_rows = table(spark, sf_dir, "events").count()
+    ss = scoped_session(spark, _state_sized_partitions(spark, n_rows))
     stream = (
-        spark.readStream.schema(RAW_STREAM_SCHEMA)
+        ss.readStream.schema(RAW_STREAM_SCHEMA)
         .option("maxFilesPerTrigger", "1")
         .json(src)
     )
@@ -3134,13 +2197,8 @@ def stream_exec_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.unix_millis("click_ts") - F.unix_millis("view_ts")).alias("gap_ms"),
     )
     name = f"pdp_stream_loj_{os.path.basename(sf_dir.rstrip('/'))}".replace(".", "_")
-    # r17 (r16 verdict #3): the outer stream-stream join's wall time was
-    # per-partition state-store commits — 8 micro-batches × 4 join state
-    # stores × a core-count-derived 32 partitions. Size state to the
-    # replayed volume instead (measured 36.9 s → 9.0 s, identical rows).
-    with _state_sized_shuffle(spark, table(spark, sf_dir, "events").count()):
-        _run_memory_sink(joined, name, os.path.join(base, "ckpt"), "append")
-    return spark.table(name)
+    _run_memory_sink(joined, name, os.path.join(base, "ckpt"), "append")
+    return ss.table(name)
 
 
 @query(

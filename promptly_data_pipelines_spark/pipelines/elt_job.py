@@ -17,6 +17,7 @@ acceptance test asserts, test_dbt.py:161-177).
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -32,7 +33,7 @@ from ..registry import query
 from .orchestrator import Pipeline
 
 
-def run_elt(spark: SparkSession, sf_dir: str, warehouse: str, parallel: bool = True) -> dict:
+def run_elt(spark: SparkSession, sf_dir: str, warehouse: str) -> dict:
     """Execute the full DAG and return {model: row_count} plus report
     paths. Rerunnable: every write is mode=overwrite (the reference
     rebuilds tables each run — materialized='table')."""
@@ -87,7 +88,7 @@ def run_elt(spark: SparkSession, sf_dir: str, warehouse: str, parallel: bool = T
         curated.write.mode("overwrite").parquet(out)
         return s.read.schema(curated.schema).parquet(out)
 
-    results = p.run(spark, parallel=parallel)
+    results = p.run(spark)
 
     # dbt test analog on the curated output (schema.yaml:10-37 shapes)
     curated = results["curated_activity"]
@@ -110,10 +111,14 @@ def run_elt(spark: SparkSession, sf_dir: str, warehouse: str, parallel: bool = T
         {"curated_activity": table_metrics(curated, "ts", "user_id")},
         os.path.join(warehouse, "report"),
     )
+    # the report's own verdict: the suite is evaluated once, and an
+    # empty suite reads as failed there
+    with open(paths["json"]) as f:
+        passed = json.load(f)["passed"]
     return {
         "counts": {name: df.count() for name, df in results.items()},
         "report": paths,
-        "passed": all(r.passed for r in suite.collect()),
+        "passed": passed,
         # the product itself (a lazy read over the warehouse with the
         # model's own schema) — callers must not re-derive the curated
         # schema by hand; a hand-copied DDL silently reads stale

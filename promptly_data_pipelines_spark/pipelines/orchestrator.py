@@ -6,15 +6,15 @@ profiles.yml:21); dbt resolves ``ref()`` calls into a model DAG
 (curated_provider.sql:52,67). Here: models are Python functions
 returning DataFrames, dependencies are declared, execution is a
 topological sort with fail-fast — one process, no subprocess
-boundaries. Independent models could run concurrently (the reference
-cannot: threads=1); kept sequential for deterministic logs, flagged
-for the cluster deployment.
+boundaries. Independent models of one topo level run concurrently
+(the reference cannot: threads=1).
 """
 
 from __future__ import annotations
 
 import logging
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -70,24 +70,32 @@ class Pipeline:
             visit(name)
         return order
 
-    def run(self, spark: SparkSession, parallel: bool = False) -> dict[str, DataFrame]:
-        """Sequential by default (deterministic logs, the reference's
-        observable behavior). ``parallel=True`` runs each topo level's
-        independent models concurrently — Spark's scheduler accepts
-        jobs from multiple threads, so independent models overlap their
-        cluster usage. The reference cannot do this (TRINO_DBT_THREADS=1,
-        profiles.yml:21); it is strictly a capability gain."""
-        if not parallel:
-            results: dict[str, DataFrame] = {}
-            for name in self.topo_order():
-                m = self._models[name]
-                log.info("running model %s (deps: %s)", name, m.deps)
-                upstream = {d: results[d] for d in m.deps}
-                df = m.fn(spark, upstream)
+    def run(self, spark: SparkSession) -> dict[str, DataFrame]:
+        """Run level by level: each topo level's independent models run
+        concurrently (Spark's scheduler accepts jobs from multiple
+        threads, so independent models overlap their cluster usage — the
+        reference cannot, TRINO_DBT_THREADS=1, profiles.yml:21). A
+        one-model level runs inline on the caller's thread."""
+        results: dict[str, DataFrame] = {}
+
+        def run_one(name: str) -> DataFrame:
+            m = self._models[name]
+            return m.fn(spark, {d: results[d] for d in m.deps})
+
+        for group in self._topo_levels():
+            log.info("running level: %s", group)
+            if len(group) == 1:
+                frames = [run_one(group[0])]
+            else:
+                # cap the pool: past ~8 concurrent jobs the local
+                # scheduler is saturated and extra threads only cost
+                # driver memory
+                with ThreadPoolExecutor(max_workers=min(8, len(group))) as ex:
+                    frames = list(ex.map(run_one, group))
+            for name, df in zip(group, frames):
                 df.createOrReplaceTempView(name)
                 results[name] = df
-            return results
-        return self._run_parallel(spark)
+        return results
 
     def _topo_levels(self) -> list[list[str]]:
         order = self.topo_order()
@@ -101,25 +109,3 @@ class Pipeline:
                 out.append([])
             out[level[name]].append(name)
         return out
-
-    def _run_parallel(self, spark: SparkSession) -> dict[str, DataFrame]:
-        from concurrent.futures import ThreadPoolExecutor
-
-        results: dict[str, DataFrame] = {}
-        for group in self._topo_levels():
-            log.info("running level: %s", group)
-
-            def run_one(name: str) -> tuple[str, DataFrame]:
-                m = self._models[name]
-                upstream = {d: results[d] for d in m.deps}
-                return name, m.fn(spark, upstream)
-
-            # cap the pool: a 100-model level would spawn 100 threads all
-            # submitting Spark jobs at once — past ~8 concurrent jobs the
-            # local scheduler is saturated and extra threads only cost
-            # driver memory
-            with ThreadPoolExecutor(max_workers=max(1, min(8, len(group)))) as ex:
-                for name, df in ex.map(run_one, group):
-                    df.createOrReplaceTempView(name)
-                    results[name] = df
-        return results

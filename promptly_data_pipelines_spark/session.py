@@ -122,3 +122,27 @@ def tune_session(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     _ship_package(spark)
     return spark
+
+
+def scoped_session(spark: SparkSession, shuffle_partitions: int) -> SparkSession:
+    """A child session of ``spark`` whose ``spark.sql.shuffle.partitions``
+    is ``shuffle_partitions``, for starting ONE bounded ``availableNow``
+    replay. A stateful stream pins its state partition count into the
+    checkpoint at first start, so the stream must be BUILT in a session
+    carrying the wanted count; writing it into the caller's session
+    would leak into, and race with, every other query on it. The child
+    shares the SparkContext and copies every SQL conf the parent set at
+    runtime (the UTC timezone and ``inferTimestampNTZ=false`` that
+    :func:`tune_session` sets, for example), which a bare
+    ``newSession()`` drops. Temp views are per session: a memory sink
+    started from the child is read back through the child.
+
+    Bounded replays only: the caller sizes the count from data it can
+    see up front. An unbounded source has no such count — set its
+    partitioning explicitly before its checkpoint's first start."""
+    child = spark.newSession()
+    for k, v in spark.conf.getAll.items():
+        if child.conf.get(k, None) != v:
+            child.conf.set(k, v)
+    child.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    return child

@@ -16,6 +16,7 @@ from conftest import SF_DIR
 
 from promptly_data_pipelines_spark.catalog import DECLARED_SCHEMAS, TABLES, load_tables, table
 from promptly_data_pipelines_spark.cdc import streaming as S
+from promptly_data_pipelines_spark.operators import snapshot_store as SS
 from promptly_data_pipelines_spark.cdc.envelope import synthesize_envelopes
 from promptly_data_pipelines_spark.extensions.multimodal import decode_media
 from promptly_data_pipelines_spark.functions import (
@@ -59,29 +60,32 @@ def test_functions_semantics(spark):
 
 
 def test_orchestrator_dag_order_and_views(spark):
+    import threading
+
     p = Pipeline()
-    ran = []
+    ran = {}
 
     @p.model("raw_a")
     def raw_a(s, up):
-        ran.append("raw_a")
-        return s.range(3).withColumnRenamed("id", "k")
+        ran["raw_a"] = threading.current_thread()
+        return s.range(10).withColumnRenamed("id", "k")
 
     @p.model("raw_b")
     def raw_b(s, up):
-        ran.append("raw_b")
+        ran["raw_b"] = threading.current_thread()
         return s.range(5).withColumnRenamed("id", "k")
 
     @p.model("curated", deps=["raw_a", "raw_b"])
     def curated(s, up):
-        ran.append("curated")
+        assert set(ran) == {"raw_a", "raw_b"}
+        ran["curated"] = threading.current_thread()
         return up["raw_a"].join(up["raw_b"], "k")
 
     out = p.run(spark)
-    assert ran.index("curated") > ran.index("raw_a")
-    assert ran.index("curated") > ran.index("raw_b")
-    assert out["curated"].count() == 3
-    assert spark.table("curated").count() == 3  # SQL surface (dbt ref() analog)
+    assert sorted(r.k for r in out["curated"].collect()) == list(range(5))
+    assert spark.table("curated").count() == 5  # SQL surface (dbt ref() analog)
+    # a one-model level runs inline on the caller's thread
+    assert ran["curated"] is threading.current_thread()
 
 
 def test_orchestrator_cycle_detection():
@@ -90,19 +94,6 @@ def test_orchestrator_cycle_detection():
     p.model("b", deps=["a"])(lambda s, up: None)
     with pytest.raises(ValueError, match="cycle"):
         p.topo_order()
-
-
-def test_orchestrator_parallel_matches_sequential(spark):
-    def build() -> Pipeline:
-        p = Pipeline()
-        p.model("a")(lambda s, up: s.range(10).withColumnRenamed("id", "k"))
-        p.model("b")(lambda s, up: s.range(5).withColumnRenamed("id", "k"))
-        p.model("c", deps=["a", "b"])(lambda s, up: up["a"].join(up["b"], "k"))
-        return p
-
-    seq = build().run(spark)["c"].collect()
-    par = build().run(spark, parallel=True)["c"].collect()
-    assert sorted(r.k for r in seq) == sorted(r.k for r in par) == list(range(5))
 
 
 def test_dq_report(spark, tmp_path):
@@ -231,7 +222,7 @@ def test_streaming_upsert_sink(spark):
     rows = S.live_rows(S.read_envelope_stream(spark, env_dir))
     q = S.upsert_sink(rows, tgt, ckpt).start()
     q.awaitTermination(120)
-    back = S.read_upsert_target(spark, tgt)
+    back = SS.read_upsert_target(spark, tgt)
     assert back.count() == back.select("event_id").distinct().count()
     # commit protocol: _LATEST points at a complete snap dir
     ptr = open(os.path.join(tgt, "_LATEST")).read().strip()
@@ -2384,6 +2375,61 @@ def test_stream_left_join_watermark_tie_is_withheld(spark, tmp_path):
     assert got == {(4, 1)}, got
 
 
+def test_stream_left_join_scoped_state_partitions(spark, monkeypatch):
+    """stream_exec_left_join starts its stream in a scoped session: the
+    checkpoint pins the data-sized state partition count, while the
+    caller's spark.sql.shuffle.partitions reads the same before, during
+    (a progress listener on the stream's own session) and after the
+    drain."""
+    import json
+    import threading
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    during: list[str] = []
+    seen = threading.Event()
+
+    class Probe(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            during.append(spark.conf.get(key))
+            seen.set()
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    run = S._run_memory_sink
+
+    def probed(agg, name, ckpt, mode):
+        probe = Probe()
+        agg.sparkSession.streams.addListener(probe)
+        try:
+            q = run(agg, name, ckpt, mode)
+            seen.wait(60)
+        finally:
+            agg.sparkSession.streams.removeListener(probe)
+        return q
+
+    monkeypatch.setattr(S, "_run_memory_sink", probed)
+    out = S.stream_exec_left_join(spark, SF_DIR)
+    assert out.count() > 0
+    assert spark.conf.get(key) == before
+    assert during and set(during) == {before}, during
+
+    want = S._state_sized_partitions(spark, table(spark, SF_DIR, "events").count())
+    ckpt = os.path.join(S.staging_base(spark, SF_DIR, "stream_loj"), "ckpt")
+    with open(os.path.join(ckpt, "offsets", "0")) as fh:
+        meta = json.loads(fh.read().splitlines()[1])
+    assert meta["conf"][key] == str(want)
+
+
 def test_upsert_time_travel_and_snapshot_expiry(spark):
     """r14: every snap-N dir IS the full merged table after batch N,
     so retention > 2 buys time travel for one directory resolve. Pin:
@@ -2407,7 +2453,7 @@ def test_upsert_time_travel_and_snapshot_expiry(spark):
     q = S.upsert_sink(rows, tgt, ckpt, keep_snapshots=100).start()
     q.awaitTermination(120)
 
-    hist = S.upsert_history(spark, tgt)
+    hist = SS.upsert_history(spark, tgt)
     assert len(hist) >= 3, hist  # a real multi-batch drain
     assert hist[0]["committed"] and not any(h["committed"] for h in hist[1:])
 
@@ -2438,30 +2484,30 @@ def test_upsert_time_travel_and_snapshot_expiry(spark):
             F.col("after.value").alias("value"),
         )
         acc = live if acc is None else merge_upsert_frames(acc, live, "event_id")
-        got = S.read_upsert_target(spark, tgt, as_of_batch=b)
+        got = SS.read_upsert_target(spark, tgt, as_of_batch=b)
         assert got.exceptAll(acc).isEmpty() and acc.exceptAll(got).isEmpty(), b
 
     # (c) expiry keeps the newest keep_last, never drops the committed
-    expired = S.expire_snapshots(spark, tgt, keep_last=2)
+    expired = SS.expire_snapshots(spark, tgt, keep_last=2)
     assert expired == batch_ids[:-2]
-    left = S.upsert_history(spark, tgt)
+    left = SS.upsert_history(spark, tgt)
     assert [h["batch_id"] for h in left] == batch_ids[-1:-3:-1]
     assert left[0]["committed"]
-    S.read_upsert_target(spark, tgt)  # committed read still fine
+    SS.read_upsert_target(spark, tgt)  # committed read still fine
 
     # (d) expired as_of fails loudly, naming the retained ids
     with pytest.raises(FileNotFoundError, match="retained batches"):
-        S.read_upsert_target(spark, tgt, as_of_batch=batch_ids[0])
+        SS.read_upsert_target(spark, tgt, as_of_batch=batch_ids[0])
 
     # (e) an UNCOMMITTED snapshot (crash between parquet write and
     # pointer flip — engine redelivery will overwrite it in place)
     # must never be served, even with a valid _SUCCESS marker
     ghost = batch_ids[-1] + 7
-    S.read_upsert_target(spark, tgt).limit(1).write.mode("overwrite").parquet(
+    SS.read_upsert_target(spark, tgt).limit(1).write.mode("overwrite").parquet(
         os.path.join(tgt, f"snap-{ghost}")
     )
     with pytest.raises(FileNotFoundError, match=f"snap-{ghost} not available"):
-        S.read_upsert_target(spark, tgt, as_of_batch=ghost)
+        SS.read_upsert_target(spark, tgt, as_of_batch=ghost)
 
 
 def test_named_tags_pin_snapshots_against_expiry_and_gc(spark):
@@ -2487,25 +2533,25 @@ def test_named_tags_pin_snapshots_against_expiry_and_gc(spark):
     q = S.upsert_sink(S.live_rows(stream), tgt, ckpt, keep_snapshots=100).start()
     q.awaitTermination(120)
 
-    batch_ids = sorted(h["batch_id"] for h in S.upsert_history(spark, tgt))
+    batch_ids = sorted(h["batch_id"] for h in SS.upsert_history(spark, tgt))
     assert len(batch_ids) >= 3
     oldest, committed = batch_ids[0], batch_ids[-1]
 
     # (a) tag the oldest explicitly; default tags the committed head
-    assert S.tag_snapshot(spark, tgt, "release-1", batch_id=oldest) == oldest
-    assert S.tag_snapshot(spark, tgt, "head") == committed
-    assert S.list_tags(spark, tgt) == {"release-1": oldest, "head": committed}
+    assert SS.tag_snapshot(spark, tgt, "release-1", batch_id=oldest) == oldest
+    assert SS.tag_snapshot(spark, tgt, "head") == committed
+    assert SS.list_tags(spark, tgt) == {"release-1": oldest, "head": committed}
 
     # (b) expiry prunes untagged old snapshots but keeps the tagged one
-    expired = S.expire_snapshots(spark, tgt, keep_last=2)
+    expired = SS.expire_snapshots(spark, tgt, keep_last=2)
     assert oldest not in expired
     assert set(expired) == set(batch_ids[1:-2])
-    remaining = {h["batch_id"] for h in S.upsert_history(spark, tgt)}
+    remaining = {h["batch_id"] for h in SS.upsert_history(spark, tgt)}
     assert oldest in remaining and committed in remaining
 
     # (c) tagged read == as_of_batch read of the pinned id
-    via_tag = S.read_upsert_target(spark, tgt, as_of_tag="release-1")
-    via_batch = S.read_upsert_target(spark, tgt, as_of_batch=oldest)
+    via_tag = SS.read_upsert_target(spark, tgt, as_of_tag="release-1")
+    via_batch = SS.read_upsert_target(spark, tgt, as_of_batch=oldest)
     assert via_tag.exceptAll(via_batch).isEmpty()
     assert via_batch.exceptAll(via_tag).isEmpty()
 
@@ -2522,40 +2568,40 @@ def test_named_tags_pin_snapshots_against_expiry_and_gc(spark):
     )
     q2 = S.upsert_sink(S.live_rows(stream2), tgt, ckpt, keep_snapshots=2).start()
     q2.awaitTermination(120)
-    after = {h["batch_id"] for h in S.upsert_history(spark, tgt)}
+    after = {h["batch_id"] for h in SS.upsert_history(spark, tgt)}
     assert oldest in after, "sink GC deleted a tagged snapshot"
     assert max(after) > committed  # new commits really happened
-    S.read_upsert_target(spark, tgt, as_of_tag="release-1").count()
+    SS.read_upsert_target(spark, tgt, as_of_tag="release-1").count()
 
     # (g) loud failures
     with pytest.raises(FileNotFoundError, match="known tags"):
-        S.read_upsert_target(spark, tgt, as_of_tag="nope")
+        SS.read_upsert_target(spark, tgt, as_of_tag="nope")
     with pytest.raises(ValueError, match="invalid tag name"):
-        S.tag_snapshot(spark, tgt, "../evil")
+        SS.tag_snapshot(spark, tgt, "../evil")
     with pytest.raises(ValueError, match="at most one"):
-        S.read_upsert_target(spark, tgt, as_of_batch=oldest, as_of_tag="head")
+        SS.read_upsert_target(spark, tgt, as_of_batch=oldest, as_of_tag="head")
     with pytest.raises(FileNotFoundError, match="cannot tag"):
-        S.tag_snapshot(spark, tgt, "ghost", batch_id=max(after) + 99)
+        SS.tag_snapshot(spark, tgt, "ghost", batch_id=max(after) + 99)
 
     # (e) deleting the tag releases the snapshot to the NEXT expiry
-    S.delete_tag(spark, tgt, "release-1")
-    assert "release-1" not in S.list_tags(spark, tgt)
-    expired2 = S.expire_snapshots(spark, tgt, keep_last=2)
+    SS.delete_tag(spark, tgt, "release-1")
+    assert "release-1" not in SS.list_tags(spark, tgt)
+    expired2 = SS.expire_snapshots(spark, tgt, keep_last=2)
     assert oldest in expired2
     with pytest.raises(FileNotFoundError):
-        S.read_upsert_target(spark, tgt, as_of_tag="release-1")
+        SS.read_upsert_target(spark, tgt, as_of_tag="release-1")
 
     # (f) orphan sweep: a snap dir with NO _SUCCESS below the committed
     # id is unservable garbage — expire_snapshots removes it (while an
     # un-committed dir ABOVE the committed id is left for redelivery)
-    head_now = max(h["batch_id"] for h in S.upsert_history(spark, tgt))
+    head_now = max(h["batch_id"] for h in SS.upsert_history(spark, tgt))
     orphan_lo = os.path.join(tgt, "snap-0")
     orphan_hi = os.path.join(tgt, f"snap-{head_now + 50}")
     for p in (orphan_lo, orphan_hi):
         os.makedirs(p, exist_ok=True)
         with open(os.path.join(p, "part-00000.parquet"), "w") as fh:
             fh.write("torn")
-    S.expire_snapshots(spark, tgt, keep_last=2)
+    SS.expire_snapshots(spark, tgt, keep_last=2)
     assert not os.path.exists(orphan_lo), "orphan below committed must be swept"
     assert os.path.exists(orphan_hi), "in-flight dir above committed must stay"
 
@@ -2587,27 +2633,27 @@ def test_tag_crash_recovery_and_sweep(spark):
         fh.write("snap-3")
 
     # (a)+(b): tag snap-0, then crash a re-point to snap-1 mid-move
-    S.tag_snapshot(spark, tgt, "rel", batch_id=0)
+    SS.tag_snapshot(spark, tgt, "rel", batch_id=0)
     fs.put_text(f"{tgt}/_TAG.tmp-rel", "snap-1")
     fs.delete(f"{tgt}/_TAG-rel")
     # maintenance in the crash window: must recover the tag first and
     # keep snap-1 pinned (pre-fix: tag lost, snap-1 expirable)
-    expired = S.expire_snapshots(spark, tgt, keep_last=2)
+    expired = SS.expire_snapshots(spark, tgt, keep_last=2)
     assert 1 not in expired, "crash window unpinned the tagged snapshot"
-    assert S.list_tags(spark, tgt) == {"rel": 1}
+    assert SS.list_tags(spark, tgt) == {"rel": 1}
     assert not fs.exists(f"{tgt}/_TAG.tmp-rel"), "tmp not swept after recovery"
-    S.read_upsert_target(spark, tgt, as_of_tag="rel").count()
+    SS.read_upsert_target(spark, tgt, as_of_tag="rel").count()
 
     # (c): tmp written but pointer never deleted — an intent that never
     # reached its commit point aborts cleanly
     fs.put_text(f"{tgt}/_TAG.tmp-rel", "snap-3")
-    assert S.list_tags(spark, tgt) == {"rel": 1}, "uncommitted intent applied"
+    assert SS.list_tags(spark, tgt) == {"rel": 1}, "uncommitted intent applied"
     assert not fs.exists(f"{tgt}/_TAG.tmp-rel"), "stale intent tmp not swept"
 
     # (d): delete_tag with a stale tmp present must not resurrect
     fs.put_text(f"{tgt}/_TAG.tmp-rel", "snap-3")
-    S.delete_tag(spark, tgt, "rel")
-    assert S.list_tags(spark, tgt) == {}, "deleted tag resurrected from tmp"
+    SS.delete_tag(spark, tgt, "rel")
+    assert SS.list_tags(spark, tgt) == {}, "deleted tag resurrected from tmp"
 
 
 def test_changelog_sink_matches_endpoint_diff_and_exactly_once(spark):
@@ -2653,7 +2699,7 @@ def test_changelog_sink_matches_endpoint_diff_and_exactly_once(spark):
         )
 
     # (a) per-batch partition == endpoint diff
-    want = canon(S.upsert_changelog(spark, tgt, "event_id", from_batch=0, to_batch=1))
+    want = canon(SS.upsert_changelog(spark, tgt, "event_id", from_batch=0, to_batch=1))
     got = canon(feed.filter(F.col("commit_batch") == 1))
     assert got == want
     before = canon(feed)
@@ -2800,7 +2846,7 @@ def test_materialized_view_sink_multibatch_and_crash_redelivery(spark, tmp_path)
     drain()
 
     def canon():
-        return sorted(tuple(r) for r in S.read_upsert_target(spark, view).collect())
+        return sorted(tuple(r) for r in SS.read_upsert_target(spark, view).collect())
 
     want = [("a", 2, 9.0), ("c", 1, 6.0)]
     assert canon() == want, canon()
@@ -2837,14 +2883,14 @@ def test_second_query_batch_zero_not_swallowed_as_redelivery(spark, tmp_path):
         assert q.awaitTermination(300), "upsert drain timed out"
 
     drain(ev, str(tmp_path / "s1"), str(tmp_path / "c1"))
-    n_seed = S.read_upsert_target(spark, tgt).count()
+    n_seed = SS.read_upsert_target(spark, tgt).count()
     # second, INDEPENDENT query (fresh checkpoint → its batch id is 0
     # again) updates every row; before the fix this commit vanished
     drain(
         ev.withColumn("value", F.col("value") + F.lit(1000.0)),
         str(tmp_path / "s2"), str(tmp_path / "c2"),
     )
-    got = S.read_upsert_target(spark, tgt)
+    got = SS.read_upsert_target(spark, tgt)
     assert got.count() == n_seed
     assert got.filter(F.col("value") < 1000.0).count() == 0, (
         "second query's batch 0 was swallowed as redelivery"
@@ -2880,22 +2926,22 @@ def test_rebase_merge_conflict_paths(spark, tmp_path):
         ).write.mode("overwrite").parquet(f"{broot}/snap-5")
 
     def state(tgt):
-        return sorted(tuple(r) for r in S.read_upsert_target(spark, tgt).collect())
+        return sorted(tuple(r) for r in SS.read_upsert_target(spark, tgt).collect())
 
     tgt = str(tmp_path / "t1")
     build(tgt)
     with pytest.raises(ValueError, match="fast-forward|allow_rebase"):
-        S.merge_branch(spark, tgt, "dev")
+        SS.merge_branch(spark, tgt, "dev")
     with pytest.raises(ValueError, match="rebase conflict.*1 key"):
-        S.merge_branch(spark, tgt, "dev", key="k", allow_rebase=True)
-    S.merge_branch(spark, tgt, "dev", key="k", allow_rebase=True,
+        SS.merge_branch(spark, tgt, "dev", key="k", allow_rebase=True)
+    SS.merge_branch(spark, tgt, "dev", key="k", allow_rebase=True,
                    on_conflict="branch")
     assert state(tgt) == [(1, "br1"), (2, "br2"), (3, "base3")]
-    assert "dev" not in S.list_branches(spark, tgt), "merge must consume the branch"
+    assert "dev" not in SS.list_branches(spark, tgt), "merge must consume the branch"
 
     tgt2 = str(tmp_path / "t2")
     build(tgt2)
-    S.merge_branch(spark, tgt2, "dev", key="k", allow_rebase=True,
+    SS.merge_branch(spark, tgt2, "dev", key="k", allow_rebase=True,
                    on_conflict="main")
     assert state(tgt2) == [(1, "main1"), (2, "br2"), (3, "base3")]
 
@@ -2930,50 +2976,50 @@ def test_branch_fork_merge_conflict_and_pinning(spark):
     flip(tgt, 2)
 
     # (a) fork reads as base
-    assert S.branch_snapshot(spark, tgt, "dev") == 2
-    assert S.list_branches(spark, tgt) == {"dev": 2}
-    assert [tuple(r) for r in S.read_branch(spark, tgt, "dev").collect()] == [(1, "m2")]
+    assert SS.branch_snapshot(spark, tgt, "dev") == 2
+    assert SS.list_branches(spark, tgt) == {"dev": 2}
+    assert [tuple(r) for r in SS.read_branch(spark, tgt, "dev").collect()] == [(1, "m2")]
 
     # (e) base pinned: expire with keep_last=2 keeps snap-2 anyway
     # (committed); re-point main ahead and verify the OLD base survives
     snap(tgt, 5, [(1, "m5")])
     flip(tgt, 5)
-    expired = S.expire_snapshots(spark, tgt, keep_last=2)
+    expired = SS.expire_snapshots(spark, tgt, keep_last=2)
     assert 2 not in expired, "branch base expired while branch exists"
-    assert {h["batch_id"] for h in S.upsert_history(spark, tgt)} >= {2, 5}
+    assert {h["batch_id"] for h in SS.upsert_history(spark, tgt)} >= {2, 5}
 
     # (d) main moved (committed snap-5 != base snap-2): loud conflict
     broot = os.path.join(tgt, "_BRANCH-dev")
     snap(broot, 3, [(1, "b3"), (2, "b-new")])
     flip(broot, 3)
     with pytest.raises(ValueError, match="merge conflict"):
-        S.merge_branch(spark, tgt, "dev")
-    assert S.list_branches(spark, tgt) == {"dev": 2}, "conflict consumed the branch"
+        SS.merge_branch(spark, tgt, "dev")
+    assert SS.list_branches(spark, tgt) == {"dev": 2}, "conflict consumed the branch"
 
     # (b)+(c): re-fork from the head, commit on the branch, merge back
-    S.delete_branch(spark, tgt, "dev")
-    S.branch_snapshot(spark, tgt, "dev2")  # base = snap-5
+    SS.delete_branch(spark, tgt, "dev")
+    SS.branch_snapshot(spark, tgt, "dev2")  # base = snap-5
     broot2 = os.path.join(tgt, "_BRANCH-dev2")
     snap(broot2, 6, [(1, "m5"), (2, "from-branch")])
     flip(broot2, 6)
     # isolation: main unchanged pre-merge
-    assert [tuple(r) for r in S.read_upsert_target(spark, tgt).collect()] == [(1, "m5")]
-    new_id = S.merge_branch(spark, tgt, "dev2")
+    assert [tuple(r) for r in SS.read_upsert_target(spark, tgt).collect()] == [(1, "m5")]
+    new_id = SS.merge_branch(spark, tgt, "dev2")
     assert new_id == 6, f"minted id must top retained main ids, got {new_id}"
-    got = sorted(tuple(r) for r in S.read_upsert_target(spark, tgt).collect())
+    got = sorted(tuple(r) for r in SS.read_upsert_target(spark, tgt).collect())
     assert got == [(1, "m5"), (2, "from-branch")]
-    assert S.list_branches(spark, tgt) == {}, "merge must consume the branch"
+    assert SS.list_branches(spark, tgt) == {}, "merge must consume the branch"
     assert not fs.exists(broot2)
 
     # (f) error surface
     with pytest.raises(ValueError, match="already exists"):
-        S.branch_snapshot(spark, tgt, "x") and S.branch_snapshot(spark, tgt, "x")
+        SS.branch_snapshot(spark, tgt, "x") and SS.branch_snapshot(spark, tgt, "x")
     with pytest.raises(ValueError, match="invalid branch name"):
-        S.branch_snapshot(spark, tgt, "../escape")
+        SS.branch_snapshot(spark, tgt, "../escape")
     with pytest.raises(FileNotFoundError, match="not found"):
-        S.read_branch(spark, tgt, "nope")
+        SS.read_branch(spark, tgt, "nope")
     with pytest.raises(FileNotFoundError, match="not found"):
-        S.merge_branch(spark, tgt, "nope")
+        SS.merge_branch(spark, tgt, "nope")
 
 
 def test_upsert_sink_monotonic_ids_past_merge(spark):
@@ -3001,7 +3047,7 @@ def test_upsert_sink_monotonic_ids_past_merge(spark):
     ).start().awaitTermination(120)
 
     # branch, one branch commit (engine bid 0 -> branch snap-1), merge
-    S.branch_snapshot(spark, tgt, "dev")
+    SS.branch_snapshot(spark, tgt, "dev")
     synthesize_envelopes(
         ev.filter(F.col("event_id") % 2 == 1)
     ).write.json(src_br)
@@ -3009,7 +3055,7 @@ def test_upsert_sink_monotonic_ids_past_merge(spark):
         S.live_rows(S.read_envelope_stream(spark, src_br)), tgt, ck_br,
         keep_snapshots=100, branch="dev",
     ).start().awaitTermination(120)
-    merged_id = S.merge_branch(spark, tgt, "dev")
+    merged_id = SS.merge_branch(spark, tgt, "dev")
 
     # main batch 1 from the SAME checkpoint (engine bid 1) must mint
     # ABOVE the merged id
@@ -3024,12 +3070,12 @@ def test_upsert_sink_monotonic_ids_past_merge(spark):
         keep_snapshots=100,
     ).start().awaitTermination(120)
 
-    hist = sorted(h["batch_id"] for h in S.upsert_history(spark, tgt))
+    hist = sorted(h["batch_id"] for h in SS.upsert_history(spark, tgt))
     assert hist == sorted(set(hist)), f"duplicate snap ids: {hist}"
     assert max(hist) > merged_id, (
         f"post-merge commit failed to mint past the merged id: {hist}"
     )
-    head = S.read_upsert_target(spark, tgt)
+    head = SS.read_upsert_target(spark, tgt)
     assert head.count() == live.select("event_id").distinct().count()
     # the %4==2 update (latest ts) must have won over both earlier gens
     orig = (
@@ -3063,7 +3109,7 @@ def test_upsert_sink_monotonic_ids_past_merge(spark):
     with open(os.path.join(tgt, "_LATEST"), "w") as fh:
         fh.write("snap-1")
 
-    log = S.upsert_changelog(spark, tgt, "k", from_batch=0, to_batch=1)
+    log = SS.upsert_changelog(spark, tgt, "k", from_batch=0, to_batch=1)
     got = sorted(tuple(r) for r in log.collect())
     assert got == sorted(
         [
@@ -3076,11 +3122,11 @@ def test_upsert_sink_monotonic_ids_past_merge(spark):
     ), got
 
     # delete branch: reverse direction turns the insert into a delete
-    rev = S.upsert_changelog(spark, tgt, "k", from_batch=1, to_batch=0)
+    rev = SS.upsert_changelog(spark, tgt, "k", from_batch=1, to_batch=0)
     assert ("delete", 5, "e") in {tuple(r) for r in rev.collect()}
 
     # identity: a snapshot diffed against itself is empty
-    assert S.upsert_changelog(spark, tgt, "k", from_batch=1, to_batch=1).count() == 0
+    assert SS.upsert_changelog(spark, tgt, "k", from_batch=1, to_batch=1).count() == 0
 
 
 def test_upsert_changelog_schema_evolution_union_diff(spark):
@@ -3108,7 +3154,7 @@ def test_upsert_changelog_schema_evolution_union_diff(spark):
     with open(os.path.join(tgt, "_LATEST"), "w") as fh:
         fh.write("snap-1")
 
-    fwd = S.upsert_changelog(spark, tgt, "k", from_batch=0, to_batch=1)
+    fwd = SS.upsert_changelog(spark, tgt, "k", from_batch=0, to_batch=1)
     assert fwd.columns == ["change_type", "k", "v", "c"]
     got = sorted(tuple(r) for r in fwd.collect())
     assert got == sorted(
@@ -3121,7 +3167,7 @@ def test_upsert_changelog_schema_evolution_union_diff(spark):
     ), got
 
     # (d) reverse direction: wide 'from', narrow 'to' — NULL-fill, not raise
-    bwd = S.upsert_changelog(spark, tgt, "k", from_batch=1, to_batch=0)
+    bwd = SS.upsert_changelog(spark, tgt, "k", from_batch=1, to_batch=0)
     got_b = sorted(tuple(r) for r in bwd.collect())
     assert got_b == sorted(
         [
@@ -3136,15 +3182,15 @@ def test_upsert_changelog_schema_evolution_union_diff(spark):
     with open(os.path.join(tgt, "_LATEST"), "w") as fh:
         fh.write("snap-2")
     with pytest.raises(ValueError, match="changed type"):
-        S.upsert_changelog(spark, tgt, "k", from_batch=0, to_batch=2)
+        SS.upsert_changelog(spark, tgt, "k", from_batch=0, to_batch=2)
 
     # (f) endpoint guards
     with pytest.raises(ValueError, match="from_batch / from_tag"):
-        S.upsert_changelog(spark, tgt, "k", from_batch=0, from_tag="t", to_batch=1)
+        SS.upsert_changelog(spark, tgt, "k", from_batch=0, from_tag="t", to_batch=1)
     with pytest.raises(ValueError, match="to_batch / to_tag"):
-        S.upsert_changelog(spark, tgt, "k", from_batch=0, to_batch=1, to_tag="t")
+        SS.upsert_changelog(spark, tgt, "k", from_batch=0, to_batch=1, to_tag="t")
     with pytest.raises(ValueError, match="no endpoint"):
-        S.upsert_changelog(spark, tgt, "k")
+        SS.upsert_changelog(spark, tgt, "k")
 
 
 def test_merge_upsert_schema_evolution_semantics(spark):

@@ -804,7 +804,7 @@ def test_upsert_changelog_plan_single_join_no_cartesian(spark, tmp_path):
     import io as _io
     import contextlib as _ctx
 
-    from promptly_data_pipelines_spark.cdc import streaming as S
+    from promptly_data_pipelines_spark.operators import snapshot_store as SS
 
     tgt = str(tmp_path / "tgt")
     for b, rows in ((0, [(1, "a")]), (1, [(1, "b"), (2, "c")])):
@@ -813,7 +813,7 @@ def test_upsert_changelog_plan_single_join_no_cartesian(spark, tmp_path):
         ).parquet(f"{tgt}/snap-{b}")
     (tmp_path / "tgt" / "_LATEST").write_text("snap-1")
 
-    df = S.upsert_changelog(spark, tgt, "k", from_batch=0, to_batch=1)
+    df = SS.upsert_changelog(spark, tgt, "k", from_batch=0, to_batch=1)
     buf = _io.StringIO()
     with _ctx.redirect_stdout(buf):
         df.explain("formatted")

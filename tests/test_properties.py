@@ -1365,7 +1365,7 @@ def test_snapshot_store_lifecycle_invariants(spark, ops):
     import os
     import tempfile
 
-    from promptly_data_pipelines_spark.cdc import streaming as S
+    from promptly_data_pipelines_spark.operators import snapshot_store as SS
     from promptly_data_pipelines_spark.operators.fs import FileSystemOps
 
     tgt = tempfile.mkdtemp(prefix="pdp_store_prop_")
@@ -1400,14 +1400,14 @@ def test_snapshot_store_lifecycle_invariants(spark, ops):
             name = names[op[1]]
             if committed is None:
                 with pytest.raises(FileNotFoundError):
-                    S.branch_snapshot(spark, tgt, name)
+                    SS.branch_snapshot(spark, tgt, name)
                 continue
             if name in branches:
                 with pytest.raises(ValueError, match="already exists"):
-                    S.branch_snapshot(spark, tgt, name)
+                    SS.branch_snapshot(spark, tgt, name)
                 continue
             base = committed if op[2] else min(snaps)
-            assert S.branch_snapshot(spark, tgt, name, batch_id=base) == base
+            assert SS.branch_snapshot(spark, tgt, name, batch_id=base) == base
             branches[name] = {"base": base, "snaps": {}, "committed": None}
         elif op[0] == "branch_commit":
             name = names[op[1]]
@@ -1423,14 +1423,14 @@ def test_snapshot_store_lifecycle_invariants(spark, ops):
             name = names[op[1]]
             if name not in branches:
                 with pytest.raises(FileNotFoundError):
-                    S.merge_branch(spark, tgt, name)
+                    SS.merge_branch(spark, tgt, name)
                 continue
             b = branches[name]
             if committed != b["base"]:
                 with pytest.raises(ValueError, match="merge conflict"):
-                    S.merge_branch(spark, tgt, name)
+                    SS.merge_branch(spark, tgt, name)
                 continue  # branch must survive a conflict — checked below
-            got = S.merge_branch(spark, tgt, name)
+            got = SS.merge_branch(spark, tgt, name)
             if b["committed"] is None:
                 assert got == b["base"]  # nothing to merge: trivial ff
             else:
@@ -1445,21 +1445,21 @@ def test_snapshot_store_lifecycle_invariants(spark, ops):
             del branches[name]
         elif op[0] == "delete_branch":
             name = names[op[1]]
-            S.delete_branch(spark, tgt, name)
+            SS.delete_branch(spark, tgt, name)
             branches.pop(name, None)
         elif op[0] == "tag":
             name = names[op[1]]
             if committed is None:
                 with pytest.raises(FileNotFoundError):
-                    S.tag_snapshot(spark, tgt, name)
+                    SS.tag_snapshot(spark, tgt, name)
                 continue
             target = committed if op[2] else min(snaps)
-            got = S.tag_snapshot(spark, tgt, name, batch_id=target)
+            got = SS.tag_snapshot(spark, tgt, name, batch_id=target)
             assert got == target
             tags[name] = target
         elif op[0] == "untag":
             name = names[op[1]]
-            S.delete_tag(spark, tgt, name)
+            SS.delete_tag(spark, tgt, name)
             tags.pop(name, None)
         elif op[0] == "tag_crash":
             name = names[op[1]]
@@ -1476,7 +1476,7 @@ def test_snapshot_store_lifecycle_invariants(spark, ops):
         elif op[0] == "expire":
             keep_last = op[1]
             if committed is None:
-                assert S.expire_snapshots(spark, tgt, keep_last=keep_last) == []
+                assert SS.expire_snapshots(spark, tgt, keep_last=keep_last) == []
                 continue
             newest = set(sorted(snaps)[-keep_last:])
             keep = (
@@ -1486,25 +1486,25 @@ def test_snapshot_store_lifecycle_invariants(spark, ops):
                 | {b["base"] for b in branches.values()}
             )
             expect = sorted(snaps - keep)
-            assert S.expire_snapshots(spark, tgt, keep_last=keep_last) == expect
+            assert SS.expire_snapshots(spark, tgt, keep_last=keep_last) == expect
             snaps -= set(expect)
 
         # invariants after every op
-        assert S.list_tags(spark, tgt) == tags
-        assert S.list_branches(spark, tgt) == {
+        assert SS.list_tags(spark, tgt) == tags
+        assert SS.list_branches(spark, tgt) == {
             n: b["base"] for n, b in branches.items()
         }
         if committed is None:
             continue
-        head = S.read_upsert_target(spark, tgt).collect()
+        head = SS.read_upsert_target(spark, tgt).collect()
         assert [(r.batch, r.payload) for r in head] == [payloads[committed]]
-        hist = {h["batch_id"] for h in S.upsert_history(spark, tgt)}
+        hist = {h["batch_id"] for h in SS.upsert_history(spark, tgt)}
         assert hist == snaps
         for b in snaps:
-            rows = S.read_upsert_target(spark, tgt, as_of_batch=b).collect()
+            rows = SS.read_upsert_target(spark, tgt, as_of_batch=b).collect()
             assert [(r.batch, r.payload) for r in rows] == [payloads[b]]
         for name, b in tags.items():
-            rows = S.read_upsert_target(spark, tgt, as_of_tag=name).collect()
+            rows = SS.read_upsert_target(spark, tgt, as_of_tag=name).collect()
             assert [(r.batch, r.payload) for r in rows] == [payloads[b]]
         for name, b in branches.items():
             want = (
@@ -1512,5 +1512,5 @@ def test_snapshot_store_lifecycle_invariants(spark, ops):
                 if b["committed"] is not None
                 else payloads[b["base"]]
             )
-            rows = S.read_branch(spark, tgt, name).collect()
+            rows = SS.read_branch(spark, tgt, name).collect()
             assert [(r.batch, r.payload) for r in rows] == [want]

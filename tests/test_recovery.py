@@ -103,6 +103,7 @@ def test_upsert_sink_survives_batch_redelivery(spark):
     stream forever. The sink must short-circuit the re-delivery, keep
     the target intact, and GC stale _LATEST.tmp-* files."""
     from promptly_data_pipelines_spark.cdc import streaming as S
+    from promptly_data_pipelines_spark.operators import snapshot_store as SS
     from promptly_data_pipelines_spark.cdc.envelope import synthesize_envelopes
 
     base = os.path.join(tempfile.gettempdir(), "pdp_redeliver_test")
@@ -113,7 +114,7 @@ def test_upsert_sink_survives_batch_redelivery(spark):
     synthesize_envelopes(ev).write.json(env_dir)
     rows = S.live_rows(S.read_envelope_stream(spark, env_dir))
     S.upsert_sink(rows, tgt, ckpt).start().awaitTermination(120)
-    want = S.read_upsert_target(spark, tgt).count()
+    want = SS.read_upsert_target(spark, tgt).count()
 
     # the crash: the pointer flipped (target committed) but the engine
     # never recorded the batch — drop the checkpoint commit marker so
@@ -133,7 +134,7 @@ def test_upsert_sink_survives_batch_redelivery(spark):
     q = S.upsert_sink(rows2, tgt, ckpt).start()
     q.awaitTermination(120)  # old code: wedged here with overwrite error
 
-    back = S.read_upsert_target(spark, tgt)
+    back = SS.read_upsert_target(spark, tgt)
     assert back.count() == want
     ptr = open(os.path.join(tgt, "_LATEST")).read().strip()
     assert os.path.exists(os.path.join(tgt, ptr, "_SUCCESS"))
@@ -176,6 +177,7 @@ def test_redelivery_keeps_prior_snapshot(spark):
     crash-interrupted pointer flip), only older snaps and stale tmp
     pointers go."""
     from promptly_data_pipelines_spark.cdc import streaming as S
+    from promptly_data_pipelines_spark.operators import snapshot_store as SS
     from promptly_data_pipelines_spark.cdc.envelope import synthesize_envelopes
 
     base = os.path.join(tempfile.gettempdir(), "pdp_redeliver_retention")
@@ -220,4 +222,4 @@ def test_redelivery_keeps_prior_snapshot(spark):
     )
     # tombstoned ids (every 10th, per synthesize_envelopes) never land
     live = ev.filter(F.col("event_id") % 10 != 0).select("event_id").distinct().count()
-    assert S.read_upsert_target(spark, tgt).count() == live
+    assert SS.read_upsert_target(spark, tgt).count() == live
