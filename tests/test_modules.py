@@ -96,6 +96,35 @@ def test_orchestrator_cycle_detection():
         p.topo_order()
 
 
+def test_orchestrator_parallel_matches_sequential(spark):
+    """A two-model level runs on the pool; the result matches the same
+    model functions applied one by one on the caller's thread."""
+    import threading
+
+    threads = {}
+
+    def src(name, n):
+        def fn(s, up):
+            threads[name] = threading.current_thread()
+            return s.range(n).withColumnRenamed("id", "k")
+
+        return fn
+
+    def join(s, up):
+        return up["a"].join(up["b"], "k")
+
+    p = Pipeline()
+    p.model("a")(src("a", 10))
+    p.model("b")(src("b", 5))
+    p.model("c", deps=["a", "b"])(join)
+    par = p.run(spark)["c"].collect()
+    assert threads["a"] is not threading.current_thread()
+    assert threads["b"] is not threading.current_thread()
+
+    seq = join(spark, {"a": src("a", 10)(spark, {}), "b": src("b", 5)(spark, {})}).collect()
+    assert sorted(r.k for r in seq) == sorted(r.k for r in par) == list(range(5))
+
+
 def test_dq_report(spark, tmp_path):
     from promptly_data_pipelines_spark.quality.checks import table_metrics
     from promptly_data_pipelines_spark.quality.report import write_report
