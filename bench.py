@@ -84,12 +84,23 @@ def floor_scale(calibration_start: float | None) -> float:
     return max(1.0, calibration_start / FLOOR_CAL_REF)
 
 
-def _load_floors() -> dict[str, float]:
+def _load_floor_table() -> dict:
     try:
         with open(FLOORS_PATH) as fh:
-            return {k: float(v) for k, v in json.load(fh)["floors"].items()}
-    except (OSError, KeyError, ValueError):
+            return json.load(fh)
+    except (OSError, ValueError):
         return {}
+
+
+def floors_for_run(table: dict, cpus: int) -> dict[str, float] | None:
+    """The table's {line: seconds} floors when they were set on
+    ``cpus`` cores, else None: many lines run faster on fewer cores, so
+    a run on a different core count (or against a table that does not
+    record its count) neither WARNs against the floors nor ratchets
+    them. Pure, unit-tested."""
+    if table.get("cpus") != cpus:
+        return None
+    return {k: float(v) for k, v in table.get("floors", {}).items()}
 
 
 def _is_timing_line(name: str, value: object) -> bool:
@@ -858,14 +869,22 @@ def main() -> None:
     except Exception:  # noqa: BLE001 — diagnostics must not kill the record
         calibration_end = None
 
-    # Quiet-floor check + ratchet (r11 verdict #2). Warnings compare
-    # against the PRE-update floors; only a run that passed BOTH start
-    # gates may lower them (and floors never rise, so a loaded run —
-    # whose readings are inflated — cannot corrupt the table).
+    # Quiet-floor check + ratchet. Warnings compare against the
+    # PRE-update floors; only a run on the table's core count that
+    # passed the start gates may lower them (and floors never rise, so
+    # a loaded run — whose readings are inflated — cannot corrupt the
+    # table).
     all_lines: dict[str, object] = {**timings, **secondary}
-    floors = _load_floors()
+    floor_table = _load_floor_table()
+    floors = floors_for_run(floor_table, CPUS)
+    if floors is None:
+        print(
+            f"NOTE: bench_floors.json was set on {floor_table.get('cpus')} cores, "
+            f"this run has {CPUS} — floors neither checked nor ratcheted",
+            file=sys.stderr,
+        )
     scale = floor_scale(calibration_start)
-    floor_warnings = check_floors(all_lines, floors, scale=scale)
+    floor_warnings = check_floors(all_lines, floors or {}, scale=scale)
     for name, (val, floor, r, norm_r) in sorted(floor_warnings.items()):
         print(
             f"WARN: {name} = {val}s exceeds {FLOOR_WARN_RATIO}x its quiet "
@@ -886,11 +905,12 @@ def main() -> None:
         and calibration_start <= QUIET_REL_SLACK * host_cal
     )
     quiet_run = quiet_abs or quiet_rel
-    if quiet_run:
+    if quiet_run and floors is not None:
         try:
             with open(FLOORS_PATH, "w") as fh:
                 json.dump(
                     {
+                        "cpus": CPUS,
                         "note": "best quiet-run seconds per bench line "
                         "(gate: loadavg<2 AND (calibration<0.7 OR "
                         f"calibration <= {QUIET_REL_SLACK}x the fresh-JVM "
@@ -925,6 +945,7 @@ def main() -> None:
             "floor_scale": round(scale, 3),
         },
         "cpus": CPUS,
+        "floors_cpus": floor_table.get("cpus"),
         "spread": spread,
         "line_load": line_load,
         "floor_warnings": floor_warnings,

@@ -24,10 +24,8 @@ import glob
 import math
 import os
 import shutil
-import tempfile
-import time
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -46,7 +44,15 @@ from ..operators.snapshot_store import (
 from ..registry import query
 from ..session import scoped_session
 from .batch import merge_upsert_frames
-from .envelope import decode_envelopes, synthesize_envelopes
+from .envelope import ENVELOPE_V2_SCHEMA, decode_envelopes, synthesize_envelopes
+from .staging import (
+    drain_stream,
+    foreach_batch_writer,
+    fresh_staging_dir,
+    publish_arrivals,
+    stage_frames,
+    staging_base,
+)
 
 RAW_STREAM_SCHEMA = T.StructType(
     [
@@ -258,10 +264,89 @@ def upsert_sink(
             run_id=checkpoint, branch=branch,
         )
 
-    return (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
+    return foreach_batch_writer(stream, merge_batch, checkpoint)
+
+
+def _bumped(df: DataFrame, dv: float = 100.0, hours: int = 1) -> DataFrame:
+    """``df`` as an update pass: value + ``dv``, ts + ``hours``."""
+    return df.withColumn("value", F.col("value") + F.lit(dv)).withColumn(
+        "ts", F.col("ts") + F.expr(f"INTERVAL {hours} HOURS")
+    )
+
+
+def _arrival_slices(ev: DataFrame, migrate: bool = False) -> list[DataFrame]:
+    """The three-batch arrival fixture: two disjoint insert waves
+    (event_id % 3 == 0, then the rest) and an update pass over the
+    evens (value + 100, ts + 1 h). ``migrate`` also moves the
+    event_id % 4 == 0 slice to event_type 'migrated', so group
+    membership moves, not just a measure."""
+    upd = _bumped(ev.filter(F.col("event_id") % 2 == 0))
+    if migrate:
+        upd = upd.withColumn(
+            "event_type",
+            F.when(F.col("event_id") % 4 == 0, F.lit("migrated")).otherwise(
+                F.col("event_type")
+            ),
+        )
+    waves = [ev.filter(F.col("event_id") % 3 == 0), ev.filter(F.col("event_id") % 3 != 0)]
+    return waves + [upd]
+
+
+def _upsert_arrivals(
+    spark: SparkSession,
+    base: str,
+    frames: list[DataFrame],
+    what: str,
+    src: str = "src",
+    ckpt: str = "ckpt",
+    channel: Column | None = None,
+    **sink_kw,
+) -> str:
+    """Stage one Debezium envelope file per frame into ``base/<src>``
+    and drain them through :func:`upsert_sink` into ``base/tgt``, one
+    file per micro-batch, every snapshot kept; returns the target.
+    ``channel`` is the post-DDL upstream: the envelopes carry it as an
+    extra image column, the consumer decodes ENVELOPE_V2_SCHEMA and the
+    sink evolves the target schema."""
+    image_extra = None if channel is None else {"channel": channel}
+    src = os.path.join(base, src)
+    stage_frames([synthesize_envelopes(f, image_extra=image_extra) for f in frames], src)
+    stream = (
+        spark.readStream.schema(RAW_STREAM_SCHEMA)
+        .option("maxFilesPerTrigger", "1")
+        .json(src)
+    )
+    rows = (
+        live_rows(stream)
+        if channel is None
+        else live_rows(stream, ENVELOPE_V2_SCHEMA, ("channel",))
+    )
+    tgt = os.path.join(base, "tgt")
+    q = upsert_sink(
+        rows, tgt, os.path.join(base, ckpt), keep_snapshots=100,
+        evolve_schema=channel is not None, **sink_kw,
+    ).start()
+    drain_stream(q, what)
+    return tgt
+
+
+def _changelog_arrivals(
+    spark: SparkSession, sf_dir: str, tag: str, what: str, migrate: bool = True
+) -> tuple[str, str]:
+    """:func:`_arrival_slices` drained through a change-feed-producing
+    upsert sink; returns (target, changelog) paths."""
+    base = fresh_staging_dir(spark, sf_dir, tag)
+    cl = os.path.join(base, "changelog")
+    slices = _arrival_slices(table(spark, sf_dir, "events"), migrate)
+    return _upsert_arrivals(spark, base, slices, what, changelog_path=cl), cl
+
+
+def _event_rows(df: DataFrame, *lead, extra: tuple[str, ...] = ()) -> DataFrame:
+    """The event columns the snapshot-store oracles compare: ``lead``
+    label columns, the row image, ``extra`` columns, ts as text."""
+    return df.select(
+        *lead, "event_id", "user_id", "event_type", "value", *extra,
+        ts_str(F.col("ts")).alias("ts_str"),
     )
 
 
@@ -298,64 +383,27 @@ def upsert_sink(
     """,
 )
 def merge_upsert_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S6 time travel end to end under the REAL engine (r14 verdict
-    #5): three envelope files are staged with strictly increasing
-    mtimes — two insert slices (event_id%3==0, then the rest) and a
-    trailing UPDATE batch (even ids, value+100, ts+1h) — and drained
-    through ``upsert_sink`` one file per micro-batch (the file source
-    processes oldest-mtime first, so the batch order is pinned). The
-    second-to-last snapshot is then TAGGED ('cut', the Nessie-ref
-    form) and read back via ``as_of_tag`` alongside the committed
-    head; both states are returned labeled. The oracle replays the
-    same prefix algebra in SQL: 'cut' = all live inserts untouched,
-    'head' = latest-wins with the update slice beating the inserts on
-    even ids — so snapshot isolation, pointer commit, tagging, and
-    the merge itself are all value-checked, not just row-counted."""
-    ev = table(spark, sf_dir, "events")
-    slices = [
-        ev.filter(F.col("event_id") % 3 == 0),
-        ev.filter(F.col("event_id") % 3 != 0),
-        ev.filter(F.col("event_id") % 2 == 0).withColumn(
-            "value", F.col("value") + F.lit(100.0)
-        ).withColumn("ts", F.col("ts") + F.expr("INTERVAL 1 HOUR")),
-    ]
-    base = _fresh_staging_dir(spark, sf_dir, "tt_upsert")
-    src, ckpt, tgt = (os.path.join(base, d) for d in ("src", "ckpt", "tgt"))
-    os.makedirs(src, exist_ok=True)
-    now = time.time()
-    for i, sl in enumerate(slices):
-        stage = os.path.join(base, f"stage{i}")
-        synthesize_envelopes(sl).coalesce(1).write.json(stage)
-        part = next(
-            p for p in glob.glob(os.path.join(stage, "part-*")) if not p.endswith(".crc")
-        )
-        dst = os.path.join(src, f"{i:03d}.json")
-        shutil.move(part, dst)
-        # pin the file-source order: oldest-mtime-first, 10 s apart
-        os.utime(dst, (now + 10 * i, now + 10 * i))
-    stream = (
-        spark.readStream.schema(RAW_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .json(src)
-    )
-    q = upsert_sink(live_rows(stream), tgt, ckpt, keep_snapshots=100).start()
-    drain_stream(q, "time-travel upsert")
+    """S6 time travel end to end under the real engine: three envelope
+    files are staged with strictly increasing mtimes — two insert
+    slices (event_id%3==0, then the rest) and a trailing UPDATE batch
+    (even ids, value+100, ts+1h) — and drained through ``upsert_sink``
+    one file per micro-batch (the file source processes oldest-mtime
+    first, so the batch order is pinned). The second-to-last snapshot
+    is then TAGGED ('cut', the Nessie-ref form) and read back via
+    ``as_of_tag`` alongside the committed head; both states are
+    returned labeled. The oracle replays the same prefix algebra in
+    SQL: 'cut' = all live inserts untouched, 'head' = latest-wins with
+    the update slice beating the inserts on even ids — so snapshot
+    isolation, pointer commit, tagging, and the merge itself are all
+    value-checked, not just row-counted."""
+    base = fresh_staging_dir(spark, sf_dir, "tt_upsert")
+    slices = _arrival_slices(table(spark, sf_dir, "events"))
+    tgt = _upsert_arrivals(spark, base, slices, "time-travel upsert")
     batch_ids = sorted(h["batch_id"] for h in upsert_history(spark, tgt))
     tag_snapshot(spark, tgt, "cut", batch_id=batch_ids[-2])
-
-    def labeled(df: DataFrame, label: str) -> DataFrame:
-        return df.select(
-            F.lit(label).alias("state"),
-            "event_id",
-            "user_id",
-            "event_type",
-            "value",
-            ts_str(F.col("ts")).alias("ts_str"),
-        )
-
-    return labeled(
-        read_upsert_target(spark, tgt, as_of_tag="cut"), "cut"
-    ).unionByName(labeled(read_upsert_target(spark, tgt), "head"))
+    return _event_rows(
+        read_upsert_target(spark, tgt, as_of_tag="cut"), F.lit("cut").alias("state")
+    ).unionByName(_event_rows(read_upsert_target(spark, tgt), F.lit("head").alias("state")))
 
 
 @query(
@@ -404,55 +452,24 @@ def merge_upsert_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events")
     seed = ev.filter(F.col("event_id") % 4 != 1)
     delta = ev.filter(F.col("event_id") % 4 == 1).unionByName(
-        ev.filter(F.col("event_id") % 2 == 0)
-        .withColumn("value", F.col("value") + F.lit(100.0))
-        .withColumn("ts", F.col("ts") + F.expr("INTERVAL 1 HOUR"))
+        _bumped(ev.filter(F.col("event_id") % 2 == 0))
     )
-    base = _fresh_staging_dir(spark, sf_dir, "cdf_upsert")
-    src, ckpt, tgt = (os.path.join(base, d) for d in ("src", "ckpt", "tgt"))
-    os.makedirs(src, exist_ok=True)
-    now = time.time()
-    for i, sl in enumerate((seed, delta)):
-        stage = os.path.join(base, f"stage{i}")
-        synthesize_envelopes(sl).coalesce(1).write.json(stage)
-        part = next(
-            p for p in glob.glob(os.path.join(stage, "part-*")) if not p.endswith(".crc")
-        )
-        dst = os.path.join(src, f"{i:03d}.json")
-        shutil.move(part, dst)
-        os.utime(dst, (now + 10 * i, now + 10 * i))
-    stream = (
-        spark.readStream.schema(RAW_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .json(src)
-    )
-    q = upsert_sink(live_rows(stream), tgt, ckpt, keep_snapshots=100).start()
-    drain_stream(q, "changelog upsert")
+    base = fresh_staging_dir(spark, sf_dir, "cdf_upsert")
+    tgt = _upsert_arrivals(spark, base, [seed, delta], "changelog upsert")
     batch_ids = sorted(h["batch_id"] for h in upsert_history(spark, tgt))
     tag_snapshot(spark, tgt, "cut", batch_id=batch_ids[0])
-
-    def labeled(df: DataFrame, direction: str) -> DataFrame:
-        return df.select(
-            F.lit(direction).alias("direction"),
-            "change_type",
-            "event_id",
-            "user_id",
-            "event_type",
-            "value",
-            ts_str(F.col("ts")).alias("ts_str"),
-        )
-
     fwd = upsert_changelog(spark, tgt, "event_id", from_tag="cut")
     bwd = upsert_changelog(spark, tgt, "event_id", from_batch=None, to_tag="cut")
-    return labeled(fwd, "fwd").unionByName(labeled(bwd, "bwd"))
+    return _event_rows(fwd, F.lit("fwd").alias("direction"), "change_type").unionByName(
+        _event_rows(bwd, F.lit("bwd").alias("direction"), "change_type")
+    )
 
 
 @query(
     "merge_upsert_schema_evolution",
-    # r16 rotation (r15 verdict #3): promoted to the S6 family's driver
-    # row — a wedged stream on the first upstream ALTER TABLE is the #1
-    # real-world CDC failure, so this is the form the driver should see;
-    # the batch merge_upsert it supersedes stays local with its oracle
+    # the S6 family's driver row: a wedged stream on the first upstream
+    # ALTER TABLE is the #1 real-world CDC failure, so this is the form
+    # the driver sees; the batch merge_upsert stays local with its oracle
     # oracle: evens keep their v1 rows with channel NULL-backfilled;
     # odds carry the post-DDL update (value+100, ts+1h, channel by id
     # arithmetic — the deterministic fixture cdc_schema_evolution uses)
@@ -475,73 +492,28 @@ def merge_upsert_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def merge_upsert_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCHEMA EVOLUTION ON THE SINK, end to end under the real engine
-    (the gap cdc_schema_evolution leaves: decoding a widened envelope
-    is r11 work — STORING it against a narrower committed snapshot is
-    this): drain 1 commits the whole feed under the v1 shape; the
-    upstream then gains ``channel`` (ALTER TABLE), the producer emits
-    post-DDL updates for the odd ids, and the consumer restarts from
-    the SAME checkpoint redeployed with the v2 decode and
-    ``evolve_schema=True`` — the next snapshot carries the union
-    schema, v1 rows NULL-backfilled, exactly Delta's
-    mergeSchema-on-MERGE. The committed state is then value-checked
-    whole: evens = untouched v1 rows with channel NULL, odds = the
-    post-DDL update with its channel."""
-    from .envelope import ENVELOPE_V2_SCHEMA
-
+    (decoding a widened envelope is cdc_schema_evolution's job; STORING
+    it against a narrower committed snapshot is this one's): drain 1
+    commits the whole feed under the v1 shape; the upstream then gains
+    ``channel`` (ALTER TABLE), the producer emits post-DDL updates for
+    the odd ids, and the consumer restarts from the SAME checkpoint
+    redeployed with the v2 decode and ``evolve_schema=True`` — the next
+    snapshot carries the union schema, v1 rows NULL-backfilled, exactly
+    Delta's mergeSchema-on-MERGE. The committed state is then
+    value-checked whole: evens = untouched v1 rows with channel NULL,
+    odds = the post-DDL update with its channel."""
     ev = table(spark, sf_dir, "events")
-    post_ddl_channel = F.when(
-        F.col("event_id") % 4 == 1, F.lit("web")
-    ).otherwise(F.lit("mobile"))
-    updates = (
-        ev.filter(F.col("event_id") % 2 == 1)
-        .withColumn("value", F.col("value") + F.lit(100.0))
-        .withColumn("ts", F.col("ts") + F.expr("INTERVAL 1 HOUR"))
-    )
-    base = _fresh_staging_dir(spark, sf_dir, "evo_upsert")
-    src, ckpt, tgt = (os.path.join(base, d) for d in ("src", "ckpt", "tgt"))
-    os.makedirs(src, exist_ok=True)
-
-    def stage(frame: DataFrame, name: str, mtime: float) -> None:
-        d = os.path.join(base, f"stage_{name}")
-        frame.coalesce(1).write.json(d)
-        part = next(
-            p for p in glob.glob(os.path.join(d, "part-*")) if not p.endswith(".crc")
-        )
-        dst = os.path.join(src, name)
-        shutil.move(part, dst)
-        os.utime(dst, (mtime, mtime))
-
-    now = time.time()
+    base = fresh_staging_dir(spark, sf_dir, "evo_upsert")
     # generation 1: the whole feed, v1 wire shape (no channel key)
-    stage(synthesize_envelopes(ev), "000.json", now)
-    s1 = spark.readStream.schema(RAW_STREAM_SCHEMA).json(src)
-    q1 = upsert_sink(live_rows(s1), tgt, ckpt, keep_snapshots=100).start()
-    drain_stream(q1, "schema-evolution drain 1 (v1)")
-
-    # generation 2: post-DDL updates carrying channel; consumer
+    tgt = _upsert_arrivals(spark, base, [ev], "schema-evolution drain 1 (v1)")
+    # generation 2: post-DDL updates carrying channel; the consumer
     # restarts from the SAME checkpoint with the widened decode
-    stage(
-        synthesize_envelopes(updates, image_extra={"channel": post_ddl_channel}),
-        "001.json",
-        now + 10,
+    _upsert_arrivals(
+        spark, base, [_bumped(ev.filter(F.col("event_id") % 2 == 1))],
+        "schema-evolution drain 2 (v2)",
+        channel=F.when(F.col("event_id") % 4 == 1, F.lit("web")).otherwise(F.lit("mobile")),
     )
-    s2 = spark.readStream.schema(RAW_STREAM_SCHEMA).json(src)
-    rows2 = live_rows(
-        s2, schema=ENVELOPE_V2_SCHEMA, extra_image_cols=("channel",)
-    )
-    q2 = upsert_sink(
-        rows2, tgt, ckpt, keep_snapshots=100, evolve_schema=True
-    ).start()
-    drain_stream(q2, "schema-evolution drain 2 (v2)")
-
-    return read_upsert_target(spark, tgt).select(
-        "event_id",
-        "user_id",
-        "event_type",
-        "value",
-        "channel",
-        ts_str(F.col("ts")).alias("ts_str"),
-    )
+    return _event_rows(read_upsert_target(spark, tgt), extra=("channel",))
 
 
 @query(
@@ -587,23 +559,20 @@ def merge_upsert_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
     """,
 )
 def merge_upsert_changelog_evolved(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CHANGE DATA FEED ACROSS A SCHEMA-EVOLUTION BOUNDARY (r15 judge
-    finding #1, closed): batch 0 seeds the table under the v1 shape
-    (the %4!=1 live ids) and is tagged 'v1'; the upstream then gains
-    ``channel`` and batch 1 — drained from the SAME checkpoint with
-    the v2 decode and ``evolve_schema=True`` — delivers (a) INSERTS
-    carrying the new column (the %4==1 ids) and (b) updates whose
-    ONLY change is the new column (the %4==2 ids backfilled to
-    'backfill', value/ts untouched). :func:`upsert_changelog` is then
-    computed in BOTH directions across the boundary: forward
-    (narrow → wide) must emit the channel values for inserts and a
-    pre/post pair for the channel-only backfill (the exact rows the
-    pre-fix code silently dropped — it diffed over old.columns only);
-    backward (wide → narrow) must NULL-fill instead of raising. The
-    %4 in {0,3} rows are bit-identical in both states and pin the
-    unchanged mass to emit nothing."""
-    from .envelope import ENVELOPE_V2_SCHEMA
-
+    """CHANGE DATA FEED ACROSS A SCHEMA-EVOLUTION BOUNDARY: batch 0
+    seeds the table under the v1 shape (the %4!=1 live ids) and is
+    tagged 'v1'; the upstream then gains ``channel`` and batch 1 —
+    drained from the SAME checkpoint with the v2 decode and
+    ``evolve_schema=True`` — delivers (a) INSERTS carrying the new
+    column (the %4==1 ids) and (b) updates whose ONLY change is the new
+    column (the %4==2 ids backfilled to 'backfill', value/ts
+    untouched). :func:`upsert_changelog` is then computed in BOTH
+    directions across the boundary: forward (narrow → wide) must emit
+    the channel values for inserts and a pre/post pair for the
+    channel-only backfill (a diff over the old columns only would drop
+    exactly those rows); backward (wide → narrow) must NULL-fill
+    instead of raising. The %4 in {0,3} rows are bit-identical in both
+    states and pin the unchanged mass to emit nothing."""
     ev = table(spark, sf_dir, "events")
     live_pred = F.col("event_id") % 10 != 0  # synthesized %10==0 are deletes
     seed = ev.filter(F.col("event_id") % 4 != 1)
@@ -614,56 +583,27 @@ def merge_upsert_changelog_evolved(spark: SparkSession, sf_dir: str) -> DataFram
     backfill = ev.filter(live_pred & (F.col("event_id") % 4 == 2)).withColumn(
         "channel", F.lit("backfill")
     )
-    delta = ins.unionByName(backfill)
-    base = _fresh_staging_dir(spark, sf_dir, "cdf_evo")
-    src, ckpt, tgt = (os.path.join(base, d) for d in ("src", "ckpt", "tgt"))
-    os.makedirs(src, exist_ok=True)
-
-    def stage(frame: DataFrame, name: str, mtime: float, **kw) -> None:
-        d = os.path.join(base, f"stage_{name}")
-        synthesize_envelopes(frame, **kw).coalesce(1).write.json(d)
-        part = next(
-            p for p in glob.glob(os.path.join(d, "part-*")) if not p.endswith(".crc")
-        )
-        dst = os.path.join(src, name)
-        shutil.move(part, dst)
-        os.utime(dst, (mtime, mtime))
-
-    now = time.time()
-    stage(seed, "000.json", now)
-    s1 = spark.readStream.schema(RAW_STREAM_SCHEMA).json(src)
-    q1 = upsert_sink(live_rows(s1), tgt, ckpt, keep_snapshots=100).start()
-    drain_stream(q1, "evolved-changelog drain 1 (v1)")
+    base = fresh_staging_dir(spark, sf_dir, "cdf_evo")
+    tgt = _upsert_arrivals(spark, base, [seed], "evolved-changelog drain 1 (v1)")
     tag_snapshot(spark, tgt, "v1")
-
-    stage(delta, "001.json", now + 10, image_extra={"channel": F.col("channel")})
-    s2 = spark.readStream.schema(RAW_STREAM_SCHEMA).json(src)
-    rows2 = live_rows(s2, schema=ENVELOPE_V2_SCHEMA, extra_image_cols=("channel",))
-    q2 = upsert_sink(rows2, tgt, ckpt, keep_snapshots=100, evolve_schema=True).start()
-    drain_stream(q2, "evolved-changelog drain 2 (v2)")
-
-    def labeled(df: DataFrame, direction: str) -> DataFrame:
-        return df.select(
-            F.lit(direction).alias("direction"),
-            "change_type",
-            "event_id",
-            "user_id",
-            "event_type",
-            "value",
-            "channel",
-            ts_str(F.col("ts")).alias("ts_str"),
-        )
-
+    _upsert_arrivals(
+        spark, base, [ins.unionByName(backfill)], "evolved-changelog drain 2 (v2)",
+        channel=F.col("channel"),
+    )
     fwd = upsert_changelog(spark, tgt, "event_id", from_tag="v1")
     bwd = upsert_changelog(spark, tgt, "event_id", to_tag="v1")
-    return labeled(fwd, "fwd").unionByName(labeled(bwd, "bwd"))
+    return _event_rows(
+        fwd, F.lit("fwd").alias("direction"), "change_type", extra=("channel",)
+    ).unionByName(
+        _event_rows(bwd, F.lit("bwd").alias("direction"), "change_type", extra=("channel",))
+    )
 
 
 @query(
     "merge_upsert_branch",
     registered=False,
-    # oracle = SQL replay of main-prefix + branch batches (the judge's
-    # r15 note: latest-wins makes the branch exact): post-merge main =
+    # oracle = SQL replay of main-prefix + branch batches (latest-wins
+    # makes the branch exact): post-merge main =
     # seed rows where untouched, +100/+1h where the branch updated the
     # evens, plus the branch's %4==3 inserts. The pre-merge 'main'
     # state is the seed alone — returned labeled so the fork isolation
@@ -697,10 +637,10 @@ def merge_upsert_changelog_evolved(spark: SparkSession, sf_dir: str) -> DataFram
 )
 def merge_upsert_branch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WRITE-ON-BRANCH → FAST-FORWARD MERGE-BACK under the real engine
-    (r16, the remaining Nessie semantic after r15's tags): batch 0
-    seeds MAIN with the %4!=3 live ids; ``branch_snapshot`` forks
-    'dev' at the committed head (one pointer file, zero copy); a
-    SECOND stream with its OWN checkpoint drains onto the branch via
+    (the Nessie writable-ref semantic next to tags): batch 0 seeds MAIN
+    with the %4!=3 live ids; ``branch_snapshot`` forks 'dev' at the
+    committed head (one pointer file, zero copy); a SECOND stream with
+    its OWN checkpoint drains onto the branch via
     ``upsert_sink(..., branch='dev')`` — inserts (the %4==3 ids) plus
     updates over the evens (value+100, ts+1h) — merging against the
     fork base without copying it; main is then read BEFORE the
@@ -712,58 +652,27 @@ def merge_upsert_branch(spark: SparkSession, sf_dir: str) -> DataFrame:
     live_pred = F.col("event_id") % 10 != 0
     seed = ev.filter(F.col("event_id") % 4 != 3)
     delta = ev.filter(live_pred & (F.col("event_id") % 4 == 3)).unionByName(
-        ev.filter(live_pred & (F.col("event_id") % 2 == 0))
-        .withColumn("value", F.col("value") + F.lit(100.0))
-        .withColumn("ts", F.col("ts") + F.expr("INTERVAL 1 HOUR"))
+        _bumped(ev.filter(live_pred & (F.col("event_id") % 2 == 0)))
     )
-    base = _fresh_staging_dir(spark, sf_dir, "branch_upsert")
-    src_main, ck_main, src_br, ck_br, tgt = (
-        os.path.join(base, d)
-        for d in ("src_main", "ck_main", "src_br", "ck_br", "tgt")
+    base = fresh_staging_dir(spark, sf_dir, "branch_upsert")
+    tgt = _upsert_arrivals(
+        spark, base, [seed], "branch demo: main seed", src="src_main", ckpt="ck_main"
     )
-    os.makedirs(src_main, exist_ok=True)
-    os.makedirs(src_br, exist_ok=True)
-
-    def stage(frame: DataFrame, src: str, name: str) -> None:
-        d = os.path.join(base, f"stage_{os.path.basename(src)}_{name}")
-        synthesize_envelopes(frame).coalesce(1).write.json(d)
-        part = next(
-            p for p in glob.glob(os.path.join(d, "part-*")) if not p.endswith(".crc")
-        )
-        shutil.move(part, os.path.join(src, name))
-
-    def labeled(df: DataFrame, state: str) -> DataFrame:
-        return df.select(
-            F.lit(state).alias("state"),
-            "event_id",
-            "user_id",
-            "event_type",
-            "value",
-            ts_str(F.col("ts")).alias("ts_str"),
-        )
-
-    stage(seed, src_main, "000.json")
-    s1 = spark.readStream.schema(RAW_STREAM_SCHEMA).json(src_main)
-    q1 = upsert_sink(live_rows(s1), tgt, ck_main, keep_snapshots=100).start()
-    drain_stream(q1, "branch demo: main seed")
-
     branch_snapshot(spark, tgt, "dev")
-    stage(delta, src_br, "000.json")
-    s2 = spark.readStream.schema(RAW_STREAM_SCHEMA).json(src_br)
-    q2 = upsert_sink(
-        live_rows(s2), tgt, ck_br, keep_snapshots=100, branch="dev"
-    ).start()
-    drain_stream(q2, "branch demo: dev drain")
-
+    _upsert_arrivals(
+        spark, base, [delta], "branch demo: dev drain", src="src_br", ckpt="ck_br",
+        branch="dev",
+    )
     # fork isolation: main must still be the untouched seed — snapshot
     # it (cheap local fixture) BEFORE merge flips the pointer, since
     # read_upsert_target is lazy
     pre_dir = os.path.join(base, "pre_merge")
     read_upsert_target(spark, tgt).write.mode("overwrite").parquet(pre_dir)
     merge_branch(spark, tgt, "dev")
-    pre = spark.read.parquet(pre_dir)
-    return labeled(pre, "pre_merge_main").unionByName(
-        labeled(read_upsert_target(spark, tgt), "post_merge_main")
+    return _event_rows(
+        spark.read.parquet(pre_dir), F.lit("pre_merge_main").alias("state")
+    ).unionByName(
+        _event_rows(read_upsert_target(spark, tgt), F.lit("post_merge_main").alias("state"))
     )
 
 
@@ -796,9 +705,9 @@ def merge_upsert_branch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def merge_upsert_rebase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REBASE MERGE under the real engine (r16, the non-fast-forward
-    arm of :func:`merge_branch`): batch 0 seeds MAIN with every live
-    id; 'fix' forks at the head; the branch drains an update pass over
+    """REBASE MERGE under the real engine (the non-fast-forward arm of
+    :func:`merge_branch`): batch 0 seeds MAIN with every live id;
+    'fix' forks at the head; the branch drains an update pass over
     the evens (+100, +1h) while MAIN concurrently drains its own
     update over the %4==3 ids (+7, +2h) — so by merge time main has
     MOVED and fast-forward is impossible. ``merge_branch(...,
@@ -811,60 +720,22 @@ def merge_upsert_rebase(spark: SparkSession, sf_dir: str) -> DataFrame:
     end to end."""
     ev = table(spark, sf_dir, "events")
     live_pred = F.col("event_id") % 10 != 0
-    branch_delta = (
-        ev.filter(live_pred & (F.col("event_id") % 2 == 0))
-        .withColumn("value", F.col("value") + F.lit(100.0))
-        .withColumn("ts", F.col("ts") + F.expr("INTERVAL 1 HOUR"))
+    base = fresh_staging_dir(spark, sf_dir, "rebase_upsert")
+    tgt = _upsert_arrivals(
+        spark, base, [ev], "rebase demo: main seed", src="src_main", ckpt="ck_main"
     )
-    main_delta = (
-        ev.filter(live_pred & (F.col("event_id") % 4 == 3))
-        .withColumn("value", F.col("value") + F.lit(7.0))
-        .withColumn("ts", F.col("ts") + F.expr("INTERVAL 2 HOURS"))
-    )
-    base = _fresh_staging_dir(spark, sf_dir, "rebase_upsert")
-    src_main, ck_main, src_main2, ck_main2, src_br, ck_br, tgt = (
-        os.path.join(base, d)
-        for d in ("src_main", "ck_main", "src_main2", "ck_main2",
-                  "src_br", "ck_br", "tgt")
-    )
-    for d in (src_main, src_main2, src_br):
-        os.makedirs(d, exist_ok=True)
-
-    def stage(frame: DataFrame, src: str, name: str) -> None:
-        d = os.path.join(base, f"stage_{os.path.basename(src)}_{name}")
-        synthesize_envelopes(frame).coalesce(1).write.json(d)
-        part = next(
-            p for p in glob.glob(os.path.join(d, "part-*")) if not p.endswith(".crc")
-        )
-        shutil.move(part, os.path.join(src, name))
-
-    stage(ev, src_main, "000.json")
-    s1 = spark.readStream.schema(RAW_STREAM_SCHEMA).json(src_main)
-    q1 = upsert_sink(live_rows(s1), tgt, ck_main, keep_snapshots=100).start()
-    drain_stream(q1, "rebase demo: main seed")
-
     branch_snapshot(spark, tgt, "fix")
-    stage(branch_delta, src_br, "000.json")
-    s2 = spark.readStream.schema(RAW_STREAM_SCHEMA).json(src_br)
-    q2 = upsert_sink(
-        live_rows(s2), tgt, ck_br, keep_snapshots=100, branch="fix"
-    ).start()
-    drain_stream(q2, "rebase demo: branch drain")
-
-    # main moves AFTER the fork — its own stream, its own checkpoint
-    stage(main_delta, src_main2, "000.json")
-    s3 = spark.readStream.schema(RAW_STREAM_SCHEMA).json(src_main2)
-    q3 = upsert_sink(live_rows(s3), tgt, ck_main2, keep_snapshots=100).start()
-    drain_stream(q3, "rebase demo: main moves")
-
-    merge_branch(spark, tgt, "fix", key="event_id", allow_rebase=True)
-    return read_upsert_target(spark, tgt).select(
-        "event_id",
-        "user_id",
-        "event_type",
-        "value",
-        ts_str(F.col("ts")).alias("ts_str"),
+    _upsert_arrivals(
+        spark, base, [_bumped(ev.filter(live_pred & (F.col("event_id") % 2 == 0)))],
+        "rebase demo: branch drain", src="src_br", ckpt="ck_br", branch="fix",
     )
+    # main moves AFTER the fork — its own stream, its own checkpoint
+    _upsert_arrivals(
+        spark, base, [_bumped(ev.filter(live_pred & (F.col("event_id") % 4 == 3)), 7.0, 2)],
+        "rebase demo: main moves", src="src_main2", ckpt="ck_main2",
+    )
+    merge_branch(spark, tgt, "fix", key="event_id", allow_rebase=True)
+    return _event_rows(read_upsert_target(spark, tgt))
 
 
 @query(
@@ -900,9 +771,9 @@ def merge_upsert_rebase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_exec_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CHANGE FEED AS A STREAMING PRODUCT (r15 verdict #6 — Delta CDF's
-    streaming ``readChangeFeed`` role): three envelope files drain one
-    per micro-batch through ``upsert_sink(changelog_path=...)`` — two
+    """CHANGE FEED AS A STREAMING PRODUCT (Delta CDF's streaming
+    ``readChangeFeed`` role): three envelope files drain one per
+    micro-batch through ``upsert_sink(changelog_path=...)`` — two
     disjoint insert waves, then an update pass over the evens — and
     each commit also writes its per-batch diff (new snapshot vs
     predecessor) under ``commit_batch=<id>``. The whole feed is then
@@ -912,46 +783,13 @@ def stream_exec_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactly-once is the id-keyed overwrite (see the sink docstring);
     tests/test_modules.py additionally pins per-batch feed ==
     ``upsert_changelog`` between the same endpoints."""
-    ev = table(spark, sf_dir, "events")
-    slices = [
-        ev.filter(F.col("event_id") % 3 == 0),
-        ev.filter(F.col("event_id") % 3 != 0),
-        ev.filter(F.col("event_id") % 2 == 0)
-        .withColumn("value", F.col("value") + F.lit(100.0))
-        .withColumn("ts", F.col("ts") + F.expr("INTERVAL 1 HOUR")),
-    ]
-    base = _fresh_staging_dir(spark, sf_dir, "cdf_stream")
-    src, ckpt, tgt, cl = (
-        os.path.join(base, d) for d in ("src", "ckpt", "tgt", "changelog")
+    _, cl = _changelog_arrivals(
+        spark, sf_dir, "cdf_stream", "streaming changelog", migrate=False
     )
-    os.makedirs(src, exist_ok=True)
-    now = time.time()
-    for i, sl in enumerate(slices):
-        stage = os.path.join(base, f"stage{i}")
-        synthesize_envelopes(sl).coalesce(1).write.json(stage)
-        part = next(
-            p for p in glob.glob(os.path.join(stage, "part-*")) if not p.endswith(".crc")
-        )
-        dst = os.path.join(src, f"{i:03d}.json")
-        shutil.move(part, dst)
-        os.utime(dst, (now + 10 * i, now + 10 * i))
-    stream = (
-        spark.readStream.schema(RAW_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .json(src)
-    )
-    q = upsert_sink(
-        live_rows(stream), tgt, ckpt, keep_snapshots=100, changelog_path=cl
-    ).start()
-    drain_stream(q, "streaming changelog")
-    return spark.read.parquet(cl).select(
+    return _event_rows(
+        spark.read.parquet(cl),
         F.col("commit_batch").cast("bigint").alias("commit_batch"),
         "change_type",
-        "event_id",
-        "user_id",
-        "event_type",
-        "value",
-        ts_str(F.col("ts")).alias("ts_str"),
     )
 
 
@@ -1133,45 +971,8 @@ def changelog_incremental_distinct(spark: SparkSession, sf_dir: str) -> DataFram
     multiplicity bookkeeping is exact: an update pair at unchanged
     group is a net zero, a migration decrements the old pair and
     increments the new, and a pair dies only with its last row."""
-    ev = table(spark, sf_dir, "events")
-    slices = [
-        ev.filter(F.col("event_id") % 3 == 0),
-        ev.filter(F.col("event_id") % 3 != 0),
-        ev.filter(F.col("event_id") % 2 == 0)
-        .withColumn("value", F.col("value") + F.lit(100.0))
-        .withColumn("ts", F.col("ts") + F.expr("INTERVAL 1 HOUR"))
-        .withColumn(
-            "event_type",
-            F.when(F.col("event_id") % 4 == 0, F.lit("migrated")).otherwise(
-                F.col("event_type")
-            ),
-        ),
-    ]
-    base = _fresh_staging_dir(spark, sf_dir, "cdf_ivm_distinct")
-    src, ckpt, tgt, cl = (
-        os.path.join(base, d) for d in ("src", "ckpt", "tgt", "changelog")
-    )
-    os.makedirs(src, exist_ok=True)
-    now = time.time()
-    for i, sl in enumerate(slices):
-        stage = os.path.join(base, f"stage{i}")
-        synthesize_envelopes(sl).coalesce(1).write.json(stage)
-        part = next(
-            p for p in glob.glob(os.path.join(stage, "part-*")) if not p.endswith(".crc")
-        )
-        dst = os.path.join(src, f"{i:03d}.json")
-        shutil.move(part, dst)
-        os.utime(dst, (now + 10 * i, now + 10 * i))
-    stream = (
-        spark.readStream.schema(RAW_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .json(src)
-    )
-    q = upsert_sink(
-        live_rows(stream), tgt, ckpt, keep_snapshots=100, changelog_path=cl
-    ).start()
-    drain_stream(q, "IVM distinct upsert")
-    cursor = sorted(h["batch_id"] for h in upsert_history(spark, tgt))[0]
+    tgt, cl = _changelog_arrivals(spark, sf_dir, "cdf_ivm_distinct", "IVM distinct upsert")
+    cursor = min(h["batch_id"] for h in upsert_history(spark, tgt))
     support = (
         read_upsert_target(spark, tgt, as_of_batch=cursor)
         .groupBy("event_type", "user_id")
@@ -1249,11 +1050,7 @@ def materialized_view_sink(
             spark, view_path, keep_snapshots, batch_id, transform, run_id=checkpoint
         )
 
-    return (
-        changes.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return foreach_batch_writer(changes, apply_batch, checkpoint)
 
 
 @query(
@@ -1291,49 +1088,14 @@ def stream_ivm_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     rescanned. The committed view snapshot is read back and
     value-checked against direct re-aggregation of the final state,
     pinning the whole producer→feed→consumer→view loop."""
-    ev = table(spark, sf_dir, "events")
-    slices = [
-        ev.filter(F.col("event_id") % 3 == 0),
-        ev.filter(F.col("event_id") % 3 != 0),
-        ev.filter(F.col("event_id") % 2 == 0)
-        .withColumn("value", F.col("value") + F.lit(100.0))
-        .withColumn("ts", F.col("ts") + F.expr("INTERVAL 1 HOUR"))
-        .withColumn(
-            "event_type",
-            F.when(F.col("event_id") % 4 == 0, F.lit("migrated")).otherwise(
-                F.col("event_type")
-            ),
-        ),
-    ]
-    base = _fresh_staging_dir(spark, sf_dir, "ivm_view")
-    src, ckpt, tgt, cl, view, vckpt = (
-        os.path.join(base, d)
-        for d in ("src", "ckpt", "tgt", "changelog", "view", "vckpt")
-    )
-    os.makedirs(src, exist_ok=True)
-    now = time.time()
-    for i, sl in enumerate(slices):
-        stage = os.path.join(base, f"stage{i}")
-        synthesize_envelopes(sl).coalesce(1).write.json(stage)
-        part = next(
-            p for p in glob.glob(os.path.join(stage, "part-*")) if not p.endswith(".crc")
-        )
-        dst = os.path.join(src, f"{i:03d}.json")
-        shutil.move(part, dst)
-        os.utime(dst, (now + 10 * i, now + 10 * i))
-    stream = (
-        spark.readStream.schema(RAW_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .json(src)
-    )
-    q = upsert_sink(
-        live_rows(stream), tgt, ckpt, keep_snapshots=100, changelog_path=cl
-    ).start()
-    drain_stream(q, "IVM view producer")
+    tgt, cl = _changelog_arrivals(spark, sf_dir, "ivm_view", "IVM view producer")
+    base = os.path.dirname(tgt)
     feed_schema = spark.read.parquet(cl).schema
     feed_stream = spark.readStream.schema(feed_schema).parquet(cl)
+    view = os.path.join(base, "view")
     vq = materialized_view_sink(
-        feed_stream, view, vckpt, group_col="event_type", value_col="value"
+        feed_stream, view, os.path.join(base, "vckpt"),
+        group_col="event_type", value_col="value",
     ).start()
     drain_stream(vq, "IVM view consumer")
     if not upsert_history(spark, view):
@@ -1373,7 +1135,7 @@ def stream_ivm_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def changelog_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INCREMENTAL VIEW MAINTENANCE end to end (r16, the change-feed
+    """INCREMENTAL VIEW MAINTENANCE end to end (the change-feed
     CONSUMER): three envelope files drain one per micro-batch through
     ``upsert_sink(changelog_path=...)`` — two insert waves, then an
     update pass that bumps every even id's value AND migrates the
@@ -1385,45 +1147,8 @@ def changelog_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-aggregates the final state directly — value-hash equality IS
     the IVM correctness proof, including the group that only exists
     post-cursor."""
-    ev = table(spark, sf_dir, "events")
-    slices = [
-        ev.filter(F.col("event_id") % 3 == 0),
-        ev.filter(F.col("event_id") % 3 != 0),
-        ev.filter(F.col("event_id") % 2 == 0)
-        .withColumn("value", F.col("value") + F.lit(100.0))
-        .withColumn("ts", F.col("ts") + F.expr("INTERVAL 1 HOUR"))
-        .withColumn(
-            "event_type",
-            F.when(F.col("event_id") % 4 == 0, F.lit("migrated")).otherwise(
-                F.col("event_type")
-            ),
-        ),
-    ]
-    base = _fresh_staging_dir(spark, sf_dir, "cdf_ivm")
-    src, ckpt, tgt, cl = (
-        os.path.join(base, d) for d in ("src", "ckpt", "tgt", "changelog")
-    )
-    os.makedirs(src, exist_ok=True)
-    now = time.time()
-    for i, sl in enumerate(slices):
-        stage = os.path.join(base, f"stage{i}")
-        synthesize_envelopes(sl).coalesce(1).write.json(stage)
-        part = next(
-            p for p in glob.glob(os.path.join(stage, "part-*")) if not p.endswith(".crc")
-        )
-        dst = os.path.join(src, f"{i:03d}.json")
-        shutil.move(part, dst)
-        os.utime(dst, (now + 10 * i, now + 10 * i))
-    stream = (
-        spark.readStream.schema(RAW_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .json(src)
-    )
-    q = upsert_sink(
-        live_rows(stream), tgt, ckpt, keep_snapshots=100, changelog_path=cl
-    ).start()
-    drain_stream(q, "IVM changelog upsert")
-    cursor = sorted(h["batch_id"] for h in upsert_history(spark, tgt))[0]
+    tgt, cl = _changelog_arrivals(spark, sf_dir, "cdf_ivm", "IVM changelog upsert")
+    cursor = min(h["batch_id"] for h in upsert_history(spark, tgt))
     materialized = (
         read_upsert_target(spark, tgt, as_of_batch=cursor)
         .groupBy("event_type")
@@ -1472,81 +1197,16 @@ def stream_exec_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     state; the memory sink holds only the aggregated windows
     (hours × event_types), never raw events.
     """
-    # _fresh_staging_dir wipes this run's dir (a stale checkpoint
-    # would mark the staged files processed — availableNow would then
-    # drain zero batches) AND reaps prior app-ids' leftovers, which
-    # the old hand-rolled path here leaked one corpus-sized JSON copy
-    # per session.
-    base = _fresh_staging_dir(spark, sf_dir, "stream_exec")
-    src, ckpt = os.path.join(base, "src"), os.path.join(base, "ckpt")
-    ev = table(spark, sf_dir, "events")
-    synthesize_envelopes(ev).write.json(src)
+    src = os.path.join(fresh_staging_dir(spark, sf_dir, "stream_exec"), "src")
+    synthesize_envelopes(table(spark, sf_dir, "events")).write.json(src)
     agg = tumbling_counts(read_envelope_stream(spark, src))
-    sink_name = f"pdp_stream_exec_{os.path.basename(sf_dir.rstrip('/'))}".replace(".", "_")
-    _run_memory_sink(agg, sink_name, ckpt, "complete")
-    return spark.table(sink_name).select(
+    q = _run_memory_sink(agg, sf_dir, "stream_exec", "complete")
+    return spark.table(q.name).select(
         F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
         "event_type",
         "n_events",
         "sum_value",
     )
-
-
-def _fresh_staging_dir(spark: SparkSession, sf_dir: str, tag: str) -> str:
-    """Per-(query, sf, app) staging root under tmp, wiped on entry so a
-    stale checkpoint can never mark the staged files already-processed
-    (availableNow would then terminate with zero batches). Staging
-    dirs left by PREVIOUS app-ids (same tag+sf prefix) are reaped too:
-    each harness session otherwise strands its own copies — at scale
-    this whole layer is a Kafka topic and the problem doesn't exist.
-
-    Reaping is mtime-guarded (r12): two test shards CAN run the same
-    (query, sf) concurrently in separate JVMs (a parity shard and the
-    module test), and the unguarded reap deleted the OTHER app's LIVE
-    checkpoint mid-stream ("commits/.0....tmp does not exist" — one
-    observed flake). Each app's own dir is unique (prefix + app id);
-    only dirs untouched for ≥1 h — abandoned by construction, test
-    sessions live minutes — are reaped, so leak cleanup survives and
-    live runs can never collide."""
-    prefix = _staging_prefix(sf_dir, tag)
-    tmp = tempfile.gettempdir()
-    cutoff = time.time() - 3600
-    for stale in glob.glob(os.path.join(tmp, prefix + "*")):
-        try:
-            if os.path.getmtime(stale) < cutoff:
-                shutil.rmtree(stale, ignore_errors=True)
-        except OSError:
-            pass  # raced with its owner's own cleanup — fine
-    base = staging_base(spark, sf_dir, tag)
-    shutil.rmtree(base, ignore_errors=True)
-    return base
-
-
-def _staging_prefix(sf_dir: str, tag: str) -> str:
-    """The (tag, sf) staging-dir name prefix — ONE definition, shared
-    by the reap glob and the per-app path, so a naming change can
-    never desynchronize the reaper from the dirs it reaps."""
-    return f"pdp_{tag}_{os.path.basename(sf_dir.rstrip('/'))}_"
-
-
-def staging_base(spark: SparkSession, sf_dir: str, tag: str) -> str:
-    """Path-only twin of :func:`_fresh_staging_dir` (no wipe): lets a
-    test or follow-up query locate an existing run's staging artifacts
-    — e.g. the adaptive stream join's per-batch strategy record —
-    without restarting the staging lifecycle."""
-    app = spark.sparkContext.applicationId.replace(":", "_")
-    return os.path.join(tempfile.gettempdir(), _staging_prefix(sf_dir, tag) + app)
-
-
-def drain_stream(q, what: str, timeout_s: int = 300) -> None:
-    """Block until an availableNow query finishes or ``timeout_s``
-    elapses, stopping and raising on timeout. One definition for the
-    drain-and-timeout boilerplate every foreachBatch-store query needs
-    (r13 review: four hand-written copies had already appeared — the
-    same drift risk that motivated extracting the salt machinery)."""
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise RuntimeError(f"{what} stream did not drain within {timeout_s}s")
 
 
 def _state_sized_partitions(spark: SparkSession, n_rows: int) -> int:
@@ -1578,10 +1238,13 @@ def _state_sized_partitions(spark: SparkSession, n_rows: int) -> int:
     return max(1, min(cap, -(-n_rows // max(1, per))))
 
 
-def _run_memory_sink(agg: DataFrame, name: str, ckpt: str, mode: str):
-    """Run a bounded streaming aggregation into a memory sink with
-    availableNow and return the finished StreamingQuery (its
-    recentProgress carries per-batch watermark + late-drop metrics)."""
+def _run_memory_sink(agg: DataFrame, sf_dir: str, tag: str, mode: str):
+    """Drain a bounded streaming aggregation into the ``pdp_<tag>_<sf>``
+    memory sink, checkpointed under the tag's staging root, and return
+    the finished StreamingQuery: ``q.name`` is the sink table, and its
+    recentProgress carries per-batch watermark + late-drop metrics."""
+    name = f"pdp_{tag}_{os.path.basename(sf_dir.rstrip('/'))}".replace(".", "_")
+    ckpt = os.path.join(staging_base(agg.sparkSession, sf_dir, tag), "ckpt")
     q = (
         agg.writeStream.format("memory")
         .queryName(name)
@@ -1590,7 +1253,7 @@ def _run_memory_sink(agg: DataFrame, name: str, ckpt: str, mode: str):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
+    drain_stream(q, f"{tag} memory sink")
     return q
 
 
@@ -1648,13 +1311,11 @@ def stream_exec_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     mode with the 1-hour watermark bounding session state; complete
     mode is harness-only (the memory sink holds one row per session).
     """
-    base = _fresh_staging_dir(spark, sf_dir, "stream_sess")
-    src, ckpt = os.path.join(base, "src"), os.path.join(base, "ckpt")
+    src = os.path.join(fresh_staging_dir(spark, sf_dir, "stream_sess"), "src")
     synthesize_envelopes(table(spark, sf_dir, "events")).write.json(src)
     agg = session_counts(read_envelope_stream(spark, src))
-    sink = f"pdp_stream_sess_{os.path.basename(sf_dir.rstrip('/'))}".replace(".", "_")
-    _run_memory_sink(agg, sink, ckpt, "complete")
-    return spark.table(sink).select(
+    q = _run_memory_sink(agg, sf_dir, "stream_sess", "complete")
+    return spark.table(q.name).select(
         ts_str("session_start").alias("session_start"),
         ts_str("session_end").alias("session_end"),
         "user_id",
@@ -1741,8 +1402,7 @@ def stream_exec_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-checkpoint, not global). The staging write is repartitioned
     (single-row-group fixture would otherwise serialize the JSON encode
     on one task — 6.5 s → ~2 s)."""
-    base = _fresh_staging_dir(spark, sf_dir, "stream_join")
-    src, ckpt = os.path.join(base, "src"), os.path.join(base, "ckpt")
+    src = os.path.join(fresh_staging_dir(spark, sf_dir, "stream_join"), "src")
     par = spark.sparkContext.defaultParallelism
     synthesize_envelopes(table(spark, sf_dir, "events")).repartition(par).write.json(
         src
@@ -1762,9 +1422,8 @@ def stream_exec_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").alias("purchase_value"),
     )
     joined = interval_join(views, purchases)
-    sink = f"pdp_stream_join_{os.path.basename(sf_dir.rstrip('/'))}".replace(".", "_")
-    _run_memory_sink(joined, sink, ckpt, "append")
-    return ss.table(sink).select(
+    q = _run_memory_sink(joined, sf_dir, "stream_join", "append")
+    return ss.table(q.name).select(
         "user_id",
         "view_id",
         "purchase_id",
@@ -1832,17 +1491,13 @@ def stage_arrival_batches(
     # exactly ONE part file per batch_id (a batch split across two
     # files would straddle two maxFilesPerTrigger=1 triggers).
     env.repartition("batch_id").write.partitionBy("batch_id").json(staged)
+    dirs = glob.glob(os.path.join(staged, "batch_id=*"))
+    parts = []
+    for d in sorted(dirs, key=lambda d: int(d.rsplit("=", 1)[1])):
+        (part,) = glob.glob(os.path.join(d, "part-*.json"))
+        parts.append(part)
     src = os.path.join(base, "src")
-    os.makedirs(src)
-    t0 = 1_700_000_000
-    for d in sorted(glob.glob(os.path.join(staged, "batch_id=*"))):
-        bid = int(d.rsplit("=", 1)[1])
-        parts = glob.glob(os.path.join(d, "part-*.json"))
-        assert len(parts) == 1, f"batch {bid}: expected 1 part file, got {parts}"
-        dst = os.path.join(src, f"b{bid:04d}.json")
-        shutil.move(parts[0], dst)
-        # strictly ascending mtimes pin the file source's replay order
-        os.utime(dst, (t0 + bid, t0 + bid))
+    publish_arrivals(parts, src)
     shutil.rmtree(staged, ignore_errors=True)
     return src
 
@@ -1912,7 +1567,7 @@ def stream_exec_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     "kafka")`` — watermark-bounded state, no staging, no sort; the
     staging sort here only simulates Kafka's per-partition order.
     """
-    base = _fresh_staging_dir(spark, sf_dir, "stream_late")
+    base = fresh_staging_dir(spark, sf_dir, "stream_late")
     src = stage_arrival_batches(spark, sf_dir, base)
     stream = (
         spark.readStream.schema(RAW_STREAM_SCHEMA)
@@ -1920,12 +1575,11 @@ def stream_exec_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         .json(src)
     )
     agg = late_drop_counts(stream)
-    sink = f"pdp_stream_late_{os.path.basename(sf_dir.rstrip('/'))}".replace(".", "_")
-    q = _run_memory_sink(agg, sink, os.path.join(base, "ckpt"), "append")
+    q = _run_memory_sink(agg, sf_dir, "stream_late", "append")
     # surface the per-batch drop counters for tests/diagnostics without
     # changing the DataFrame contract
     stream_exec_late_drop.last_progress = [p for p in q.recentProgress]
-    return spark.table(sink).select(
+    return spark.table(q.name).select(
         F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
         "event_type",
         "n_events",
@@ -1987,8 +1641,7 @@ def stream_exec_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: state is hash-partitioned by the dedup key across the
     cluster's state stores (RocksDB), shuffle keyed the same — the
     exact layout the exact-dedup batch op uses, held incrementally."""
-    base = _fresh_staging_dir(spark, sf_dir, "stream_dedup")
-    src, ckpt = os.path.join(base, "src"), os.path.join(base, "ckpt")
+    src = os.path.join(fresh_staging_dir(spark, sf_dir, "stream_dedup"), "src")
     ev = table(spark, sf_dir, "events")
     synthesize_envelopes(ev).write.json(src)
     # the redelivery: a second file batch with duplicate envelopes
@@ -2001,9 +1654,8 @@ def stream_exec_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "user_id", "event_type", "value", "ts")
     )
-    name = f"pdp_stream_dedup_{os.path.basename(sf_dir.rstrip('/'))}".replace(".", "_")
-    _run_memory_sink(deduped, name, ckpt, "append")
-    return spark.table(name).select(
+    q = _run_memory_sink(deduped, sf_dir, "stream_dedup", "append")
+    return spark.table(q.name).select(
         "event_id",
         "user_id",
         "event_type",
@@ -2051,8 +1703,7 @@ def stream_exec_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     early and the result equals the batch interval join exactly —
     the same determinism argument as stream_exec_tumbling/dedup.
     """
-    base = _fresh_staging_dir(spark, sf_dir, "stream_ij")
-    src, ckpt = os.path.join(base, "src"), os.path.join(base, "ckpt")
+    src = os.path.join(fresh_staging_dir(spark, sf_dir, "stream_ij"), "src")
     ev = table(spark, sf_dir, "events")
     synthesize_envelopes(ev).write.json(src)
     # state partitions sized to the replayed volume, not the core count
@@ -2090,9 +1741,7 @@ def stream_exec_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         (F.unix_millis("click_ts") - F.unix_millis("view_ts")).alias("gap_ms"),
     )
-    name = f"pdp_stream_ij_{os.path.basename(sf_dir.rstrip('/'))}".replace(".", "_")
-    _run_memory_sink(joined, name, ckpt, "append")
-    return ss.table(name)
+    return ss.table(_run_memory_sink(joined, sf_dir, "stream_ij", "append").name)
 
 
 @query(
@@ -2152,8 +1801,9 @@ def stream_exec_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
       format("kafka") with per-key state that never exceeds the
       10-minute window, the property that makes outer stream-stream
       joins deployable at all."""
-    base = _fresh_staging_dir(spark, sf_dir, "stream_loj")
-    src = stage_arrival_batches(spark, sf_dir, base, inject_late=False)
+    src = stage_arrival_batches(
+        spark, sf_dir, fresh_staging_dir(spark, sf_dir, "stream_loj"), inject_late=False
+    )
     # the outer join's wall time is per-partition state-store commits
     # (8 micro-batches × 4 join state stores × partitions), so state is
     # sized to the replayed volume, not the core count
@@ -2196,9 +1846,7 @@ def stream_exec_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         (F.unix_millis("click_ts") - F.unix_millis("view_ts")).alias("gap_ms"),
     )
-    name = f"pdp_stream_loj_{os.path.basename(sf_dir.rstrip('/'))}".replace(".", "_")
-    _run_memory_sink(joined, name, os.path.join(base, "ckpt"), "append")
-    return ss.table(name)
+    return ss.table(_run_memory_sink(joined, sf_dir, "stream_loj", "append").name)
 
 
 @query(
@@ -2230,10 +1878,8 @@ def stream_exec_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     somewhere visible, not vanish into an inner join. Oracle: the
     identical left join + aggregation over the live (non-tombstone)
     events."""
-    base = _fresh_staging_dir(spark, sf_dir, "stream_enrich")
-    src, ckpt = os.path.join(base, "src"), os.path.join(base, "ckpt")
-    ev = table(spark, sf_dir, "events")
-    synthesize_envelopes(ev).write.json(src)
+    src = os.path.join(fresh_staging_dir(spark, sf_dir, "stream_enrich"), "src")
+    synthesize_envelopes(table(spark, sf_dir, "events")).write.json(src)
     live = live_rows(read_envelope_stream(spark, src))
     dim = table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
@@ -2246,9 +1892,7 @@ def stream_exec_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_events"),
         F.round(F.sum("value"), 2).alias("sum_value"),
     )
-    sink_name = f"pdp_stream_enrich_{os.path.basename(sf_dir.rstrip('/'))}".replace(".", "_")
-    _run_memory_sink(agg, sink_name, ckpt, "complete")
-    return spark.table(sink_name)
+    return spark.table(_run_memory_sink(agg, sf_dir, "stream_enrich", "complete").name)
 
 
 # Per-batch hot-key threshold for the streaming skew join: sized so the
@@ -2258,36 +1902,33 @@ def stream_exec_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 STREAM_SKEW_HOT_MIN = 20_000
 
 
-def skew_join_stream(
-    spark: SparkSession, sf_dir: str, hot_min_rows: int = STREAM_SKEW_HOT_MIN
+def _lineitem_join_stream(
+    spark: SparkSession, sf_dir: str, tag: str, join_batch, arrival_order: str | None = None
 ) -> DataFrame:
-    """Skew-mitigated stream⋈static join through the REAL engine (r12
-    verdict #6): the batch mitigations are useless to a foreachBatch
-    consumer if they can't run per-trigger — a skewed CDC stream
-    joining a fact table hits the same hot reducer EVERY micro-batch,
-    so the fix has to be inside the batch function. Each trigger runs
-    operators.joins.salted_inner_join (its hot-key census is eager and
-    bounded — one tiny collect per batch, the exact property that made
-    it safe under AQE) against the static orders side, reduces to
-    integer-exact partials (counts + price CENTS — bigint sums are
-    associative, so HOWEVER the engine batches the input, re-summing
-    the partials is bit-equal to the one-shot batch join the oracle
-    computes; a double sum would vary with batch boundaries), and
-    lands them idempotently under a batch_id-keyed path (the
-    append_sketch_batch replay rule). The returned frame re-sums the
-    partial store."""
-    from ..operators.joins import salted_inner_join
-
-    base = _fresh_staging_dir(spark, sf_dir, "stream_skew")
-    src = os.path.join(base, "src")
-    ckpt = os.path.join(base, "ckpt")
-    store = os.path.join(base, "store")
+    """Stream lineitem past the static orders side and re-sum the
+    per-batch partials. ``join_batch(batch_df, orders, batch_id)``
+    joins one micro-batch (the batch is persisted: the census and the
+    join both read it); each batch reduces to integer-exact partials
+    (counts + price CENTS — bigint sums are associative, so HOWEVER
+    the engine batches the input, re-summing the partials is bit-equal
+    to the one-shot batch join the oracle computes; a double sum would
+    vary with batch boundaries), landed idempotently under
+    ``store/batch_id=N`` (overwrite: a redelivered batch rewrites its
+    own dir). ``arrival_order`` clusters the staged files by that
+    column's range — the burst arrival shape, where a viral key lands
+    in consecutive triggers instead of being smeared uniformly."""
+    base = fresh_staging_dir(spark, sf_dir, tag)
+    src, store = os.path.join(base, "src"), os.path.join(base, "store")
     par = spark.sparkContext.defaultParallelism
-    table(spark, sf_dir, "lineitem").select(
+    li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag", "l_extendedprice"
-    ).repartition(par).write.json(src)
+    )
+    (
+        li.repartitionByRange(par, F.col(arrival_order))
+        if arrival_order
+        else li.repartition(par)
+    ).write.json(src)
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-
     stream = (
         spark.readStream.schema(
             "l_orderkey bigint, l_returnflag string, l_extendedprice double"
@@ -2297,26 +1938,24 @@ def skew_join_stream(
     )
 
     def feed(batch_df: DataFrame, batch_id: int) -> None:
-        joined = salted_inner_join(
-            batch_df, o, "l_orderkey", "o_orderkey", hot_min_rows=hot_min_rows
-        )
-        partial = joined.groupBy("o_orderpriority", "l_returnflag").agg(
-            F.count("*").cast("long").alias("n_lines"),
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long"))
-            .cast("long")
-            .alias("sum_cents"),
-        )
-        partial.write.mode("overwrite").parquet(
-            os.path.join(store, f"batch_id={batch_id}")
-        )
+        batch_df = batch_df.persist()
+        try:
+            partial = join_batch(batch_df, o, batch_id).groupBy(
+                "o_orderpriority", "l_returnflag"
+            ).agg(
+                F.count("*").cast("long").alias("n_lines"),
+                F.sum(F.round(F.col("l_extendedprice") * 100).cast("long"))
+                .cast("long")
+                .alias("sum_cents"),
+            )
+            partial.write.mode("overwrite").parquet(
+                os.path.join(store, f"batch_id={batch_id}")
+            )
+        finally:
+            batch_df.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(feed)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    drain_stream(q, "skew-join")
+    q = foreach_batch_writer(stream, feed, os.path.join(base, "ckpt")).start()
+    drain_stream(q, f"{tag} join")
     return (
         spark.read.parquet(store)
         .groupBy("o_orderpriority", "l_returnflag")
@@ -2327,10 +1966,32 @@ def skew_join_stream(
     )
 
 
+def skew_join_stream(
+    spark: SparkSession, sf_dir: str, hot_min_rows: int = STREAM_SKEW_HOT_MIN
+) -> DataFrame:
+    """Skew-mitigated stream⋈static join through the REAL engine: the
+    batch mitigations are useless to a foreachBatch consumer if they
+    can't run per-trigger — a skewed CDC stream joining a fact table
+    hits the same hot reducer EVERY micro-batch, so the fix has to be
+    inside the batch function. Each trigger runs
+    operators.joins.salted_inner_join (its hot-key census is eager and
+    bounded — one tiny collect per batch, the exact property that made
+    it safe under AQE) against the static orders side; the partials
+    and their re-sum are :func:`_lineitem_join_stream`'s."""
+    from ..operators.joins import salted_inner_join
+
+    return _lineitem_join_stream(
+        spark, sf_dir, "stream_skew",
+        lambda batch_df, o, _batch_id: salted_inner_join(
+            batch_df, o, "l_orderkey", "o_orderkey", hot_min_rows=hot_min_rows
+        ),
+    )
+
+
 @query(
     "stream_exec_skew_join",
-    # r15 rotation: demoted for stream_exec_adaptive_join (the chooser
-    # executes the same mitigation when the census calls for it)
+    # local-only: stream_exec_adaptive_join's chooser executes the same
+    # mitigation when the census calls for it
     registered=False,
     oracle="""
     SELECT o_orderpriority, l_returnflag,
@@ -2357,127 +2018,63 @@ def adaptive_join_stream(
     hot_min_rows: int = STREAM_SKEW_HOT_MIN,
     arrival_order: str | None = None,
 ) -> DataFrame:
-    """The measurement-driven join chooser in its REAL habitat (r13
-    verdict #6): a CDC stream's skew is TIME-VARYING — a batch of
-    backfill is uniform, the next batch carries a viral key, the one
-    after is tiny — so no single hand-picked strategy is right for
-    every trigger. Each foreachBatch runs
-    operators.joins.adaptive_inner_join against the static orders
-    side: per batch, one metadata count + one bounded census pick
-    broadcast / plain / hotcold / salted, and the census is reused by
-    the executed operator (the batch chooser's contract, unchanged).
+    """The measurement-driven join chooser in its REAL habitat: a CDC
+    stream's skew is TIME-VARYING — a batch of backfill is uniform,
+    the next batch carries a viral key, the one after is tiny — so no
+    single hand-picked strategy is right for every trigger. Each
+    foreachBatch runs operators.joins.adaptive_inner_join against the
+    static orders side: per batch, one metadata count + one bounded
+    census pick broadcast / plain / hotcold / salted, and the census is
+    reused by the executed operator (the batch chooser's contract,
+    unchanged).
 
     Observability: the chosen strategy lands per batch at
     ``staging_base(...)/choices/batch_id=N`` (one row: batch_id,
     strategy, n_rows) through the same idempotent overwrite rule as
     the partials — the record a production operator needs to audit
     why trigger 113 was slow. tests/test_stress.py drives batches
-    with SHIFTING composition and asserts the chooser actually
-    changed its mind across triggers.
+    with SHIFTING composition (``arrival_order``) and asserts the
+    chooser actually changed its mind across triggers.
 
-    Results: integer-exact partials re-summed, bit-equal to the
-    one-shot batch join whatever the engine's batching and WHATEVER
-    strategies were chosen (every branch is
-    transparency-contracted), so the oracle is the plain batch join —
-    same as stream_exec_skew_join."""
+    Results: :func:`_lineitem_join_stream`'s integer-exact partials
+    re-summed, bit-equal to the one-shot batch join whatever the
+    engine's batching and WHATEVER strategies were chosen (every
+    branch is transparency-contracted), so the oracle is the plain
+    batch join — same as stream_exec_skew_join."""
     from ..operators.joins import BROADCAST_MAX_ROWS, adaptive_inner_join
 
     if broadcast_max_rows is None:
         broadcast_max_rows = BROADCAST_MAX_ROWS
-    base = _fresh_staging_dir(spark, sf_dir, "stream_adp")
-    src = os.path.join(base, "src")
-    ckpt = os.path.join(base, "ckpt")
-    store = os.path.join(base, "store")
-    choices = os.path.join(base, "choices")
-    par = spark.sparkContext.defaultParallelism
-    li = table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_returnflag", "l_extendedprice"
-    )
-    # arrival_order clusters the staged files by key range — the
-    # burst arrival shape (a viral key lands in consecutive triggers,
-    # not uniformly smeared): round-robin staging makes every batch a
-    # uniform sample, which can never shift the chooser's decision;
-    # range staging gives the shifting composition the operator exists
-    # for (and the test drives)
-    staged = (
-        li.repartitionByRange(par, F.col(arrival_order))
-        if arrival_order
-        else li.repartition(par)
-    )
-    staged.write.json(src)
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
+    choices = os.path.join(staging_base(spark, sf_dir, "stream_adp"), "choices")
 
-    stream = (
-        spark.readStream.schema(
-            "l_orderkey bigint, l_returnflag string, l_extendedprice double"
+    def join_batch(batch_df: DataFrame, o: DataFrame, batch_id: int) -> DataFrame:
+        picked: list[str] = []
+        joined = adaptive_inner_join(
+            batch_df,
+            o,
+            "l_orderkey",
+            "o_orderkey",
+            broadcast_max_rows=broadcast_max_rows,
+            hot_min_rows=hot_min_rows,
+            on_decision=picked.append,
         )
-        .option("maxFilesPerTrigger", max(1, par // 4))
-        .json(src)
-    )
+        # batch_id comes back via hive-style partition discovery on
+        # the directory name (a data column of the same name would
+        # collide); an empty ``picked`` (a drifted callback contract)
+        # degrades the record to "unknown" instead of wedging the stream
+        spark.createDataFrame(
+            [(picked[0] if picked else "unknown", batch_df.count())],
+            "strategy string, n_rows bigint",
+        ).write.mode("overwrite").parquet(os.path.join(choices, f"batch_id={batch_id}"))
+        return joined
 
-    def feed(batch_df: DataFrame, batch_id: int) -> None:
-        # the batch is read three times (chooser census, the join, the
-        # observability count) — persist so the source JSON is scanned
-        # once per trigger, not three times (r14 review finding)
-        batch_df = batch_df.persist()
-        try:
-            picked: list[str] = []
-            joined = adaptive_inner_join(
-                batch_df,
-                o,
-                "l_orderkey",
-                "o_orderkey",
-                broadcast_max_rows=broadcast_max_rows,
-                hot_min_rows=hot_min_rows,
-                on_decision=picked.append,
-            )
-            partial = joined.groupBy("o_orderpriority", "l_returnflag").agg(
-                F.count("*").cast("long").alias("n_lines"),
-                F.sum(F.round(F.col("l_extendedprice") * 100).cast("long"))
-                .cast("long")
-                .alias("sum_cents"),
-            )
-            partial.write.mode("overwrite").parquet(
-                os.path.join(store, f"batch_id={batch_id}")
-            )
-            # batch_id comes back via hive-style partition discovery on
-            # the directory name (a data column of the same name would
-            # collide)
-            # picked may be empty if adaptive_inner_join's callback
-            # contract ever drifts (early return, skipped census) —
-            # degrade the observability record to "unknown" rather
-            # than raising IndexError and wedging the whole stream
-            strategy = picked[0] if picked else "unknown"
-            spark.createDataFrame(
-                [(strategy, batch_df.count())], "strategy string, n_rows bigint"
-            ).write.mode("overwrite").parquet(
-                os.path.join(choices, f"batch_id={batch_id}")
-            )
-        finally:
-            batch_df.unpersist()
-
-    q = (
-        stream.writeStream.foreachBatch(feed)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    drain_stream(q, "adaptive-join")
-    return (
-        spark.read.parquet(store)
-        .groupBy("o_orderpriority", "l_returnflag")
-        .agg(
-            F.sum("n_lines").cast("long").alias("n_lines"),
-            F.sum("sum_cents").cast("long").alias("sum_cents"),
-        )
-    )
+    return _lineitem_join_stream(spark, sf_dir, "stream_adp", join_batch, arrival_order)
 
 
 @query(
     "stream_exec_adaptive_join",
-    # r15 rotation (r14 verdict #3): promoted — supersedes
-    # stream_exec_skew_join the way the batch chooser superseded the
-    # hand-salted form: the chooser re-censuses EVERY micro-batch
+    # supersedes stream_exec_skew_join the way the batch chooser
+    # superseded the hand-salted form: it re-censuses EVERY micro-batch
     oracle="""
     SELECT o_orderpriority, l_returnflag,
            CAST(count(*) AS BIGINT) AS n_lines,

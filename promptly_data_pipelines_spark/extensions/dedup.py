@@ -177,7 +177,13 @@ def minhash_signatures(
     group parquet (unsplittable → 1 scan task), and shingling+16
     hashes is the expensive stage — one small shuffle of raw docs buys
     full-width parallelism for it. On a real multi-file table the
-    repartition is a no-op cost-wise (AQE coalesces)."""
+    repartition is a no-op cost-wise (AQE coalesces).
+
+    Rows with a NULL ``doc_id`` are dropped on both paths: a null key
+    names no document (the twin's groupBy would otherwise merge every
+    null-keyed text into one signature, and the kernel cannot hold a
+    null id)."""
+    d = d.filter(F.col("doc_id").isNotNull())
     d = d.repartition(d.sparkSession.sparkContext.defaultParallelism)
     if use_kernel:
         return d.select("doc_id", "text").mapInPandas(

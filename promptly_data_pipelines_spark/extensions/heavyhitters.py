@@ -178,13 +178,12 @@ def stream_exec_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-serving amortized cost, not a per-event one."""
     import os
 
-    from ..cdc.streaming import _fresh_staging_dir, drain_stream
+    from ..cdc.staging import drain_stream, foreach_batch_writer, fresh_staging_dir
 
     support = 1e-4
     capacity = max(8, ceil(1.0 / support) - 1)
-    base = _fresh_staging_dir(spark, sf_dir, "stream_hh")
+    base = fresh_staging_dir(spark, sf_dir, "stream_hh")
     src = os.path.join(base, "src")
-    ckpt = os.path.join(base, "ckpt")
     store = os.path.join(base, "cands")
     par = spark.sparkContext.defaultParallelism
     table(spark, sf_dir, "orders").select("o_custkey").repartition(par).write.json(
@@ -207,19 +206,14 @@ def stream_exec_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(store, f"batch_id={batch_id}")
         )
 
-    q = (
-        stream.writeStream.foreachBatch(feed)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = foreach_batch_writer(stream, feed, os.path.join(base, "ckpt")).start()
     drain_stream(q, "heavy-hitter")
 
     cand_union = (
         spark.read.parquet(store).select("o_custkey").dropDuplicates(["o_custkey"])
     )
     # support base = ALL rows (NULL keys included), matching the
-    # count(*) the oracle thresholds on — see heavy_hitters (r13 review)
+    # count(*) the oracle thresholds on — see heavy_hitters
     raw = spark.read.schema("o_custkey bigint").json(src)
     total = raw.count()
     source = raw.filter(F.col("o_custkey").isNotNull())

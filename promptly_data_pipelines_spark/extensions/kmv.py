@@ -484,16 +484,20 @@ def build_kmv_stream_store(spark: SparkSession, sf_dir: str, tag: str) -> str:
     stream_exec_kmv_sketch)."""
     import os
 
-    from ..cdc.streaming import _fresh_staging_dir, drain_stream, staging_base
+    from ..cdc.staging import (
+        drain_stream,
+        foreach_batch_writer,
+        fresh_staging_dir,
+        staging_base,
+    )
 
     base = staging_base(spark, sf_dir, tag)
     store = os.path.join(base, "store")
     marker = os.path.join(base, "_COMPLETE")
     if os.path.exists(marker) and os.path.exists(store):
         return store
-    base = _fresh_staging_dir(spark, sf_dir, tag)
+    base = fresh_staging_dir(spark, sf_dir, tag)
     src = os.path.join(base, "src")
-    ckpt = os.path.join(base, "ckpt")
     ev = table(spark, sf_dir, "events")
     ev.select("event_type", _user_day(ev).alias("ud")).write.json(src)
 
@@ -506,12 +510,7 @@ def build_kmv_stream_store(spark: SparkSession, sf_dir: str, tag: str) -> str:
     def feed(batch_df: DataFrame, batch_id: int) -> None:
         append_kmv_batch(store, batch_df, batch_id, F.col("ud"), ["event_type"])
 
-    q = (
-        stream.writeStream.foreachBatch(feed)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = foreach_batch_writer(stream, feed, os.path.join(base, "ckpt")).start()
     drain_stream(q, "kmv ingest")
     with open(marker, "w", encoding="utf-8") as fh:
         fh.write("drained")

@@ -337,11 +337,10 @@ def stream_exec_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rows-only by necessity, like dq_quantile_sketch."""
     import os
 
-    from ..cdc.streaming import _fresh_staging_dir, drain_stream
+    from ..cdc.staging import drain_stream, foreach_batch_writer, fresh_staging_dir
 
-    base = _fresh_staging_dir(spark, sf_dir, "stream_sketch")
+    base = fresh_staging_dir(spark, sf_dir, "stream_sketch")
     src = os.path.join(base, "src")
-    ckpt = os.path.join(base, "ckpt")
     store = os.path.join(base, "store")
     ev = table(spark, sf_dir, "events").select("event_type", "value")
     ev.write.json(src)
@@ -355,12 +354,7 @@ def stream_exec_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     def feed(batch_df: DataFrame, batch_id: int) -> None:
         append_sketch_batch(store, batch_df, batch_id, "value", ["event_type"])
 
-    q = (
-        stream.writeStream.foreachBatch(feed)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = foreach_batch_writer(stream, feed, os.path.join(base, "ckpt")).start()
     drain_stream(q, "sketch ingest")
     merged = sketch_rollup(spark.read.parquet(store), ["event_type"])
     return sketch_quantiles(merged, ["event_type"]).orderBy("event_type", "q")
@@ -368,8 +362,8 @@ def stream_exec_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("dq_sketch_serving_rollup", registered=False)
 def dq_sketch_serving_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pattern the module docstring promises, end to end (r12
-    verdict #7): per-(event_type, DAY) sketches are built ONCE and
+    """The pattern the module docstring promises, end to end:
+    per-(event_type, DAY) sketches are built ONCE and
     persisted; the month tier merges DAY SKETCHES, the all-time tier
     merges month output — after the day store lands, no level ever
     re-touches a raw row (the returned plan reads only the sketch
@@ -383,10 +377,10 @@ def dq_sketch_serving_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dq_quantile_sketch."""
     import os
 
-    from ..cdc.streaming import _fresh_staging_dir
+    from ..cdc.staging import fresh_staging_dir
 
     day_store = os.path.join(
-        _fresh_staging_dir(spark, sf_dir, "sketch_serve"), "day_sketches"
+        fresh_staging_dir(spark, sf_dir, "sketch_serve"), "day_sketches"
     )
     ev = table(spark, sf_dir, "events").select(
         "event_type", F.to_date("ts").alias("day"), "value"
@@ -409,8 +403,8 @@ def dq_sketch_serving_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # that makes the hierarchy bound STRUCTURAL — merge err = child
     # errs + own compactions, so all-time err >= sum(month errs) by
     # construction, which is exactly what the hierarchy-additivity
-    # test asserts (r13 review: merging days directly made that
-    # assertion fixture-dependent)
+    # test asserts (merging days directly makes that assertion
+    # fixture-dependent)
     alltime = sketch_rollup(months.select("event_type", "sketch"), ["event_type"])
 
     day_q = sketch_quantiles(days, ["event_type", "day"]).select(

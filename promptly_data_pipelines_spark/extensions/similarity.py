@@ -2000,13 +2000,13 @@ def pq_index_delta_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily-arrival path — the rebuild rival exists here precisely to
     show what delta-add avoids re-paying: re-training and re-encoding
     the entire corpus for a 0.2% arrival."""
-    from ..cdc.streaming import _fresh_staging_dir
+    from ..cdc.staging import fresh_staging_dir
 
     e = _doubled(table(spark, sf_dir, "embeddings"))
     # base keeps the deterministic seed range (pq_train seeds its
     # codebook from vec_id 0..PQ_K-1); the delta is every 5th id above
     is_delta = (F.col("vec_id") >= PQ_K) & (F.col("vec_id") % 5 == 3)
-    staging = _fresh_staging_dir(spark, sf_dir, "pq_delta")
+    staging = fresh_staging_dir(spark, sf_dir, "pq_delta")
     grown_idx = staging + "/grown"
     rebuild_idx = staging + "/rebuild"
     pq_index_save(spark, e.where(~is_delta), grown_idx)
@@ -2091,11 +2091,11 @@ def ivfpq_index_delta_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     (IVF-PQ) both grow by appending — at 100 TB a daily 0.2% arrival
     costs one encode+assign pass over the delta instead of re-training
     and re-encoding the corpus."""
-    from ..cdc.streaming import _fresh_staging_dir
+    from ..cdc.staging import fresh_staging_dir
 
     e = _doubled(table(spark, sf_dir, "embeddings"))
     is_delta = (F.col("vec_id") >= PQ_K) & (F.col("vec_id") % 5 == 3)
-    staging = _fresh_staging_dir(spark, sf_dir, "ivfpq_delta")
+    staging = fresh_staging_dir(spark, sf_dir, "ivfpq_delta")
     grown_idx = staging + "/grown"
     rebuild_idx = staging + "/rebuild"
     ivfpq_index_save(spark, e.where(~is_delta), grown_idx)

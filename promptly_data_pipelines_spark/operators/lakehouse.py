@@ -57,6 +57,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..cdc.batch import latest_wins
+from ..cdc.staging import foreach_batch_writer
 
 _PROBE_CLASSES = {
     "delta": "io.delta.tables.DeltaTable",
@@ -128,8 +129,4 @@ def upsert_sink_lakehouse(
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         merge_into_table(batch_df.sparkSession, target_table, batch_df, key)
 
-    return (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return foreach_batch_writer(stream, merge_batch, checkpoint)

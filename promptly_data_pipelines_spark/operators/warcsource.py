@@ -725,9 +725,9 @@ def stream_exec_warc(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly-once end to end: a re-consumed wave would double rows, a
     missed wave would drop them — either flips the row count AND the
     hash."""
-    from ..cdc.streaming import _fresh_staging_dir
+    from ..cdc.staging import drain_stream, fresh_staging_dir
 
-    base = _fresh_staging_dir(spark, sf_dir, "warc_stream")
+    base = fresh_staging_dir(spark, sf_dir, "warc_stream")
     src = os.path.join(base, "src")
     ckpt = os.path.join(base, "ckpt")
     sink = os.path.join(base, "sink")
@@ -751,8 +751,7 @@ def stream_exec_warc(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
-        assert not q.isActive, "warc stream drain did not terminate"
+        drain_stream(q, "warc", timeout_s=120)
     return spark.read.parquet(sink)
 
 
@@ -816,9 +815,9 @@ def stream_warc_relay(spark: SparkSession, sf_dir: str) -> DataFrame:
     BATCH reader and checked against the full documents slice. The hash
     proves exactly-once across BOTH sides: a re-consumed wave or a
     non-idempotent batch commit doubles rows, a missed wave drops them."""
-    from ..cdc.streaming import _fresh_staging_dir
+    from ..cdc.staging import drain_stream, fresh_staging_dir
 
-    base = _fresh_staging_dir(spark, sf_dir, "warc_relay")
+    base = fresh_staging_dir(spark, sf_dir, "warc_relay")
     src = os.path.join(base, "src")
     out = os.path.join(base, "out")
     ckpt = os.path.join(base, "ckpt")
@@ -842,8 +841,7 @@ def stream_warc_relay(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
-        assert not q.isActive, "warc relay drain did not terminate"
+        drain_stream(q, "warc relay", timeout_s=120)
     return _warc_projection(read_warc(spark, out))
 
 

@@ -225,12 +225,13 @@ def stream_exec_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``format("kafka")`` and everything downstream is unchanged."""
     import shutil
 
+    from ..cdc.staging import drain_stream, foreach_batch_writer, stage_frames
+
     base = os.path.join(
         tempfile.gettempdir(),
         f"pdp_stream_incr_{os.path.basename(sf_dir.rstrip('/'))}_{_session_tag(spark)}",
     )
-    src = os.path.join(base, "src")
-    ckpt = os.path.join(base, "ckpt")
+    src, ckpt = os.path.join(base, "src"), os.path.join(base, "ckpt")
     warehouse = os.path.join(base, "warehouse")
     # staging + checkpoint are wiped so re-invocation re-streams from
     # scratch; the WAREHOUSE persists (session-tagged) — re-delivered
@@ -238,26 +239,14 @@ def stream_exec_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # recovery semantics tests/test_incremental.py pins.
     for d in (src, ckpt):
         shutil.rmtree(d, ignore_errors=True)
-    for stage in range(8):
-        shutil.rmtree(os.path.join(base, f"stage{stage}"), ignore_errors=True)
-    os.makedirs(src)
-
     ev = table(spark, sf_dir, "events").select("event_id", "ts", "event_type", "value")
-    for i, batch in enumerate(arrival_batches(ev)):
-        staged = batch.select(
-            "event_id",
-            ts_str("ts").alias("ts"),
-            "event_type",
-            "value",
-        )
-        staged.coalesce(1).write.mode("overwrite").json(os.path.join(base, f"stage{i}"))
-        import glob as _glob
-
-        (part,) = _glob.glob(os.path.join(base, f"stage{i}", "part-*.json"))
-        dst = os.path.join(src, f"b{i:04d}.json")
-        shutil.move(part, dst)
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-
+    stage_frames(
+        [
+            batch.select("event_id", ts_str("ts").alias("ts"), "event_type", "value")
+            for batch in arrival_batches(ev)
+        ],
+        src,
+    )
     stream = (
         spark.readStream.schema("event_id bigint, ts string, event_type string, value double")
         .option("maxFilesPerTrigger", 1)
@@ -268,13 +257,7 @@ def stream_exec_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     def land(batch_df: DataFrame, batch_id: int) -> None:
         incremental_run(batch_df.sparkSession, batch_df, f"mb{batch_id}", warehouse)
 
-    q = (
-        stream.writeStream.foreachBatch(land)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_stream(foreach_batch_writer(stream, land, ckpt).start(), "incremental")
     return _read_rollup(spark, warehouse)
 
 

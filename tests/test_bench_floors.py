@@ -79,7 +79,10 @@ def test_headline_line_fits_the_driver_tail_budget():
 
 
 def test_committed_floors_file_parses_and_covers_the_r11_flag():
-    floors = bench._load_floors()
+    with open(bench.FLOORS_PATH) as fh:
+        raw = json.load(fh)
+    assert set(raw) == {"cpus", "note", "floors"}
+    floors = bench.floors_for_run(raw, raw["cpus"])
     assert floors, "bench_floors.json must ship with seeded floors"
     assert all(isinstance(v, float) and v > 0 for v in floors.values())
     # the exact line the r11 verdict flagged must now self-flag: the
@@ -87,9 +90,18 @@ def test_committed_floors_file_parses_and_covers_the_r11_flag():
     warns = bench.check_floors({"skew10_dedup_near_text_exact": 13.4}, floors)
     assert "skew10_dedup_near_text_exact" in warns
     assert os.path.exists(bench.FLOORS_PATH)
-    with open(bench.FLOORS_PATH) as fh:
-        raw = json.load(fh)
-    assert set(raw) == {"note", "floors"}
+
+
+def test_floors_apply_only_on_their_core_count():
+    """The floors were set on local[32]; a 4-core calibration probe
+    reads 0.644 s, inside the quiet gate, so without the core-count
+    check a quiet 4-core run would WARN against and min-merge into the
+    32-core table."""
+    table = {"cpus": 32, "floors": {"a": 1.0}}
+    assert bench.floors_for_run(table, 32) == {"a": 1.0}
+    assert bench.floors_for_run(table, 4) is None
+    # a table that does not record its core count is never ratcheted
+    assert bench.floors_for_run({"floors": {"a": 1.0}}, 32) is None
 
 
 class _FakeWriter:

@@ -2134,7 +2134,8 @@ def test_minhash_kernel_bit_identical(spark):
     explode→md5→groupBy expression twin (use_kernel=False) — must
     agree bit-for-bit on real data, including which docs get a row at
     all (< 3 words ⇒ none). Catches a silent drift in either
-    (tokenizer, digest window, mask, overflow, min semantics)."""
+    (tokenizer, digest window, mask, overflow, min semantics). A
+    null-``doc_id`` row names no document: both paths drop it."""
     from promptly_data_pipelines_spark.catalog import table
     from promptly_data_pipelines_spark.extensions.dedup import (
         N_HASHES,
@@ -2142,6 +2143,9 @@ def test_minhash_kernel_bit_identical(spark):
     )
 
     d = table(spark, "/root/testdata/sf0.01", "documents")
+    d = d.unionByName(
+        d.limit(1).withColumn("doc_id", F.lit(None).cast(d.schema["doc_id"].dataType))
+    )
     cols = [f"mh_{i}" for i in range(N_HASHES)]
     a = {
         r.doc_id: tuple(r[c] for c in cols)
@@ -2151,7 +2155,7 @@ def test_minhash_kernel_bit_identical(spark):
         r.doc_id: tuple(r[c] for c in cols)
         for r in minhash_signatures(d, use_kernel=False).collect()
     }
-    assert a == b and len(a) > 0
+    assert a == b and len(a) > 0 and None not in a
 
 
 def test_simhash_plan_stays_compact(spark):
@@ -2436,11 +2440,11 @@ def test_stream_left_join_scoped_state_partitions(spark, monkeypatch):
 
     run = S._run_memory_sink
 
-    def probed(agg, name, ckpt, mode):
+    def probed(agg, *args):
         probe = Probe()
         agg.sparkSession.streams.addListener(probe)
         try:
-            q = run(agg, name, ckpt, mode)
+            q = run(agg, *args)
             seen.wait(60)
         finally:
             agg.sparkSession.streams.removeListener(probe)
