@@ -20,6 +20,7 @@ from .envelope import (
     ENVELOPE_V2_SCHEMA,
     decode_envelopes,
     decode_envelopes_variant,
+    decode_live_envelopes,
     synthesize_envelopes,
 )
 
@@ -75,8 +76,7 @@ def cdc_filter_tombstone(spark: SparkSession, sf_dir: str) -> DataFrame:
     live ``after`` image (raw_provider_postgres.sql:22
     ``where json_query(_message,'lax $.payload.after') is not null``)."""
     ev = table(spark, sf_dir, "events")
-    decoded = decode_envelopes(synthesize_envelopes(ev))
-    return decoded.filter(F.col("after").isNotNull()).select(
+    return decode_live_envelopes(synthesize_envelopes(ev)).select(
         "op",
         F.col("after.event_id").alias("event_id"),
         F.col("after.user_id").alias("user_id"),
@@ -292,8 +292,7 @@ def cdc_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     projecting op, ts_ms, the live after-image fields, and the source
     table."""
     ev = table(spark, sf_dir, "events")
-    decoded = decode_envelopes(synthesize_envelopes(ev))
-    return decoded.filter(F.col("after").isNotNull()).select(
+    return decode_live_envelopes(synthesize_envelopes(ev)).select(
         "op",
         "ts_ms",
         F.col("after.event_id").alias("event_id"),
@@ -386,8 +385,7 @@ def cdc_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("event_id") % 4 == 1, F.lit("web")).otherwise(F.lit("mobile")),
     )
     wire = synthesize_envelopes(ev, image_extra={"channel": channel})
-    decoded = decode_envelopes(wire, schema=ENVELOPE_V2_SCHEMA)
-    return decoded.filter(F.col("after").isNotNull()).select(
+    return decode_live_envelopes(wire, schema=ENVELOPE_V2_SCHEMA).select(
         "op",
         "ts_ms",
         F.col("after.event_id").alias("event_id"),

@@ -280,3 +280,25 @@ def decode_envelopes(
         p.getField("source").alias("source"),
         "kafka_timestamp",
     )
+
+
+def decode_live_envelopes(
+    kafka_like: DataFrame, schema: T.StructType = ENVELOPE_SCHEMA
+) -> DataFrame:
+    """:func:`decode_envelopes`, then drop tombstones: keep only the
+    rows with a live ``after`` image (raw_provider_postgres.sql:22
+    ``where json_query(_message,'lax $.payload.after') is not null``).
+    A null ``raw_message`` (a Kafka compaction tombstone) decodes to a
+    null payload and is dropped too. Same columns as
+    :func:`decode_envelopes`; batch and readStream frames alike.
+
+    Every tombstone filter goes through here. Written as a filter
+    INSIDE the decode rather than a ``Filter`` over it: Catalyst pushes
+    ``after IS NOT NULL`` below the decode projections and inlines
+    their aliases as it goes, so a plain filter plan parses each
+    message four times (and re-serializes synthesized ones twice).
+    ``inline`` is a Generate, which nothing is pushed through, so the
+    message is parsed once."""
+    payload = F.from_json("raw_message", schema).getField("payload")
+    live = F.filter(F.array(payload), lambda p: p.getField("after").isNotNull())
+    return kafka_like.select(F.inline(live), "kafka_timestamp")

@@ -3,7 +3,7 @@
 The reference's "streaming" is batch-over-Kafka (Trino re-reads the
 topic each run). At 100 TB/day that is untenable — the scale mode is a
 real readStream with incremental state. These functions apply the SAME
-transforms as cdc.batch (decode_envelopes, latest_wins) to streaming
+transforms as cdc.batch (decode_live_envelopes, latest_wins) to streaming
 DataFrames; tests drive them with a file source + availableNow
 trigger, production would use ``format("kafka")``:
 
@@ -44,7 +44,12 @@ from ..operators.snapshot_store import (
 from ..registry import query
 from ..session import scoped_session
 from .batch import merge_upsert_frames
-from .envelope import ENVELOPE_V2_SCHEMA, decode_envelopes, synthesize_envelopes
+from .envelope import (
+    ENVELOPE_SCHEMA,
+    ENVELOPE_V2_SCHEMA,
+    decode_live_envelopes,
+    synthesize_envelopes,
+)
 from .staging import (
     drain_stream,
     foreach_batch_writer,
@@ -74,19 +79,14 @@ def live_rows(
     schema=None,
     extra_image_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Decode + tombstone-filter (T1+T2), streaming-safe (stateless
-    select/filter — identical semantics to the batch path).
+    """Decode + tombstone-filter (T1+T2), streaming-safe (stateless:
+    the batch path's own :func:`decode_live_envelopes`).
     ``schema``/``extra_image_cols`` are the post-DDL consumer shape:
     decode under a widened envelope schema (e.g. ENVELOPE_V2_SCHEMA)
     and surface the additive ``after.<col>`` fields — pre-DDL
     messages NULL-fill them (cdc_schema_evolution's decode posture,
     reusable by the upsert sink's schema-evolution path)."""
-    decoded = (
-        decode_envelopes(stream)
-        if schema is None
-        else decode_envelopes(stream, schema=schema)
-    )
-    return decoded.filter(F.col("after").isNotNull()).select(
+    return decode_live_envelopes(stream, schema or ENVELOPE_SCHEMA).select(
         "op",
         F.timestamp_millis("ts_ms").alias("ts"),
         F.col("after.event_id").alias("event_id"),

@@ -66,6 +66,18 @@ def clustered_write(
     )
 
 
+def partition_for_write(df: DataFrame, partition_col: str) -> DataFrame:
+    """Hash ``df`` on ``partition_col`` ahead of a ``partitionBy`` write
+    of that column: each value's rows land in one writer task, so each
+    partition dir gets one file. The hash count is explicit (the
+    session's ``spark.sql.shuffle.partitions``, read per call) because
+    AQE coalesces an uncounted repartition of a small input into ONE
+    task, which then writes every dir alone while the other cores
+    idle."""
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return df.repartition(n, partition_col)
+
+
 @query(
     "layout_clustered_scan",
     registered=False,  # registered window full; pytest oracle-parity covers it

@@ -99,14 +99,16 @@ def sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned by ingestion_cdc_date). Readback aggregates per
     partition directory; a per-partition filter would prune at the
     directory level (dynamic partition pruning at scale)."""
+    from .layout import partition_for_write  # layout imports this module
+
     out = os.path.join(
         tempfile.gettempdir(), f"pdp_sink_{os.path.basename(sf_dir.rstrip('/'))}_{_session_tag(spark)}"
     )
     ev = table(spark, sf_dir, "events").withColumn("ingestion_cdc_date", date_key("ts"))
-    # repartition by the partition column first: without it every task
-    # writes a sliver into every partition dir (tasks × dates tiny
-    # files — the classic small-file problem at scale)
-    ev.repartition("ingestion_cdc_date").write.mode("overwrite").partitionBy(
+    # hash by the partition column first, or every task writes a sliver
+    # into every date dir (tasks × dates tiny files); the hash count is
+    # explicit so AQE cannot coalesce the write into a single task
+    partition_for_write(ev, "ingestion_cdc_date").write.mode("overwrite").partitionBy(
         "ingestion_cdc_date"
     ).parquet(out)
     # readback with the writer's schema: an empty source writes a

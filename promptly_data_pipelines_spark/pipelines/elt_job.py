@@ -20,17 +20,32 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..cdc.envelope import decode_envelopes, synthesize_envelopes
+from ..cdc.envelope import decode_live_envelopes, synthesize_envelopes
 from ..cdc.batch import latest_wins
 from ..functions import date_key
+from ..operators.layout import partition_for_write
 from ..quality.checks import not_null_check, relationships_check, run_suite, table_metrics, unique_check
 from ..quality.report import write_report
 from ..registry import query
 from .orchestrator import Pipeline
+
+
+def raw_events_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The raw_events model before its write: live (non-tombstone)
+    events decoded from their change envelopes, keyed by ingestion
+    date."""
+    live = decode_live_envelopes(synthesize_envelopes(table(spark, sf_dir, "events")))
+    return live.select(
+        F.col("after.event_id").alias("event_id"),
+        F.timestamp_millis("ts_ms").alias("ts"),
+        F.col("after.user_id").alias("user_id"),
+        F.col("after.event_type").alias("event_type"),
+        F.col("after.value").alias("value"),
+    ).withColumn("ingestion_cdc_date", date_key("ts"))
 
 
 def run_elt(spark: SparkSession, sf_dir: str, warehouse: str) -> dict:
@@ -38,20 +53,21 @@ def run_elt(spark: SparkSession, sf_dir: str, warehouse: str) -> dict:
     paths. Rerunnable: every write is mode=overwrite (the reference
     rebuilds tables each run — materialized='table')."""
     p = Pipeline()
+    # each model's row count is observed on its own write, so counting
+    # costs no job. The observation must sit above every exchange of the
+    # written plan: AQE drops one inside a stage that came out empty.
+    written: dict[str, Observation] = {}
+
+    def counted(name: str, df: DataFrame) -> DataFrame:
+        written[name] = Observation()
+        return df.observe(written[name], F.count(F.lit(1)).alias("rows"))
 
     @p.model("raw_events")
     def raw_events(s: SparkSession, up: dict[str, DataFrame]) -> DataFrame:
-        decoded = decode_envelopes(synthesize_envelopes(table(s, sf_dir, "events")))
-        live = decoded.filter(F.col("after").isNotNull()).select(
-            F.col("after.event_id").alias("event_id"),
-            F.timestamp_millis("ts_ms").alias("ts"),
-            F.col("after.user_id").alias("user_id"),
-            F.col("after.event_type").alias("event_type"),
-            F.col("after.value").alias("value"),
-        )
+        staged = raw_events_frame(s, sf_dir)
         out = os.path.join(warehouse, "raw", "events")
-        staged = live.withColumn("ingestion_cdc_date", date_key("ts"))
-        staged.repartition("ingestion_cdc_date").write.mode("overwrite").partitionBy(
+        hashed = partition_for_write(staged, "ingestion_cdc_date")
+        counted("raw_events", hashed).write.mode("overwrite").partitionBy(
             "ingestion_cdc_date"
         ).parquet(out)
         # writer-schema readbacks (all three models): an empty upstream
@@ -66,7 +82,7 @@ def run_elt(spark: SparkSession, sf_dir: str, warehouse: str) -> dict:
             F.col("c_custkey").alias("user_id"), F.col("n_name").alias("nation_name")
         )
         out = os.path.join(warehouse, "raw", "user_nation")
-        dim.write.mode("overwrite").parquet(out)
+        counted("raw_user_nation", dim).write.mode("overwrite").parquet(out)
         return s.read.schema(dim.schema).parquet(out)
 
     @p.model("curated_activity", deps=["raw_events", "raw_user_nation"])
@@ -85,7 +101,7 @@ def run_elt(spark: SparkSession, sf_dir: str, warehouse: str) -> dict:
             "value",
         )
         out = os.path.join(warehouse, "curated", "activity")
-        curated.write.mode("overwrite").parquet(out)
+        counted("curated_activity", curated).write.mode("overwrite").parquet(out)
         return s.read.schema(curated.schema).parquet(out)
 
     results = p.run(spark)
@@ -116,7 +132,7 @@ def run_elt(spark: SparkSession, sf_dir: str, warehouse: str) -> dict:
     with open(paths["json"]) as f:
         passed = json.load(f)["passed"]
     return {
-        "counts": {name: df.count() for name, df in results.items()},
+        "counts": {name: written[name].get["rows"] for name in results},
         "report": paths,
         "passed": passed,
         # the product itself (a lazy read over the warehouse with the

@@ -861,3 +861,23 @@ def test_read_change_feed_cursor_is_partition_pruned(spark, tmp_path):
     files = [r[0] for r in df.select(F.input_file_name()).distinct().collect()]
     assert files, "empty scan"
     assert all("commit_batch=2" in f or "commit_batch=3" in f for f in files), files
+
+
+def test_envelope_decoded_once(spark):
+    """Decode-then-drop-tombstones parses each message ONCE: a plain
+    ``Filter(after IS NOT NULL)`` over the decode is pushed below the
+    decode projections with their aliases inlined, and the executed
+    plan then holds four ``from_json`` and two re-serializing
+    ``to_json`` (StructsToJsonEvaluator) of the synthesized envelope."""
+    from promptly_data_pipelines_spark.pipelines.elt_job import raw_events_frame
+
+    frames = {
+        "raw_events": raw_events_frame(spark, SF_DIR),
+        "cdc_parse": QUERIES["cdc_parse"](spark, SF_DIR),
+    }
+    for name, df in frames.items():
+        p = df._jdf.queryExecution().executedPlan().toString()
+        assert p.count("from_json(") == 1, f"{name}: envelope parsed more than once\n{p}"
+        assert p.count("StructsToJsonEvaluator") == 1, (
+            f"{name}: envelope serialized more than once\n{p}"
+        )

@@ -43,10 +43,13 @@ def test_bad_data_semantics(spark):
 def test_elt_job_end_to_end(spark, tmp_path):
     """The app.py run ladder analog: DAG executes, warehouse dirs
     materialize, DQ passes, report artifact exists (the reference's
-    acceptance criterion), rerun is idempotent."""
+    acceptance criterion), rerun is idempotent, the returned counts
+    are the rows written, and an empty events table counts zero."""
+    import glob
     import json
     import os
 
+    from promptly_data_pipelines_spark.catalog import DECLARED_SCHEMAS
     from promptly_data_pipelines_spark.pipelines.elt_job import run_elt
 
     wh = str(tmp_path / "wh")
@@ -65,6 +68,33 @@ def test_elt_job_end_to_end(spark, tmp_path):
     assert rep["passed"] is True and rep["tables"]["curated_activity"]["row_count"] > 0
     out2 = run_elt(spark, SF_DIR, wh)  # rerun: overwrite semantics
     assert out2["counts"] == out["counts"]
+    # the counts observed on the writes are the rows on disk
+    model_dirs = {
+        "raw_events": ("raw", "events"),
+        "raw_user_nation": ("raw", "user_nation"),
+        "curated_activity": ("curated", "activity"),
+    }
+    assert out["counts"] == {
+        name: spark.read.parquet(os.path.join(wh, *d)).count()
+        for name, d in model_dirs.items()
+    }
+    # one writer per ingestion date: one file per date dir
+    date_dirs = glob.glob(os.path.join(wh, "raw", "events", "ingestion_cdc_date=*"))
+    assert date_dirs
+    for d in date_dirs:
+        assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d
+
+    # a zero-row events table: the write is observed as zero rows
+    empty_sf = tmp_path / "empty_events"
+    empty_sf.mkdir()
+    for t in ("customer", "nation"):
+        os.symlink(os.path.join(SF_DIR, f"{t}.parquet"), empty_sf / f"{t}.parquet")
+    spark.createDataFrame([], DECLARED_SCHEMAS["events"]).write.parquet(
+        str(empty_sf / "events.parquet")
+    )
+    empty = run_elt(spark, str(empty_sf), str(tmp_path / "wh_empty"))
+    assert empty["counts"]["raw_events"] == empty["counts"]["curated_activity"] == 0
+    assert empty["counts"]["raw_user_nation"] == out["counts"]["raw_user_nation"]
 
 
 def test_stateful_user_tracker(spark):
