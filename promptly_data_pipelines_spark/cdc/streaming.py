@@ -1209,6 +1209,11 @@ def stream_exec_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# the sf0.1 sweep read 36.9/10.8/9.0/9.1 s at 32/8/2/1 state partitions
+# for 100k replayed rows, flat below ~8
+ROWS_PER_STATE_PARTITION = 50_000
+
+
 def _state_sized_partitions(spark: SparkSession, n_rows: int) -> int:
     """Data-sized state-store partition count for a stream START, passed
     to :func:`session.scoped_session`. A stateful stream's shuffle
@@ -1218,24 +1223,21 @@ def _state_sized_partitions(spark: SparkSession, n_rows: int) -> int:
     state-store commits per store per micro-batch for a few thousand
     rows of state (stream_exec_left_join: 36.9 s at 32 partitions vs
     9.0 s at 2 — the per-partition commit is the whole cost). Sized to
-    the DATA instead: ceil(n_rows / rowsPerStatePartition), clamped to
-    [1, session shuffle partitions]. ``spark.pdp.stream.rowsPerStatePartition``
-    defaults to 50000 (the sf0.1 sweep read 36.9/10.8/9.0/9.1 s at
-    32/8/2/1 partitions for 100k replayed rows, flat below ~8); at
-    production volumes the cap (the cluster-sized session conf) binds.
+    the DATA instead: ceil(n_rows / ROWS_PER_STATE_PARTITION), clamped
+    to [1, session shuffle partitions]. At production volumes the cap
+    (the cluster-sized session conf) binds.
 
     Bounded availableNow replays only: ``n_rows`` is a count the caller
     takes up front. An unbounded source must set its partitioning
     explicitly, since the checkpoint pins whatever its first start
     sees."""
-    per = int(spark.conf.get("spark.pdp.stream.rowsPerStatePartition", "50000"))
     cap = int(
         spark.conf.get(
             "spark.sql.shuffle.partitions",
             str(spark.sparkContext.defaultParallelism),
         )
     )
-    return max(1, min(cap, -(-n_rows // max(1, per))))
+    return max(1, min(cap, -(-n_rows // ROWS_PER_STATE_PARTITION)))
 
 
 def _run_memory_sink(agg: DataFrame, sf_dir: str, tag: str, mode: str):

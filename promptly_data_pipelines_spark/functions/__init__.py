@@ -91,13 +91,6 @@ def varchar_n(col: Column | str, n: int) -> Column:
     return F.substring(c, 1, n)
 
 
-def epoch_millis_to_ts(col: Column | str) -> Column:
-    """Debezium ``payload.ts_ms`` (epoch millis, provider.json:22) →
-    timestamp."""
-    c = _as_col(col)
-    return F.timestamp_millis(c.cast("bigint"))
-
-
 def ts_str(col: Column | str) -> Column:
     """Deterministic microsecond-precision timestamp rendering used by
     oracle-checked queries (DuckDB side: strftime '%Y-%m-%d %H:%M:%S.%f')."""

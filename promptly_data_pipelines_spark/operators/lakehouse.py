@@ -3,53 +3,17 @@ Iceberg target: dbt/promptly/models/raw/raw_provider_postgres.sql:2-12
 materializes an Iceberg table with incremental_strategy='merge';
 infra/trino/etc/catalog/iceberg.properties:1-5 wires the catalog).
 
-This container ships no Iceberg/Delta jars, so the real ``MERGE INTO``
-path is ENVIRONMENT-GATED: detection probes the JVM classpath at
-runtime; when a format is present, merge_upsert semantics execute as a
-storage-native MERGE (one atomic metadata commit — no
-read-union-overwrite race, partition-pruned file rewrites); when
-absent, callers fall back to the storage-free union+window form
-(cdc.batch.merge_upsert_frames), which the oracle checks. The module
-test is skipped-without-jars and green-with-jars by construction.
+The real ``MERGE INTO`` path is environment-gated: ``format_available``
+probes the JVM classpath at runtime; when a format is present,
+merge_upsert semantics execute as a storage-native MERGE (one atomic
+metadata commit — no read-union-overwrite race, partition-pruned file
+rewrites); when absent, callers fall back to the storage-free
+union+window form (cdc.batch.merge_upsert_frames), which the oracle
+checks. test_lakehouse_merge_gated is skipped without the jars and runs
+the MERGE with them.
 
-INFEASIBILITY PROOF (verified in-sandbox, rounds 3-4, re-verified
-every round through 16 — the r16 re-probe on 2026-08-16 (round 16
-session) reproduced the identical state: DNS failure on all three
-hosts (``[Errno -2] Name or service not known`` for repo1.maven.org,
-repo.maven.apache.org, pypi.org), ``pip download delta-spark
---no-deps`` rc=1 with zero candidates (``pip download avro`` likewise
-rc=1), no iceberg/delta jar anywhere under /opt/spark*/jars, and
-empty ~/.ivy2 and ~/.m2 caches. The r14 re-probe (same date, round 14
-session) and the r13 re-probe on 2026-08-15 were identical. The r12 re-probe, same date,
-identical: DNS failure on
-repo1.maven.org, repo.maven.apache.org AND pypi.org
-(``[Errno -2] Name or service not known`` on all three),
-``pip download delta-spark --no-deps`` → ``No matching distribution
-found`` (zero candidate versions), and the filesystem-wide ``find``
-for ``*iceberg*jar``/``*delta*jar`` again returned nothing; the r9 re-probe on
-2026-08-14 reproduced the same DNS-level failure (``socket.getaddrinfo('repo1.maven.org', 443)`` →
-``[Errno -2] Name or service not known``): every connection attempt
-to any package index dies before any HTTP exchange, and no
-delta/iceberg jar exists under the bundled Spark's jars directory nor
-any local ivy/maven cache): obtaining the jars here is impossible,
-not merely unattempted —
-
-- ``pip download delta-spark --no-deps`` →
-  ``ERROR: No matching distribution found for delta-spark``
-  (r7 re-probe shows the root cause explicitly: DNS resolution of the
-  package index fails with ``[Errno -2] Name or service not known`` —
-  network absence, not version skew; the resolver sees zero candidate
-  versions).
-- The bundled Spark distribution (/opt/spark-4.1.2-bin-hadoop3/jars)
-  contains no delta/iceberg jar (verified by listing), and there is
-  no local ivy/maven cache to satisfy ``spark.jars.packages`` offline.
-- Even with an index route, PySpark here is 4.1.2 and no released
-  delta-spark targets Spark 4.1 at time of writing.
-
-The classpath probe + this gated test is therefore the strongest
-verification this environment admits; the MERGE SQL itself follows
-the standard Iceberg/Delta ``MERGE INTO`` contract and is exercised
-verbatim by the with-jars branch of test_lakehouse_merge_gated.
+The gate exists because the bundled Spark 4.1 distribution ships no
+Iceberg/Delta jar and no released delta-spark targets Spark 4.1.
 """
 
 from __future__ import annotations
@@ -57,7 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..cdc.batch import latest_wins
-from ..cdc.staging import foreach_batch_writer
 
 _PROBE_CLASSES = {
     "delta": "io.delta.tables.DeltaTable",
@@ -117,16 +80,3 @@ def merge_into_table(
         """
     )
 
-
-def upsert_sink_lakehouse(
-    stream: DataFrame, target_table: str, checkpoint: str, key: str = "event_id"
-):
-    """foreachBatch writer executing merge_into_table per micro-batch —
-    the production form of cdc.streaming.upsert_sink once a table
-    format is on the classpath (raw_provider_postgres.sql:9-10 declares
-    exactly this merge-by-unique-key intent)."""
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        merge_into_table(batch_df.sparkSession, target_table, batch_df, key)
-
-    return foreach_batch_writer(stream, merge_batch, checkpoint)

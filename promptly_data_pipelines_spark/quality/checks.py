@@ -10,6 +10,8 @@ is the ``dbt test`` analog.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -49,9 +51,9 @@ def null_count_report(df: DataFrame, cols: list[str]) -> DataFrame:
     """Per-column null-count REPORT (all audited columns, zero or not)
     — the dq_not_null driver row's shape. Not a violations frame: feed
     not_null_check to run_suite instead."""
-    aggs = [
-        F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).cast("bigint").alias(c) for c in cols
-    ]
+    # sum(1) - count(c): the null count, and NULL over zero rows like
+    # any sum
+    aggs = [(F.sum(F.lit(1)) - F.count(c)).alias(c) for c in cols]
     wide = df.agg(*aggs)
     stacked = wide.selectExpr(
         "stack({n}, {pairs}) as (column_name, n_nulls)".format(
@@ -63,14 +65,31 @@ def null_count_report(df: DataFrame, cols: list[str]) -> DataFrame:
 
 def relationships_check(child: DataFrame, child_key: str, parent: DataFrame, parent_key: str) -> DataFrame:
     """dbt ``relationships`` (schema.yaml:34-37): FK integrity as a left
-    anti join — child keys with no parent."""
+    anti join — one row per child row whose non-null key has no parent
+    (dbt counts failing rows, so a repeated orphan key counts each time)."""
     return (
         child.filter(F.col(child_key).isNotNull())
         .join(parent, child[child_key] == parent[parent_key], "left_anti")
         .select(F.col(child_key).alias("orphan_key"))
-        .groupBy("orphan_key")
-        .agg(F.count("*").alias("n_rows"))
     )
+
+
+def accepted_values_check(df: DataFrame, col: str, values: list) -> DataFrame:
+    """dbt ``accepted_values``: rows whose non-null value is outside
+    ``values``."""
+    return df.filter(F.col(col).isNotNull() & ~F.col(col).isin(values)).select(col)
+
+
+def expression_check(df: DataFrame, expr: str) -> DataFrame:
+    """dbt's generic expression test: rows where the SQL boolean ``expr``
+    is false or NULL."""
+    return df.filter(~F.coalesce(F.expr(expr), F.lit(False)))
+
+
+def volume_min_check(df: DataFrame, min_rows: int) -> DataFrame:
+    """Elementary-style volume floor: one row (the row count) when the
+    table holds fewer than ``min_rows`` rows, none otherwise."""
+    return df.agg(F.count("*").alias("n_rows")).filter(F.col("n_rows") < min_rows)
 
 
 def table_metrics(df: DataFrame, ts_col: Column | str, key_col: str) -> DataFrame:
@@ -87,28 +106,28 @@ def table_metrics(df: DataFrame, ts_col: Column | str, key_col: str) -> DataFram
     )
 
 
+def _count_suite(labelled: list[tuple[dict[str, str], DataFrame]]) -> DataFrame:
+    """Turn labelled violation frames into one-row ``count(*)``
+    aggregates carrying their labels, union them into ONE lazy plan (a
+    single Spark job at action time; nothing collects) and derive
+    ``passed``."""
+    if not labelled:
+        raise ValueError("empty check suite (nothing to evaluate)")
+    frames = [
+        df.agg(F.count("*").alias("n_violations")).select(
+            *[F.lit(v).alias(k) for k, v in labels.items()], "n_violations"
+        )
+        for labels, df in labelled
+    ]
+    return reduce(DataFrame.unionByName, frames).withColumn(
+        "passed", F.col("n_violations") == 0
+    )
+
+
 def run_suite(checks: dict[str, DataFrame]) -> DataFrame:
     """``dbt test`` analog: evaluate named violation frames, one result
-    row per check (name, n_violations, passed).
-
-    Compiled, not collected (r6): each violation frame becomes a
-    one-row count aggregate and the rows union into ONE lazy plan —
-    the same shape run_suite_config emits — so the whole suite is a
-    single Spark job at action time. The previous form ran one eager
-    ``df.count()`` job per check, a driver-side loop a user could put
-    on a hot path (N jobs for N checks)."""
-    if not checks:
-        raise ValueError("run_suite: empty check suite (nothing to evaluate)")
-    frames = [
-        df.agg(F.count("*").cast("bigint").alias("n_violations")).select(
-            F.lit(name).alias("check_name"), "n_violations"
-        )
-        for name, df in checks.items()
-    ]
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out.withColumn("passed", F.col("n_violations") == 0)
+    row per check (check_name, n_violations, passed)."""
+    return _count_suite([({"check_name": name}, df) for name, df in checks.items()])
 
 
 # ---- driver-checked queries -------------------------------------------------
@@ -168,8 +187,12 @@ def dq_not_null(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dq_relationships(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q3: FK integrity orders.o_custkey → customer.c_custkey
     (schema.yaml:34-37 relationships test = left anti join)."""
-    return relationships_check(
-        table(spark, sf_dir, "orders"), "o_custkey", table(spark, sf_dir, "customer"), "c_custkey"
+    return (
+        relationships_check(
+            table(spark, sf_dir, "orders"), "o_custkey", table(spark, sf_dir, "customer"), "c_custkey"
+        )
+        .groupBy("orphan_key")
+        .agg(F.count("*").alias("n_rows"))
     )
 
 
@@ -252,9 +275,8 @@ def dq_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (dbt/promptly/models/curated/schema.yaml:10-37: unique, not_null,
 # relationships, accepted_values). This is the same authoring surface
 # bound to Spark: a list of check specs (dict-shaped, YAML-loadable via
-# suite_from_yaml) compiled into ONE lazy DataFrame — each spec becomes
-# a single-row count aggregate, unioned, so the whole suite runs as one
-# job with no driver-side .count() per check.
+# suite_from_yaml), each spec mapped to its check builder and counted by
+# the same step as run_suite.
 DEFAULT_SUITE: list[dict] = [
     {"check": "unique", "table": "documents", "columns": ["lang", "source"]},
     {"check": "not_null", "table": "events", "column": "event_type"},
@@ -286,94 +308,41 @@ def suite_from_yaml(text: str) -> list[dict]:
     return loaded["checks"] if isinstance(loaded, dict) else loaded
 
 
-def _check_frame(df: DataFrame, spec: dict) -> DataFrame:
-    """Compile one spec into a one-row (check/table/column/n_violations)
-    aggregate. All counts are computed engine-side; nothing collects."""
-    kind = spec["check"]
+def _check_frame(spark: SparkSession, sf_dir: str, spec: dict) -> tuple[str, DataFrame]:
+    """Map one spec to its column label and its builder's violations
+    frame."""
+    kind, df = spec["check"], table(spark, sf_dir, spec["table"])
     if kind == "unique":
-        cols = spec["columns"]
-        n = (
-            df.groupBy(*cols)
-            .agg(F.count("*").alias("n"))
-            .filter(F.col("n") > 1)
-            .agg(F.count("*").cast("bigint").alias("n_violations"))
-        )
-        colname = ",".join(cols)
-    elif kind == "not_null":
-        c = spec["column"]
-        # coalesce: sum over ZERO rows is NULL, and a NULL n_violations
-        # makes passed NULL→falsy (an empty table must fail volume_min,
-        # never a vacuously-true not_null)
-        n = df.agg(
-            F.coalesce(F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)), F.lit(0))
-            .cast("bigint")
-            .alias("n_violations")
-        )
-        colname = c
-    elif kind == "relationships":
-        c = spec["column"]
-        n = (
-            df.filter(F.col(c).isNotNull())
-            .join(spec["_parent_df"], df[c] == spec["_parent_df"][spec["to_column"]], "left_anti")
-            .agg(F.count("*").cast("bigint").alias("n_violations"))
-        )
-        colname = f"{c}->{spec['to']}.{spec['to_column']}"
-    elif kind == "accepted_values":
-        c = spec["column"]
-        n = df.filter(F.col(c).isNotNull() & ~F.col(c).isin(spec["values"])).agg(
-            F.count("*").cast("bigint").alias("n_violations")
-        )
-        colname = c
-    elif kind == "volume_min":
-        n = df.agg(
-            F.when(F.count("*") >= spec["min_rows"], 0)
-            .otherwise(1)
-            .cast("bigint")
-            .alias("n_violations")
-        )
-        colname = f"min_rows={spec['min_rows']}"
-    elif kind == "expression":
-        # dbt's generic expression test: every row must satisfy a SQL
-        # boolean expression; violations = rows where it is false/null.
-        # Compiles to one conditional-sum aggregate over the pruned
-        # scan, like the other checks — nothing collects.
-        n = df.agg(
-            F.coalesce(F.sum(F.when(F.expr(spec["expr"]), 0).otherwise(1)), F.lit(0))
-            .cast("bigint")
-            .alias("n_violations")
-        )
-        colname = spec.get("name", spec["expr"])
-    else:
-        raise ValueError(f"unknown check kind: {kind}")
-    return n.select(
-        F.lit(kind).alias("check_name"),
-        F.lit(spec["table"]).alias("table_name"),
-        F.lit(colname).alias("column_name"),
-        "n_violations",
-    )
+        return ",".join(spec["columns"]), unique_check(df, spec["columns"])
+    if kind == "not_null":
+        return spec["column"], not_null_check(df, [spec["column"]])
+    if kind == "relationships":
+        c, to, to_c = spec["column"], spec["to"], spec["to_column"]
+        return f"{c}->{to}.{to_c}", relationships_check(df, c, table(spark, sf_dir, to), to_c)
+    if kind == "accepted_values":
+        return spec["column"], accepted_values_check(df, spec["column"], spec["values"])
+    if kind == "volume_min":
+        return f"min_rows={spec['min_rows']}", volume_min_check(df, spec["min_rows"])
+    if kind == "expression":
+        return spec.get("name", spec["expr"]), expression_check(df, spec["expr"])
+    raise ValueError(f"unknown check kind: {kind}")
 
 
 def run_suite_config(
     spark: SparkSession, sf_dir: str, suite: list[dict] | None = None
 ) -> DataFrame:
-    """``dbt test`` from config: compile every spec, union the one-row
-    results, derive passed. The union of tiny aggregates is one Spark
-    job; each aggregate is a full pushdown-pruned scan of only the
-    columns it audits."""
+    """``dbt test`` from config: one row per spec (check_name,
+    table_name, column_name, n_violations, passed), counted by the same
+    step as run_suite. Each count is a pushdown-pruned scan of only the
+    columns its check audits."""
     suite = DEFAULT_SUITE if suite is None else suite
-    if not suite:
-        raise ValueError("run_suite_config: empty check suite (nothing to evaluate)")
-    frames = []
+    labelled = []
     for spec in suite:
-        spec = dict(spec)
-        df = table(spark, sf_dir, spec["table"])
-        if spec["check"] == "relationships":
-            spec["_parent_df"] = table(spark, sf_dir, spec["to"])
-        frames.append(_check_frame(df, spec))
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out.withColumn("passed", F.col("n_violations") == 0)
+        column, df = _check_frame(spark, sf_dir, spec)
+        labelled.append(
+            ({"check_name": spec["check"], "table_name": spec["table"], "column_name": column}, df)
+        )
+    return _count_suite(labelled)
 
 
 @query(
@@ -502,13 +471,13 @@ def dq_corpus_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q4 extension: the declarative suite runner pointed at the
     training corpus — admission rules (volume, null text, language
     whitelist, length-bound + consistency + blank-text + source-format
-    expression tests) as config, compiled by the SAME _check_frame
-    machinery as the warehouse checks. The new dbt-style generic
-    ``expression`` test type turns any SQL boolean into a one-row
-    conditional-sum aggregate: the corpus is scanned once per spec
-    with only the audited columns read (pushdown-pruned), nothing
-    collects. The `passed` column is dropped for the oracle (it is
-    derived: n_violations = 0) — parity is over the counted facts."""
+    expression tests) as config, built by the same check builders and
+    counted by the same step as the warehouse checks. The dbt-style
+    generic ``expression`` test counts the rows where a SQL boolean is
+    false or NULL: the corpus is scanned once per spec with only the
+    audited columns read (pushdown-pruned), nothing collects. The
+    `passed` column is dropped for the oracle (it is derived:
+    n_violations = 0) — parity is over the counted facts."""
     return run_suite_config(spark, sf_dir, CORPUS_GATE_SUITE).drop("passed")
 
 
@@ -648,7 +617,7 @@ def observe_audit(
     observed = df.observe(
         obs,
         F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.col(key_col).isNull().cast("int")).alias("n_null_keys"),
+        (F.sum(F.lit(1)) - F.count(key_col)).alias("n_null_keys"),
         F.sum((F.col(value_col) < 0).cast("int")).alias("n_negative"),
     )
     return observed, obs

@@ -189,6 +189,16 @@ def test_quality_suite(spark):
     assert {r.column_name: r.n_nulls for r in nn} == {"event_id": 0, "value": 0}
 
 
+def test_run_suite_relationships_counts_orphan_rows(spark):
+    """dbt's relationships test counts failing child ROWS: a repeated
+    orphan key counts once per row, and a NULL child key is no
+    violation."""
+    child = spark.createDataFrame([(10,), (99,), (99,), (98,), (None,)], "k long")
+    parent = spark.createDataFrame([(10,)], "pk long")
+    (row,) = run_suite({"fk": relationships_check(child, "k", parent, "pk")}).collect()
+    assert (row.n_violations, row.passed) == (3, False)
+
+
 def test_streaming_matches_batch(spark):
     """The streaming path must produce the same live-row set as the
     batch tombstone filter (SURVEY §2h: same semantics, two modes)."""
@@ -768,8 +778,8 @@ def test_lakehouse_merge_gated(spark):
             "no Iceberg/Delta jars — environment-proven infeasible: "
             "`pip download delta-spark` → 'No matching distribution found' "
             "(no PyPI route), no delta/iceberg jar in the Spark dist, no "
-            "ivy cache for spark.jars.packages; see operators/lakehouse.py "
-            "module docstring for the full proof"
+            "ivy cache for spark.jars.packages; see the operators/lakehouse.py "
+            "module docstring"
         )
     # with jars: create a target table from the snapshot, merge updates
     from pyspark.sql import functions as F

@@ -61,5 +61,9 @@ def count(arg: str) -> int:
 
 
 if __name__ == "__main__":
-    for a in sys.argv[1:]:
+    args = sys.argv[1:]
+    if not args or any(not os.path.exists(a.partition(":")[0]) for a in args):
+        sys.stderr.write(__doc__)
+        sys.exit(2)
+    for a in args:
         print(f"{count(a):7d}  {a}")
