@@ -6,7 +6,7 @@ samples decoded with numpy and reduced to the standard signal
 features a speech/audio data pipeline gates on — RMS level (loudness)
 and zero-crossing rate (the classic cheap voiced/unvoiced + noisiness
 proxy) — both full-signal and framed. Everything is vectorized numpy
-over Arrow batches (mapInPandas): decode is one ``np.frombuffer``
+over Arrow batches (the media row-map): decode is one ``np.frombuffer``
 view (zero-copy over the Arrow buffer), RMS one reduction, crossings
 one shifted comparison; no per-sample Python.
 
@@ -29,18 +29,14 @@ video=frame sampling plumbing).
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..catalog import table
 from ..registry import query
-from .multimodal import MEDIA_SCHEMA, _decode_wav, encode_wav
+from .multimodal import _decode_wav, _row_map, _synth_media, encode_wav
 
 FRAME = 256  # samples per analysis frame (mono)
 
@@ -175,53 +171,33 @@ def frame_features(samples: np.ndarray, n_channels: int) -> list[dict]:
 
 
 def extract_audio_frames(media: DataFrame) -> DataFrame:
-    """mapInPandas over WAV payloads → one row per analysis frame.
-    Row count amplifies by n_frames per doc but stays partition-local
-    (no shuffle); at 100 TB the frame table is written partitioned and
-    aggregated map-side before any wide op."""
+    """WAV payloads → one row per analysis frame. Row count amplifies
+    by n_frames per doc but stays partition-local (no shuffle); at
+    100 TB the frame table is written partitioned and aggregated
+    map-side before any wide op."""
+    names = AUDIO_FRAME_SCHEMA.names[1:]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-                fmt, samples = wav_pcm(p)
-                for feats in frame_features(samples, fmt["n_channels"]):
-                    rows.append({"doc_id": doc_id, **feats})
-            out = pd.DataFrame(rows, columns=[f.name for f in AUDIO_FRAME_SCHEMA])
-            out["doc_id"] = out["doc_id"].astype("int64")
-            out["rms"] = out["rms"].astype("float64")
-            for c in ("frame_idx", "n_samples", "peak", "n_zero_crossings"):
-                out[c] = out[c].astype("int32")
-            yield out
+    def frames(doc_id, p):
+        fmt, samples = wav_pcm(p)
+        return [
+            (doc_id, *map(f.get, names))
+            for f in frame_features(samples, fmt["n_channels"])
+        ]
 
-    return media.mapInPandas(batches, AUDIO_FRAME_SCHEMA)
+    return _row_map(media, ("doc_id", "payload"), frames, AUDIO_FRAME_SCHEMA)
 
 
 def extract_audio_features(media: DataFrame) -> DataFrame:
-    """mapInPandas over WAV payloads → typed feature rows. One Python
-    call per Arrow batch; partitioning preserved (no shuffle)."""
+    """WAV payloads → typed feature rows. One Python call per Arrow
+    batch; partitioning preserved (no shuffle)."""
+    names = AUDIO_FEATURE_SCHEMA.names[1:]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-                fmt, samples = wav_pcm(p)
-                feats = pcm_features(samples, fmt["n_channels"])
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "sample_rate": fmt["sample_rate"],
-                        "n_channels": fmt["n_channels"],
-                        **feats,
-                    }
-                )
-            out = pd.DataFrame(rows, columns=[f.name for f in AUDIO_FEATURE_SCHEMA])
-            for c in ("sample_rate", "n_channels", "n_samples", "n_frames",
-                      "peak", "n_zero_crossings"):
-                out[c] = out[c].astype("int32")
-            yield out
+    def features(doc_id, p):
+        fmt, samples = wav_pcm(p)
+        f = {**fmt, **pcm_features(samples, fmt["n_channels"])}
+        return [(doc_id, *map(f.get, names))]
 
-    return media.mapInPandas(batches, AUDIO_FEATURE_SCHEMA)
+    return _row_map(media, ("doc_id", "payload"), features, AUDIO_FEATURE_SCHEMA)
 
 
 def media_table_tone(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -230,23 +206,14 @@ def media_table_tone(spark: SparkSession, sf_dir: str) -> DataFrame:
     samples, length n = 512 + (doc_id%5)·128 samples, sample rate
     8000 + (doc_id%5)·4000, mono. Every feature below is closed-form
     in these — the property the SQL oracle needs."""
-    d = table(spark, sf_dir, "documents").select("doc_id")
 
-    def synth(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                amp = 500 + (i % 17) * 100
-                period = 2 + i % 7
-                n = 512 + (i % 5) * 128
-                sr = 8000 + (i % 5) * 4000
-                t = np.arange(n)
-                wave = np.where((t // period) % 2 == 0, amp, -amp).astype("<i2")
-                rows.append((doc_id, "wav", encode_wav(sr, 1, wave.tobytes())))
-            yield pd.DataFrame(rows, columns=["doc_id", "media_type", "payload"])
+    def synth(i):
+        amp, period = 500 + (i % 17) * 100, 2 + i % 7
+        t = np.arange(512 + (i % 5) * 128)
+        wave = np.where((t // period) % 2 == 0, amp, -amp).astype("<i2")
+        return "wav", encode_wav(8000 + (i % 5) * 4000, 1, wave.tobytes())
 
-    return d.mapInPandas(synth, MEDIA_SCHEMA)
+    return _synth_media(spark, sf_dir, synth)
 
 
 @query(

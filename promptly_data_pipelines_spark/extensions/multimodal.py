@@ -1,9 +1,10 @@
 """Multimodal column plumbing (SURVEY.md §2j X7 / north-star).
 
 Media (image/audio/video) travels as an opaque ``binary`` column plus
-typed metadata; decode / feature-extraction runs as Arrow-batched
-``mapInPandas`` so each Python invocation processes a whole record
-batch, never a row.
+typed metadata; every decode / feature-extraction / synthesis kernel
+is a per-row function run by ``_row_map``, one Arrow-batched
+``mapInArrow`` that owns the batch loop and the output types, so each
+Python invocation processes a whole record batch.
 
 The codec boundary ``decode_media`` has three tiers:
 
@@ -33,14 +34,15 @@ into valid BMP/WAV containers by ``media_table_mixed``).
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator, Sequence
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..catalog import table
 from ..registry import query
@@ -54,6 +56,55 @@ MEDIA_SCHEMA = T.StructType(
         T.StructField("payload", T.BinaryType()),
     ]
 )
+
+
+def _row_map(
+    df: DataFrame,
+    cols: Sequence[str],
+    fn: Callable[..., Iterable[tuple]],
+    schema: T.StructType,
+) -> DataFrame:
+    """The one Arrow kernel of the media tier. ``fn`` gets each row's
+    ``cols`` values (SQL NULL as None) and returns zero or more output
+    tuples in ``schema`` order. Only ``cols`` cross into Python; one
+    Python call per Arrow batch, no shuffle; each output column is
+    built once with the Arrow type ``schema`` declares, so None stays
+    NULL and a value that does not fit its type raises."""
+    types = to_arrow_schema(schema).types
+
+    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in it:
+            rows = [
+                out
+                for row in zip(*(batch.column(c).to_pylist() for c in cols))
+                for out in fn(*row)
+            ]
+            columns = list(zip(*rows)) or [()] * len(types)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, type=t) for c, t in zip(columns, types)],
+                names=schema.names,
+            )
+
+    return df.select(*cols).mapInArrow(batches, schema)
+
+
+def _synth_media(
+    spark: SparkSession, sf_dir: str, synth: Callable[..., tuple[str, bytes]], *cols: str
+) -> DataFrame:
+    """documents → MEDIA_SCHEMA rows: ``synth(doc_id, *cols)`` gives a
+    row's (media_type, payload) in closed form from its doc_id. A NULL
+    doc_id has no closed form, so its row is NULL throughout."""
+
+    def row(doc_id, *v):
+        return [(doc_id, *synth(doc_id, *v)) if doc_id is not None else (None, None, None)]
+
+    return _row_map(table(spark, sf_dir, "documents"), ("doc_id", *cols), row, MEDIA_SCHEMA)
+
+
+def _image_dims(i: int) -> tuple[int, int]:
+    """(width, height) of the synthetic BMP and PNG images of doc ``i``."""
+    return 4 + i % 29, 3 + i % 17
+
 
 FEATURE_SCHEMA = T.StructType(
     [
@@ -179,20 +230,16 @@ def media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def extract_features(media: DataFrame) -> DataFrame:
-    """mapInPandas feature extraction: one Python call per Arrow batch;
-    partitioning of the input is preserved (no shuffle)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            feats = [decode_media(p, mt) for p, mt in zip(pdf["payload"], pdf["media_type"])]
-            out = pd.DataFrame(feats)
-            for c in out.columns:  # nullable Int32: per-codec fields are None elsewhere
-                out[c] = pd.array(out[c], dtype="Int32")
-            out.insert(0, "media_type", pdf["media_type"].values)
-            out.insert(0, "doc_id", pdf["doc_id"].values)
-            yield out
-
-    return media.mapInPandas(batches, FEATURE_SCHEMA)
+    """Feature extraction: one decode_media call per row, one Python
+    call per Arrow batch; partitioning of the input is preserved (no
+    shuffle)."""
+    names = FEATURE_SCHEMA.names[2:]
+    return _row_map(
+        media,
+        ("doc_id", "media_type", "payload"),
+        lambda doc_id, mt, p: [(doc_id, mt, *map(decode_media(p, mt).get, names))],
+        FEATURE_SCHEMA,
+    )
 
 
 RESIZED_SCHEMA = T.StructType(
@@ -263,56 +310,38 @@ def _resize_bmp(payload: bytes, width: int, height: int) -> bytes:
     return encode_bmp(width, height, body.tobytes())
 
 
+def _resample_bytes(p: bytes, width: int, height: int) -> bytes:
+    """Nearest-neighbor resample of a whole payload to exactly
+    width*height bytes (the BMP index formula in one dimension)."""
+    target = width * height
+    return bytes(p[i * len(p) // target] for i in range(target)) if p else bytes(target)
+
+
+# media_type → resize(payload, width, height); the image codecs decode,
+# gather nearest neighbors and re-encode a valid payload of the same codec
+_RESIZERS = {
+    "bmp": _resize_bmp,
+    "png": resize_png,
+    "jpeg": resize_jpeg,
+    "bytestats": _resample_bytes,
+}
+
+
 def resize_media(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize over mapInPandas (typed dims + new payload). 'bmp' gets
-    a REAL nearest-neighbor downscale (valid BMP out, _resize_bmp);
-    'bytestats' payloads are deterministically re-sampled to
-    EXACTLY width*height bytes (nearest-neighbor index resample
-    across the whole payload — the BMP formula in one dimension);
-    other types raise via decode_media (compressed codecs absent) or
-    ValueError (resize undefined for audio). Partitioning preserved,
-    one Python call per Arrow batch."""
+    """Resize (typed dims + new payload). 'bmp', 'png' and 'jpeg' get a
+    REAL nearest-neighbor downscale (a valid payload of the same codec
+    out); 'bytestats' payloads are re-sampled to EXACTLY width*height
+    bytes (_resample_bytes); other types raise via decode_media
+    (compressed codecs absent) or ValueError (resize undefined for
+    audio). Partitioning preserved, one Python call per Arrow batch."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        target = width * height
-        for pdf in it:
-            out_payloads = []
-            for p, mt in zip(pdf["payload"], pdf["media_type"]):
-                if mt == "bmp":
-                    out_payloads.append(_resize_bmp(p, width, height))
-                elif mt == "png":
-                    # full decode → NN gather → re-encode (valid PNG out)
-                    out_payloads.append(resize_png(p, width, height))
-                elif mt == "jpeg":
-                    # full lossy decode → NN gather → re-encode
-                    out_payloads.append(resize_jpeg(p, width, height))
-                elif mt == "bytestats":
-                    # TRUE nearest-neighbor resample across the whole
-                    # payload to exactly width*height bytes (same index
-                    # formula as the BMP path) — the old stride-prefix
-                    # form returned a plain prefix for payloads between
-                    # 1× and 2× the target and a SHORT payload (schema
-                    # said 8×8, bytes said less) below it.
-                    if len(p):
-                        out_payloads.append(
-                            bytes(p[i * len(p) // target] for i in range(target))
-                        )
-                    else:
-                        out_payloads.append(b"\x00" * target)
-                else:
-                    decode_media(p, mt)  # raises for absent codecs
-                    raise ValueError(f"resize undefined for media_type={mt!r}")
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "media_type": pdf["media_type"].values,
-                    "width": width,
-                    "height": height,
-                    "payload": out_payloads,
-                }
-            )
+    def resize(doc_id, mt, p):
+        if mt not in _RESIZERS:
+            decode_media(p, mt)  # raises for absent codecs
+            raise ValueError(f"resize undefined for media_type={mt!r}")
+        return [(doc_id, mt, width, height, _RESIZERS[mt](p, width, height))]
 
-    return media.mapInPandas(batches, RESIZED_SCHEMA)
+    return _row_map(media, ("doc_id", "media_type", "payload"), resize, RESIZED_SCHEMA)
 
 
 def sample_frames(media: DataFrame, every_n: int = 16, frame_size: int = 32) -> DataFrame:
@@ -322,24 +351,13 @@ def sample_frames(media: DataFrame, every_n: int = 16, frame_size: int = 32) -> 
     Nth — the row-expansion shape (and batch-size behavior) of real
     video sampling, with the decoder swappable at decode_media."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, p, mt in zip(pdf["doc_id"], pdf["payload"], pdf["media_type"]):
-                if mt != "bytestats":
-                    decode_media(p, mt)
-                n_frames = max(1, len(p) // frame_size)
-                for idx in range(0, n_frames, every_n):
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "frame_idx": idx,
-                            "frame_bytes": bytes(p[idx * frame_size : (idx + 1) * frame_size]),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=["doc_id", "frame_idx", "frame_bytes"])
+    def frames(doc_id, mt, p):
+        if mt != "bytestats":
+            decode_media(p, mt)
+        for idx in range(0, max(1, len(p) // frame_size), every_n):
+            yield doc_id, idx, p[idx * frame_size : (idx + 1) * frame_size]
 
-    return media.mapInPandas(batches, FRAME_SCHEMA)
+    return _row_map(media, ("doc_id", "media_type", "payload"), frames, FRAME_SCHEMA)
 
 
 def media_table_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -347,26 +365,18 @@ def media_table_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     VALID container by doc_id % 3 — a 24-bpp BMP with dims derived
     from doc_id, a 16-bit PCM WAV with doc_id-derived sample rate and
     channels, or the raw bytestats payload. Deterministic, so the
-    decoded features are assertable; synthesis itself runs as an
-    Arrow-batched mapInPandas (the encode is Python-side by nature)."""
-    d = table(spark, sf_dir, "documents").select("doc_id", "text")
+    decoded features are assertable; synthesis itself runs in the
+    Arrow row-map (the encode is Python-side by nature)."""
 
-    def synth(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b, k = text.encode("utf-8"), int(doc_id) % 3
-                if k == 0:
-                    w, h = 4 + int(doc_id) % 29, 3 + int(doc_id) % 17
-                    rows.append((doc_id, "bmp", encode_bmp(w, h, b)))
-                elif k == 1:
-                    sr = 8000 + (int(doc_id) % 5) * 4000
-                    rows.append((doc_id, "wav", encode_wav(sr, 1 + int(doc_id) % 2, b)))
-                else:
-                    rows.append((doc_id, "bytestats", b))
-            yield pd.DataFrame(rows, columns=["doc_id", "media_type", "payload"])
+    def synth(i, text):
+        b = text.encode("utf-8")
+        if i % 3 == 0:
+            return "bmp", encode_bmp(*_image_dims(i), b)
+        if i % 3 == 1:
+            return "wav", encode_wav(8000 + (i % 5) * 4000, 1 + i % 2, b)
+        return "bytestats", b
 
-    return d.mapInPandas(synth, MEDIA_SCHEMA)
+    return _synth_media(spark, sf_dir, synth, "text")
 
 
 def media_table_png(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -377,24 +387,15 @@ def media_table_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the table exercises every filter type and both the deflate and
     chunk-CRC paths. Dims are pure functions of doc_id, which is what
     lets a SQL oracle value-check a compressed codec's decode."""
-    d = table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def synth(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        channels = (1, 3, 2, 4)
-        for pdf in it:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                w, h = 4 + int(doc_id) % 29, 3 + int(doc_id) % 17
-                c = channels[int(doc_id) % 4]
-                b = text.encode("utf-8") or b"\x00"
-                need = h * w * c
-                px = np.frombuffer(
-                    (b * (need // len(b) + 1))[:need], dtype=np.uint8
-                ).reshape(h, w, c)
-                rows.append((doc_id, "png", encode_png(px)))
-            yield pd.DataFrame(rows, columns=["doc_id", "media_type", "payload"])
+    def synth(i, text):
+        (w, h), c = _image_dims(i), (1, 3, 2, 4)[i % 4]
+        b = text.encode("utf-8") or b"\x00"
+        need = h * w * c
+        px = np.frombuffer((b * (need // len(b) + 1))[:need], dtype=np.uint8)
+        return "png", encode_png(px.reshape(h, w, c))
 
-    return d.mapInPandas(synth, MEDIA_SCHEMA)
+    return _synth_media(spark, sf_dir, synth, "text")
 
 
 _PNG_DIMS_SQL = """
@@ -413,7 +414,7 @@ _PNG_DIMS_SQL = """
 )
 def multimodal_png_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X7 with a real COMPRESSED codec value-checked end to end:
-    documents → PNG encode (deflate + filter heuristic, mapInPandas)
+    documents → PNG encode (deflate + filter heuristic, Arrow row-map)
     → Arrow batch → CRC-verified header decode → typed dims. The
     DuckDB oracle recomputes width/height/channels from doc_id, so a
     wrong filter, a broken CRC, or a mis-framed chunk flips the value
@@ -458,27 +459,18 @@ def media_table_png_palette(spark: SparkSession, sf_dir: str) -> DataFrame:
     image is therefore closed-form in doc_id — which is what lets a
     SQL oracle value-check the PLTE lookup itself, not just the
     header."""
-    d = table(spark, sf_dir, "documents").select("doc_id")
 
-    def synth(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w, h = 4 + i % 29, 3 + i % 17
-                idx = (np.arange(h * w, dtype=np.int64) % _PAL_N).astype(
-                    np.uint8
-                ).reshape(h, w)
-                k = np.arange(_PAL_N, dtype=np.int64)
-                pal = np.stack(
-                    [(i * 31 + k * 7) % 256, (i * 17 + k * 11) % 256,
-                     (i * 13 + k * 5) % 256],
-                    axis=1,
-                ).astype(np.uint8)
-                rows.append((doc_id, "png", encode_png_palette(idx, pal)))
-            yield pd.DataFrame(rows, columns=["doc_id", "media_type", "payload"])
+    def synth(i):
+        w, h = _image_dims(i)
+        idx = (np.arange(h * w, dtype=np.int64) % _PAL_N).astype(np.uint8).reshape(h, w)
+        k = np.arange(_PAL_N, dtype=np.int64)
+        pal = np.stack(
+            [(i * 31 + k * 7) % 256, (i * 17 + k * 11) % 256, (i * 13 + k * 5) % 256],
+            axis=1,
+        ).astype(np.uint8)
+        return "png", encode_png_palette(idx, pal)
 
-    return d.mapInPandas(synth, MEDIA_SCHEMA)
+    return _synth_media(spark, sf_dir, synth)
 
 
 _PALETTE_DECODE_SCHEMA = T.StructType(
@@ -526,26 +518,34 @@ def multimodal_png_palette(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the cycling raster, so channel_sum = Σ count_i · pal[i][ch]. A
     wrong lookup, a swapped channel, an unfilter slip on the index
     plane, or a mis-parsed PLTE flips the hash."""
-    media = media_table_png_palette(spark, sf_dir)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-                px = decode_png(p).astype(np.int64)
-                rows.append(
-                    (doc_id, px.shape[1], px.shape[0], px.shape[2],
-                     int(px[:, :, 0].sum()), int(px[:, :, 1].sum()),
-                     int(px[:, :, 2].sum()))
-                )
-            out = pd.DataFrame(
-                rows, columns=[f.name for f in _PALETTE_DECODE_SCHEMA]
-            )
-            for c in ("width", "height", "n_channels"):
-                out[c] = out[c].astype("int32")
-            yield out
+    def sums(doc_id, p):
+        px = decode_png(p)
+        h, w, c = px.shape
+        return [(doc_id, w, h, c, *px.sum(axis=(0, 1), dtype=np.int64)[:3])]
 
-    return media.mapInPandas(batches, _PALETTE_DECODE_SCHEMA)
+    return _row_map(
+        media_table_png_palette(spark, sf_dir),
+        ("doc_id", "payload"),
+        sums,
+        _PALETTE_DECODE_SCHEMA,
+    )
+
+
+def _flat_block_image(i: int, frame: int = 0) -> np.ndarray:
+    """The closed-form grayscale image of doc ``i`` (and video frame
+    ``frame``): (1+i%3)×(1+i%4) flat 8×8 blocks, block k (raster order)
+    holding 128 + 2·((7i + 13·frame + 5k) % 61 − 30)."""
+    bw, bh = 1 + i % 4, 1 + i % 3
+    k = np.arange(bh * bw, dtype=np.int64)
+    v = (128 + 2 * ((i * 7 + frame * 13 + k * 5) % 61 - 30)).astype(np.uint8)
+    return np.repeat(np.repeat(v.reshape(bh, bw), 8, axis=0), 8, axis=1)
+
+
+def _jpeg_stats(payload: bytes) -> tuple[int, int, int]:
+    """(width, height, pixel sum) of a fully decoded JPEG."""
+    px = decode_jpeg(payload)
+    return px.shape[1], px.shape[0], px.sum(dtype=np.int64)
 
 
 def media_table_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -556,21 +556,9 @@ def media_table_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     Q₀₀ = 16 an even offset quantizes exactly (S₀₀ = 8·(v−128), step
     16) — so the LOSSY codec round-trips these pixels bit-exactly,
     which is what lets a SQL oracle value-check the full decode."""
-    d = table(spark, sf_dir, "documents").select("doc_id")
-
-    def synth(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                bw, bh = 1 + i % 4, 1 + i % 3
-                k = np.arange(bh * bw, dtype=np.int64)
-                v = (128 + 2 * ((i * 7 + k * 5) % 61 - 30)).astype(np.uint8)
-                img = np.repeat(np.repeat(v.reshape(bh, bw), 8, axis=0), 8, axis=1)
-                rows.append((doc_id, "jpeg", encode_jpeg(img, quality=50)))
-            yield pd.DataFrame(rows, columns=["doc_id", "media_type", "payload"])
-
-    return d.mapInPandas(synth, MEDIA_SCHEMA)
+    return _synth_media(
+        spark, sf_dir, lambda i: ("jpeg", encode_jpeg(_flat_block_image(i), quality=50))
+    )
 
 
 _JPEG_DECODE_SCHEMA = T.StructType(
@@ -608,24 +596,14 @@ def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     round trip exact — see media_table_jpeg). A wrong quant table, a
     Huffman slip, a zigzag transposition, or an IDCT scaling error
     flips the hash."""
-    media = media_table_jpeg(spark, sf_dir)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-                px = decode_jpeg(p).astype(np.int64)
-                rows.append(
-                    (doc_id, px.shape[1], px.shape[0], 1, int(px.sum()))
-                )
-            out = pd.DataFrame(rows, columns=[f.name for f in _JPEG_DECODE_SCHEMA])
-            out["doc_id"] = out["doc_id"].astype("int64")
-            out["px_sum"] = out["px_sum"].astype("int64")
-            for c in ("width", "height", "n_channels"):
-                out[c] = out[c].astype("int32")
-            yield out
+    def stats(doc_id, p):
+        w, h, px_sum = _jpeg_stats(p)
+        return [(doc_id, w, h, 1, px_sum)]
 
-    return media.mapInPandas(batches, _JPEG_DECODE_SCHEMA)
+    return _row_map(
+        media_table_jpeg(spark, sf_dir), ("doc_id", "payload"), stats, _JPEG_DECODE_SCHEMA
+    )
 
 
 @query(
@@ -661,15 +639,15 @@ def multimodal_features_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("multimodal_resize", registered=False)  # stub codec: rows-only check
 def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """North-star: media resize over mapInPandas (stubbed codec,
+    """North-star: media resize over the Arrow row-map (stubbed codec,
     real Spark plumbing — schema, Arrow batching, partitioning)."""
     return resize_media(media_table(spark, sf_dir), 8, 8)
 
 
 @query("multimodal_frame_sample", registered=False)  # stub codec: rows-only check
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """North-star: frame sampling over mapInPandas — 1→N row expansion
-    with typed frame rows (stubbed decoder)."""
+    """North-star: frame sampling over the Arrow row-map — 1→N row
+    expansion with typed frame rows (stubbed decoder)."""
     return sample_frames(media_table(spark, sf_dir), every_n=4)
 
 
@@ -707,7 +685,7 @@ def json_props_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # r6: the driver row IS oracle-checkable — every media_table row is the
-# deterministic 'bytestats' codec, so the three mapInPandas stages
+# deterministic 'bytestats' codec, so the three row-map stages
 # reduce to pure byte arithmetic DuckDB can mirror: the 8×8 resample is
 # out[i] = payload[i·n/64] (nearest-neighbor index formula from
 # resize_media), features are first/last/sum%256 over those 64 bytes,
@@ -746,7 +724,7 @@ _PIPELINE_ORACLE = """
 def multimodal_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X7 composite (driver row for the multimodal family; the three
     single-stage queries above are local-only): the full media pipeline
-    chained — binary payload → resize (mapInPandas, typed dims) →
+    chained — binary payload → resize (Arrow row-map, typed dims) →
     feature extraction (Arrow-batched decode) joined with frame
     sampling (1→N row expansion) aggregated back per doc. All three
     Pandas-UDF stages execute in one plan; the codec is the documented
@@ -757,7 +735,7 @@ def multimodal_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = media_table(spark, sf_dir)
     # the resize stage feeds TWO consumers (features + frame sampling):
     # persist it, or each branch of the join re-executes the whole
-    # media scan + resize mapInPandas — at 100 TB the duplicated
+    # media scan + resize row-map — at 100 TB the duplicated
     # decode/resize pass would be the dominant wasted cost.
     resized = resize_media(media, 8, 8).persist()
     feats = extract_features(resized.select("doc_id", "media_type", "payload"))

@@ -1697,18 +1697,23 @@ def ivfpq_index_save(
     the build: while one branch waits on a collect, the other's tasks
     fill the idle executors (the guide's back-fill shape). Outputs are
     byte-identical (each branch is deterministic and writes disjoint
-    paths); meta commits last, after both branches."""
+    paths); meta commits last, after both branches. Each branch tags
+    its jobs, so the first branch to fail cancels the other's jobs
+    before its error is raised, instead of waiting for the sibling to
+    finish work that will be thrown away."""
     import os
-    from concurrent.futures import ThreadPoolExecutor
+    import uuid
+    from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 
     from pyspark.storagelevel import StorageLevel
 
+    sc = spark.sparkContext
+    build = f"ivfpq-build-{uuid.uuid4().hex}"
     e = e.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         n = e.count()
 
         def _coarse_layer() -> int:
-            spark.sparkContext.setJobDescription("ivfpq build: coarse cells")
             cents = learned_centroids(e)
             nlist = cents.count()
             cents.write.mode("overwrite").parquet(
@@ -1720,7 +1725,6 @@ def ivfpq_index_save(
             return nlist
 
         def _fine_layer() -> None:
-            spark.sparkContext.setJobDescription("ivfpq build: pq layer")
             cb = pq_train(spark, e, iters=iters, n_corpus=n)
             cb.write.mode("overwrite").parquet(
                 os.path.join(dest_dir, "codebook.parquet")
@@ -1729,12 +1733,29 @@ def ivfpq_index_save(
                 os.path.join(dest_dir, "codes.parquet")
             )
 
+        def _tagged(layer, fn):
+            def run():  # job tags and descriptions are per thread
+                sc.addJobTag(f"{build}-{layer}")
+                sc.setJobDescription(f"ivfpq build: {layer}")
+                return fn()
+
+            return run
+
         with ThreadPoolExecutor(max_workers=2) as pool:
-            coarse = pool.submit(_coarse_layer)
-            fine = pool.submit(_fine_layer)
+            coarse = pool.submit(_tagged("coarse", _coarse_layer))
+            fine = pool.submit(_tagged("pq", _fine_layer))
+            layer = {coarse: "coarse", fine: "pq"}
+            done, pending = wait(layer, return_when=FIRST_EXCEPTION)
+            failed = [f for f in done if f.exception() is not None]
+            # a cancel reaches only running jobs: repeat it until the
+            # sibling stops at its next job
+            while failed and pending:
+                for f in pending:
+                    sc.cancelJobsWithTag(f"{build}-{layer[f]}")
+                pending = wait(pending, timeout=0.1).not_done
+            if failed:
+                raise failed[0].exception()
             nlist = coarse.result()
-            fine.result()
-        spark.sparkContext.setJobDescription(None)
         spark.createDataFrame([(n, nlist)], "n_corpus bigint, nlist int").write.mode(
             "overwrite"
         ).parquet(os.path.join(dest_dir, "meta.parquet"))

@@ -27,7 +27,7 @@ closed-form in (doc_id, frame_idx), so DuckDB value-checks the whole
 chain: RIFF walk → frame select → Huffman/DCT decode → feature math
 (multimodal_video_frames).
 
-Cost model at 100 TB: one Python call per Arrow batch (mapInPandas);
+Cost model at 100 TB: one Python call per Arrow batch (the media row-map);
 per row, the container walk is O(bytes) pointer stepping and each
 sampled frame pays one vectorized JPEG decode. Row explosion (docs →
 frames) stays partition-local — no shuffle until the caller
@@ -38,18 +38,13 @@ this is the north-star multimodal tier the build brief adds.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
-
-import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from ..catalog import table
 from ..registry import query
-from .jpeg import decode_jpeg, encode_jpeg
-from .multimodal import MEDIA_SCHEMA
+from .jpeg import encode_jpeg
+from .multimodal import _flat_block_image, _jpeg_stats, _row_map, _synth_media
 
 
 def _chunk(tag: bytes, data: bytes) -> bytes:
@@ -202,31 +197,18 @@ VIDEO_FRAME_SCHEMA = T.StructType(
 
 
 def extract_video_frames(media: DataFrame, every_n: int = 1) -> DataFrame:
-    """mapInPandas: AVI container walk → every-Nth-frame select → full
-    JPEG decode → per-frame features. One row in, n_frames/every_n
-    rows out; partition-local."""
+    """AVI container walk → every-Nth-frame select → full JPEG decode →
+    per-frame features. One row in, n_frames/every_n rows out;
+    partition-local."""
     if every_n < 1:
         raise ValueError(f"invalid frame sampling stride {every_n}")
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-                for fi, frame in enumerate(iter_avi_frames(p)):
-                    if fi % every_n:
-                        continue
-                    px = decode_jpeg(frame).astype(np.int64)
-                    rows.append(
-                        (doc_id, fi, px.shape[1], px.shape[0], int(px.sum()))
-                    )
-            out = pd.DataFrame(rows, columns=[f.name for f in VIDEO_FRAME_SCHEMA])
-            out["doc_id"] = out["doc_id"].astype("int64")
-            out["px_sum"] = out["px_sum"].astype("int64")
-            for c in ("frame_idx", "width", "height"):
-                out[c] = out[c].astype("int32")
-            yield out
+    def frames(doc_id, p):
+        for fi, frame in enumerate(iter_avi_frames(p)):
+            if fi % every_n == 0:
+                yield doc_id, fi, *_jpeg_stats(frame)
 
-    return media.mapInPandas(batches, VIDEO_FRAME_SCHEMA)
+    return _row_map(media, ("doc_id", "payload"), frames, VIDEO_FRAME_SCHEMA)
 
 
 def media_table_video(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -235,30 +217,13 @@ def media_table_video(spark: SparkSession, sf_dir: str) -> DataFrame:
     holding 128 + 2·((d·7 + f·13 + k·5) % 61 − 30) — DC-only, so the
     lossy round trip is exact (media_table_jpeg's construction with a
     per-frame term)."""
-    d = table(spark, sf_dir, "documents").select("doc_id")
 
-    def synth(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                bw, bh = 1 + i % 4, 1 + i % 3
-                frames = []
-                for f in range(2 + i % 4):
-                    k = np.arange(bh * bw, dtype=np.int64)
-                    v = (128 + 2 * ((i * 7 + f * 13 + k * 5) % 61 - 30)).astype(
-                        np.uint8
-                    )
-                    img = np.repeat(
-                        np.repeat(v.reshape(bh, bw), 8, axis=0), 8, axis=1
-                    )
-                    frames.append(encode_jpeg(img, quality=50))
-                rows.append(
-                    (doc_id, "avi", encode_avi_mjpeg(frames, bw * 8, bh * 8))
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "media_type", "payload"])
+    def synth(i):
+        imgs = [_flat_block_image(i, f) for f in range(2 + i % 4)]
+        h, w = imgs[0].shape
+        return "avi", encode_avi_mjpeg([encode_jpeg(m, quality=50) for m in imgs], w, h)
 
-    return d.mapInPandas(synth, MEDIA_SCHEMA)
+    return _synth_media(spark, sf_dir, synth)
 
 
 @query(

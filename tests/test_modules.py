@@ -713,6 +713,31 @@ def test_ivfpq_index_persist_roundtrip(spark, tmp_path):
     assert counts == (N_ASSIGN, N_ASSIGN)
 
 
+def test_ivfpq_index_save_failed_branch_cancels_sibling(spark, tmp_path, monkeypatch):
+    """A failed build branch cancels the other branch's Spark jobs
+    before its error surfaces: the coarse layer fails at once while
+    the PQ layer runs one 40 s job, and the call must raise well
+    before that job would end."""
+    import time
+
+    from promptly_data_pipelines_spark.catalog import table
+    from promptly_data_pipelines_spark.extensions import similarity
+
+    def failing_centroids(e, *args, **kwargs):
+        raise RuntimeError("coarse layer failed")
+
+    def slow_train(spark, e, **kwargs):
+        spark.sparkContext.parallelize(range(2), 2).foreach(lambda _: time.sleep(40))
+
+    monkeypatch.setattr(similarity, "learned_centroids", failing_centroids)
+    monkeypatch.setattr(similarity, "pq_train", slow_train)
+    e = similarity._doubled(table(spark, SF_DIR, "embeddings"))
+    t0 = time.monotonic()
+    with pytest.raises(RuntimeError, match="coarse layer failed"):
+        similarity.ivfpq_index_save(spark, e, str(tmp_path / "ivfpq_index"))
+    assert time.monotonic() - t0 < 15
+
+
 def test_pq_index_persist_roundtrip(spark, tmp_path):
     """r8 serving pattern: pq_index_save writes codebook + codes;
     pq_index_search against the persisted index returns EXACTLY the
@@ -3330,6 +3355,24 @@ def test_pq_codes_kernel_bit_identical(spark):
     assert asn_np == asn_ex
 
 
+def _centroid_mismatch(kernel, twin) -> str:
+    """Failure text for the Lloyd twin pin: the largest absolute
+    centroid component difference, and what it means."""
+    if [c for c, _ in kernel] != [c for c, _ in twin]:
+        return f"centroid ids differ: {[c for c, _ in kernel]} vs {[c for c, _ in twin]}"
+    diff = max(
+        (abs(a - b) for (_, va), (_, vb) in zip(kernel, twin) for a, b in zip(va, vb)),
+        default=0.0,
+    )
+    return (
+        f"largest absolute centroid component difference {diff:.3e}. At or below 1e-6 "
+        "(one step of the 6th decimal, up to float error) this is the expected "
+        "round(..., 6) boundary signature: a mean within an ulp of "
+        "a .5e-6 boundary rounds apart after the kernel's and the twin's different "
+        "summation orders; it is not a kernel bug. Above 1e-6 the kernel is wrong."
+    )
+
+
 def test_cell_assign_kernel_bit_identical(spark):
     """Coarse (IVF) assignment twins: learned_centroids' Arrow-kernel
     Lloyd iterations vs the norm-hoisted JVM expression form
@@ -3348,9 +3391,9 @@ def test_cell_assign_kernel_bit_identical(spark):
     e = _doubled(table(spark, SF_DIR, "embeddings"))
     ck = learned_centroids(e)
     cx = learned_centroids(e, use_kernel=False)
-    assert sorted((int(r.cent_id), tuple(r.cvec)) for r in ck.collect()) == sorted(
-        (int(r.cent_id), tuple(r.cvec)) for r in cx.collect()
-    )
+    kc = sorted((int(r.cent_id), tuple(r.cvec)) for r in ck.collect())
+    xc = sorted((int(r.cent_id), tuple(r.cvec)) for r in cx.collect())
+    assert kc == xc, _centroid_mismatch(kc, xc)
     ak = sorted(
         (int(r.vec_id), float(r["_nrm"]), int(r.cell))
         for r in _cell_assign(e, ck, N_ASSIGN).collect()
