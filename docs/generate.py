@@ -22,159 +22,30 @@ SF_DIR = "/root/testdata/sf0.01"
 ROTATION_POLICY = """\
 ## Tier & rotation policy
 
-The registry is two-tiered (registry.py):
+The registry is two-tiered (registry.py), and `registry._ORDER` alone
+decides the tier:
 
-- **registered** (`registered=True`): the driver-visible tier,
-  pinned to exactly the 50 names in `registry._ORDER` (the loader
-  raises on drift). The driver records a CORRECTNESS row per
-  registered query, and its window holds ~50 rows — so this tier is
-  a curated set of composite queries covering every SURVEY.md §2
-  operator family, ordered family-representatives-first.
-- **local-only** (`registered=False`): fine-grained single-operator
-  variants and demonstrations. Not driver-visible, but
+- **registered**: the driver-visible tier, exactly the 50 names in
+  `registry._ORDER`, in that order (the loader raises if a name is not
+  registered). The driver records a CORRECTNESS row per registered
+  query, and its window holds ~50 rows — so this tier is a curated set
+  of composite queries covering every SURVEY.md §2 operator family,
+  ordered family-representatives-first.
+- **local-only**: every other registered query — fine-grained
+  single-operator variants and demonstrations. Not driver-visible, but
   tests/test_oracle_parity.py runs BOTH tiers against DuckDB
   identically on every pytest run, so local-tier correctness is
   continuously verified, not grandfathered.
 
 **Rotation**: when a new query deserves a driver row and the window
 is full, a query whose semantics the newcomer supersedes is demoted
-to the local tier (its `@query(..., registered=False)` flag flips and
-`_ORDER` swaps the name — count stays 50). Demotion is safe because
-the local tier keeps full oracle parity in pytest; what changes is
-only which 50 rows the driver records. Two rules keep the window
-honest: no operator family may lose its last driver row, and a
-demoted query keeps its oracle so parity coverage never shrinks.
-
-Rotations so far:
-
-- **r5**: `stream_exec_session` + `stream_exec_late_drop` (real
-  Structured-Streaming-engine forms, oracle-checked) replaced their
-  batch twins `stream_tumbling_counts` + `stream_session` — T5/T6's
-  primary rows now execute through readStream + availableNow; the
-  twins stay oracle-checked locally. Later in r5, `stream_late_drop`
-  (the third batch twin) and `arith_expr` (P13; projections keep two
-  other driver rows) rotated out for `dedup_cluster_cc` (transitive
-  near-dup clustering) and `text_repetition` (Gopher repetition
-  filters).
-- **r10**: round 9's flagship operators earned driver rows —
-  `scan_warc` + `stream_exec_warc` (Python DataSource crawl ingest,
-  batch + exactly-once streaming), `join_bucketed` (zero-Exchange
-  bucketed fact join), `agg_heavy_hitters` (exact Misra–Gries+recount
-  census), `similarity_topk_gemm` (BLAS exact top-k), `dq_quantiles`
-  (exact per-group p50/p95/p99), `corpus_diff` (snapshot diff).
-  Rotated down, each leaving its family ≥1 driver row and keeping
-  its local oracle: `dedup_subset` (A4; dedup family keeps
-  `dedup_latest` + the near-dup suite), `dq_unique`/`dq_not_null`
-  (Q1/Q2 stay driver-checked inside the `dq_suite` composite),
-  `json_props_struct` (X7 keeps `multimodal_pipeline`),
-  `join_case_agg` (joins keep equi/anti-semi/star/bucketed),
-  `similarity_topk_ivf` (X5 keeps exact + GEMM rows; IVF recall
-  contract still pinned in pytest + bench), `text_repetition`
-  (X6 keeps token-counts/doc-profile/TF-IDF rows).
-- **r11**: the round-10/11 flagship surface earned driver rows —
-  `text_bm25_topk` + `index_phrase_search` (the new retrieval family:
-  exact-rational BM25 ranking and zero-shuffle positional phrase
-  match; `index_inverted_build` stays local), `multimodal_jpeg_roundtrip`
-  (the real lossy codec end to end), `multimodal_png_palette` (type-3
-  indexed decode), `multimodal_video_frames` (MJPEG-AVI container walk
-  + per-frame decode), `audio_frame_features` (framed PCM DSP).
-  Rotated down, each leaving its family ≥1 driver row and keeping its
-  local oracle: `join_equi` (joins keep anti-semi/star/bucketed;
-  equi-join still driver-exercised inside `join_star` and
-  `flagship_curated`), `agg_having` (aggs keep group/count-distinct/
-  salted/heavy-hitters), `sql_subqueries` (SQL surface keeps
-  `sql_surface_q3`), `udf_pandas_scalar` (X1 keeps `udf_grouped_map`;
-  the Arrow-only pin stays in pytest), `dq_relationships` (Q3 stays
-  driver-checked inside the `dq_suite` composite), `project_strings`
-  (projections keep `project_events_clean` +
-  `reference_curated_provider`).
-- **r12** (r11 verdict #4): the r11 ER + retrieval-serve work earned
-  driver rows — `er_resolve_customers` + `er_resolve_incremental`
-  (blocked fuzzy linkage and the incremental==full proof),
-  `text_bm25_search` (document-at-a-time serving, zero wide
-  shuffles), `index_term_lookup` (bucket-pruned index serving) — plus
-  the new `join_salted_skew` (large-large hot-key join,
-  salt-replicate-N; oracle = the plain join it must be transparent
-  to). Rotated down, each leaving its family ≥1 driver row and
-  keeping its local oracle: `dedup_decontaminate` + `dedup_cluster_cc`
-  (dedup keeps exact/ngram/embedding/near-text/simhash rows),
-  `similarity_topk_gemm` (bit-identical twin of the still-registered
-  `similarity_topk`), `dq_quantiles` (Q4 stays driver-checked via
-  `dq_suite`), `sample_stratified_cap` (sampling keeps
-  `dataset_split`).
-- **r13** (r12 verdict #5): the r12 oracle-checked work earned driver
-  rows — `join_hotcold_skew` (the salted join's strategy rival on the
-  identical oracle: hot build rows broadcast so the hot mass never
-  shuffles; the driver now sees BOTH fact-fact skew mitigations),
-  `window_resample_locf` (W5 resample + gap-fill last-observation-
-  carried-forward), `er_golden_records` (survivorship under the
-  declared deterministic rule), `index_positional_phrase` (index-only
-  phrase search, bit-equal to the scan form it supersedes). Rotated
-  down, each leaving its family ≥1 driver row and keeping its local
-  oracle: `er_resolve_incremental` (ER keeps `er_resolve_customers` +
-  `er_golden_records`), `index_phrase_search` (superseded by its
-  positional superset; retrieval keeps four rows),
-  `multimodal_png_palette` (multimodal keeps pipeline/jpeg/video/
-  audio), `agg_heavy_hitters` (aggs keep group/count-distinct/salted;
-  still a standing skew10 bench line).
-- **r13 session 2**: `agg_kmv_set_ops` (KMV/theta sketch set algebra
-  — distinct-count union/intersect/minus answered from two 256-entry
-  sketches with a FULL value oracle, the capability HLL merge cannot
-  provide) took the distinct-count family's driver row from
-  `agg_count_distinct`, the exact form it strictly supersedes in
-  demonstration value (the exact COUNT(DISTINCT) semantics stay
-  driver-visible inside `dq_suite`'s uniqueness checks and the
-  local-tier oracle). Aggs keep group/salted + the sketch row.
-- **r14** (r13 verdict #4): the r13 oracle-checked work earned driver
-  rows — `join_adaptive_skew` (the measurement-driven chooser is the
-  skew family's real product: one metadata count + one bounded census
-  pick broadcast/plain/hotcold/salted, and it BEAT the hand-tuned
-  salted form on both benched workloads), `cogroup_order_reconcile_coarse`
-  (the two-sided cogroup surface at sane ~100-group granularity, full
-  outer oracle), `stream_exec_skew_join` (the per-micro-batch salted
-  mitigation under the real engine, batch-twin oracle),
-  `pq_index_delta_add` (ANN index maintenance: delta-encode under the
-  frozen codebook, recall contracted vs a from-scratch rebuild).
-  Rotated down, each leaving its family ≥1 driver row and keeping its
-  local oracle: `join_salted_skew` (the chooser executes the same
-  censused mitigation; hotcold stays as the named engaged form),
-  `text_doc_profile` (text keeps token_counts/tfidf/bm25_topk/
-  bm25_search), `stream_exec_warc` (WARC stays driver-visible via
-  `scan_warc`), `stream_exec_late_drop` (T6 keeps
-  `stream_exec_session`; the late-drop proof stays oracle-checked
-  locally and in tests/test_modules.py).
-- **r15** (r14 verdict #3): the r14 oracle-checked serving/maintenance
-  work earned driver rows — `kmv_serving_overlap_matrix` (the KMV
-  family's serving product: the full segment-pair Jaccard/overlap
-  matrix answered from the stream-fed sketch store alone, full value
-  oracle), `stream_exec_adaptive_join` (the per-micro-batch
-  measurement-driven chooser under the real engine — supersedes the
-  hand-salted streaming form the way the batch chooser superseded
-  `join_salted_skew`), `ivfpq_index_delta_add` (the COMPOSED serving
-  index — cells + codes — incrementally maintained under frozen
-  models, delta==rebuild recall contract). Rotated down, each a
-  strict-supersession within its own family: `agg_kmv_set_ops` (the
-  serving matrix answers the same sketch set algebra pairwise),
-  `stream_exec_skew_join` (the chooser executes the same mitigation
-  when the census calls for it), `pq_index_delta_add` (flat-codes
-  maintenance is a sub-case of the composed form). All three keep
-  their full local oracles.
-- **r16** (r15 verdict #3): `merge_upsert_schema_evolution` takes the
-  S6 family's driver row — the full arc (v1 drain, upstream ALTER
-  TABLE, v2 decode restarting from the SAME checkpoint) under the
-  real engine; a wedged stream on the first upstream DDL is the #1
-  real-world CDC failure, so it's the form the driver should see.
-  Demoted: the batch `merge_upsert` it strictly supersedes (same
-  latest-wins merge, minus the engine and the boundary), local with
-  its full oracle. The round's other lakehouse additions
-  (`merge_upsert_branch`, `stream_exec_changelog`,
-  `merge_upsert_changelog_evolved`) enter at the local tier with
-  full oracles, rotation candidates for r17 — joined later in the
-  round by the change-feed CONSUMER arc
-  (`changelog_incremental_agg` — cursored read + incremental view
-  maintenance, `stream_ivm_view` — the continuous two-engine form)
-  and the non-fast-forward `merge_upsert_rebase`, all full-oracle
-  local entries.
+to the local tier by editing `_ORDER` only (swap the name — count
+stays 50); `@query` takes just a name and an oracle. Demotion is safe
+because the local tier keeps full oracle parity in pytest; what
+changes is only which 50 rows the driver records. Two rules keep the
+window honest: no operator family may lose its last driver row, and a
+demoted query keeps its oracle so parity coverage never shrinks. The
+r5–r16 rotation log is in BASELINE.md.
 """
 
 # name -> prose note for PLANS.md (what the plan MUST show and why)

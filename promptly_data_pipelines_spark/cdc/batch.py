@@ -34,7 +34,6 @@ _OP_SQL = (
 
 @query(
     "cdc_parse_full",
-    registered=False,
     oracle=f"""
     SELECT {_OP_SQL} AS op,
            epoch_ms(ts) AS ts_ms,
@@ -64,7 +63,6 @@ def cdc_parse_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "cdc_filter_tombstone",
-    registered=False,
     oracle=f"""
     SELECT {_OP_SQL} AS op, event_id, user_id, event_type, value
     FROM events
@@ -136,10 +134,6 @@ def merge_upsert_frames(
 
 @query(
     "merge_upsert",
-    # r16 rotation: demoted to local tier — the S6 driver row is now
-    # merge_upsert_schema_evolution, which drains the same latest-wins
-    # merge through the real engine across an ALTER TABLE boundary
-    registered=False,
     oracle="""
     WITH snap AS (
       SELECT event_id, ts, user_id, event_type, value
@@ -186,7 +180,6 @@ def merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_tumbling_counts",
-    registered=False,  # r5: superseded as driver row by stream_exec_tumbling
     oracle="""
     SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
            event_type,
@@ -216,7 +209,6 @@ def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_session",
-    registered=False,  # r5: superseded as driver row by stream_exec_session
     oracle="""
     WITH flagged AS (
       SELECT user_id, ts, event_id, value,
@@ -305,7 +297,6 @@ def cdc_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "cdc_parse_variant",
-    registered=False,
     oracle=f"""
     SELECT {_OP_SQL} AS op,
            epoch_ms(ts) AS ts_ms,
@@ -347,7 +338,6 @@ def cdc_parse_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "cdc_schema_evolution",
-    registered=False,
     oracle=f"""
     SELECT {_OP_SQL} AS op,
            epoch_ms(ts) AS ts_ms,
@@ -399,9 +389,6 @@ def cdc_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_late_drop",
-    registered=False,  # r5 rotation: superseded as a driver row by the
-    # real-engine stream_exec_late_drop (cdc/streaming.py); stays
-    # oracle-checked here in the local pytest tier
     oracle="""
     WITH arr AS (
       SELECT event_id, event_type, value,
@@ -476,7 +463,6 @@ def stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "cdc_scd2_history",
-    registered=False,
     oracle=f"""
     WITH ch AS (
       SELECT {_OP_SQL} AS op, event_id, user_id, event_type, value,

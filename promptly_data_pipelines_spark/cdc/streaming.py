@@ -32,6 +32,7 @@ from pyspark.sql import types as T
 from ..catalog import table
 from ..functions import ts_str
 from ..operators import snapshot_store
+from ..operators.layout import partition_for_write
 from ..operators.snapshot_store import (
     branch_snapshot,
     changelog_frame,
@@ -352,7 +353,6 @@ def _event_rows(df: DataFrame, *lead, extra: tuple[str, ...] = ()) -> DataFrame:
 
 @query(
     "merge_upsert_time_travel",
-    registered=False,
     # the oracle replays the batch prefix in SQL: the 'cut' state is
     # the two insert slices (all live event_ids, original values); the
     # 'head' state is that plus the update batch winning latest-ts on
@@ -408,7 +408,6 @@ def merge_upsert_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "merge_upsert_changelog",
-    registered=False,
     # the oracle replays both directions of the change feed in SQL:
     # forward (cut -> head) = inserts of the %4==1 ids + pre/post
     # pairs for the evens update; backward (head -> cut) = the exact
@@ -467,9 +466,6 @@ def merge_upsert_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "merge_upsert_schema_evolution",
-    # the S6 family's driver row: a wedged stream on the first upstream
-    # ALTER TABLE is the #1 real-world CDC failure, so this is the form
-    # the driver sees; the batch merge_upsert stays local with its oracle
     # oracle: evens keep their v1 rows with channel NULL-backfilled;
     # odds carry the post-DDL update (value+100, ts+1h, channel by id
     # arithmetic — the deterministic fixture cdc_schema_evolution uses)
@@ -518,7 +514,6 @@ def merge_upsert_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @query(
     "merge_upsert_changelog_evolved",
-    registered=False,
     # oracle replays the feed across the evolution boundary: fwd
     # (v1 tag -> head) = inserts carrying channel + pre/post pairs for
     # the channel-only backfill (pre has channel NULL); bwd is the
@@ -601,7 +596,6 @@ def merge_upsert_changelog_evolved(spark: SparkSession, sf_dir: str) -> DataFram
 
 @query(
     "merge_upsert_branch",
-    registered=False,
     # oracle = SQL replay of main-prefix + branch batches (latest-wins
     # makes the branch exact): post-merge main =
     # seed rows where untouched, +100/+1h where the branch updated the
@@ -678,7 +672,6 @@ def merge_upsert_branch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "merge_upsert_rebase",
-    registered=False,
     # oracle = the rebase algebra replayed in SQL: main seeded with
     # every live id, the branch bumps the EVENS (+100, +1h), main
     # concurrently bumps the %4==3 ids (+7, +2h) — disjoint key sets,
@@ -740,7 +733,6 @@ def merge_upsert_rebase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_exec_changelog",
-    registered=False,
     # oracle = the full feed, batch by batch: batch 0 and 1 are pure
     # insert waves (disjoint key slices), batch 2 updates every live
     # even id (value+100, ts+1h) and must emit exactly one pre/post
@@ -938,7 +930,6 @@ def maintain_grouped_distinct(
 
 @query(
     "changelog_incremental_distinct",
-    registered=False,
     # oracle = direct COUNT(DISTINCT) over the final state: evens'
     # value bump is distinct-invariant noise, the %4==0 migration
     # MOVES (event_type, user_id) pairs into 'migrated' — a user with
@@ -1055,7 +1046,6 @@ def materialized_view_sink(
 
 @query(
     "stream_ivm_view",
-    registered=False,
     # same final-state oracle as changelog_incremental_agg: the view,
     # maintained purely from the streaming feed, must re-derive the
     # direct aggregation of the final table state to the cent.
@@ -1111,7 +1101,6 @@ def stream_ivm_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "changelog_incremental_agg",
-    registered=False,
     # oracle = DIRECT re-aggregation of the final state the SQL replay
     # produces (seed waves, then evens get value+100 and the %4==0
     # slice migrates to event_type 'migrated') — the IVM path on the
@@ -1353,7 +1342,6 @@ def interval_join(
 
 @query(
     "stream_exec_join",
-    registered=False,
     oracle="""
     WITH live AS (
       SELECT user_id, event_id, event_type, value,
@@ -1489,10 +1477,10 @@ def stage_arrival_batches(
     )
     staged = os.path.join(base, "staged")
     env = synthesize_envelopes(shifted, extra_cols=("batch_id",))
-    # repartition by the partition column first so partitionBy writes
-    # exactly ONE part file per batch_id (a batch split across two
-    # files would straddle two maxFilesPerTrigger=1 triggers).
-    env.repartition("batch_id").write.partitionBy("batch_id").json(staged)
+    # hash by the partition column first so partitionBy writes exactly
+    # ONE part file per batch_id (a batch split across two files would
+    # straddle two maxFilesPerTrigger=1 triggers).
+    partition_for_write(env, "batch_id").write.partitionBy("batch_id").json(staged)
     dirs = glob.glob(os.path.join(staged, "batch_id=*"))
     parts = []
     for d in sorted(dirs, key=lambda d: int(d.rsplit("=", 1)[1])):
@@ -1506,7 +1494,6 @@ def stage_arrival_batches(
 
 @query(
     "stream_exec_late_drop",
-    registered=False,
     oracle="""
     WITH sz AS (
       SELECT CAST(ceil(count(*) / 8.0) AS BIGINT) AS size FROM events
@@ -1614,7 +1601,6 @@ def late_drop_counts(stream: DataFrame, delay: str = "10 minutes") -> DataFrame:
 
 @query(
     "stream_exec_dedup",
-    registered=False,
     oracle="""
     SELECT event_id, user_id, event_type, value,
            strftime(date_trunc('milliseconds', ts), '%Y-%m-%d %H:%M:%S.%f') AS ts_str
@@ -1668,7 +1654,6 @@ def stream_exec_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_exec_interval_join",
-    registered=False,  # registered window full; pytest oracle-parity covers it
     oracle="""
     WITH live AS (
       -- envelope ts is millisecond epoch (live_rows rebuilds ts from
@@ -1748,7 +1733,6 @@ def stream_exec_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_exec_left_join",
-    registered=False,
     oracle="""
     WITH live AS (
       SELECT event_id, user_id, date_trunc('milliseconds', ts) AS ts
@@ -1853,7 +1837,6 @@ def stream_exec_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_exec_enrich",
-    registered=False,
     oracle="""
     SELECT coalesce(c.c_mktsegment, '__unknown__') AS segment,
            e.event_type,
@@ -1992,9 +1975,6 @@ def skew_join_stream(
 
 @query(
     "stream_exec_skew_join",
-    # local-only: stream_exec_adaptive_join's chooser executes the same
-    # mitigation when the census calls for it
-    registered=False,
     oracle="""
     SELECT o_orderpriority, l_returnflag,
            CAST(count(*) AS BIGINT) AS n_lines,

@@ -218,7 +218,6 @@ def media_table_tone(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "audio_tone_features",
-    registered=False,
     oracle=f"""
     SELECT doc_id,
            CAST(8000 + (doc_id % 5) * 4000 AS INT) AS sample_rate,

@@ -169,7 +169,6 @@ def _tok_stream(d: DataFrame, *cols: str) -> DataFrame:
 
 @query(
     "classify_nb_lang",
-    registered=False,
     oracle=f"""
     WITH split AS (
       SELECT doc_id, lang, text,
@@ -273,7 +272,6 @@ def classify_nb_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_perplexity_buckets",
-    registered=False,
     oracle=f"""
     WITH split AS (
       SELECT doc_id, lang, text,
@@ -331,7 +329,6 @@ def text_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_perplexity_bigram",
-    registered=False,
     oracle=f"""
     WITH split AS (
       SELECT doc_id, lang, text,

@@ -71,7 +71,6 @@ CHUNK_WINDOWS_ORACLE = f"""
 
 @query(
     "text_chunk_windows",
-    registered=False,
     oracle=CHUNK_WINDOWS_ORACLE,
 )
 def text_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -110,7 +109,6 @@ def text_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sample_weighted_priority",
-    registered=False,
     oracle="""
     WITH keyed AS (
       SELECT doc_id, lang, n_chars,
@@ -165,7 +163,6 @@ def sample_weighted_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dataset_split_grouped",
-    registered=False,
     oracle=f"""
     WITH assigned AS (
       SELECT doc_id, source,
@@ -221,7 +218,6 @@ _SQL_BUCKET = " + ".join(
 
 @query(
     "dedup_semantic_keep_best",
-    registered=False,
     oracle=f"""
     WITH e AS (
       SELECT vec_id AS doc_id, embedding::DOUBLE[] AS vec FROM embeddings
@@ -290,7 +286,6 @@ def dedup_semantic_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_bpe_pair_counts",
-    registered=False,
     oracle="""
     WITH t AS (
       SELECT list_filter(string_split(text, ' '), w -> w <> '') AS w
@@ -341,7 +336,6 @@ def text_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "curriculum_stages",
-    registered=False,
     oracle=f"""
     WITH scored AS (
       SELECT doc_id, lang, {_FLUENCY_SQL} AS fluency
@@ -378,7 +372,6 @@ SOURCE_TOKEN_BUDGET = 2000
 
 @query(
     "corpus_token_budget",
-    registered=False,
     oracle=f"""
     WITH scored AS (
       SELECT doc_id, source,
@@ -427,7 +420,6 @@ def corpus_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "split_contamination",
-    registered=False,
     oracle=f"""
     WITH a AS (
       SELECT doc_id, lang, text,
@@ -500,7 +492,6 @@ def split_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "eval_set_build",
-    registered=False,
     oracle=f"""
     WITH b AS (
       SELECT doc_id, lang, source, text,
@@ -639,7 +630,7 @@ def bpe_train(wc: DataFrame, n_merges: int = BPE_MERGES) -> list:
     return merges
 
 
-@query("bpe_train_merges", registered=False)
+@query("bpe_train_merges")
 def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train {BPE_MERGES} BPE merges on the corpus word counts and
     return the merge table — the tokenizer model a downstream
@@ -666,7 +657,7 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("bpe_apply_compression", registered=False)
+@query("bpe_apply_compression")
 def bpe_apply_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end tokenizer loop: train {BPE_MERGES} merges
     (bpe_train), then APPLY them to every document and report the

@@ -505,7 +505,7 @@ _NEAR_TEXT_EXACT_ORACLE = f"""
 """
 
 
-@query("dedup_near_text_exact", registered=False, oracle=_NEAR_TEXT_EXACT_ORACLE)
+@query("dedup_near_text_exact", oracle=_NEAR_TEXT_EXACT_ORACLE)
 def dedup_near_text_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X4 scale path: LSH candidate generation + EXACT Jaccard verify.
 
@@ -1193,7 +1193,6 @@ def decontaminate_near(corpus: DataFrame, benchmark: DataFrame) -> DataFrame:
 
 @query(
     "dedup_decontaminate",
-    registered=False,  # r12 rotation: demoted (dedup family keeps 5 driver rows)
     oracle="""
     WITH normed AS (
       SELECT doc_id, lang, source,
@@ -1337,7 +1336,6 @@ def connected_components(
 
 @query(
     "dedup_cluster_cc",
-    registered=False,  # r12 rotation: demoted (dedup family keeps 5 driver rows)
     oracle=f"""
     WITH RECURSIVE {_JACCARD_PAIR_CTES},
     edges AS (
@@ -1444,7 +1442,6 @@ def containment_pairs(
 
 @query(
     "dedup_containment",
-    registered=False,
     oracle=f"""
     WITH w0 AS (
       SELECT doc_id, lang, list_filter(string_split(text, ' '), w -> w <> '') AS w
@@ -1556,7 +1553,6 @@ def incremental_near_dedup(corpus: DataFrame, arrivals: DataFrame) -> DataFrame:
 
 @query(
     "dedup_incremental",
-    registered=False,
     oracle=f"""
     WITH base AS (
       SELECT doc_id, text,
@@ -1632,7 +1628,6 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_cluster_keep_best",
-    registered=False,
     oracle=f"""
     WITH RECURSIVE {_JACCARD_PAIR_CTES},
     edges AS (

@@ -92,7 +92,7 @@ def _er_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "er_resolve_customers",  # r12 rotation: promoted to the driver tier
+    "er_resolve_customers",
     oracle="""
     WITH RECURSIVE records AS (
       SELECT c_custkey AS rec_id, c_name AS name FROM customer
@@ -205,7 +205,6 @@ def _label(records: DataFrame, edges: DataFrame) -> DataFrame:
 
 @query(
     "er_resolve_incremental",
-    registered=False,  # r13 rotation: demoted (ER keeps er_resolve_customers + er_golden_records); pytest oracle parity unchanged
     oracle="""
     WITH RECURSIVE records AS (
       SELECT c_custkey AS rec_id, c_name AS name FROM customer
@@ -275,7 +274,6 @@ def er_resolve_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "er_blocking_metrics",
-    registered=False,
     oracle="""
     WITH records AS (
       SELECT c_custkey AS rec_id, c_name AS name FROM customer
@@ -394,7 +392,7 @@ def er_blocking_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "er_golden_records",  # r13 rotation: promoted (r12 verdict #5)
+    "er_golden_records",
     oracle="""
     WITH RECURSIVE records AS (
       SELECT c_custkey AS rec_id, c_name AS name FROM customer

@@ -226,7 +226,6 @@ def _oracle_iterations(n_iter: int = N_ITER) -> str:
 
 @query(
     "graph_pagerank",
-    registered=False,
     oracle=f"""
     WITH li AS (
       SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
@@ -259,7 +258,6 @@ MIN_PAIR_SUPPORT = 5  # absolute co-occurrence floor for a rule
 
 @query(
     "basket_association_rules",
-    registered=False,
     oracle=f"""
     WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
     n AS (SELECT CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders FROM li),

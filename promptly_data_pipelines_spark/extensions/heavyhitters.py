@@ -79,6 +79,27 @@ def _mg_partition_candidates(key: str, capacity: int):
     return gen
 
 
+def _capacity(support: float) -> int:
+    """The smallest counter table that makes a candidate pass lossless
+    for ``support``: k ≥ 1/support − 1."""
+    return max(8, ceil(1.0 / support) - 1)
+
+
+def _recount(df: DataFrame, key: str, cands: DataFrame, support: float) -> DataFrame:
+    """Exact counts of the ``cands`` keys over ``df``, kept where they
+    exceed ``support`` × ALL rows of ``df`` — NULL-key rows included,
+    the count(*) the oracle thresholds on (see heavy_hitters)."""
+    total = df.count()
+    exact = (
+        df.select(key)
+        .filter(F.col(key).isNotNull())
+        .join(F.broadcast(cands), key)
+        .groupBy(key)
+        .agg(F.count("*").alias("n_occurrences"))
+    )
+    return exact.filter(F.col("n_occurrences") > F.lit(float(total) * support))
+
+
 def heavy_hitters(
     df: DataFrame, key: str, support: float, capacity: int | None = None
 ) -> DataFrame:
@@ -104,7 +125,7 @@ def heavy_hitters(
     if not 0.0 < support < 1.0:
         raise ValueError(f"support must be in (0,1), got {support}")
     if capacity is None:
-        capacity = max(8, ceil(1.0 / support) - 1)
+        capacity = _capacity(support)
     field = df.schema[key]
     # column-pruned scan: the census reads ONE column
     pruned = df.select(key).filter(F.col(key).isNotNull())
@@ -115,18 +136,11 @@ def heavy_hitters(
         )
         .dropDuplicates([key])  # ≤ k·P rows: a tiny dedup shuffle
     )
-    total = df.count()
-    exact = (
-        pruned.join(F.broadcast(cands), key)
-        .groupBy(key)
-        .agg(F.count("*").alias("n_occurrences"))
-    )
-    return exact.filter(F.col("n_occurrences") > F.lit(float(total) * support))
+    return _recount(df, key, cands, support)
 
 
 @query(
     "agg_heavy_hitters",
-    registered=False,  # r13 rotation: demoted (aggs keep group/count-distinct/salted); still a skew10 bench line + pytest oracle parity
     oracle="""
     SELECT CAST(o_custkey AS BIGINT) AS key,
            CAST(count(*) AS BIGINT) AS n_occurrences
@@ -148,7 +162,6 @@ def agg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_exec_heavy_hitters",
-    registered=False,
     oracle="""
     SELECT CAST(o_custkey AS BIGINT) AS key,
            CAST(count(*) AS BIGINT) AS n_occurrences
@@ -181,7 +194,7 @@ def stream_exec_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..cdc.staging import drain_stream, foreach_batch_writer, fresh_staging_dir
 
     support = 1e-4
-    capacity = max(8, ceil(1.0 / support) - 1)
+    capacity = _capacity(support)
     base = fresh_staging_dir(spark, sf_dir, "stream_hh")
     src = os.path.join(base, "src")
     store = os.path.join(base, "cands")
@@ -212,16 +225,7 @@ def stream_exec_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand_union = (
         spark.read.parquet(store).select("o_custkey").dropDuplicates(["o_custkey"])
     )
-    # support base = ALL rows (NULL keys included), matching the
-    # count(*) the oracle thresholds on — see heavy_hitters
     raw = spark.read.schema("o_custkey bigint").json(src)
-    total = raw.count()
-    source = raw.filter(F.col("o_custkey").isNotNull())
-    exact = (
-        source.join(F.broadcast(cand_union), "o_custkey")
-        .groupBy("o_custkey")
-        .agg(F.count("*").alias("n_occurrences"))
+    return _recount(raw, "o_custkey", cand_union, support).select(
+        F.col("o_custkey").alias("key"), "n_occurrences"
     )
-    return exact.filter(
-        F.col("n_occurrences") > F.lit(float(total) * support)
-    ).select(F.col("o_custkey").cast("bigint").alias("key"), "n_occurrences")

@@ -212,7 +212,6 @@ _KMV_HASH_SQL = (
 
 @query(
     "agg_kmv_distinct",
-    registered=False,
     oracle=f"""
     WITH h AS (
       SELECT DISTINCT event_type, {_KMV_HASH_SQL} AS hv
@@ -282,12 +281,6 @@ _KMV_SEGMENT_SKETCH_SQL = f"""
 
 @query(
     "agg_kmv_set_ops",
-    # r13 session 2: promoted to the driver tier (took the
-    # distinct-count family row from exact agg_count_distinct);
-    # r15 rotation: demoted for kmv_serving_overlap_matrix — the
-    # serving matrix answers the same set algebra PAIRWISE from the
-    # stream-fed store, strictly superseding the two-sketch demo
-    registered=False,
     oracle=f"""
     WITH {_KMV_SEGMENT_SKETCH_SQL},
     counts AS (
@@ -389,7 +382,6 @@ def agg_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_kmv_rollup",
-    registered=False,
     oracle=f"""
     WITH h AS (
       SELECT DISTINCT event_type, {_KMV_HASH_SQL} AS hv
@@ -519,7 +511,6 @@ def build_kmv_stream_store(spark: SparkSession, sf_dir: str, tag: str) -> str:
 
 @query(
     "stream_exec_kmv_sketch",
-    registered=False,
     # the SAME oracle as agg_kmv_distinct: the streaming-fed merge is
     # provably batching-independent, so unlike every other streaming
     # sketch query this one carries a FULL value-hash oracle
@@ -636,9 +627,6 @@ def kmv_overlap_matrix(sketches: DataFrame, seg_col: str, k: int = KMV_K) -> Dat
 
 @query(
     "kmv_serving_overlap_matrix",
-    # r15 rotation (r14 verdict #3): promoted — the KMV family's
-    # serving product (segment-pair set algebra from the stream-fed
-    # store alone), superseding the agg_kmv_set_ops two-sketch demo
     oracle=f"""
     WITH h AS (
       SELECT DISTINCT event_type, {_KMV_HASH_SQL} AS hv FROM events

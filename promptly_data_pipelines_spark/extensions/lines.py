@@ -111,7 +111,6 @@ def line_dedup(
 
 @query(
     "text_line_dedup",
-    registered=False,
     oracle=f"""
     WITH staged AS (
       SELECT doc_id, {_TEMPLATE_SQL} AS text FROM documents
@@ -183,7 +182,6 @@ def _span_template_col() -> F.Column:
 
 @query(
     "text_dup_span_fraction",
-    registered=False,
     oracle=f"""
     WITH staged AS (
       SELECT doc_id, {_SPAN_TEMPLATE_SQL} AS text FROM documents
@@ -302,7 +300,6 @@ def text_dup_span_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_remove_dup_spans",
-    registered=False,
     oracle=f"""
     WITH staged AS (
       SELECT doc_id, {_SPAN_TEMPLATE_SQL} AS text FROM documents

@@ -93,12 +93,19 @@ def _synth_media(
 ) -> DataFrame:
     """documents → MEDIA_SCHEMA rows: ``synth(doc_id, *cols)`` gives a
     row's (media_type, payload) in closed form from its doc_id. A NULL
-    doc_id has no closed form, so its row is NULL throughout."""
+    doc_id has no closed form, so its row is NULL throughout.
+
+    documents is spread over every core first: a one-row-group fixture
+    file is one scan task, and the codec chain after it is all Python
+    work, so one small round-robin shuffle buys full-width parallelism
+    (as in dedup.minhash_signatures)."""
 
     def row(doc_id, *v):
         return [(doc_id, *synth(doc_id, *v)) if doc_id is not None else (None, None, None)]
 
-    return _row_map(table(spark, sf_dir, "documents"), ("doc_id", *cols), row, MEDIA_SCHEMA)
+    d = table(spark, sf_dir, "documents")
+    d = d.repartition(spark.sparkContext.defaultParallelism)
+    return _row_map(d, ("doc_id", *cols), row, MEDIA_SCHEMA)
 
 
 def _image_dims(i: int) -> tuple[int, int]:
@@ -409,7 +416,6 @@ _PNG_DIMS_SQL = """
 
 @query(
     "multimodal_png_features",
-    registered=False,
     oracle="SELECT doc_id, 'png' AS media_type," + _PNG_DIMS_SQL,
 )
 def multimodal_png_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -425,7 +431,6 @@ def multimodal_png_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "multimodal_png_roundtrip",
-    registered=False,
     oracle="""
     SELECT doc_id,
            CAST(8 AS INT) AS width,
@@ -488,7 +493,6 @@ _PALETTE_DECODE_SCHEMA = T.StructType(
 
 @query(
     "multimodal_png_palette",
-    registered=False,  # r13 rotation: demoted (multimodal keeps pipeline/jpeg/video/audio rows); pytest oracle parity unchanged
     oracle=f"""
     SELECT doc_id,
            CAST(4 + doc_id % 29 AS INT) AS width,
@@ -574,7 +578,6 @@ _JPEG_DECODE_SCHEMA = T.StructType(
 
 @query(
     "multimodal_jpeg_decode",
-    registered=False,
     oracle="""
     SELECT doc_id,
            CAST(8 * (1 + doc_id % 4) AS INT) AS width,
@@ -627,7 +630,7 @@ def multimodal_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return feats.select("doc_id", "width", "height", "n_channels")
 
 
-@query("multimodal_features_mixed", registered=False)  # binary features: rows-only check
+@query("multimodal_features_mixed")  # binary features: rows-only check
 def multimodal_features_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X7 with REAL codecs in the loop: mixed BMP/WAV/bytestats
     payloads → decode_media parses true width/height (BMP header) and
@@ -637,21 +640,21 @@ def multimodal_features_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return extract_features(media_table_mixed(spark, sf_dir))
 
 
-@query("multimodal_resize", registered=False)  # stub codec: rows-only check
+@query("multimodal_resize")  # stub codec: rows-only check
 def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """North-star: media resize over the Arrow row-map (stubbed codec,
     real Spark plumbing — schema, Arrow batching, partitioning)."""
     return resize_media(media_table(spark, sf_dir), 8, 8)
 
 
-@query("multimodal_frame_sample", registered=False)  # stub codec: rows-only check
+@query("multimodal_frame_sample")  # stub codec: rows-only check
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """North-star: frame sampling over the Arrow row-map — 1→N row
     expansion with typed frame rows (stubbed decoder)."""
     return sample_frames(media_table(spark, sf_dir), every_n=4)
 
 
-@query("multimodal_features", registered=False)  # byte-level UDF pipeline: rows-only check
+@query("multimodal_features")  # byte-level UDF pipeline: rows-only check
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X7/north-star: binary media column → Arrow-batched feature
     extraction → typed feature frame. The stub codec keeps it
@@ -662,7 +665,6 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "json_props_struct",
-    registered=False,  # r10 rotation: demoted to local tier (family keeps a driver row); pytest oracle-parity still covers it
     oracle="""
     SELECT event_id,
            CAST(props->>'$.k' AS INTEGER) AS k,
@@ -684,7 +686,7 @@ def json_props_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# r6: the driver row IS oracle-checkable — every media_table row is the
+# the driver row is oracle-checkable — every media_table row is the
 # deterministic 'bytestats' codec, so the three row-map stages
 # reduce to pure byte arithmetic DuckDB can mirror: the 8×8 resample is
 # out[i] = payload[i·n/64] (nearest-neighbor index formula from

@@ -97,7 +97,6 @@ def pack_assignments(
 
 @query(
     "pack_sequences",
-    registered=False,
     oracle=f"""
     WITH toks AS (
       SELECT lang, doc_id,

@@ -303,7 +303,7 @@ def append_sketch_batch(
     ).parquet(os.path.join(store, f"batch_id={batch_id}"))
 
 
-@query("dq_quantile_sketch", registered=False)
+@query("dq_quantile_sketch")
 def dq_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type value percentiles from the MERGED sketch rollup
     (partials → per-group merge → p50/p95/p99 + certified rank-error
@@ -321,7 +321,7 @@ def dq_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sketch_quantiles(merged, ["event_type"]).orderBy("event_type", "q")
 
 
-@query("stream_exec_quantile_sketch", registered=False)
+@query("stream_exec_quantile_sketch")
 def stream_exec_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The sketch store fed by the REAL streaming engine — the
     deployment shape end to end: events arrive as micro-batches
@@ -360,7 +360,7 @@ def stream_exec_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sketch_quantiles(merged, ["event_type"]).orderBy("event_type", "q")
 
 
-@query("dq_sketch_serving_rollup", registered=False)
+@query("dq_sketch_serving_rollup")
 def dq_sketch_serving_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The pattern the module docstring promises, end to end:
     per-(event_type, DAY) sketches are built ONCE and

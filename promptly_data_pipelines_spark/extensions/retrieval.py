@@ -73,7 +73,6 @@ def _words(c):
 
 @query(
     "index_inverted_build",
-    registered=False,
     oracle="""
     WITH tok AS (
       SELECT doc_id,
@@ -109,7 +108,6 @@ def index_inverted_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "index_phrase_search",
-    registered=False,  # r13 rotation: superseded by index_positional_phrase (bit-equal, index-only); pytest oracle parity unchanged
     oracle="""
     WITH w AS (
       SELECT doc_id,
@@ -195,7 +193,6 @@ def _phrase_query(
 
 @query(
     "index_phrase3_search",
-    registered=False,
     oracle="""
     WITH w AS (
       SELECT doc_id,
@@ -374,7 +371,6 @@ def _build_index(d: DataFrame) -> DataFrame:
 
 @query(
     "index_delta_merge",
-    registered=False,
     oracle="""
     WITH tok AS (
       SELECT doc_id,
@@ -431,7 +427,6 @@ def merge_indexes(base: DataFrame, delta: DataFrame) -> DataFrame:
 
 @query(
     "index_boolean_and",
-    registered=False,
     oracle="""
     WITH w AS (
       SELECT doc_id,
@@ -474,7 +469,7 @@ def index_boolean_and(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "text_bm25_search",  # r12 rotation: promoted (retrieval serve path)
+    "text_bm25_search",
     oracle="""
     WITH w AS (
       SELECT doc_id,
@@ -609,7 +604,7 @@ def stage_index_bucketed(
 
 
 @query(
-    "index_term_lookup",  # r12 rotation: promoted (bucketed index serving)
+    "index_term_lookup",
     oracle="""
     WITH tok AS (
       SELECT doc_id,
@@ -650,7 +645,6 @@ KWIC_CTX = 3  # context tokens either side of the match
 
 @query(
     "text_kwic",
-    registered=False,
     oracle="""
     WITH w AS (
       SELECT doc_id,
@@ -763,7 +757,7 @@ def positional_phrase_match(index: DataFrame, terms: tuple[str, ...]) -> DataFra
 
 
 @query(
-    "index_positional_phrase",  # r13 rotation: promoted (r12 verdict #5)
+    "index_positional_phrase",
     oracle="""
     WITH w AS (
       SELECT doc_id,
@@ -829,7 +823,6 @@ def stage_positional_index_bucketed(
 
 @query(
     "index_positional_serve",
-    registered=False,
     oracle="""
     WITH w AS (
       SELECT doc_id,
@@ -956,7 +949,6 @@ def decompress_postings(compressed: DataFrame) -> DataFrame:
 
 @query(
     "index_positional_compressed",
-    registered=False,
     oracle="""
     WITH w AS (
       SELECT doc_id,

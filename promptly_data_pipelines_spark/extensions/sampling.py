@@ -42,7 +42,6 @@ def hash_bucket(col, n_buckets: int = 256):
 
 @query(
     "sample_hash",
-    registered=False,
     oracle="""
     SELECT event_id, event_type, value
     FROM events
@@ -97,7 +96,6 @@ def dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sample_stratified_cap",
-    registered=False,  # r12 rotation: demoted (sampling family keeps dataset_split)
     oracle="""
     SELECT label, vec_id FROM (
       SELECT label, vec_id,
@@ -124,7 +122,6 @@ def sample_stratified_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sample_temperature_mix",
-    registered=False,
     oracle="""
     WITH c AS (SELECT lang, count(*) AS n FROM documents GROUP BY 1),
     s AS (SELECT lang, n, CAST(floor(sqrt(n) * 1000) AS BIGINT) AS s FROM c),
@@ -189,7 +186,6 @@ def sample_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "corpus_shuffle_shard",
-    registered=False,
     oracle="""
     WITH a AS (
       SELECT doc_id, lang, n_chars,
@@ -241,7 +237,6 @@ def corpus_shuffle_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sample_class_balance",
-    registered=False,
     oracle="""
     WITH cc AS (
       SELECT label, CAST(count(*) AS BIGINT) AS n_c FROM embeddings GROUP BY label
@@ -315,7 +310,6 @@ SAMPLE_EST_BUCKETS = 26  # ~10.16% of 256 — the shared in_sample10 slice
 
 @query(
     "sample_estimate_totals",
-    registered=False,
     oracle=f"""
     WITH sampled AS (
       SELECT event_type, value

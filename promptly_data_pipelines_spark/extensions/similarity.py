@@ -456,10 +456,9 @@ def _cells_from_rows(rows) -> list[tuple[int, list[float], float]]:
 
 @query(
     "similarity_topk_ivf",
-    registered=False,  # r10 rotation: demoted to local tier (family keeps a driver row); pytest oracle-parity still covers it
-    # r6 verdict item #2: the IVF search is approximate, so its rows
-    # can't be value-hashed directly — instead the registered query
-    # emits the EXACT top-k rows (fully deterministic, mirrored below)
+    # the IVF search is approximate, so its rows can't be value-hashed
+    # directly — instead the query emits the EXACT top-k rows (fully
+    # deterministic, mirrored below)
     # plus a per-query recall contract computed from the IVF candidates
     # INSIDE the query: ivf_recall_ok = (n_overlap * TOP_K >= n_exact *
     # RECALL_NUM), i.e. recall >= 0.8, in pure integer arithmetic
@@ -505,7 +504,7 @@ def similarity_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("similarity_topk_ivf_raw", registered=False)  # approximate: no oracle
+@query("similarity_topk_ivf_raw")  # approximate: no oracle
 def similarity_topk_ivf_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X5 scale path: IVF-style coarse quantization with LEARNED
     centroids (deterministic k-means, see learned_centroids — round 1
@@ -636,7 +635,6 @@ def ivf_topk(
 
 @query(
     "embedding_norms",
-    registered=False,
     oracle="""
     SELECT vec_id, label,
            round(sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])), 6) AS l2_norm,
@@ -746,7 +744,6 @@ def similar_pairs_hyperplane(e: DataFrame, max_hamming: int = 2) -> DataFrame:
 
 @query(
     "similarity_hard_negatives",
-    registered=False,
     oracle=f"""
     WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS vec FROM embeddings),
     q AS (SELECT vec_id AS query_id, label AS q_label, vec AS qvec
@@ -806,7 +803,6 @@ def similarity_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "embedding_quantize_int8",
-    registered=False,
     oracle="""
     WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
     s AS (
@@ -910,7 +906,7 @@ def pca_fit(e: DataFrame, dim: int, k: int = PCA_K):
     return mean.tolist(), comps.tolist()
 
 
-@query("embedding_pca_project", registered=False)
+@query("embedding_pca_project")
 def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dimensionality reduction before ANN indexing / semantic dedup:
     project every embedding onto the top-{PCA_K} principal components
@@ -987,7 +983,7 @@ def _kcenter_oracle(k: int = K_CENTERS) -> str:
     return "WITH " + ",\n    ".join(parts) + "\n    " + "\n    UNION ALL ".join(finals)
 
 
-@query("embedding_coreset_kcenter", registered=False, oracle=_kcenter_oracle())
+@query("embedding_coreset_kcenter", oracle=_kcenter_oracle())
 def embedding_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Diversity-maximizing coreset: greedy k-center (Gonzalez 1985,
     2-approximation of the optimal covering radius) over the embedding
@@ -1389,7 +1385,7 @@ def pq_encode_expr(e: DataFrame, cents: DataFrame) -> DataFrame:
     return e.select("vec_id", F.posexplode(codes).alias("sub", "code"))
 
 
-@query("similarity_topk_pq", registered=False)  # approximate: recall pinned in tests
+@query("similarity_topk_pq")  # approximate: recall pinned in tests
 def similarity_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X5 memory-scale path: PQ/ADC shortlist + exact re-rank — the
     production serving pattern (asymmetric distance computation):
@@ -1599,7 +1595,7 @@ def pq_index_search(
     return _pq_adc_rerank(e, enc, cents, n_corpus, top_k)
 
 
-@query("similarity_topk_ivfpq", registered=False)  # approximate: recall pinned in tests
+@query("similarity_topk_ivfpq")  # approximate: recall pinned in tests
 def similarity_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X5 composed serving shape — IVF × PQ, the architecture a 100 TB
     ANN deployment actually runs (FAISS "IVFx,PQy"):
@@ -1832,7 +1828,6 @@ def _gemm_candidates(qids, qmat, take_k: int):
 
 @query(
     "similarity_topk_gemm",
-    registered=False,  # r12 rotation: demoted (bit-identical twin of similarity_topk)
     oracle=_EXACT_TOPK_CTE + "\n    SELECT query_id, vec_id, cos_sim, rk FROM exact",
 )
 def similarity_topk_gemm(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1991,9 +1986,6 @@ def ivfpq_index_add_vectors(
 
 @query(
     "pq_index_delta_add",
-    # r15 rotation: demoted for ivfpq_index_delta_add — the composed
-    # cells+codes maintenance strictly supersedes the flat-codes form
-    registered=False,
     # Contract form in the similarity_topk_ivf family, but the claim is
     # the r12 verdict's exact wording: recall HOLDS VS A FROM-SCRATCH
     # REBUILD on the grown corpus. The published rows are the EXACT
@@ -2089,8 +2081,6 @@ def _delta_recall_rows(
 
 @query(
     "ivfpq_index_delta_add",
-    # r15 rotation (r14 verdict #3): promoted — the composed serving
-    # index (cells + codes) is incrementally maintainable end to end
     # same contract form as pq_index_delta_add: published rows are the
     # exact top-k (oracle-mirrored) + the per-query delta-recall flag
     oracle=_EXACT_TOPK_CTE

@@ -107,7 +107,6 @@ def corpus_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "corpus_diff_summary",
-    registered=False,
     oracle=f"""
     SELECT status, CAST(count(*) AS BIGINT) AS n
     FROM ({_DIFF_SQL}) GROUP BY status

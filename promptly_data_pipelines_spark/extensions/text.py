@@ -104,7 +104,6 @@ def text_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_quality_score",
-    registered=False,
     oracle="""
     SELECT doc_id,
            CAST(length(text) AS INTEGER) AS n_char,
@@ -141,7 +140,6 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_token_count_regex",
-    registered=False,
     oracle="""
     SELECT doc_id,
            CAST(len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS INTEGER) AS n_tokens
@@ -219,7 +217,6 @@ def text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "doc_fingerprint",
-    registered=False,
     oracle="""
     SELECT doc_id,
            substr(md5(lower(trim(regexp_replace(text, ' +', ' ', 'g')))), 1, 16) AS fingerprint
@@ -258,7 +255,7 @@ _WINNOW_ORACLE = """
 """
 
 
-@query("doc_winnowing", registered=False, oracle=_WINNOW_ORACLE)
+@query("doc_winnowing", oracle=_WINNOW_ORACLE)
 def doc_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X6: rolling-hash document fingerprinting via winnowing
     (Schleimer/Wilkerson/Aiken, SIGMOD'03 — the MOSS algorithm):
@@ -352,7 +349,6 @@ def doc_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_lang_id",
-    registered=False,
     oracle="""
     WITH ws AS (
       SELECT doc_id, lang,
@@ -402,7 +398,6 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_doc_profile",
-    registered=False,
     oracle="""
     WITH ws AS (
       SELECT doc_id, lang, text,
@@ -499,7 +494,6 @@ def scrub_pii(text_col) -> "F.Column":
 
 @query(
     "pii_scrub",
-    registered=False,
     oracle="""
     SELECT doc_id, lang,
            regexp_replace(regexp_replace(regexp_replace(text,
@@ -549,7 +543,6 @@ def pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_repetition",
-    registered=False,  # r10 rotation: demoted to local tier (family keeps a driver row); pytest oracle-parity still covers it
     oracle="""
     WITH w0 AS (
       SELECT doc_id, list_filter(string_split(text, ' '), w -> w <> '') AS w
@@ -669,7 +662,6 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_length_histogram",
-    registered=False,
     oracle="""
     WITH b AS (
       SELECT lang,
@@ -719,7 +711,6 @@ def text_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_quality_prune",
-    registered=False,
     oracle="""
     WITH q AS (
       SELECT doc_id, lang,
@@ -786,7 +777,6 @@ def token_counts(d: DataFrame) -> DataFrame:
 
 @query(
     "text_vocab_coverage",
-    registered=False,
     oracle=f"""
     WITH toks AS (
       SELECT unnest(string_split(text, ' ')) AS token FROM documents
@@ -844,7 +834,6 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_tokenize_vocab",
-    registered=False,
     oracle=f"""
     WITH counts AS (
       SELECT token, count(*) AS n FROM (
@@ -935,7 +924,6 @@ def text_tokenize_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_nfc_normalize",
-    registered=False,
     oracle="""
     WITH staged AS (
       SELECT doc_id, replace(text, 'a', 'a' || chr(769)) AS raw FROM documents
@@ -992,7 +980,6 @@ PMI_MIN_COUNT = 5  # bigrams below this support are noise
 
 @query(
     "text_pmi_bigrams",
-    registered=False,
     oracle=f"""
     WITH toks AS (
       SELECT doc_id, list_filter(string_split(text, ' '), w -> w <> '') AS w
@@ -1086,7 +1073,6 @@ def text_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_char_entropy",
-    registered=False,
     oracle="""
     WITH t AS (
       SELECT doc_id, string_split(replace(text, ' ', ''), '') AS cs
@@ -1154,7 +1140,6 @@ RAKE_TOP_K = 20
 
 @query(
     "text_rake_keyphrases",
-    registered=False,
     oracle=f"""
     WITH toks AS (
       SELECT doc_id, w, i, w[i] AS tok
@@ -1285,7 +1270,7 @@ COMPRESS_RATIO_LOW = 0.25
 COMPRESS_RATIO_HIGH = 0.96875  # 31/32
 
 
-@query("text_compression_ratio", registered=False)
+@query("text_compression_ratio")
 def text_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """zlib compression ratio per document — the classic cheap quality
     signal (used by Gopher/RefinedWeb-class curation): highly

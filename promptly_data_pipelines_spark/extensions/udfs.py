@@ -44,7 +44,6 @@ def clip_scale():
 
 @query(
     "udf_pandas_scalar",
-    registered=False,
     oracle="""
     SELECT event_id,
            least(greatest(value, 10.0), 90.0) * 0.01 AS value_scaled
@@ -123,7 +122,6 @@ _minmax_scale_bucket = _minmax_for("bucket")
       FROM events
     )
     """,
-    registered=False,
 )
 def udf_grouped_map_coarse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2, realistic shape: applyInPandas over ~100 coarse groups
@@ -152,7 +150,6 @@ def udf_grouped_map_coarse(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM events
     )
     """,
-    registered=False,
 )
 def udf_grouped_map_window_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The JVM window-function twin of udf_grouped_map: identical
@@ -203,7 +200,6 @@ def salted_partial_agg(ev: DataFrame, n_salts: int = 16) -> DataFrame:
 
 @query(
     "udtf_chunk_windows",
-    registered=False,
     oracle=CHUNK_WINDOWS_ORACLE,
 )
 def udtf_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -244,7 +240,6 @@ def udtf_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "cogroup_order_reconcile",
-    registered=False,
     oracle="""
     WITH o AS (
       SELECT o_orderkey, CAST(count(*) AS BIGINT) AS n_orders,

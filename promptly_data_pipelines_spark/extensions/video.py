@@ -261,7 +261,6 @@ def multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "multimodal_video_sample",
-    registered=False,
     oracle="""
     WITH params AS (
       SELECT doc_id, 2 + doc_id % 4 AS n_frames FROM documents

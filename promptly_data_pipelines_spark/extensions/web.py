@@ -248,7 +248,6 @@ def _canonicalized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "url_canonicalize",
-    registered=False,
     oracle=f"""
     WITH staged AS ({_STAGE_SQL}),
     canon AS ({_CANON_SQL})
@@ -264,7 +263,6 @@ def url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "url_dedup_canonical",
-    registered=False,
     oracle=f"""
     WITH staged AS ({_STAGE_SQL}),
     canon AS ({_CANON_SQL}),
@@ -323,7 +321,6 @@ _DOMAIN_STATS_SQL = f"""
 
 @query(
     "domain_reputation_gate",
-    registered=False,
     oracle=f"""
     WITH staged AS ({_STAGE_SQL}),
     canon AS ({_CANON_SQL})
@@ -340,7 +337,6 @@ def domain_reputation_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sample_domain_cap",
-    registered=False,
     oracle=f"""
     WITH staged AS ({_STAGE_SQL}),
     canon AS ({_CANON_SQL})
@@ -368,7 +364,6 @@ def sample_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "web_url_curation",
-    registered=False,
     oracle=f"""
     WITH staged AS ({_STAGE_SQL}),
     canon AS ({_CANON_SQL}),
@@ -482,7 +477,6 @@ def stage_html(docs: DataFrame) -> DataFrame:
 
 @query(
     "text_html_strip",
-    registered=False,
     oracle=f"""
     WITH staged AS ({_HTML_STAGE_SQL})
     SELECT doc_id,

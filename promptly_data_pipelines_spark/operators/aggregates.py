@@ -22,7 +22,6 @@ from ..registry import query
 
 @query(
     "agg_count",
-    registered=False,
     oracle="SELECT CAST(count(*) AS BIGINT) AS n_rows FROM lineitem",
 )
 def agg_count(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -80,7 +79,6 @@ def agg_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_having",
-    registered=False,
     oracle="""
     SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_orders,
            round(sum(o_totalprice), 2) AS total_spend
@@ -105,7 +103,6 @@ def agg_having(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_subset",
-    registered=False,  # r10 rotation: demoted to local tier (family keeps a driver row); pytest oracle-parity still covers it
     oracle="""
     SELECT lang, source, doc_id, n_chars
     FROM (
@@ -163,7 +160,6 @@ def dedup_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_count_distinct",
-    registered=False,  # r13 session 2: demoted for agg_kmv_set_ops (the sketch set-algebra form); oracle kept, exact semantics driver-visible via dq_suite
     oracle="""
     SELECT event_type,
            CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
@@ -185,7 +181,6 @@ def agg_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_monthly_orders",
-    registered=False,
     oracle="""
     SELECT strftime(date_trunc('month', o_orderdate), '%Y-%m') AS order_month,
            o_orderstatus,
@@ -210,7 +205,7 @@ def agg_monthly_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("agg_approx_count_distinct", registered=False)  # no oracle: HLL++ sketch != DuckDB's sketch
+@query("agg_approx_count_distinct")  # no oracle: HLL++ sketch != DuckDB's sketch
 def agg_approx_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6 (scale path): approx_count_distinct (HyperLogLog++, rsd=1%).
     Single aggregation pass, fixed-size sketch per group — this is the
@@ -224,7 +219,6 @@ def agg_approx_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_rollup",
-    registered=False,
     oracle="""
     SELECT lang, source,
            CAST(GROUPING(lang, source) AS BIGINT) AS gid,
@@ -255,7 +249,6 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_cube",
-    registered=False,
     oracle="""
     SELECT lang, source,
            CAST(GROUPING(lang, source) AS BIGINT) AS gid,
@@ -287,7 +280,6 @@ _PIVOT_LANGS = ("de", "en", "es", "fr", "zh")
 
 @query(
     "agg_pivot",
-    registered=False,
     oracle="""
     SELECT source,
            CAST(sum(CASE WHEN lang = 'de' THEN 1 ELSE 0 END) AS BIGINT) AS de,
@@ -321,7 +313,6 @@ def agg_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_decimal",
-    registered=False,
     oracle="""
     SELECT l_returnflag, l_linestatus,
            CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
@@ -363,7 +354,6 @@ def agg_decimal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_unpivot",
-    registered=False,
     oracle="""
     WITH a AS (
       SELECT o_orderpriority,
@@ -400,7 +390,6 @@ def agg_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_percentiles",
-    registered=False,
     oracle="""
     SELECT l_returnflag,
            quantile_cont(l_quantity, 0.25) AS q25,
@@ -434,7 +423,7 @@ def agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("agg_hll_sketch_rollup", registered=False)
+@query("agg_hll_sketch_rollup")
 def agg_hll_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The MERGEABLE-sketch pattern (Apache DataSketches HLL, native in
     Spark 4): per-event-type user sketches plus a __total__ row whose
@@ -477,7 +466,6 @@ def agg_hll_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_grouping_sets",
-    registered=False,
     oracle="""
     SELECT o_orderpriority, o_orderstatus,
            CAST(count(*) AS BIGINT) AS n_orders,

@@ -68,7 +68,6 @@ def split_corrupt(
 
 @query(
     "scan_json_quarantine",
-    registered=False,  # registered window full; pytest oracle-parity covers it
     oracle="""
     SELECT event_type,
            CAST(count(*) AS BIGINT) AS n_rows,

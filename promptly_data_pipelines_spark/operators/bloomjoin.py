@@ -109,7 +109,6 @@ def bloom_prefilter_join(
 
 @query(
     "join_bloom_prefilter",
-    registered=False,
     oracle="""
     SELECT o.o_orderkey, o.o_custkey, o.o_totalprice, c.c_name
     FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey

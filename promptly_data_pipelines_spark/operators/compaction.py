@@ -109,7 +109,6 @@ def compact_partitioned(
 
 @query(
     "compact_small_files",
-    registered=False,  # registered window full; pytest oracle-parity covers it
     oracle="""
     SELECT strftime(ts, '%Y-%m-%d') AS day,
            CAST(count(*) AS BIGINT) AS n_rows,

@@ -48,7 +48,6 @@ def read_merged(spark: SparkSession, path: str) -> DataFrame:
 
 @query(
     "scan_schema_evolution",
-    registered=False,  # registered window full; pytest oracle-parity covers it
     oracle="""
     SELECT coalesce(CASE WHEN event_id % 2 = 1 THEN event_type END, 'unknown')
              AS event_type,

@@ -22,7 +22,6 @@ from ..registry import query
 
 @query(
     "join_left_equi",
-    registered=False,
     oracle="""
     SELECT c.c_custkey, c.c_name, n.n_name AS nation_name, r.r_name AS region_name
     FROM customer c
@@ -50,7 +49,6 @@ def join_left_equi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "join_inner_equi",
-    registered=False,
     oracle="""
     SELECT o.o_orderkey, o.o_totalprice, c.c_name, c.c_mktsegment
     FROM orders o
@@ -71,7 +69,6 @@ def join_inner_equi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "join_anti",
-    registered=False,
     oracle="""
     SELECT c.c_custkey, c.c_name
     FROM customer c
@@ -88,7 +85,6 @@ def join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "join_semi",
-    registered=False,
     oracle="""
     SELECT c.c_custkey, c.c_name
     FROM customer c
@@ -104,7 +100,6 @@ def join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "join_equi",
-    registered=False,
     oracle="""
     SELECT o.o_orderkey, o.o_totalprice, c.c_name, c.c_mktsegment,
            n.n_name AS nation_name, r.r_name AS region_name
@@ -171,7 +166,6 @@ def join_anti_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "join_case_agg",
-    registered=False,  # r10 rotation: demoted to local tier (family keeps a driver row); pytest oracle-parity still covers it
     oracle="""
     SELECT p.p_brand,
            round(sum(CASE WHEN p.p_type LIKE 'PROMO%'
@@ -308,7 +302,6 @@ def asof_join(
 
 @query(
     "join_asof",
-    registered=False,
     oracle="""
     SELECT e.event_id, e.user_id, e.event_type,
            strftime(e.ts, '%Y-%m-%d %H:%M:%S.%f') AS ts_str,
@@ -384,7 +377,6 @@ def interval_join(
 
 @query(
     "join_range",
-    registered=False,
     oracle="""
     WITH days AS (SELECT DISTINCT date_trunc('day', ts) AS day FROM events),
     win AS (
@@ -428,7 +420,6 @@ def join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "join_full_outer",
-    registered=False,
     oracle="""
     WITH h1 AS (
       SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_before
@@ -495,7 +486,6 @@ def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "join_fuzzy",
-    registered=False,
     oracle="""
     WITH dirty AS (
       SELECT s_suppkey AS d_key,
@@ -555,7 +545,6 @@ ASOF_TOLERANCE_DAYS = 3
 
 @query(
     "join_asof_tolerance",
-    registered=False,
     oracle=f"""
     WITH matched AS (
       SELECT e.event_id, e.user_id,
@@ -808,7 +797,7 @@ _SKEW_JOIN_ORACLE = """
 """
 
 
-@query("join_salted_skew", registered=False, oracle=_SKEW_JOIN_ORACLE)  # r14 rotation: chooser supersedes
+@query("join_salted_skew", oracle=_SKEW_JOIN_ORACLE)
 def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact-fact join (orders ⋈ lineitem on orderkey) through
     :func:`salted_inner_join`, then the rollup a reporting query wants.
@@ -833,7 +822,7 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("join_skew_unsalted", registered=False, oracle=_SKEW_JOIN_ORACLE)
+@query("join_skew_unsalted", oracle=_SKEW_JOIN_ORACLE)
 def join_skew_unsalted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The naive form of join_salted_skew: same shuffle_hash fact-fact
     join keyed on the raw orderkey (same hint, so the ONLY difference
@@ -917,7 +906,7 @@ def hotcold_split_join(
     return joined_hot.unionByName(joined_cold)
 
 
-@query("join_hotcold_skew", oracle=_SKEW_JOIN_ORACLE)  # r13 rotation: promoted (r12 verdict #5)
+@query("join_hotcold_skew", oracle=_SKEW_JOIN_ORACLE)
 def join_hotcold_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     """join_salted_skew's strategy rival on the identical workload and
     oracle: hot/cold split (hot keys broadcast + map-side, cold keys
@@ -1021,7 +1010,7 @@ def _null_skew_rollup(joined: DataFrame) -> DataFrame:
     )
 
 
-@query("join_null_skew_naive", registered=False, oracle=_NULL_SKEW_ORACLE)
+@query("join_null_skew_naive", oracle=_NULL_SKEW_ORACLE)
 def join_null_skew_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The naive A of the A/B: plain shuffled left join of the
     NULL-heavy probe — every NULL-FK row hashes to ONE reduce task and,
@@ -1035,7 +1024,7 @@ def join_null_skew_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _null_skew_rollup(joined)
 
 
-@query("left_join_null_skew", registered=False, oracle=_NULL_SKEW_ORACLE)
+@query("left_join_null_skew", oracle=_NULL_SKEW_ORACLE)
 def left_join_null_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The routed B: :func:`null_routed_left_join` keeps the NULL mass
     out of the shuffle entirely (it unions back map-side with typed
@@ -1136,7 +1125,7 @@ def _left_skew_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("join_left_skew_naive", registered=False, oracle=_LEFT_SKEW_ORACLE)
+@query("join_left_skew_naive", oracle=_LEFT_SKEW_ORACLE)
 def join_left_skew_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Naive A of the composed outer-skew A/B: plain shuffled left
     join where BOTH the NULL mass and the viral non-null key pile onto
@@ -1148,7 +1137,7 @@ def join_left_skew_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _null_skew_rollup(joined)
 
 
-@query("left_join_skew_salted", registered=False, oracle=_LEFT_SKEW_ORACLE)
+@query("left_join_skew_salted", oracle=_LEFT_SKEW_ORACLE)
 def left_join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Routed+salted B: NULLs bypass the shuffle, the viral key spreads
     over SALT_N reducers. On the driver fixtures neither mitigation
@@ -1269,7 +1258,7 @@ def adaptive_inner_join(
     )
 
 
-@query("join_adaptive_skew", oracle=_SKEW_JOIN_ORACLE)  # r14 rotation: promoted (r13 verdict #4)
+@query("join_adaptive_skew", oracle=_SKEW_JOIN_ORACLE)
 def join_adaptive_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The salted/hotcold workload through the ADAPTIVE chooser: on the
     driver fixtures the orders side fits a broadcast and the plan is
@@ -1349,7 +1338,7 @@ def adaptive_left_join(
     ).unionByName(null_rows)
 
 
-@query("left_join_adaptive", registered=False, oracle=_LEFT_SKEW_ORACLE)
+@query("left_join_adaptive", oracle=_LEFT_SKEW_ORACLE)
 def left_join_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed outer-skew workload (1/3 NULL FK + viral non-null
     key) through the ADAPTIVE left chooser: on the driver fixtures

@@ -47,18 +47,18 @@ def clustered_write(
     """Write ``df`` date-partitioned with rows range-clustered by
     ``cluster_cols`` inside each partition.
 
-    repartition on the partition column co-locates each partition's
-    rows (avoiding the writers×partitions small-file blowup), then an
-    in-task sort orders them by the cluster key — a local sort, no
-    extra shuffle — so every row group's min/max on the cluster
-    columns is a narrow slice of the value space. Hashing on the
-    partition column alone means ONE writer task (and file) per
-    partition: right for clustering (the sort must see the whole
-    partition), and a partition too big for one file is
-    compact_partitioned's job afterwards — its salted rewrite keeps
-    contiguous z/cluster runs within each output bucket."""
+    partition_for_write co-locates each partition's rows (avoiding the
+    writers×partitions small-file blowup), then an in-task sort orders
+    them by the cluster key — a local sort, no extra shuffle — so
+    every row group's min/max on the cluster columns is a narrow slice
+    of the value space. Hashing on the partition column alone means
+    ONE writer task (and file) per partition: right for clustering
+    (the sort must see the whole partition), and a partition too big
+    for one file is compact_partitioned's job afterwards — its salted
+    rewrite keeps contiguous z/cluster runs within each output
+    bucket."""
     (
-        df.repartition(F.col(partition_col))
+        partition_for_write(df, partition_col)
         .sortWithinPartitions(partition_col, *cluster_cols)
         .write.mode("overwrite")
         .partitionBy(partition_col)
@@ -80,7 +80,6 @@ def partition_for_write(df: DataFrame, partition_col: str) -> DataFrame:
 
 @query(
     "layout_clustered_scan",
-    registered=False,  # registered window full; pytest oracle-parity covers it
     oracle="""
     SELECT CAST(user_id AS BIGINT) AS user_id,
            strftime(ts, '%Y-%m-%d') AS day,
@@ -187,8 +186,7 @@ def zorder_write(
         return
     zkey = zorder_key(F.col(a), F.col(b), lo_a, hi_a, lo_b, hi_b)
     (
-        df.withColumn("__z", zkey)
-        .repartition(F.col(partition_col))
+        partition_for_write(df.withColumn("__z", zkey), partition_col)
         .sortWithinPartitions(partition_col, "__z")
         .drop("__z")
         .write.mode("overwrite")
@@ -199,7 +197,6 @@ def zorder_write(
 
 @query(
     "layout_zorder_scan",
-    registered=False,  # registered window full; pytest oracle-parity covers it
     oracle="""
     SELECT CAST(user_id AS BIGINT) AS user_id,
            CAST(event_id AS BIGINT) AS event_id,

@@ -22,7 +22,6 @@ from ..registry import query
 
 @query(
     "project_alias",
-    registered=False,
     oracle="""
     SELECT c_custkey AS customer_id,
            c_name AS customer_name,
@@ -42,7 +41,6 @@ def project_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "filter_notnull",
-    registered=False,
     oracle="""
     SELECT event_id, event_type, value
     FROM events
@@ -60,7 +58,6 @@ def filter_notnull(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "json_extract",
-    registered=False,
     oracle="""
     SELECT event_id,
            props->>'$.k' AS k_str,
@@ -83,7 +80,6 @@ def json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "cast_types",
-    registered=False,
     oracle="""
     SELECT event_id,
            CAST(trunc(value) AS INTEGER) AS value_int,
@@ -108,7 +104,6 @@ def cast_types(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "regex_clean",
-    registered=False,
     oracle="""
     SELECT c_custkey,
            regexp_replace(c_name, '[0-9]+', '#', 'g') AS name_masked,
@@ -134,7 +129,6 @@ def regex_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "date_format_key",
-    registered=False,
     oracle="""
     SELECT strftime(ts, '%Y-%m-%d') AS ingestion_date,
            CAST(count(*) AS BIGINT) AS n_events
@@ -155,7 +149,6 @@ def date_format_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "nullif_literal",
-    registered=False,
     oracle="""
     SELECT event_id,
            nullif(event_type, 'error') AS event_type_clean,
@@ -177,7 +170,6 @@ def nullif_literal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "case_when_map",
-    registered=False,
     oracle="""
     SELECT event_id,
            CASE event_type
@@ -210,7 +202,6 @@ def case_when_map(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "string_funcs",
-    registered=False,
     oracle="""
     SELECT c_custkey,
            upper(c_name) AS name_upper,
@@ -240,7 +231,6 @@ def string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "epoch_to_ts",
-    registered=False,
     oracle="""
     SELECT event_id,
            epoch_ms(ts) AS ts_ms,
@@ -264,7 +254,6 @@ def epoch_to_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "project_strings",
-    registered=False,
     oracle="""
     SELECT c_custkey AS customer_id,
            c_name AS customer_name,
@@ -368,10 +357,6 @@ def project_events_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "arith_expr",
-    registered=False,  # r5 rotation: P13 stays oracle-checked in the
-    # local pytest tier; its driver slot went to text_repetition (the
-    # projections family keeps project_strings + project_events_clean
-    # as driver rows)
     oracle="""
     SELECT l_orderkey, l_linenumber,
            round(l_extendedprice * (1 - l_discount), 4) AS net_price,
@@ -400,7 +385,6 @@ def arith_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "project_interval",
-    registered=False,
     oracle="""
     SELECT event_id,
            strftime(ts + INTERVAL 90 MINUTE, '%Y-%m-%d %H:%M:%S') AS due_ts,
@@ -437,7 +421,6 @@ def project_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "json_variant_extract",
-    registered=False,
     oracle="""
     SELECT event_id,
            CAST(props->>'$.k' AS BIGINT) AS k_variant,

@@ -38,7 +38,6 @@ def _session_tag(spark: SparkSession) -> str:
 
 @query(
     "scan_parquet",
-    registered=False,
     oracle="""
     SELECT l_orderkey, l_partkey, l_quantity, l_extendedprice
     FROM lineitem
@@ -171,7 +170,6 @@ def write_jdbc(df: DataFrame, url: str, dbtable: str, mode: str = "append", **op
 
 @query(
     "scan_orc_roundtrip",
-    registered=False,
     oracle="SELECT n_nationkey, n_name, n_regionkey FROM nation",
 )
 def scan_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -194,7 +192,6 @@ def scan_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "scan_jsonl_roundtrip",
-    registered=False,
     oracle="SELECT event_id, ts, user_id, event_type, value, props FROM events",
 )
 def scan_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -238,7 +235,6 @@ _EXPORT_SUM_MASK = (1 << 40) - 1  # 40-bit per-doc hash: 2^23 docs/shard
 
 @query(
     "export_jsonl_manifest",
-    registered=False,
     oracle=f"""
     SELECT CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
              % {N_EXPORT_SHARDS} AS shard,
@@ -273,6 +269,7 @@ def export_jsonl_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the manifest pass streams the written bytes once."""
     from ..extensions.hashing import _md5_word
     from ..extensions.sampling import hash_bucket
+    from .layout import partition_for_write  # layout imports this module
 
     out = os.path.join(
         tempfile.gettempdir(),
@@ -286,7 +283,7 @@ def export_jsonl_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     sharded = d.withColumn(
         "shard", hash_bucket("doc_id", N_EXPORT_SHARDS).cast("bigint")
     )
-    sharded.repartition("shard").write.mode("overwrite").partitionBy("shard").json(out)
+    partition_for_write(sharded, "shard").write.mode("overwrite").partitionBy("shard").json(out)
     back = spark.read.schema(sharded.schema).json(out)
     return back.groupBy("shard").agg(
         F.count("*").cast("bigint").alias("n_docs"),
@@ -299,7 +296,6 @@ def export_jsonl_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "project_xml",
-    registered=False,
     oracle="""
     SELECT event_id, user_id AS xml_user, event_type AS xml_type
     FROM events
@@ -342,7 +338,6 @@ _BINARYFILE_CAP = 200  # absolute id bound: staging stays harness-sized at every
 
 @query(
     "scan_binaryfile",
-    registered=False,
     oracle=f"""
     SELECT doc_id,
            CAST(strlen(text) AS BIGINT) AS n_bytes,
@@ -391,7 +386,6 @@ def scan_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "scan_xml_roundtrip",
-    registered=False,
     oracle="SELECT s_suppkey, s_name, s_nationkey FROM supplier",
 )
 def scan_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:

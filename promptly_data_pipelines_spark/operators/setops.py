@@ -48,7 +48,6 @@ def union_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "except_diff",
-    registered=False,
     oracle="""
     SELECT c_nationkey AS nationkey FROM customer
     EXCEPT ALL
@@ -65,7 +64,6 @@ def except_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "intersect_keys",
-    registered=False,
     oracle="""
     SELECT DISTINCT c_nationkey AS nationkey FROM customer
     INTERSECT

@@ -21,7 +21,6 @@ from ..registry import query
 
 @query(
     "limit_n",
-    registered=False,
     oracle="""
     SELECT o_orderkey, o_custkey, o_totalprice
     FROM orders
@@ -43,7 +42,6 @@ def limit_n(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sort_order",
-    registered=False,
     oracle="""
     SELECT c_mktsegment, c_custkey, c_name, c_acctbal
     FROM customer

@@ -53,7 +53,6 @@ def sql_surface_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sql_exists_subquery",
-    registered=False,
     oracle="""
     SELECT o.o_orderpriority, CAST(count(*) AS BIGINT) AS order_count
     FROM orders o
@@ -88,7 +87,6 @@ def sql_exists_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sql_in_subquery",
-    registered=False,
     oracle="""
     SELECT s_suppkey, s_name, round(s_acctbal, 2) AS acctbal
     FROM supplier
@@ -112,7 +110,6 @@ def sql_in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sql_scalar_subquery",
-    registered=False,
     oracle="""
     WITH m AS (SELECT round(sum(o_totalprice), 2) / count(*) AS avg_price FROM orders)
     SELECT o_orderkey, o_totalprice
@@ -138,7 +135,6 @@ def sql_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "pipeline_orchestrated",
-    registered=False,
     oracle="""
     WITH raw_events AS (
       SELECT event_id, user_id, nullif(event_type, 'error') AS event_type, value
@@ -206,7 +202,6 @@ def pipeline_orchestrated(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sql_subqueries",
-    registered=False,
     oracle="""
     SELECT o.o_orderpriority,
            CAST(count(*) AS BIGINT) AS order_count,

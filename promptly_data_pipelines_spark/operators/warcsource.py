@@ -663,7 +663,6 @@ def scan_warc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "scan_warc_gz",
-    registered=False,  # gz twin of the driver row scan_warc; parity-checked
     oracle=f"""
     SELECT doc_id,
            'response' AS warc_type,
@@ -706,7 +705,6 @@ def _warc_projection(raw: DataFrame) -> DataFrame:
 
 @query(
     "stream_exec_warc",
-    registered=False,
     oracle=f"""
     SELECT doc_id,
            'response' AS warc_type,
@@ -757,7 +755,6 @@ def stream_exec_warc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sink_warc",
-    registered=False,  # registered window full; pytest oracle-parity covers it
     oracle=f"""
     SELECT doc_id,
            'response' AS warc_type,
@@ -797,7 +794,6 @@ def sink_warc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_warc_relay",
-    registered=False,  # registered window full; pytest oracle-parity covers it
     oracle=f"""
     SELECT doc_id,
            'response' AS warc_type,
@@ -890,7 +886,7 @@ _WET_ORACLE = f"""
 """
 
 
-@query("warc_wet_extract", registered=False, oracle=_WET_ORACLE)
+@query("warc_wet_extract", oracle=_WET_ORACLE)
 def warc_wet_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Common Crawl WET story end to end through the REAL custom
     source: documents staged as HTML pages, archived as ``.warc.gz``

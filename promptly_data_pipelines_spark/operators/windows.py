@@ -22,7 +22,6 @@ from ..registry import query
 
 @query(
     "window_row_number",
-    registered=False,
     oracle="""
     SELECT user_id, event_id, event_type, rn
     FROM (
@@ -45,7 +44,6 @@ def window_row_number(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "window_rank",
-    registered=False,
     oracle="""
     SELECT c_nationkey, c_custkey, c_acctbal, bal_rank, bal_dense_rank
     FROM (
@@ -71,7 +69,6 @@ def window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "window_sliding_avg",
-    registered=False,
     oracle="""
     SELECT user_id, event_id,
            round(sum(value) OVER w10, 2) / count(*) OVER w10 AS moving_avg,
@@ -110,7 +107,6 @@ def window_sliding_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "window_lag",
-    registered=False,
     oracle="""
     SELECT user_id, event_id,
            round(value, 2) AS value,
@@ -195,7 +191,6 @@ def window_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "window_distribution",
-    registered=False,
     oracle="""
     SELECT o_orderkey, o_orderpriority, o_totalprice,
            percent_rank() OVER w AS pct_rank,
@@ -231,7 +226,6 @@ SESSION_GAP_MS = 30 * 60 * 1000
 
 @query(
     "sessionize_gaps",
-    registered=False,
     oracle=f"""
     WITH e AS (
       SELECT user_id, event_id, ts, epoch_ms(ts) AS ms FROM events
@@ -290,7 +284,6 @@ def sessionize_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "events_funnel",
-    registered=False,
     oracle="""
     WITH firsts AS (
       SELECT user_id,
@@ -349,7 +342,6 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "events_gap_fill",
-    registered=False,
     oracle="""
     WITH daily AS (
       SELECT user_id, CAST(ts AS DATE) AS day,
@@ -418,7 +410,6 @@ def events_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "events_retention_curve",
-    registered=False,
     oracle="""
     WITH du AS (
       SELECT DISTINCT CAST(ts AS DATE) AS day, user_id FROM events
@@ -464,7 +455,6 @@ EMA_HALF_LIFE_DAYS = 7.0
 
 @query(
     "events_ema",
-    registered=False,
     oracle=f"""
     WITH w AS (
       SELECT user_id, value,
@@ -542,7 +532,6 @@ def ema_agg() -> F.Column:
 
 @query(
     "events_transition_matrix",
-    registered=False,
     oracle="""
     WITH ordered AS (
       SELECT user_id, event_type,
@@ -595,7 +584,6 @@ def events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "customers_rfm_segments",
-    registered=False,
     oracle="""
     WITH anchor AS (SELECT max(o_orderdate) AS mx FROM orders),
     cust AS (
@@ -667,7 +655,6 @@ def customers_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "events_user_features",
-    registered=False,
     oracle=f"""
     WITH base AS (
       SELECT user_id,
@@ -735,7 +722,6 @@ def events_user_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "orders_cohort_retention",
-    registered=False,
     oracle="""
     WITH activity AS (
       SELECT DISTINCT o_custkey, date_trunc('month', o_orderdate) AS am
@@ -806,7 +792,6 @@ def orders_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "orders_pareto_share",
-    registered=False,
     oracle="""
     WITH cust AS (
       SELECT o_custkey, round(sum(o_totalprice), 2) AS revenue
@@ -870,7 +855,7 @@ def orders_pareto_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "window_resample_locf",  # r13 rotation: promoted (r12 verdict #5)
+    "window_resample_locf",
     oracle="""
     WITH bounds AS (
       SELECT user_id,

@@ -78,7 +78,6 @@ def curate_corpus(d: DataFrame) -> DataFrame:
 
 @query(
     "corpus_prep",
-    registered=False,
     oracle=f"""
     WITH quality AS (
       SELECT doc_id, lang, text,

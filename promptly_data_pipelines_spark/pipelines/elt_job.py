@@ -145,7 +145,6 @@ def run_elt(spark: SparkSession, sf_dir: str, warehouse: str) -> dict:
 
 @query(
     "elt_pipeline_run",
-    registered=False,
     # Full value oracle for the END-TO-END job (r6 — was rows-only):
     # the curated product is SQL-expressible even though the pipeline
     # runs through envelope encode/decode and parquet sinks — live

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..functions import ts_str, date_key
+from ..operators.layout import partition_for_write
 from ..operators.scans import _session_tag
 from ..registry import query
 
@@ -100,7 +101,9 @@ def incremental_run(
     # raw append, staged per batch id: partitioned by day inside the
     # batch dir so the rollup's re-read below prunes directories.
     batch_dir = os.path.join(raw_dir, f"batch_id={batch_id}")
-    staged.repartition("day").write.mode("overwrite").partitionBy("day").parquet(batch_dir)
+    partition_for_write(staged, "day").write.mode("overwrite").partitionBy("day").parquet(
+        batch_dir
+    )
 
     # affected-day set + per-day max ts in ONE aggregate over the
     # JUST-WRITTEN batch parquet (schema supplied, so an empty batch
@@ -136,7 +139,7 @@ def incremental_run(
         )
     )
     (
-        rebuilt.repartition("day")
+        partition_for_write(rebuilt, "day")
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("day")
@@ -203,7 +206,6 @@ def arrival_batches(events: DataFrame, ts_col: str = "ts") -> list[DataFrame]:
 
 @query(
     "stream_exec_incremental",
-    registered=False,  # registered window full; pytest oracle-parity covers it
     oracle="""
     SELECT strftime(ts, '%Y-%m-%d') AS day, event_type,
            CAST(count(*) AS BIGINT) AS n_events,
@@ -263,7 +265,6 @@ def stream_exec_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "incremental_rollup",
-    registered=False,  # registered window full; pytest oracle-parity covers it
     oracle="""
     SELECT strftime(ts, '%Y-%m-%d') AS day, event_type,
            CAST(count(*) AS BIGINT) AS n_events,

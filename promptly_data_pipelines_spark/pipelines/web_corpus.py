@@ -60,7 +60,6 @@ MIN_CLEAN_WORDS = 8  # post-dedup floor: template-only shells drop here
 
 @query(
     "web_corpus_prep",
-    registered=False,
     oracle=f"""
     WITH staged AS (
       SELECT doc_id, lang, {_TEMPLATE_SQL} AS text FROM documents

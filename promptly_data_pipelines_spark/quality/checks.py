@@ -135,7 +135,6 @@ def run_suite(checks: dict[str, DataFrame]) -> DataFrame:
 
 @query(
     "dq_unique",
-    registered=False,  # r10 rotation: demoted to local tier (family keeps a driver row); pytest oracle-parity still covers it
     oracle="""
     SELECT lang, source, CAST(count(*) AS BIGINT) AS n_dups
     FROM documents
@@ -151,7 +150,6 @@ def dq_unique(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dq_not_null",
-    registered=False,  # r10 rotation: demoted to local tier (family keeps a driver row); pytest oracle-parity still covers it
     oracle="""
     WITH agg AS (
       SELECT CAST(sum(CASE WHEN event_type IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS c_event_type,
@@ -175,7 +173,6 @@ def dq_not_null(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dq_relationships",
-    registered=False,
     oracle="""
     SELECT o_custkey AS orphan_key, CAST(count(*) AS BIGINT) AS n_rows
     FROM orders o
@@ -198,7 +195,6 @@ def dq_relationships(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dq_volume_anomaly",
-    registered=False,
     oracle="""
     WITH daily AS (
       SELECT strftime(ts, '%Y-%m-%d') AS d, CAST(count(*) AS BIGINT) AS n
@@ -255,7 +251,6 @@ def dq_volume_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dq_metrics",
-    registered=False,
     oracle="""
     SELECT CAST(count(*) AS BIGINT) AS row_count,
            CAST(count(DISTINCT user_id) AS BIGINT) AS key_cardinality,
@@ -435,7 +430,6 @@ CORPUS_GATE_SUITE: list[dict] = [
 
 @query(
     "dq_corpus_gate",
-    registered=False,
     oracle="""
     SELECT 'volume_min' AS check_name, 'documents' AS table_name,
            'min_rows=100' AS column_name,
@@ -490,7 +484,6 @@ PSI_CUTOVER = "2024-01-16"
 
 @query(
     "dq_drift_psi",
-    registered=False,
     oracle=f"""
     WITH binned AS (
       SELECT least(CAST(floor(value / {PSI_BIN_WIDTH}) AS BIGINT), {PSI_MAX_BIN}) AS bin,
@@ -562,7 +555,6 @@ def dq_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dq_functional_dep",
-    registered=False,
     oracle="""
     WITH pairs AS (
       SELECT DISTINCT c_nationkey, c_mktsegment FROM customer
@@ -628,7 +620,6 @@ Z_THRESHOLD = 2.5
 
 @query(
     "dq_value_outliers",
-    registered=False,
     oracle=f"""
     WITH stats AS (
       SELECT event_type,
@@ -690,7 +681,6 @@ RECON_TOLERANCE = 0.01  # absolute currency tolerance
 
 @query(
     "dq_cross_table_reconcile",
-    registered=False,
     oracle=f"""
     WITH li AS (
       SELECT l_orderkey,

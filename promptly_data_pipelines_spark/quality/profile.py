@@ -55,7 +55,6 @@ def profile_columns(df: DataFrame, cols: list[str], approx: bool = False) -> Dat
 
 @query(
     "dq_profile",
-    registered=False,  # registered window full; pytest oracle-parity covers it
     oracle="""
     WITH s AS (
       SELECT count(*) AS n,
@@ -89,7 +88,6 @@ def dq_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dq_quantiles",
-    registered=False,  # r12 rotation: demoted (DQ family keeps dq_suite)
     oracle="""
     SELECT event_type,
            CAST(count(*) AS BIGINT) AS n,

@@ -7,20 +7,20 @@ sf=0.01 and compares row-count + schema + order-insensitive value
 hash — so registered queries must alias every computed column
 identically on both sides and avoid nondeterminism.
 
-Two tiers:
+Two tiers, decided by ``_ORDER`` alone:
 
-- **registered** (``registered=True``, the default): exposed to the
-  driver through ``all_queries()``/``all_oracles()``. The driver
-  records a CORRECTNESS row for at most ~50 queries in registration
-  order, so this tier is a curated set of ≤50 composite queries that
-  together cover every SURVEY.md §2 operator family. ``_ORDER`` pins
-  the registration order explicitly (family representatives first) and
-  ``_load_all`` fails loudly if it drifts from the registered set.
-- **local-only** (``registered=False``): fine-grained single-operator
-  variants and demonstrations. Not shown to the driver, but the local
-  pytest oracle-parity suite (tests/test_oracle_parity.py) runs them
-  against DuckDB exactly like registered ones, so their correctness
-  stays continuously verified.
+- **registered**: the names in ``_ORDER``, exposed to the driver
+  through ``all_queries()``/``all_oracles()`` in that order. The
+  driver records a CORRECTNESS row for at most ~50 queries in
+  registration order, so this tier is a curated set of ≤50 composite
+  queries that together cover every SURVEY.md §2 operator family.
+- **local-only**: every other registered name — fine-grained
+  single-operator variants and demonstrations. Not shown to the
+  driver, but the local pytest oracle-parity suite
+  (tests/test_oracle_parity.py) runs them against DuckDB exactly like
+  registered ones, so their correctness stays continuously verified.
+
+Rotating a query between tiers means editing ``_ORDER`` only.
 """
 
 from __future__ import annotations
@@ -34,55 +34,40 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 _QUERIES: dict[str, QueryFn] = {}
 _ORACLE: dict[str, str] = {}
-_LOCAL_QUERIES: dict[str, QueryFn] = {}
-_LOCAL_ORACLE: dict[str, str] = {}
 
-# Driver-visible registration order: one representative per query
-# family first (dedup, similarity, text, UDF, DQ, sampling, multimodal),
-# then the §2 operator core. Every name here must be registered with
-# registered=True and vice versa — _load_all asserts the bijection.
+# Driver-visible tier and order: one representative per query family
+# first (dedup, similarity, text, UDF, DQ, sampling, multimodal), then
+# the §2 operator core. Every other registered query is local-only.
 _ORDER: tuple[str, ...] = (
-    # flagship + LLM-pipeline families (front-loaded: these are the
-    # rows that round 1's 50-query correctness window cut off)
+    # flagship + LLM-pipeline families, front-loaded so a short
+    # correctness window still reaches them
     "flagship_curated",
     "dedup_exact",
     "dedup_ngram_jaccard",
     "dedup_embedding_cosine",
     "dedup_near_text",
     "dedup_simhash",
-    # r12 rotation: dedup_decontaminate / dedup_cluster_cc demoted to
-    # local tier (family keeps 5 rows); entity-resolution family gets
-    # its first driver rows (r11 verdict #4)
+    # entity resolution: pairwise resolve + golden-record survivorship
     "er_resolve_customers",
-    # r13 rotation: er_resolve_incremental demoted; the ER family's
-    # second row is now golden-record survivorship
     "er_golden_records",
+    # ANN: exact top-k + the composed cells+codes index maintenance
     "similarity_topk",
     "text_token_counts",
-    # r14 rotation: text_doc_profile demoted (text keeps token_counts/
-    # tfidf/bm25_topk/bm25_search); pq_index_delta_add earned the ANN
-    # family's maintenance row (r13 verdict #4); r15: superseded by
-    # the composed cells+codes maintenance (pq form demoted, oracle
-    # kept — the ANN family keeps similarity_topk + this row)
     "ivfpq_index_delta_add",
     "text_tfidf_topk",
-    # r11 rotation: retrieval family (BM25 ranking + zero-shuffle
-    # positional phrase search) and the real-codec multimodal tier
+    # retrieval: BM25 ranking, index-only phrase match and the serve
+    # paths (document-at-a-time BM25, bucket-pruned term lookup)
     "text_bm25_topk",
-    # r13 rotation: index_phrase_search demoted for its index-only
-    # superset (bit-equal to the scan form, serves from postings)
     "index_positional_phrase",
-    # r12 rotation: the retrieval SERVE paths (document-at-a-time BM25 +
-    # bucket-pruned term lookup) replace similarity_topk_gemm (bit-identical
-    # twin) and dq_quantiles / sample_stratified_cap (families keep a row)
     "text_bm25_search",
     "index_term_lookup",
     "udf_grouped_map",
-    # r14 rotation: the two-sided cogroup surface earns its driver row
-    # via the sane-granularity twin (r13 verdict #4)
+    # the two-sided cogroup surface, at a sane group granularity
     "cogroup_order_reconcile_coarse",
     "dq_suite",
     "dataset_split",
+    # multimodal: byte-level pipeline plus the real JPEG, MJPEG-AVI and
+    # PCM codecs
     "multimodal_pipeline",
     "multimodal_jpeg_roundtrip",
     "multimodal_video_frames",
@@ -90,23 +75,15 @@ _ORDER: tuple[str, ...] = (
     "corpus_diff",
     # §2 operator core
     "agg_group",
-    # r13 session 2: the KMV set-algebra sketch took the distinct-count
-    # family's row from exact agg_count_distinct (demoted, oracle
-    # kept); r15: superseded by the serving matrix — the SAME set
-    # algebra answered pairwise from the stream-fed sketch store
+    # distinct counts: KMV set algebra served pairwise from the
+    # stream-fed sketch store
     "kmv_serving_overlap_matrix",
     "dedup_latest",
     "join_anti_semi",
     "join_star",
     "join_bucketed",
-    # r12: the large-large hot-key join (salt-replicate-N, oracle = the
-    # plain join it must be transparent to); r13 adds its strategy
-    # rival (hot build rows broadcast, cold keys shuffled) on the
-    # identical oracle — the driver now sees both mitigations
-    # r14 rotation: join_salted_skew demoted — the measurement-driven
-    # chooser is the family's real product (it BEAT the hand-tuned
-    # salted form on both benched workloads) and executes the same
-    # censused mitigation; hotcold stays as the named engaged form
+    # large-large hot-key joins: the measured chooser and the named
+    # hot/cold form, on the plain join's oracle
     "join_adaptive_skew",
     "join_hotcold_skew",
     "project_events_clean",
@@ -117,52 +94,33 @@ _ORDER: tuple[str, ...] = (
     "setop_diff",
     "topk_group",
     "window_suite",
-    # r13 rotation: resample + gap-fill LOCF (W5) earns the window
-    # family's second row
     "window_resample_locf",
     "sql_surface_q3",
     "reference_curated_provider",
     "cdc_parse",
-    # r16 rotation (r15 verdict #3): the S6 family's driver row is now
-    # the real-engine schema-evolution drain — a strict superset of the
-    # batch merge_upsert it demotes (same latest-wins merge, exercised
-    # through upsert_sink across an ALTER TABLE boundary, the #1
-    # real-world CDC failure); merge_upsert stays local with its oracle
+    # CDC merge through the real engine across an ALTER TABLE boundary
     "merge_upsert_schema_evolution",
-    # r5 rotation: the real-engine exec forms replaced their batch twins
-    # (stream_tumbling_counts, stream_session, stream_late_drop — now
-    # local-tier, still oracle-checked by pytest) so T5/T6's primary
-    # rows run through the actual Structured Streaming engine.
+    # streaming: T5/T6 and the per-micro-batch skew chooser run through
+    # the Structured Streaming engine
     "stream_exec_tumbling",
     "stream_exec_session",
-    # r14 rotation: stream_exec_warc (WARC stays driver-visible via
-    # scan_warc) and stream_exec_late_drop (T6 keeps stream_exec_session;
-    # the late-drop proof stays oracle-checked locally) demoted; the
-    # per-micro-batch skew mitigation earned the streaming family's
-    # third row (r13 verdict #4); r15: superseded by the per-micro-batch
-    # CHOOSER (salted form demoted, oracle kept)
     "stream_exec_adaptive_join",
     "agg_group_salted",
 )
 
 
-def query(
-    name: str, oracle: str | None = None, registered: bool = True
-) -> Callable[[QueryFn], QueryFn]:
-    """Register ``fn`` as queries()[name]; ``oracle`` is the DuckDB SQL
+def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
+    """Register ``fn`` as the query ``name``; ``oracle`` is the DuckDB SQL
     the driver runs side-by-side (omit only for non-SQL-expressible ops,
-    which the driver then checks rows-only). ``registered=False`` keeps
-    the query out of the driver contract but inside the local pytest
-    parity suite."""
+    which the driver then checks rows-only). ``_ORDER`` decides whether
+    the driver sees it."""
 
     def deco(fn: QueryFn) -> QueryFn:
-        if name in _QUERIES or name in _LOCAL_QUERIES:
+        if name in _QUERIES:
             raise ValueError(f"duplicate query name: {name}")
-        target_q = _QUERIES if registered else _LOCAL_QUERIES
-        target_o = _ORACLE if registered else _LOCAL_ORACLE
-        target_q[name] = fn
+        _QUERIES[name] = fn
         if oracle is not None:
-            target_o[name] = oracle
+            _ORACLE[name] = oracle
         return fn
 
     return deco
@@ -171,23 +129,23 @@ def query(
 def all_queries() -> dict[str, QueryFn]:
     """Driver-visible queries, in the pinned _ORDER."""
     _load_all()
-    return dict(_QUERIES)
+    return {n: _QUERIES[n] for n in _ORDER}
 
 
 def all_oracles() -> dict[str, str]:
     _load_all()
-    return dict(_ORACLE)
+    return {n: _ORACLE[n] for n in _ORDER if n in _ORACLE}
 
 
 def local_only_queries() -> dict[str, QueryFn]:
     """Pytest-only single-operator variants (not driver-visible)."""
     _load_all()
-    return dict(_LOCAL_QUERIES)
+    return {n: f for n, f in _QUERIES.items() if n not in _ORDER}
 
 
 def local_only_oracles() -> dict[str, str]:
     _load_all()
-    return dict(_LOCAL_ORACLE)
+    return {n: o for n, o in _ORACLE.items() if n not in _ORDER}
 
 
 _LOADED = False
@@ -195,8 +153,8 @@ _LOADED = False
 
 def _load_all() -> None:
     """Import every module that registers queries (import = register),
-    then pin the driver-visible order to _ORDER."""
-    global _LOADED, _QUERIES, _ORACLE
+    then check every _ORDER name was registered."""
+    global _LOADED
     if _LOADED:
         return
     from .operators import (  # noqa: F401
@@ -250,17 +208,11 @@ def _load_all() -> None:
     )
 
     missing = [n for n in _ORDER if n not in _QUERIES]
-    extra = [n for n in _QUERIES if n not in _ORDER]
-    if missing or extra:
-        raise RuntimeError(
-            f"registry order drift: missing={missing} extra={extra} — "
-            "update _ORDER when adding/removing registered queries"
-        )
-    _QUERIES = {n: _QUERIES[n] for n in _ORDER}
-    _ORACLE = {n: _ORACLE[n] for n in _ORDER if n in _ORACLE}
+    if missing:
+        raise RuntimeError(f"_ORDER names no registered query: {missing}")
     _LOADED = True
 
 
 def run(name: str, spark: SparkSession, sf_dir: str) -> Any:
     _load_all()
-    return (_QUERIES | _LOCAL_QUERIES)[name](spark, sf_dir)
+    return _QUERIES[name](spark, sf_dir)

@@ -2,10 +2,12 @@
 narrow, effectively-disjoint row-group statistics that a selective
 filter can skip, and a dim-filtered join dynamically prunes the fact
 scan's partitions. Value-level equality is covered by the oracle-parity
-suite (layout_clustered_scan)."""
+suite (layout_clustered_scan). A no-Spark check pins that every
+package repartition names its task count."""
 
 from __future__ import annotations
 
+import ast
 import os
 import shutil
 import tempfile
@@ -21,6 +23,43 @@ from promptly_data_pipelines_spark.operators.layout import (
     clustered_write,
     dpp_fact_dim_join,
 )
+
+_PKG = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "promptly_data_pipelines_spark",
+)
+
+
+def _is_column(node: ast.expr) -> bool:
+    """A column name or ``col(...)``/``expr(...)`` — not a count."""
+    if isinstance(node, ast.Constant):
+        return isinstance(node.value, str)
+    func = getattr(node, "func", None)
+    return getattr(func, "id", getattr(func, "attr", None)) in ("col", "column", "expr")
+
+
+def test_every_repartition_names_its_count():
+    """AQE coalesces an uncounted ``repartition(<col>)`` of a small
+    input into one task; a partitioned write then runs on one core.
+    Hash ahead of a ``partitionBy`` write with
+    ``layout.partition_for_write``."""
+    offenders = []
+    for root, _dirs, files in os.walk(_PKG):
+        for fn in sorted(files):
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(root, fn)
+            with open(path, encoding="utf-8") as f:
+                tree = ast.parse(f.read(), path)
+            offenders += [
+                f"{os.path.relpath(path, _PKG)}:{node.lineno}"
+                for node in ast.walk(tree)
+                if isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "repartition"
+                and (not node.args or _is_column(node.args[0]))
+            ]
+    assert not offenders, f"repartition without an explicit count: {offenders}"
 
 
 def _row_group_ranges(path: str, col: str) -> list[tuple[int, int]]:

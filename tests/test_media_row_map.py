@@ -125,14 +125,19 @@ def test_null_doc_id_passes_through(spark, name):
 def test_synth_tables_keep_a_null_doc_id(spark, tmp_path, synth):
     """A synthesized media table derives each payload from doc_id; a
     NULL doc_id has no closed form, so its row comes out NULL
-    throughout while doc 2 gets its payload."""
+    throughout while doc 2 gets its payload. documents is one row
+    group at fixture scale, so a table read straight off the scan is
+    one task and its codec chain runs on one core; each table starts
+    from documents spread over ``defaultParallelism`` partitions."""
     from promptly_data_pipelines_spark.catalog import DECLARED_SCHEMAS
 
     spark.createDataFrame(
         [(None, "null key", "en", "s", 8), (2, "doc two", "en", "s", 7)],
         DECLARED_SCHEMAS["documents"],
     ).write.parquet(str(tmp_path / "documents.parquet"))
-    rows = {r.doc_id: r for r in synth(spark, str(tmp_path)).collect()}
+    media = synth(spark, str(tmp_path))
+    assert media.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    rows = {r.doc_id: r for r in media.collect()}
     assert set(rows) == {None, 2}
     assert tuple(rows[None]) == (None, None, None)
     assert rows[2].media_type and rows[2].payload
