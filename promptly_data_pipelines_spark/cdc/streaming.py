@@ -44,7 +44,6 @@ from ..operators.snapshot_store import (
 )
 from ..registry import query
 from ..session import scoped_session
-from .batch import merge_upsert_frames
 from .envelope import (
     ENVELOPE_SCHEMA,
     ENVELOPE_V2_SCHEMA,
@@ -177,8 +176,10 @@ def upsert_sink(
     changelog_path: str | None = None,
 ):
     """T3/S6 streaming form: foreachBatch MERGE. Each micro-batch is
-    compacted latest-wins against the current committed snapshot and
-    written as a NEW immutable snapshot; only after the write
+    written as a NEW immutable snapshot — merge-on-read: a delta that
+    holds only the batch and reads latest-wins over its chain, or,
+    once the chain reaches 1/8 of its base's rows, the compacted full
+    table (:func:`snapshot_store.commit`); only after the write
     completes does the committed pointer move. A crash at any
     point leaves the previous snapshot committed — the
     write-new-then-flip-pointer protocol is the poor-man's metastore
@@ -193,22 +194,25 @@ def upsert_sink(
 
     ``keep_snapshots`` is the retention window: the newest N snapshots
     survive each commit's GC (default 2 — the committed state and its
-    predecessor, the minimum a concurrent reader needs). Since every
-    snapshot is the FULL merged state after batch N, a larger window
-    buys TIME TRAVEL (``read_upsert_target(..., as_of_batch=N)``) at
-    the cost of N table copies — the Iceberg snapshot-log trade, made
-    explicit; prune later with :func:`expire_snapshots`.
+    predecessor, the minimum a concurrent reader needs), plus the base
+    and deltas their chains read. Every snapshot reads as the merged
+    state after batch N, so a larger window buys TIME TRAVEL
+    (``read_upsert_target(..., as_of_batch=N)``) at the cost of one
+    delta per batch and one full table copy per compaction — the
+    Iceberg snapshot-log trade, made explicit; prune later with
+    :func:`expire_snapshots`.
 
     ``branch=`` (the Nessie writable-ref role) routes every commit
     into the branch sub-store created by :func:`branch_snapshot`: the
-    first branch commit merges against the fork base (zero-copy — the
-    base stays in main, pinned), and :func:`merge_branch`
+    first branch commit merges against the fork base (the base stays
+    in main, pinned; that commit is a full snapshot), and :func:`merge_branch`
     fast-forwards the result back.
 
     ``changelog_path=`` makes the sink a CHANGE-FEED PRODUCER — Delta
     CDF's streaming ``readChangeFeed`` role: each commit also writes
-    the per-batch changelog (new snapshot vs its predecessor, the same
-    union-schema diff as :func:`upsert_changelog`) under
+    the per-batch changelog (new snapshot vs its predecessor over the
+    keys the batch carries, the same union-schema diff as
+    :func:`upsert_changelog`) under
     ``<changelog_path>/commit_batch=<snap id>``. Exactly-once comes
     free from the id-keyed dirs: the diff is written mode-overwrite
     BEFORE the pointer flip, so a redelivered batch rewrites its own
@@ -227,40 +231,38 @@ def upsert_sink(
     root = target_path if branch is None else snapshot_store.branch_root(target_path, branch)
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        def transform(prev_df: DataFrame | None) -> DataFrame:
-            if prev_df is None:
-                return batch_df
-            # evolve_schema: a consumer redeployed with a widened decode
-            # (additive DDL upstream) delivers batches with new columns
-            # against a narrower committed snapshot — and its checkpoint
-            # may also REPLAY an old-shape batch against an already-
-            # widened snapshot. Both directions NULL-fill; the next
-            # snapshot carries the union schema (Delta's
-            # mergeSchema-on-MERGE). Default strict: a mismatch fails
-            # the batch loudly rather than silently widening on a typo.
-            return merge_upsert_frames(
-                prev_df, batch_df, key, allow_missing_columns=evolve_schema
-            )
-
         def emit(prev_df: DataFrame | None, new_state: DataFrame, snap_id: int) -> None:
-            # the per-commit change feed, derived from the MATERIALIZED
-            # snapshots (not the lazy merge plan — one scan of written
-            # parquet beats re-running the merge window) and written
-            # BEFORE the pointer flip: a crash after the flip
-            # short-circuits as redelivery with the feed already
-            # durable; a crash before it re-derives identical rows
-            # into the same id-keyed dir (exactly-once by overwrite)
-            feed = (
-                changelog_frame(prev_df, new_state, key)
-                if prev_df is not None
-                else new_state.select(F.lit("insert").alias("change_type"), "*")
-            )
+            # the per-commit change feed, written BEFORE the pointer
+            # flip: a crash after the flip short-circuits as redelivery
+            # with the feed already durable; a crash before it
+            # re-derives identical rows into the same id-keyed dir
+            # (exactly-once by overwrite). Only keys the batch carries
+            # can change, so both views are cut to those keys first
+            # and the unchanged mass is never joined.
+            if prev_df is None:
+                feed = new_state.select(F.lit("insert").alias("change_type"), "*")
+            else:
+                keys = batch_df.select(key)
+                feed = changelog_frame(
+                    prev_df.join(keys, key, "left_semi"),
+                    new_state.join(keys, key, "left_semi"),
+                    key,
+                )
             feed.write.mode("overwrite").parquet(
                 f"{changelog_path}/commit_batch={snap_id}"
             )
 
+        # evolve_schema: a consumer redeployed with a widened decode
+        # (additive DDL upstream) delivers batches with new columns
+        # against a narrower committed snapshot — and its checkpoint
+        # may also REPLAY an old-shape batch against an already-
+        # widened snapshot. Both directions NULL-fill; the table
+        # carries the union schema (Delta's mergeSchema-on-MERGE).
+        # Default strict: a mismatch fails the batch loudly rather
+        # than silently widening on a typo.
         snapshot_store.commit(
-            batch_df.sparkSession, root, keep_snapshots, batch_id, transform,
+            batch_df.sparkSession, root, keep_snapshots, batch_id,
+            snapshot_store.Upsert(batch_df, key, evolve_schema=evolve_schema),
             emit if changelog_path is not None else None,
             run_id=checkpoint, branch=branch,
         )

@@ -6,15 +6,28 @@ The stream sinks in ``cdc.streaming`` commit through :func:`commit`.
 
 On-disk layout of a store root:
 
-    snap-<id>/            the FULL table state after snapshot <id>
-        _SUCCESS          written by the parquet committer
-        _BATCH            "<run_id>\\n<engine batch id>" (or a merge tag)
+    snap-<id>/            the table state after snapshot <id>: either the
+                          FULL table (a base), or a DELTA — only the rows
+                          of one upsert batch, read merged over its chain
+        _BATCH            "<run_id>\\n<engine batch id>" (or a merge tag),
+                          then a JSON line: base id, chain ids, key and
+                          order columns, schema, base and chain row counts
+        _SUCCESS          written by the commit after _BATCH: complete
     _LATEST               name of the committed snap dir
     _LATEST.tmp-<x>       a pointer flip in flight (stale after a crash)
     _TAG-<name>           name of the snap dir a tag pins
     _TAG.tmp-<name>       a tag move in flight
     _BRANCH-<name>/       a branch: itself a store root, plus
         _BASE             name of the main snap dir it forked from
+
+MERGE-ON-READ (Iceberg v2's row-level-delete model,
+https://iceberg.apache.org/spec/#row-level-deletes): a small upsert
+batch commits as a delta, and a read serves ``latest_wins`` over the
+base and every delta of the chain in one scan (:func:`_view`). The
+commit that finds its predecessor's chain at 1/8 of the base rows or
+more compacts: it writes the full table again, as every commit did
+before deltas. Markerless dirs predate the JSON line and are read as
+full tables with an inferred schema.
 
 Every operation reads the root with ONE listing (:func:`_layout`) and
 works from the parsed result; control files inside snap and branch
@@ -23,13 +36,16 @@ dirs are read directly.
 
 from __future__ import annotations
 
+import json
 import re
 from dataclasses import dataclass, field
 
 from py4j.protocol import Py4JJavaError
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from ..cdc.batch import latest_wins, merge_upsert_frames
 from .fs import FileSystemOps
 
 _REF_NAME = re.compile(r"^[A-Za-z0-9][A-Za-z0-9._-]*$")
@@ -140,6 +156,60 @@ def _retained(fs: FileSystemOps, lay: _Layout) -> list[int]:
     ]
 
 
+def _marker(fs: FileSystemOps, root: str, sid: int) -> tuple[str | None, str, dict | None]:
+    """(run id, engine batch id, meta) from ``snap-<sid>/_BATCH``. A
+    single-line marker (a merge tag) has no run id; a dir without a
+    marker predates it, and its name IS the engine batch id. ``meta``
+    is the JSON line (:func:`_write_snap`), None on older markers."""
+    raw = _absent(fs.get_text, f"{root}/snap-{sid}/_BATCH")
+    if raw is None:
+        return None, str(sid), None
+    head, brace, meta = raw.partition("\n{")
+    run, engine = head.split("\n", 1) if "\n" in head else (None, head)
+    return (
+        run if run is None else run.strip(),
+        engine.strip(),
+        json.loads(brace.lstrip("\n") + meta) if brace else None,
+    )
+
+
+_SNAP_ORDER = "__snap_order"
+
+
+def _view(spark: SparkSession, root: str, sid: int, meta: dict | None) -> DataFrame:
+    """The table as of ``snap-<sid>``. A full snapshot is one scan; a
+    delta is ``latest_wins`` over its base and chain, read in ONE scan
+    with the recorded schema (missing columns NULL-fill, so an evolved
+    chain reads with its widest schema). Later snapshots win ties on
+    the order columns, which is what replaying the batches through
+    ``merge_upsert_frames`` one by one yields; the snap order comes
+    from the file path, so data files hold only the table's columns.
+    A markerless dir is read with parquet schema inference."""
+    if meta is None:
+        return spark.read.parquet(f"{root}/snap-{sid}")
+    reader = spark.read.schema(T.StructType.fromJson(meta["schema"]))
+    if not meta["chain"]:
+        return reader.parquet(f"{root}/snap-{sid}")
+    scan = reader.parquet(*[f"{root}/snap-{i}" for i in (meta["base"], *meta["chain"])])
+    order = F.regexp_extract(F.col("_metadata.file_path"), r"/snap-(\d+)/[^/]*$", 1)
+    return latest_wins(
+        scan.withColumn(_SNAP_ORDER, order.cast("long")),
+        meta["key"],
+        [*meta["order"], _SNAP_ORDER],
+    ).drop(_SNAP_ORDER)
+
+
+def _closure(fs: FileSystemOps, root: str, ids: set, known: dict[int, dict | None]) -> set[int]:
+    """``ids`` plus every snapshot their chains read: a GC that keeps a
+    delta must keep its base and the deltas before it. ``known`` holds
+    metas the caller already read."""
+    out: set[int] = set()
+    for sid in ids - {None}:
+        meta = known[sid] if sid in known else _marker(fs, root, sid)[2]
+        out |= {sid} if meta is None else {sid, meta["base"], *meta["chain"]}
+    return out
+
+
 def _read(
     spark: SparkSession, fs: FileSystemOps, lay: _Layout, as_of_batch: int | None = None
 ) -> DataFrame:
@@ -147,7 +217,7 @@ def _read(
     if snap is None:
         raise FileNotFoundError(f"no committed snapshot under {lay.root}")
     if as_of_batch is None:
-        return spark.read.parquet(f"{snap[0]}/snap-{snap[1]}")
+        return _view(spark, *snap, _marker(fs, *snap)[2])
     requested = f"{lay.root}/snap-{as_of_batch}"
     # the dir must exist AND be at or below the committed id: a crash
     # after snap-N's write but before the pointer flip leaves a valid-
@@ -160,7 +230,7 @@ def _read(
             f"(committed: snap-{snap[1]}; retained batches: "
             f"{kept or 'none'}) — expired by retention or never committed"
         )
-    return spark.read.parquet(requested)
+    return _view(spark, lay.root, as_of_batch, _marker(fs, lay.root, as_of_batch)[2])
 
 
 def read_upsert_target(
@@ -172,8 +242,11 @@ def read_upsert_target(
     """Read a store: the committed state, or — TIME TRAVEL — the state
     exactly as of snapshot ``as_of_batch``, or as of a NAMED TAG
     (:func:`tag_snapshot`, the Nessie/Iceberg ``VERSION AS OF 'tag'``
-    role). Every ``snap-N`` dir IS the full table after batch N, so
-    reading history costs one directory resolve, no replay. Raises a
+    role). Every ``snap-N`` dir is the full table after batch N or a
+    delta whose ``_BATCH`` names its chain, so reading history costs
+    one directory resolve plus, for a delta, one latest-wins pass over
+    the chain (:func:`_view`); the recorded schema means no read runs
+    a schema-inference job. Raises a
     CLEAR error when the requested snapshot has been expired or was
     never committed — never a silent fallback to a different version
     (a job reading 'yesterday's table' must fail loudly if yesterday is
@@ -416,6 +489,8 @@ def merge_branch(
     committed state is main-prefix + branch batches by construction,
     so the merge is a zero-copy RENAME of the branch's committed dir
     into main under a freshly minted id, then the usual pointer flip.
+    A branch head that is a delta is written into main as one full
+    snapshot instead, since its chain stays in the branch root.
     If main moved since the fork this raises a LOUD conflict —
     silently re-folding divergent writes is what a catalog must never
     do.
@@ -464,10 +539,10 @@ def merge_branch(
     new_id = max(lay.snaps) + 1
     new_dir = f"{target_path}/snap-{new_id}"
     if rebase:
-        _rebase(spark, fs, lay, blay, name, base_id, key, on_conflict).write.mode(
-            "overwrite"
-        ).parquet(new_dir)
-        marker = f"merge-rebase:{name}"
+        order = (_marker(fs, *main)[2] or {}).get("order")
+        merged = _rebase(spark, fs, lay, blay, name, base_id, key, on_conflict)
+        meta = _full_meta(new_id, merged, key, order)
+        _write_snap(fs, merged, new_dir, f"merge-rebase:{name}", meta)
     else:
         bsnap = _committed(fs, blay)
         if bsnap[0] != broot:
@@ -475,10 +550,20 @@ def merge_branch(
             # the base): nothing to merge
             fs.delete(broot, recursive=True)
             return base_id
-        if not fs.rename(f"{broot}/snap-{bsnap[1]}", new_dir):
-            raise OSError(f"rename {broot}/snap-{bsnap[1]} -> {new_dir} failed")
         marker = f"merge:{name}:snap-{bsnap[1]}"
-    fs.put_text(f"{new_dir}/_BATCH", marker)
+        meta = _marker(fs, *bsnap)[2]
+        if meta is not None and meta["chain"]:
+            # a delta is whole only over its chain, which stays in the
+            # branch root: write the head's view as a full snapshot
+            head = _view(spark, *bsnap, meta)
+            meta = _full_meta(new_id, head, meta["key"], meta["order"])
+            _write_snap(fs, head, new_dir, marker, meta)
+        else:
+            if not fs.rename(f"{broot}/snap-{bsnap[1]}", new_dir):
+                raise OSError(f"rename {broot}/snap-{bsnap[1]} -> {new_dir} failed")
+            if meta is not None:
+                marker += "\n" + json.dumps({**meta, "base": new_id})
+            fs.put_text(f"{new_dir}/_BATCH", marker)
     _commit_pointer(fs, target_path, new_id, f"merge-{new_id}")
     fs.delete(broot, recursive=True)
     return new_id
@@ -546,8 +631,9 @@ def upsert_changelog(
     to_tag: str | None = None,
 ) -> DataFrame:
     """CHANGE DATA FEED between two retained snapshots — the Delta CDF /
-    Iceberg ``changelog`` role, free because every ``snap-N`` is the
-    full table: one full-outer join on the key yields, per row,
+    Iceberg ``changelog`` role, free because every ``snap-N`` reads as
+    the full table (a delta through its chain, :func:`_view`): one
+    full-outer join on the key yields, per row,
     ``insert`` (key only in the newer state), ``delete`` (only in the
     older), or an ``update_preimage`` / ``update_postimage`` pair (any
     column differing, null-safe). Unchanged keys emit nothing.
@@ -650,8 +736,9 @@ def expire_snapshots(
     """Maintenance (Iceberg ``expire_snapshots`` / Delta VACUUM): prune
     history to the newest ``keep_last`` snapshots. The COMMITTED
     snapshot is always kept (expiry reclaims storage, it never rolls
-    back), and so is every snapshot a tag or a branch base pins.
-    Crash-orphaned ``snap-N`` dirs lacking ``_SUCCESS`` BELOW the
+    back), and so is every snapshot a tag or a branch base pins — each
+    with the base and deltas its chain reads. Crash-orphaned ``snap-N``
+    dirs lacking ``_SUCCESS`` BELOW the
     committed id are deleted too: they can never be served and the
     engine never redelivers below the committed id, so they would leak
     forever. An uncommitted dir AT or ABOVE the committed id is an
@@ -671,7 +758,7 @@ def expire_snapshots(
     hist = _retained(fs, lay)
     snap = _committed(fs, lay)
     committed = snap[1] if snap is not None and snap[0] == lay.root else None
-    keep = set(hist[:keep_last]) | {committed} | _pins(fs, lay)
+    keep = _closure(fs, lay.root, set(hist[:keep_last]) | {committed} | _pins(fs, lay), {})
     expired = sorted(b for b in hist if b not in keep)
     orphans = [b for b in lay.snaps - set(hist) if committed is not None and b < committed]
     for b in expired + orphans:
@@ -689,18 +776,94 @@ def _commit_pointer(fs: FileSystemOps, target_path: str, sid: int, tag) -> None:
     fs.rename(tmp, f"{target_path}/_LATEST")
 
 
-def _gc(fs: FileSystemOps, lay: _Layout, keep_snapshots: int, current: int, prev) -> None:
+def _gc(
+    fs: FileSystemOps, lay: _Layout, keep_snapshots: int, keep: set, known: dict[int, dict | None]
+) -> None:
     # best-effort GC of superseded snapshots: the newest keep_snapshots
-    # survive, the committed snapshot and the predecessor a concurrent
-    # reader may have just resolved are ALWAYS kept, and tags and
-    # branch bases pin theirs exactly as against expire_snapshots.
-    # Stale _LATEST.tmp-* files (a crash between put_text and rename)
-    # go too: the listing predates this commit's own tmp.
-    keep = set(sorted(lay.snaps)[-keep_snapshots:]) | _pins(fs, lay) | {current, prev}
+    # survive, ``keep`` (the committed snapshot and the predecessor a
+    # concurrent reader may have just resolved) is ALWAYS kept, tags
+    # and branch bases pin theirs exactly as against expire_snapshots,
+    # and every kept delta keeps its chain. Stale _LATEST.tmp-* files
+    # (a crash between put_text and rename) go too: the listing
+    # predates this commit's own tmp.
+    newest = set(sorted(lay.snaps)[-keep_snapshots:])
+    keep = _closure(fs, lay.root, newest | _pins(fs, lay) | keep, known)
     for sid in sorted(lay.snaps - keep):
         fs.delete(f"{lay.root}/snap-{sid}", recursive=True)
     for name in lay.stale:
         fs.delete(f"{lay.root}/{name}")
+
+
+@dataclass(frozen=True)
+class Upsert:
+    """A commit's transform that MERGEs one change batch into the table
+    by ``key``, latest ``ts`` winning (``merge_upsert_frames``). Unlike
+    an opaque ``prev -> state`` callable, it lets :func:`commit` write
+    the batch alone as a delta. ``evolve_schema`` widens the table with
+    the batch's new columns, NULL-filling either side."""
+
+    batch: DataFrame
+    key: str
+    evolve_schema: bool = False
+    order_cols = ("ts",)
+
+    def __call__(self, prev_df: DataFrame | None) -> DataFrame:
+        if prev_df is None:
+            return self.batch
+        return merge_upsert_frames(
+            prev_df, self.batch, self.key, self.order_cols,
+            allow_missing_columns=self.evolve_schema,
+        )
+
+
+def _delta_schema(transform, meta: dict | None) -> dict | None:
+    """The table schema (JSON) after ``transform`` commits as a delta
+    over the local snapshot ``meta`` describes, or None when the commit
+    must write the full table: the transform is not an :class:`Upsert`
+    of the recorded key and order, the chain already holds 1/8 of the
+    base rows or more (the compaction rule), a shared column changed
+    type, or a strict upsert's columns differ (the full merge raises)."""
+    if (
+        not isinstance(transform, Upsert)
+        or meta is None
+        or (meta["key"], meta["order"]) != (transform.key, list(transform.order_cols))
+        or 8 * meta["chain_rows"] >= meta["base_rows"]
+    ):
+        return None
+    table = T.StructType.fromJson(meta["schema"])
+    have = {f.name: f.dataType for f in table}
+    batch = transform.batch.schema
+    if any(f.name in have and have[f.name] != f.dataType for f in batch):
+        return None
+    new = [f for f in batch if f.name not in have]
+    if not transform.evolve_schema and (new or len(batch) != len(table)):
+        return None
+    return T.StructType([*table, *new]).jsonValue()
+
+
+def _full_meta(sid: int, df: DataFrame, key: str | None, order) -> dict:
+    return {"base": sid, "chain": [], "key": key, "order": order, "schema": df.schema.jsonValue()}
+
+
+def _write_snap(fs: FileSystemOps, df: DataFrame, snap_dir: str, head: str, meta: dict) -> dict:
+    """Write ``df`` into ``snap_dir``, then its ``_BATCH`` (``head`` and
+    ``meta`` with the row counts the write observed), then
+    ``_SUCCESS``. The data write itself leaves no ``_SUCCESS``, so a
+    complete dir always carries its marker: a crash before the marker
+    leaves a dir nothing serves — never a delta read as a full table.
+    Returns the written meta."""
+    rows = Observation()
+    df.observe(rows, F.count(F.lit(1)).alias("n")).write.mode("overwrite").option(
+        "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
+    ).parquet(snap_dir)
+    n = rows.get["n"]
+    if meta["chain"]:
+        meta = {**meta, "chain_rows": meta["chain_rows"] + n}
+    else:
+        meta = {**meta, "base_rows": n, "chain_rows": 0}
+    fs.put_text(f"{snap_dir}/_BATCH", f"{head}\n{json.dumps(meta)}")
+    fs.put_text(f"{snap_dir}/_SUCCESS", "")
+    return meta
 
 
 def commit(
@@ -715,14 +878,21 @@ def commit(
 ) -> None:
     """The COMMIT PROTOCOL every foreachBatch sink over the store shares:
     resolve the committed predecessor, short-circuit crash redelivery,
-    apply ``transform(prev_df_or_None) -> new_state``, write the new
-    immutable ``snap-<id>`` dir + its ``_BATCH`` marker, run the
-    optional ``emit(prev_df, materialized_new_state, snap_id)`` hook
-    (BEFORE the pointer flip, so a post-flip crash redelivers with the
-    emit already durable), then flip ``_LATEST`` and GC superseded
-    snapshots. One place for the crash matrix (pointer flip vs
-    checkpoint commit vs emit). ``branch`` names the branch whose root
-    ``target_path`` is; writing to a branch that does not exist fails.
+    write the new immutable ``snap-<id>`` dir + its ``_BATCH`` marker
+    (:func:`_write_snap`), run the optional
+    ``emit(prev_df, new_state, snap_id)`` hook (BEFORE the pointer
+    flip, so a post-flip crash redelivers with the emit already
+    durable), then flip ``_LATEST`` and GC superseded snapshots. One
+    place for the crash matrix (pointer flip vs checkpoint commit vs
+    emit). ``branch`` names the branch whose root ``target_path`` is;
+    writing to a branch that does not exist fails.
+
+    The new dir is a DELTA — the raw batch, one write job, no shuffle
+    and no predecessor read — when ``transform`` is an :class:`Upsert`
+    and :func:`_delta_schema` allows it over a LOCAL predecessor (a
+    branch's first commit, whose predecessor is main's, is full).
+    Otherwise it is the full ``transform(prev_df_or_None)``: the
+    compaction arm, and the only arm of an opaque callable.
 
     ``run_id`` scopes the redelivery short-circuit to the WRITING QUERY
     (its checkpoint path): engine batch ids restart at 0 for every
@@ -738,7 +908,8 @@ def commit(
     monotonic sequence ``max(engine batch id, committed id + 1)`` —
     equal to the engine id until a merge commit or a branch's base
     pushes the store ahead of the engine's counter. GC, the _SUCCESS
-    fallback and the history all order by snap id."""
+    fallback, the history and the merge-on-read order all order by
+    snap id."""
     fs = FileSystemOps(spark)
     lay = _layout(fs, target_path)
     if branch is not None and not lay.base:
@@ -747,19 +918,12 @@ def commit(
             "branch_snapshot before writing to it"
         )
     prev = _committed(fs, lay)
-    prev_run = prev_engine = None
-    # only a snapshot LOCAL to this store can be a redelivery: a branch
-    # root's base resolves into the parent store, whose _BATCH belongs
-    # to main's engine sequence
-    if prev is not None and prev[0] == target_path:
-        raw = _absent(fs.get_text, f"{target_path}/snap-{prev[1]}/_BATCH")
-        if raw is None:
-            prev_engine = str(prev[1])
-        elif "\n" in raw:
-            prev_run, prev_engine = (s.strip() for s in raw.split("\n", 1))
-        else:
-            prev_engine = raw.strip()
-    if prev_engine == str(batch_id) and prev_run in (None, run_id):
+    run, engine, meta = _marker(fs, *prev) if prev is not None else (None, None, None)
+    # only a snapshot LOCAL to this store can be a redelivery or a
+    # delta's predecessor: a branch root's base resolves into the
+    # parent store, whose _BATCH belongs to main's engine sequence
+    local = prev is not None and prev[0] == target_path
+    if local and engine == str(batch_id) and run in (None, run_id):
         # Redelivery after a crash between the pointer flip and the
         # checkpoint commit: this batch's snapshot IS the committed
         # state. Transforming again would lazily read the very dir the
@@ -768,15 +932,32 @@ def commit(
         # and GC keeping the newest OTHER snapshot as the predecessor,
         # so re-committing the same state never shrinks retention.
         _commit_pointer(fs, target_path, prev[1], batch_id)
-        _gc(fs, lay, keep_snapshots, prev[1], max(lay.snaps - {prev[1]}, default=None))
+        other = max(lay.snaps - {prev[1]}, default=None)
+        _gc(fs, lay, keep_snapshots, {prev[1], other}, {prev[1]: meta})
         return
     snap_id = batch_id if prev is None else max(batch_id, prev[1] + 1)
     snap_dir = f"{target_path}/snap-{snap_id}"
-    prev_df = spark.read.parquet(f"{prev[0]}/snap-{prev[1]}") if prev is not None else None
-    transform(prev_df).write.mode("overwrite").parquet(snap_dir)
-    fs.put_text(f"{snap_dir}/_BATCH", f"{run_id}\n{batch_id}")
+    head = f"{run_id}\n{batch_id}"
+    schema = _delta_schema(transform, meta) if local else None
+    prev_df = (
+        _view(spark, *prev, meta)
+        if prev is not None and (schema is None or emit is not None)
+        else None
+    )
+    if schema is not None:
+        delta = {**meta, "chain": [*meta["chain"], snap_id], "schema": schema}
+        new = _write_snap(fs, transform.batch, snap_dir, head, delta)
+    else:
+        state = transform(prev_df)
+        key, order = (
+            (transform.key, list(transform.order_cols))
+            if isinstance(transform, Upsert)
+            else (None, None)
+        )
+        new = _write_snap(fs, state, snap_dir, head, _full_meta(snap_id, state, key, order))
     if emit is not None:
-        emit(prev_df, spark.read.parquet(snap_dir), snap_id)
+        emit(prev_df, _view(spark, target_path, snap_id, new), snap_id)
     _commit_pointer(fs, target_path, snap_id, batch_id)
     lay.snaps.add(snap_id)
-    _gc(fs, lay, keep_snapshots, snap_id, prev[1] if prev is not None else None)
+    known = {snap_id: new, **({prev[1]: meta} if local else {})}
+    _gc(fs, lay, keep_snapshots, set(known), known)

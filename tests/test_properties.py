@@ -15,6 +15,7 @@ import os
 import shutil
 import tempfile
 import uuid
+from collections import Counter
 
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -36,6 +37,14 @@ SETTINGS = settings(
     derandomize=True,
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
+
+def _bag(df) -> Counter:
+    """``df``'s rows as a multiset, from ONE Spark action. The join
+    properties compare two of these in Python: ``a - b`` empty is
+    ``a.exceptAll(b).isEmpty()``, without re-running both plans per
+    check."""
+    return Counter(df.collect())
+
 
 VOCAB = ["a", "b", "c", "ab", "ba"]  # tiny: forces shared shingles
 
@@ -1073,9 +1082,10 @@ def test_salted_join_transparent_any_input(spark, rows, dim, hot_min, n_salts):
     salted = salted_inner_join(
         probe, build, "k", "bk", n=n_salts, hot_min_rows=hot_min
     ).select("k", "payload", "tag")
-    assert salted.exceptAll(plain).isEmpty()
-    assert plain.exceptAll(salted).isEmpty()
-    assert salted.count() == plain.count()  # multiset equality both ways
+    got, want = _bag(salted), _bag(plain)
+    assert not got - want  # salted.exceptAll(plain) is empty
+    assert not want - got  # plain.exceptAll(salted) is empty
+    assert got.total() == want.total()  # multiset equality both ways
     # the strategy rival under the identical inputs (r12): hot/cold
     # split must be transparent too, whatever the threshold classifies
     from promptly_data_pipelines_spark.operators.joins import hotcold_split_join
@@ -1083,9 +1093,10 @@ def test_salted_join_transparent_any_input(spark, rows, dim, hot_min, n_salts):
     split = hotcold_split_join(
         probe, build, "k", "bk", hot_min_rows=hot_min
     ).select("k", "payload", "tag")
-    assert split.exceptAll(plain).isEmpty()
-    assert plain.exceptAll(split).isEmpty()
-    assert split.count() == plain.count()
+    split_bag = _bag(split)
+    assert not split_bag - want  # split.exceptAll(plain) is empty
+    assert not want - split_bag  # plain.exceptAll(split) is empty
+    assert split_bag.total() == want.total()
 
 
 @settings(max_examples=25, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
@@ -1124,9 +1135,10 @@ def test_null_routed_left_join_transparent_any_input(spark, rows, dim):
     routed = null_routed_left_join(probe, build, "k", "bk").select(
         "k", "payload", "bk", "tag"
     )
-    assert routed.exceptAll(plain).isEmpty()
-    assert plain.exceptAll(routed).isEmpty()
-    assert routed.count() == plain.count()
+    got, want = _bag(routed), _bag(plain)
+    assert not got - want  # routed.exceptAll(plain) is empty
+    assert not want - got  # plain.exceptAll(routed) is empty
+    assert got.total() == want.total()
 
 
 @settings(max_examples=25, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
@@ -1165,9 +1177,10 @@ def test_salted_left_join_transparent_any_input(spark, rows, dim, hot_min, n_sal
     salted = salted_left_join(
         probe, build, "k", "bk", n=n_salts, hot_min_rows=hot_min
     ).select("k", "payload", "bk", "tag")
-    assert salted.exceptAll(plain).isEmpty()
-    assert plain.exceptAll(salted).isEmpty()
-    assert salted.count() == plain.count()
+    got, want = _bag(salted), _bag(plain)
+    assert not got - want  # salted.exceptAll(plain) is empty
+    assert not want - got  # plain.exceptAll(salted) is empty
+    assert got.total() == want.total()
 
 
 def test_null_routed_left_join_refuses_overlapping_columns(spark):
@@ -1224,8 +1237,9 @@ def test_adaptive_join_transparent_any_thresholds(spark, rows, dim, bcast_max, h
         broadcast_max_rows=bcast_max, hot_min_rows=hot_min,
     ).select("k", "payload", "tag")
     # two-directional exceptAll emptiness IS multiset equality
-    assert adaptive.exceptAll(plain).isEmpty()
-    assert plain.exceptAll(adaptive).isEmpty()
+    got, want = _bag(adaptive), _bag(plain)
+    assert not got - want  # adaptive.exceptAll(plain) is empty
+    assert not want - got  # plain.exceptAll(adaptive) is empty
     # the chooser itself is total: it always names a strategy
     assert choose_join_strategy(
         probe, build, "k", "bk",
@@ -1276,8 +1290,9 @@ def test_adaptive_left_join_transparent_any_thresholds(
         broadcast_max_rows=bcast_max, hot_min_rows=hot_min,
     ).select("k", "payload", "tag")
     # two-directional exceptAll emptiness IS multiset equality
-    assert adaptive.exceptAll(plain).isEmpty()
-    assert plain.exceptAll(adaptive).isEmpty()
+    got, want = _bag(adaptive), _bag(plain)
+    assert not got - want  # adaptive.exceptAll(plain) is empty
+    assert not want - got  # plain.exceptAll(adaptive) is empty
 
 
 def test_salted_join_refuses_reserved_salt_column(spark):

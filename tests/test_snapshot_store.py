@@ -1,4 +1,5 @@
-"""Filesystem traffic of the snapshot store.
+"""Filesystem traffic of the snapshot store, and the Spark jobs a read
+plans with.
 
 FileSystemOps is wrapped from outside, so the counts are what the
 store really asks of the filesystem: every commit reads the store root
@@ -125,3 +126,54 @@ def test_one_filesystem_ops_per_public_store_call(spark, tmp_path, fs_traffic):
     assert one(SS.merge_branch, "dev") == 2  # no branch commits: trivial
     one(SS.delete_tag, "t0")
     assert one(SS.expire_snapshots) == [0]
+
+
+# FileSystemOps calls of one steady-state full upsert_sink commit before
+# deltas existed: listing, _LATEST, _SUCCESS, _BATCH read, _BATCH write,
+# the three-call pointer flip and one GC delete
+_FULL_COMMIT_CALLS = 9
+
+
+def test_delta_commit_traffic_no_more_than_a_full_commit(spark, tmp_path, fs_traffic):
+    calls, built = fs_traffic
+    tgt = str(tmp_path / "tgt")
+    for b in range(3):  # a 400-row base, then 10-row batches: all deltas
+        rows = [(k, b, f"v{b}") for k in (range(400) if b == 0 else range(b, b + 10))]
+        df = spark.createDataFrame(rows, "k bigint, ts int, v string")
+        del calls[:]
+        built[0] = 0
+        SS.commit(spark, tgt, 2, b, SS.Upsert(df, "k"), run_id="run")
+    assert _root_listings(calls, tgt) == 1
+    assert built[0] == 1
+    assert len(calls) <= _FULL_COMMIT_CALLS, calls
+    assert SS._marker(FileSystemOps(spark), tgt, 2)[2]["chain"] == [1, 2]
+
+
+def _jobs_launched(spark, fn) -> int:
+    """Spark jobs ``fn()`` launches, counted through a job group."""
+    sc = spark.sparkContext
+    keys = ("spark.jobGroup.id", "spark.job.description")
+    prev = [sc.getLocalProperty(k) for k in keys]
+    group = f"store-pin-{id(fn)}"
+    sc.setJobGroup(group, "store job pin")
+    try:
+        fn()
+    finally:
+        for k, v in zip(keys, prev):
+            sc.setLocalProperty(k, v)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_upsert_target_plans_without_jobs(spark, tmp_path):
+    """A store whose markers record the schema plans a read, delta
+    chain included, without a parquet schema-inference job; a
+    markerless (older) dir still infers it, which is one job."""
+    tgt = str(tmp_path / "tgt")
+    for b in range(2):
+        df = spark.createDataFrame([(k, b) for k in range(40 if b == 0 else 2)], "k bigint, ts int")
+        SS.commit(spark, tgt, 2, b, SS.Upsert(df, "k"), run_id="run")
+    assert SS._marker(FileSystemOps(spark), tgt, 1)[2]["chain"] == [1]
+    assert _jobs_launched(spark, lambda: SS.read_upsert_target(spark, tgt)) == 0
+    legacy = str(tmp_path / "legacy")
+    spark.createDataFrame([(1, 0)], "k bigint, ts int").write.parquet(f"{legacy}/snap-0")
+    assert _jobs_launched(spark, lambda: SS.read_upsert_target(spark, legacy)) == 1
