@@ -109,21 +109,18 @@ def merge_upsert_frames(
     lakehouse.merge_into_table for the jar-gated real-MERGE path); the
     unionByName+window form is storage-free and what the oracle checks.
 
-    Determinism: a source-priority column breaks order_cols ties in
-    favor of the UPDATE side — without it, a snapshot row and an update
-    with equal (order_cols) pick a nondeterministic winner whenever the
-    caller's key makes the old event_id tiebreaker constant within the
-    partition (e.g. key='event_id'). order_cols is caller-suppliable
-    for change sets ordered by something other than ts.
+    Determinism: the UPDATE side wins ties on ``order_cols`` (a
+    source-priority column), so a snapshot row and an update with equal
+    order values never pick a nondeterministic winner. ``order_cols``
+    is caller-suppliable for change sets ordered by something other
+    than ts.
 
-    ``allow_missing_columns`` is SCHEMA EVOLUTION (r15, Delta's
+    ``allow_missing_columns`` is SCHEMA EVOLUTION (Delta's
     ``mergeSchema`` on MERGE): a change set carrying an additive
-    column widens the result, with snapshot rows NULL-filled — and
-    symmetrically, a late replay of an old-shape change set against
-    an already-widened snapshot NULL-fills the other way. Off by
-    default: strict unionByName failing loudly on a schema mismatch
-    is the right default for a typo; widening must be opted into,
-    exactly as Delta requires mergeSchema."""
+    column widens the result, with snapshot rows NULL-filled, and an
+    old-shape change set against a widened snapshot NULL-fills the
+    other way. Off by default: a strict unionByName fails loudly on a
+    schema mismatch, which is the right default for a typo."""
     pri = "__src_priority"
     unioned = snapshot.withColumn(pri, F.lit(0)).unionByName(
         updates.withColumn(pri, F.lit(1)),

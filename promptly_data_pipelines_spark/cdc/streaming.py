@@ -175,52 +175,51 @@ def upsert_sink(
     branch: str | None = None,
     changelog_path: str | None = None,
 ):
-    """T3/S6 streaming form: foreachBatch MERGE. Each micro-batch is
-    written as a NEW immutable snapshot — merge-on-read: a delta that
-    holds only the batch and reads latest-wins over its chain, or,
-    once the chain reaches 1/8 of its base's rows, the compacted full
-    table (:func:`snapshot_store.commit`); only after the write
-    completes does the committed pointer move. A crash at any
-    point leaves the previous snapshot committed — the
-    write-new-then-flip-pointer protocol is the poor-man's metastore
-    commit (an in-place ``mode("overwrite")`` of the target deletes
-    the old files FIRST, so a mid-write crash plus foreachBatch retry
-    would silently reset the target to one micro-batch). Re-delivered
-    batch ids rewrite their own snap dir and re-flip the pointer —
-    idempotent. On Iceberg/Delta this whole body becomes a single
-    ``MERGE INTO`` (reference declares exactly that intent:
-    raw_provider_postgres.sql:9-10) and the catalog does the commit.
+    """T3/S6 streaming form: foreachBatch MERGE by ``key``, latest
+    ``ts`` winning. Each micro-batch commits a NEW immutable snapshot
+    through :func:`snapshot_store.commit`: a delta holding only the
+    batch, read latest-wins over its chain, or — once the chain reaches
+    1/8 of its base's rows, and for the first commit — the full table,
+    one row per key. The committed pointer moves only after the write
+    completes, so a crash at any point leaves the previous snapshot
+    committed (an in-place ``mode("overwrite")`` of the target would
+    delete the old files FIRST, and a mid-write crash plus retry would
+    reset the target to one micro-batch). A redelivered batch rewrites
+    its own snap dir and re-flips the pointer: idempotent. On
+    Iceberg/Delta this body is one ``MERGE INTO`` (the reference
+    declares exactly that intent: raw_provider_postgres.sql:9-10).
     Read the target through ``read_upsert_target``.
 
     ``keep_snapshots`` is the retention window: the newest N snapshots
-    survive each commit's GC (default 2 — the committed state and its
-    predecessor, the minimum a concurrent reader needs), plus the base
-    and deltas their chains read. Every snapshot reads as the merged
-    state after batch N, so a larger window buys TIME TRAVEL
+    survive each commit's GC (at least 2 — the committed state and the
+    predecessor a concurrent reader may hold), plus the base and deltas
+    their chains read. Every snapshot reads as the merged state after
+    its batch, so a larger window buys TIME TRAVEL
     (``read_upsert_target(..., as_of_batch=N)``) at the cost of one
-    delta per batch and one full table copy per compaction — the
-    Iceberg snapshot-log trade, made explicit; prune later with
-    :func:`expire_snapshots`.
+    delta per batch and one full table per compaction; prune later
+    with :func:`expire_snapshots`.
 
-    ``branch=`` (the Nessie writable-ref role) routes every commit
-    into the branch sub-store created by :func:`branch_snapshot`: the
-    first branch commit merges against the fork base (the base stays
-    in main, pinned; that commit is a full snapshot), and :func:`merge_branch`
-    fast-forwards the result back.
+    ``evolve_schema=True`` widens the table with a batch's new columns
+    and NULL-fills either side (Delta's mergeSchema-on-MERGE); by
+    default a batch whose columns differ from the table's fails.
 
-    ``changelog_path=`` makes the sink a CHANGE-FEED PRODUCER — Delta
-    CDF's streaming ``readChangeFeed`` role: each commit also writes
+    ``branch=`` (the Nessie writable-ref role) routes every commit into
+    the branch sub-store created by :func:`branch_snapshot`: its first
+    commit merges over the fork base, which stays in main, pinned, and
+    writes a full snapshot; :func:`merge_branch` fast-forwards the
+    result back.
+
+    ``changelog_path=`` makes the sink a CHANGE-FEED PRODUCER (Delta
+    CDF's streaming ``readChangeFeed`` role): each commit also writes
     the per-batch changelog (new snapshot vs its predecessor over the
     keys the batch carries, the same union-schema diff as
     :func:`upsert_changelog`) under
-    ``<changelog_path>/commit_batch=<snap id>``. Exactly-once comes
-    free from the id-keyed dirs: the diff is written mode-overwrite
+    ``<changelog_path>/commit_batch=<snap id>``, mode-overwrite and
     BEFORE the pointer flip, so a redelivered batch rewrites its own
-    partition and a crash in between re-derives the identical rows.
-    Consumers read the path as a normal partitioned parquet source
-    (batch or readStream) with ``commit_batch`` as the feed cursor;
-    by construction the concatenation of the per-batch partitions
-    equals :func:`upsert_changelog` between the endpoints.
+    partition: exactly-once. Consumers read the path as a partitioned
+    parquet source with ``commit_batch`` as the feed cursor; the
+    concatenation of the per-batch partitions equals
+    :func:`upsert_changelog` between the endpoints.
 
     Snapshot ids, engine batch ids and the redelivery rule are the
     store's (:func:`snapshot_store.commit`)."""
@@ -252,14 +251,9 @@ def upsert_sink(
                 f"{changelog_path}/commit_batch={snap_id}"
             )
 
-        # evolve_schema: a consumer redeployed with a widened decode
-        # (additive DDL upstream) delivers batches with new columns
-        # against a narrower committed snapshot — and its checkpoint
-        # may also REPLAY an old-shape batch against an already-
-        # widened snapshot. Both directions NULL-fill; the table
-        # carries the union schema (Delta's mergeSchema-on-MERGE).
-        # Default strict: a mismatch fails the batch loudly rather
-        # than silently widening on a typo.
+        # evolve_schema serves a consumer redeployed with a widened
+        # decode: its batches carry new columns, and its checkpoint may
+        # replay an old-shape batch against the widened table
         snapshot_store.commit(
             batch_df.sparkSession, root, keep_snapshots, batch_id,
             snapshot_store.Upsert(batch_df, key, evolve_schema=evolve_schema),

@@ -22,12 +22,12 @@ On-disk layout of a store root:
 
 MERGE-ON-READ (Iceberg v2's row-level-delete model,
 https://iceberg.apache.org/spec/#row-level-deletes): a small upsert
-batch commits as a delta, and a read serves ``latest_wins`` over the
-base and every delta of the chain in one scan (:func:`_view`). The
-commit that finds its predecessor's chain at 1/8 of the base rows or
-more compacts: it writes the full table again, as every commit did
-before deltas. Markerless dirs predate the JSON line and are read as
-full tables with an inferred schema.
+batch commits as a delta; the commit that finds its predecessor's
+chain at 1/8 of the base rows or more compacts into a full table.
+Every upsert state — a delta read, a compaction, the first commit, a
+branch's first commit — is ONE ``latest_wins`` over snapshot files ∪
+batch (:func:`_view`). A dir without the JSON line is a full table,
+read with an inferred schema.
 
 Every operation reads the root with ONE listing (:func:`_layout`) and
 works from the parsed result; control files inside snap and branch
@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..cdc.batch import latest_wins, merge_upsert_frames
+from ..cdc.batch import latest_wins
 from .fs import FileSystemOps
 
 _REF_NAME = re.compile(r"^[A-Za-z0-9][A-Za-z0-9._-]*$")
@@ -159,8 +159,8 @@ def _retained(fs: FileSystemOps, lay: _Layout) -> list[int]:
 def _marker(fs: FileSystemOps, root: str, sid: int) -> tuple[str | None, str, dict | None]:
     """(run id, engine batch id, meta) from ``snap-<sid>/_BATCH``. A
     single-line marker (a merge tag) has no run id; a dir without a
-    marker predates it, and its name IS the engine batch id. ``meta``
-    is the JSON line (:func:`_write_snap`), None on older markers."""
+    marker is named by its engine batch id. ``meta`` is the JSON line
+    (:func:`_write_snap`), None when the marker has none."""
     raw = _absent(fs.get_text, f"{root}/snap-{sid}/_BATCH")
     if raw is None:
         return None, str(sid), None
@@ -174,29 +174,46 @@ def _marker(fs: FileSystemOps, root: str, sid: int) -> tuple[str | None, str, di
 
 
 _SNAP_ORDER = "__snap_order"
+_UPSERT_ORDER = ["ts"]
 
 
-def _view(spark: SparkSession, root: str, sid: int, meta: dict | None) -> DataFrame:
-    """The table as of ``snap-<sid>``. A full snapshot is one scan; a
-    delta is ``latest_wins`` over its base and chain, read in ONE scan
-    with the recorded schema (missing columns NULL-fill, so an evolved
-    chain reads with its widest schema). Later snapshots win ties on
-    the order columns, which is what replaying the batches through
-    ``merge_upsert_frames`` one by one yields; the snap order comes
-    from the file path, so data files hold only the table's columns.
-    A markerless dir is read with parquet schema inference."""
-    if meta is None:
-        return spark.read.parquet(f"{root}/snap-{sid}")
-    reader = spark.read.schema(T.StructType.fromJson(meta["schema"]))
-    if not meta["chain"]:
-        return reader.parquet(f"{root}/snap-{sid}")
-    scan = reader.parquet(*[f"{root}/snap-{i}" for i in (meta["base"], *meta["chain"])])
-    order = F.regexp_extract(F.col("_metadata.file_path"), r"/snap-(\d+)/[^/]*$", 1)
-    return latest_wins(
-        scan.withColumn(_SNAP_ORDER, order.cast("long")),
-        meta["key"],
-        [*meta["order"], _SNAP_ORDER],
-    ).drop(_SNAP_ORDER)
+def _view(
+    spark: SparkSession,
+    snap: tuple[str, int] | None,
+    meta: dict | None,
+    upsert: Upsert | None = None,
+    snap_id: int = 0,
+) -> DataFrame:
+    """The table as of ``snap`` (root, id), or — with ``upsert`` — the
+    state after that batch commits as snapshot ``snap_id`` (``snap``
+    None: into an empty store). The store's one merge rule: per key,
+    the highest (order columns, snap order) row of the snapshot's base
+    and chain files, read in ONE scan, plus the batch, wins. A file's
+    snap order comes from its path, so data files hold only the
+    table's columns; the batch takes ``snap_id``, above every id in the
+    chain. That is what replaying the batches through
+    ``merge_upsert_frames`` one by one yields. The scan uses the
+    recorded schema, so an evolved chain reads with its widest one;
+    the batch joins it with ``allowMissingColumns=evolve_schema``. A
+    full snapshot read alone is one scan with no window; a dir without
+    a recorded schema is a full table read with an inferred one."""
+    reader = spark.read.schema(T.StructType.fromJson(meta["schema"])) if meta else spark.read
+    if upsert is None and not (meta and meta["chain"]):
+        return reader.parquet(f"{snap[0]}/snap-{snap[1]}")
+    scan = None
+    if snap is not None:
+        ids = [meta["base"], *meta["chain"]] if meta else [snap[1]]
+        order = F.regexp_extract(F.col("_metadata.file_path"), r"/snap-(\d+)/[^/]*$", 1)
+        scan = reader.parquet(*[f"{snap[0]}/snap-{i}" for i in ids])
+        scan = scan.withColumn(_SNAP_ORDER, order.cast("long"))
+    if upsert is None:
+        merged, key, order_cols = scan, meta["key"], meta["order"]
+    else:
+        merged = upsert.batch.withColumn(_SNAP_ORDER, F.lit(snap_id).cast("long"))
+        if scan is not None:
+            merged = scan.unionByName(merged, allowMissingColumns=upsert.evolve_schema)
+        key, order_cols = upsert.key, _UPSERT_ORDER
+    return latest_wins(merged, key, [*order_cols, _SNAP_ORDER]).drop(_SNAP_ORDER)
 
 
 def _closure(fs: FileSystemOps, root: str, ids: set, known: dict[int, dict | None]) -> set[int]:
@@ -217,7 +234,7 @@ def _read(
     if snap is None:
         raise FileNotFoundError(f"no committed snapshot under {lay.root}")
     if as_of_batch is None:
-        return _view(spark, *snap, _marker(fs, *snap)[2])
+        return _view(spark, snap, _marker(fs, *snap)[2])
     requested = f"{lay.root}/snap-{as_of_batch}"
     # the dir must exist AND be at or below the committed id: a crash
     # after snap-N's write but before the pointer flip leaves a valid-
@@ -230,7 +247,7 @@ def _read(
             f"(committed: snap-{snap[1]}; retained batches: "
             f"{kept or 'none'}) — expired by retention or never committed"
         )
-    return _view(spark, lay.root, as_of_batch, _marker(fs, lay.root, as_of_batch)[2])
+    return _view(spark, (lay.root, as_of_batch), _marker(fs, lay.root, as_of_batch)[2])
 
 
 def read_upsert_target(
@@ -555,7 +572,7 @@ def merge_branch(
         if meta is not None and meta["chain"]:
             # a delta is whole only over its chain, which stays in the
             # branch root: write the head's view as a full snapshot
-            head = _view(spark, *bsnap, meta)
+            head = _view(spark, bsnap, meta)
             meta = _full_meta(new_id, head, meta["key"], meta["order"])
             _write_snap(fs, head, new_dir, marker, meta)
         else:
@@ -796,47 +813,36 @@ def _gc(
 
 @dataclass(frozen=True)
 class Upsert:
-    """A commit's transform that MERGEs one change batch into the table
-    by ``key``, latest ``ts`` winning (``merge_upsert_frames``). Unlike
-    an opaque ``prev -> state`` callable, it lets :func:`commit` write
-    the batch alone as a delta. ``evolve_schema`` widens the table with
-    the batch's new columns, NULL-filling either side."""
+    """A commit that MERGEs one change batch into the table by ``key``,
+    latest ``ts`` winning (:func:`_view`). ``evolve_schema`` widens the
+    table with the batch's new columns, NULL-filling either side."""
 
     batch: DataFrame
     key: str
     evolve_schema: bool = False
-    order_cols = ("ts",)
-
-    def __call__(self, prev_df: DataFrame | None) -> DataFrame:
-        if prev_df is None:
-            return self.batch
-        return merge_upsert_frames(
-            prev_df, self.batch, self.key, self.order_cols,
-            allow_missing_columns=self.evolve_schema,
-        )
 
 
-def _delta_schema(transform, meta: dict | None) -> dict | None:
-    """The table schema (JSON) after ``transform`` commits as a delta
-    over the local snapshot ``meta`` describes, or None when the commit
-    must write the full table: the transform is not an :class:`Upsert`
-    of the recorded key and order, the chain already holds 1/8 of the
-    base rows or more (the compaction rule), a shared column changed
-    type, or a strict upsert's columns differ (the full merge raises)."""
+def _delta_schema(upsert: Upsert | None, meta: dict | None) -> dict | None:
+    """The table schema (JSON) after ``upsert`` commits as a delta over
+    the local snapshot ``meta`` describes, or None when the commit must
+    write the full table: no upsert of the recorded key and order, the
+    chain already holds 1/8 of the base rows or more (the compaction
+    rule), a shared column changed type, or a strict upsert's columns
+    differ (the full merge raises)."""
     if (
-        not isinstance(transform, Upsert)
+        upsert is None
         or meta is None
-        or (meta["key"], meta["order"]) != (transform.key, list(transform.order_cols))
+        or (meta["key"], meta["order"]) != (upsert.key, _UPSERT_ORDER)
         or 8 * meta["chain_rows"] >= meta["base_rows"]
     ):
         return None
     table = T.StructType.fromJson(meta["schema"])
     have = {f.name: f.dataType for f in table}
-    batch = transform.batch.schema
+    batch = upsert.batch.schema
     if any(f.name in have and have[f.name] != f.dataType for f in batch):
         return None
     new = [f for f in batch if f.name not in have]
-    if not transform.evolve_schema and (new or len(batch) != len(table)):
+    if not upsert.evolve_schema and (new or len(batch) != len(table)):
         return None
     return T.StructType([*table, *new]).jsonValue()
 
@@ -891,8 +897,9 @@ def commit(
     and no predecessor read — when ``transform`` is an :class:`Upsert`
     and :func:`_delta_schema` allows it over a LOCAL predecessor (a
     branch's first commit, whose predecessor is main's, is full).
-    Otherwise it is the full ``transform(prev_df_or_None)``: the
-    compaction arm, and the only arm of an opaque callable.
+    Otherwise it is the full table: for an :class:`Upsert`, the
+    :func:`_view` of the predecessor's files plus the batch; for an
+    opaque callable, ``transform(prev_df_or_None)``.
 
     ``run_id`` scopes the redelivery short-circuit to the WRITING QUERY
     (its checkpoint path): engine batch ids restart at 0 for every
@@ -900,9 +907,8 @@ def commit(
     of a *different* query appending to the same target whenever the
     committed ``_BATCH`` carried the same number. The marker stores
     ``<run_id>\\n<batch_id>``; redelivery requires BOTH to match. A
-    single-line marker (older stores, merge commits) compares the id
-    only; a dir without a marker predates it, and its name IS the
-    engine batch id.
+    single-line marker (a merge commit) compares the id only; a dir
+    without a marker is named by its engine batch id.
 
     SNAPSHOT IDS vs ENGINE BATCH IDS: snap ids are a store-local
     monotonic sequence ``max(engine batch id, committed id + 1)`` —
@@ -938,25 +944,20 @@ def commit(
     snap_id = batch_id if prev is None else max(batch_id, prev[1] + 1)
     snap_dir = f"{target_path}/snap-{snap_id}"
     head = f"{run_id}\n{batch_id}"
-    schema = _delta_schema(transform, meta) if local else None
-    prev_df = (
-        _view(spark, *prev, meta)
-        if prev is not None and (schema is None or emit is not None)
-        else None
-    )
+    upsert = transform if isinstance(transform, Upsert) else None
+    schema = _delta_schema(upsert, meta) if local else None
+    prev_df = _view(spark, prev, meta) if prev and (upsert is None or emit) else None
     if schema is not None:
         delta = {**meta, "chain": [*meta["chain"], snap_id], "schema": schema}
-        new = _write_snap(fs, transform.batch, snap_dir, head, delta)
+        new = _write_snap(fs, upsert.batch, snap_dir, head, delta)
     else:
-        state = transform(prev_df)
-        key, order = (
-            (transform.key, list(transform.order_cols))
-            if isinstance(transform, Upsert)
-            else (None, None)
-        )
+        if upsert is None:
+            state, key, order = transform(prev_df), None, None
+        else:
+            state, key, order = _view(spark, prev, meta, upsert, snap_id), upsert.key, _UPSERT_ORDER
         new = _write_snap(fs, state, snap_dir, head, _full_meta(snap_id, state, key, order))
     if emit is not None:
-        emit(prev_df, _view(spark, target_path, snap_id, new), snap_id)
+        emit(prev_df, _view(spark, (target_path, snap_id), new), snap_id)
     _commit_pointer(fs, target_path, snap_id, batch_id)
     lay.snaps.add(snap_id)
     known = {snap_id: new, **({prev[1]: meta} if local else {})}

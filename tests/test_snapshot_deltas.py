@@ -194,3 +194,28 @@ def test_evolved_chain_reads_widest_schema_and_strict_raises(spark, tmp_path):
     # strict mode: a batch without the table's new column still raises
     with pytest.raises(AnalysisException):
         _commit(spark, root, [(3, T0 + timedelta(hours=2), "strict")], 3)
+
+
+def test_first_commit_keeps_one_row_per_key(spark, tmp_path):
+    root = str(tmp_path / "tgt")
+    probe = spark.createDataFrame([(1, 1), (1, 2), (2, 1)], "k bigint, ts bigint")
+    SS.commit(spark, root, 2, 0, SS.Upsert(probe, "k"), run_id="run")
+    assert _rows(SS.read_upsert_target(spark, root)) == {(1, 2), (2, 1)}
+    assert _rows(spark.read.parquet(f"{root}/snap-0")) == {(1, 2), (2, 1)}
+
+
+def test_each_written_state_runs_at_most_one_window(spark, tmp_path, monkeypatch):
+    root, _ = _chained(spark, tmp_path, "tgt", 1)
+    windows = []
+    write = SS._write_snap
+
+    def counting(fs, df, *args):
+        windows.append(df._jdf.queryExecution().optimizedPlan().toString().count("Window ["))
+        return write(fs, df, *args)
+
+    monkeypatch.setattr(SS, "_write_snap", counting)
+    SS.branch_snapshot(spark, root, "dev")
+    _commit(spark, SS.branch_root(root, "dev"), _batch(2), 0, run="branch")
+    for b in (2, 3, 4):  # two deltas, then a compaction over the chain 1..3
+        _commit(spark, root, _batch(b), b)
+    assert windows == [1, 0, 0, 1]
