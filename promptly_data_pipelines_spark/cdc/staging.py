@@ -8,7 +8,11 @@ function here:
   in order);
 - :func:`foreach_batch_writer` builds the foreachBatch writer;
 - :func:`drain_stream` waits for the query, stopping it and raising on
-  timeout.
+  timeout;
+- :func:`drain_partial_store` runs the whole loop for a stream-fed
+  partial store (stage one frame, drain it, land each micro-batch's
+  partial under ``store/batch_id=N`` through
+  :func:`write_batch_partial`).
 
 Staging roots come from :func:`fresh_staging_dir` (wiped) or
 :func:`staging_base` (located). The memory sink the aggregation
@@ -125,3 +129,61 @@ def drain_stream(q, what: str, timeout_s: int = 300) -> None:
     if not q.awaitTermination(timeout_s):
         q.stop()
         raise RuntimeError(f"{what} stream did not drain within {timeout_s}s")
+
+
+def write_batch_partial(
+    store: str,
+    partial: Callable[[DataFrame, int], DataFrame],
+    batch_df: DataFrame,
+    batch_id: int,
+) -> None:
+    """Land one micro-batch's ``partial(batch_df, batch_id)`` under
+    ``store/batch_id=N`` with overwrite: foreachBatch is at-least-once,
+    and a redelivered batch must replace its own partial, not add a
+    second copy. The batch is persisted while the partial is built and
+    written, so a partial that reads it twice scans it once."""
+    batch_df = batch_df.persist()
+    try:
+        partial(batch_df, batch_id).write.mode("overwrite").parquet(
+            os.path.join(store, f"batch_id={batch_id}")
+        )
+    finally:
+        batch_df.unpersist()
+
+
+def drain_partial_store(
+    frame: DataFrame,
+    base: str,
+    partial: Callable[[DataFrame, int], DataFrame],
+    arrival_order: str | None = None,
+) -> str:
+    """Feed ``frame`` through the streaming engine into a store of
+    per-batch partials and return the store path (``base/store``).
+
+    The frame is staged under ``base/src`` as one JSON file per core
+    (range-clustered on ``arrival_order`` when given, so a run of keys
+    arrives in consecutive triggers) and read back with its own schema,
+    a quarter of the files per trigger: every stream-fed store drains
+    several micro-batches, so a partial whose merge claims to be
+    batching-independent is exercised across batch boundaries. Each
+    batch lands through :func:`write_batch_partial`."""
+    spark = frame.sparkSession
+    par = spark.sparkContext.defaultParallelism
+    src, store = os.path.join(base, "src"), os.path.join(base, "store")
+    (
+        frame.repartitionByRange(par, arrival_order)
+        if arrival_order
+        else frame.repartition(par)
+    ).write.json(src)
+    stream = (
+        spark.readStream.schema(frame.schema)
+        .option("maxFilesPerTrigger", max(1, par // 4))
+        .json(src)
+    )
+    q = foreach_batch_writer(
+        stream,
+        lambda batch_df, batch_id: write_batch_partial(store, partial, batch_df, batch_id),
+        os.path.join(base, "ckpt"),
+    ).start()
+    drain_stream(q, f"partial store {base}")
+    return store

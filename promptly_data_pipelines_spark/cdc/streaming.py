@@ -51,6 +51,7 @@ from .envelope import (
     synthesize_envelopes,
 )
 from .staging import (
+    drain_partial_store,
     drain_stream,
     foreach_batch_writer,
     fresh_staging_dir,
@@ -1893,50 +1894,31 @@ def _lineitem_join_stream(
     (counts + price CENTS — bigint sums are associative, so HOWEVER
     the engine batches the input, re-summing the partials is bit-equal
     to the one-shot batch join the oracle computes; a double sum would
-    vary with batch boundaries), landed idempotently under
-    ``store/batch_id=N`` (overwrite: a redelivered batch rewrites its
-    own dir). ``arrival_order`` clusters the staged files by that
-    column's range — the burst arrival shape, where a viral key lands
-    in consecutive triggers instead of being smeared uniformly."""
-    base = fresh_staging_dir(spark, sf_dir, tag)
-    src, store = os.path.join(base, "src"), os.path.join(base, "store")
-    par = spark.sparkContext.defaultParallelism
-    li = table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_returnflag", "l_extendedprice"
-    )
-    (
-        li.repartitionByRange(par, F.col(arrival_order))
-        if arrival_order
-        else li.repartition(par)
-    ).write.json(src)
+    vary with batch boundaries), landed by
+    :func:`~.staging.drain_partial_store`. ``arrival_order`` clusters
+    the staged files by that column's range — the burst arrival shape,
+    where a viral key lands in consecutive triggers instead of being
+    smeared uniformly."""
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    stream = (
-        spark.readStream.schema(
-            "l_orderkey bigint, l_returnflag string, l_extendedprice double"
+
+    def partial(batch_df: DataFrame, batch_id: int) -> DataFrame:
+        return join_batch(batch_df, o, batch_id).groupBy(
+            "o_orderpriority", "l_returnflag"
+        ).agg(
+            F.count("*").cast("long").alias("n_lines"),
+            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long"))
+            .cast("long")
+            .alias("sum_cents"),
         )
-        .option("maxFilesPerTrigger", max(1, par // 4))
-        .json(src)
+
+    store = drain_partial_store(
+        table(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_returnflag", "l_extendedprice"
+        ),
+        fresh_staging_dir(spark, sf_dir, tag),
+        partial,
+        arrival_order,
     )
-
-    def feed(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.persist()
-        try:
-            partial = join_batch(batch_df, o, batch_id).groupBy(
-                "o_orderpriority", "l_returnflag"
-            ).agg(
-                F.count("*").cast("long").alias("n_lines"),
-                F.sum(F.round(F.col("l_extendedprice") * 100).cast("long"))
-                .cast("long")
-                .alias("sum_cents"),
-            )
-            partial.write.mode("overwrite").parquet(
-                os.path.join(store, f"batch_id={batch_id}")
-            )
-        finally:
-            batch_df.unpersist()
-
-    q = foreach_batch_writer(stream, feed, os.path.join(base, "ckpt")).start()
-    drain_stream(q, f"{tag} join")
     return (
         spark.read.parquet(store)
         .groupBy("o_orderpriority", "l_returnflag")

@@ -85,6 +85,21 @@ def _capacity(support: float) -> int:
     return max(8, ceil(1.0 / support) - 1)
 
 
+def _candidates(df: DataFrame, key: str, capacity: int) -> DataFrame:
+    """The candidate pass over the non-NULL ``key`` column of ``df``:
+    each partition's Misra–Gries survivors, deduplicated (≤ k·P rows, a
+    tiny dedup shuffle), typed as ``df``'s ``key`` field."""
+    return (
+        df.select(key)
+        .filter(F.col(key).isNotNull())
+        .mapInPandas(
+            _mg_partition_candidates(key, capacity),
+            schema=T.StructType([T.StructField(key, df.schema[key].dataType)]),
+        )
+        .dropDuplicates([key])
+    )
+
+
 def _recount(df: DataFrame, key: str, cands: DataFrame, support: float) -> DataFrame:
     """Exact counts of the ``cands`` keys over ``df``, kept where they
     exceed ``support`` × ALL rows of ``df`` — NULL-key rows included,
@@ -126,17 +141,7 @@ def heavy_hitters(
         raise ValueError(f"support must be in (0,1), got {support}")
     if capacity is None:
         capacity = _capacity(support)
-    field = df.schema[key]
-    # column-pruned scan: the census reads ONE column
-    pruned = df.select(key).filter(F.col(key).isNotNull())
-    cands = (
-        pruned.mapInPandas(
-            _mg_partition_candidates(key, capacity),
-            schema=T.StructType([T.StructField(key, field.dataType)]),
-        )
-        .dropDuplicates([key])  # ≤ k·P rows: a tiny dedup shuffle
-    )
-    return _recount(df, key, cands, support)
+    return _recount(df, key, _candidates(df, key, capacity), support)
 
 
 @query(
@@ -189,43 +194,19 @@ def stream_exec_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     set regardless of how the engine split the input. The candidates
     evolve per trigger (cheap, bounded); the one recount pass is the
     per-serving amortized cost, not a per-event one."""
-    import os
-
-    from ..cdc.staging import drain_stream, foreach_batch_writer, fresh_staging_dir
+    from ..cdc.staging import drain_partial_store, fresh_staging_dir
 
     support = 1e-4
     capacity = _capacity(support)
-    base = fresh_staging_dir(spark, sf_dir, "stream_hh")
-    src = os.path.join(base, "src")
-    store = os.path.join(base, "cands")
-    par = spark.sparkContext.defaultParallelism
-    table(spark, sf_dir, "orders").select("o_custkey").repartition(par).write.json(
-        src
+    orders = table(spark, sf_dir, "orders").select("o_custkey")
+    store = drain_partial_store(
+        orders,
+        fresh_staging_dir(spark, sf_dir, "stream_hh"),
+        lambda batch_df, _batch_id: _candidates(batch_df, "o_custkey", capacity),
     )
-
-    stream = (
-        spark.readStream.schema("o_custkey bigint")
-        .option("maxFilesPerTrigger", max(1, par // 4))
-        .json(src)
-    )
-
-    def feed(batch_df: DataFrame, batch_id: int) -> None:
-        pruned = batch_df.filter(F.col("o_custkey").isNotNull())
-        cands = pruned.mapInPandas(
-            _mg_partition_candidates("o_custkey", capacity),
-            schema="o_custkey bigint",
-        ).dropDuplicates(["o_custkey"])
-        cands.write.mode("overwrite").parquet(
-            os.path.join(store, f"batch_id={batch_id}")
-        )
-
-    q = foreach_batch_writer(stream, feed, os.path.join(base, "ckpt")).start()
-    drain_stream(q, "heavy-hitter")
-
     cand_union = (
         spark.read.parquet(store).select("o_custkey").dropDuplicates(["o_custkey"])
     )
-    raw = spark.read.schema("o_custkey bigint").json(src)
-    return _recount(raw, "o_custkey", cand_union, support).select(
+    return _recount(orders, "o_custkey", cand_union, support).select(
         F.col("o_custkey").alias("key"), "n_occurrences"
     )

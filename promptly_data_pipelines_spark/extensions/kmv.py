@@ -437,30 +437,6 @@ def agg_kmv_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def append_kmv_batch(
-    store: str,
-    batch_df: DataFrame,
-    batch_id: int,
-    key: Column,
-    group_cols: Sequence[str],
-    k: int = KMV_K,
-) -> None:
-    """Idempotent foreachBatch sink body: one batch's partial KMV
-    sketches land under ``store/batch_id=N`` with overwrite, so the
-    engine's at-least-once redelivery of a batch REPLACES rather than
-    duplicates it — the repo's standing replay rule (see
-    quantiles.append_sketch_batch; for KMV a replayed append would be
-    HARMLESS to the merged value — k-smallest-distinct is idempotent
-    under duplicates — but the store should not grow on replays
-    either). Module-level so the replay property is unit-testable
-    without driving a stream."""
-    import os
-
-    kmv_sketch_partials(batch_df, group_cols, key, k).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(store, f"batch_id={batch_id}"))
-
-
 def build_kmv_stream_store(spark: SparkSession, sf_dir: str, tag: str) -> str:
     """Feed the events table through the REAL streaming engine into a
     batch_id-keyed KMV partial-sketch store and return the store path.
@@ -476,34 +452,21 @@ def build_kmv_stream_store(spark: SparkSession, sf_dir: str, tag: str) -> str:
     stream_exec_kmv_sketch)."""
     import os
 
-    from ..cdc.staging import (
-        drain_stream,
-        foreach_batch_writer,
-        fresh_staging_dir,
-        staging_base,
-    )
+    from ..cdc.staging import drain_partial_store, fresh_staging_dir, staging_base
 
     base = staging_base(spark, sf_dir, tag)
     store = os.path.join(base, "store")
     marker = os.path.join(base, "_COMPLETE")
     if os.path.exists(marker) and os.path.exists(store):
         return store
-    base = fresh_staging_dir(spark, sf_dir, tag)
-    src = os.path.join(base, "src")
     ev = table(spark, sf_dir, "events")
-    ev.select("event_type", _user_day(ev).alias("ud")).write.json(src)
-
-    stream = (
-        spark.readStream.schema("event_type string, ud string")
-        .option("maxFilesPerTrigger", 4)
-        .json(src)
+    store = drain_partial_store(
+        ev.select("event_type", _user_day(ev).alias("ud")),
+        fresh_staging_dir(spark, sf_dir, tag),
+        lambda batch_df, _batch_id: kmv_sketch_partials(
+            batch_df, ["event_type"], F.col("ud")
+        ),
     )
-
-    def feed(batch_df: DataFrame, batch_id: int) -> None:
-        append_kmv_batch(store, batch_df, batch_id, F.col("ud"), ["event_type"])
-
-    q = foreach_batch_writer(stream, feed, os.path.join(base, "ckpt")).start()
-    drain_stream(q, "kmv ingest")
     with open(marker, "w", encoding="utf-8") as fh:
         fh.write("drained")
     return store
@@ -547,12 +510,11 @@ def stream_exec_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     MATTER how the engine batched the input (the quantile twin can
     only promise partial-set determinism; KMV's merged VALUE is
     batching-independent outright). Mechanics mirror
-    stream_exec_quantile_sketch: file-source micro-batches
-    (maxFilesPerTrigger=4 forces a real multi-batch drain),
-    foreachBatch lands per-batch bounded partials under batch_id-keyed
-    overwrite paths (idempotent under at-least-once replay), and the
-    answer is kmv_merge + estimator over the SKETCH STORE — the raw
-    rows are never retained. At 100 TB this is the distinct-count
+    stream_exec_quantile_sketch: ``cdc.staging.drain_partial_store``
+    lands per-batch bounded partials under batch_id-keyed overwrite
+    paths (idempotent under at-least-once replay), and the answer is
+    kmv_merge + estimator over the SKETCH STORE — the raw rows are
+    never retained. At 100 TB this is the distinct-count
     serving loop: ingest writes kilobyte partials per trigger; any
     segment/rollup/set-algebra question reads sketches only."""
     store = build_kmv_stream_store(spark, sf_dir, "kmv_store")

@@ -283,26 +283,6 @@ def sketch_quantiles(
     return sketches.groupBy(*group_cols).applyInPandas(render, out_schema)
 
 
-def append_sketch_batch(
-    store: str,
-    batch_df: DataFrame,
-    batch_id: int,
-    value_col: str,
-    group_cols: list[str],
-) -> None:
-    """Idempotent foreachBatch sink body: one batch's partial sketches
-    land under ``store/batch_id=N`` with overwrite, so the engine's
-    at-least-once redelivery of a batch REPLACES rather than duplicates
-    it (a plain append would silently inflate every merged n on replay
-    — ADVICE r12). Module-level so the replay property is unit-testable
-    without driving a stream (tests/test_quantile_sketch.py)."""
-    import os
-
-    sketch_partials(batch_df, value_col, group_cols).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(store, f"batch_id={batch_id}"))
-
-
 @query("dq_quantile_sketch")
 def dq_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type value percentiles from the MERGED sketch rollup
@@ -325,37 +305,22 @@ def dq_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_exec_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The sketch store fed by the REAL streaming engine — the
     deployment shape end to end: events arrive as micro-batches
-    (file-source stand-in, maxFilesPerTrigger=4 forces a genuinely
-    multi-batch drain), ``foreachBatch`` appends each batch's partial
-    sketches to a parquet SKETCH STORE (KBs per batch — the raw rows
-    are never retained), and the answer is a rollup+quantile over the
-    store. Because merging folds in canonical byte order, the final
+    (``cdc.staging.drain_partial_store``), each batch's partial
+    sketches land in a parquet SKETCH STORE (KBs per batch — the raw
+    rows are never retained), and the answer is a rollup+quantile over
+    the store. Because merging folds in canonical byte order, the final
     result is a pure function of the partial SET: however the engine
     batched the input, re-running the rollup over the store gives the
     same answer, and the certified bound + exact n hold against the
     batch pipeline (pinned in tests/test_quantile_sketch.py).
     Rows-only by necessity, like dq_quantile_sketch."""
-    import os
+    from ..cdc.staging import drain_partial_store, fresh_staging_dir
 
-    from ..cdc.staging import drain_stream, foreach_batch_writer, fresh_staging_dir
-
-    base = fresh_staging_dir(spark, sf_dir, "stream_sketch")
-    src = os.path.join(base, "src")
-    store = os.path.join(base, "store")
-    ev = table(spark, sf_dir, "events").select("event_type", "value")
-    ev.write.json(src)
-
-    stream = (
-        spark.readStream.schema("event_type string, value double")
-        .option("maxFilesPerTrigger", 4)
-        .json(src)
+    store = drain_partial_store(
+        table(spark, sf_dir, "events").select("event_type", "value"),
+        fresh_staging_dir(spark, sf_dir, "stream_sketch"),
+        lambda batch_df, _batch_id: sketch_partials(batch_df, "value", ["event_type"]),
     )
-
-    def feed(batch_df: DataFrame, batch_id: int) -> None:
-        append_sketch_batch(store, batch_df, batch_id, "value", ["event_type"])
-
-    q = foreach_batch_writer(stream, feed, os.path.join(base, "ckpt")).start()
-    drain_stream(q, "sketch ingest")
     merged = sketch_rollup(spark.read.parquet(store), ["event_type"])
     return sketch_quantiles(merged, ["event_type"]).orderBy("event_type", "q")
 

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
+from ..cdc.batch import latest_wins
 from ..functions import ts_str
 from ..registry import query
 
@@ -143,11 +144,8 @@ def dedup_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     compaction the reference declares but never materializes
     (raw_provider_postgres.sql:9-10 merge config + provider.json:21-22
     op/ts_ms). event_id breaks ts ties deterministically."""
-    ev = table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.col("ts").desc(), F.col("event_id").desc())
     return (
-        ev.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        latest_wins(table(spark, sf_dir, "events"), "user_id", ["ts", "event_id"])
         .select(
             "user_id",
             "event_id",

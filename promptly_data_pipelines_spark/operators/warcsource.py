@@ -69,6 +69,7 @@ from pyspark.sql.datasource import (
 
 from ..catalog import table
 from ..registry import query
+from ..session import tune_session
 from .scans import _session_tag
 
 _WARC_CAP = 200  # absolute id bound: driver-side staging stays harness-sized
@@ -578,25 +579,14 @@ class WarcDataSource(DataSource):
         return WarcStreamWriter(self.options)
 
 
-_PUSHDOWN_CONF = "spark.sql.python.filterPushdown.enabled"
-
-
 def read_warc(spark: SparkSession, path: str) -> DataFrame:
     """Register (idempotent — latest registration wins) + read, with
-    header-filter pushdown when the session allows it. The conf and
-    the reader flavor must agree (Spark refuses a pushFilters-capable
-    reader under a false conf), so both are set here together."""
+    header-filter pushdown. Spark refuses a pushFilters-capable reader
+    unless ``spark.sql.python.filterPushdown.enabled`` is on, which
+    ``session.tune_session`` sets."""
+    tune_session(spark)
     spark.dataSource.register(WarcDataSource)
-    try:
-        spark.conf.set(_PUSHDOWN_CONF, "true")
-    except Exception:
-        pass  # conf locked down: fall through to the plain reader
-    enabled = (spark.conf.get(_PUSHDOWN_CONF, "false") or "false").lower() == "true"
-    return (
-        spark.read.format("pdp_warc")
-        .option("pushdown", "true" if enabled else "false")
-        .load(path)
-    )
+    return spark.read.format("pdp_warc").option("pushdown", "true").load(path)
 
 
 def warc_to_parquet(spark: SparkSession, warc_dir: str, parquet_dir: str) -> None:

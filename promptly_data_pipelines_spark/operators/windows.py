@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
+from ..cdc.batch import latest_wins
 from ..functions import ts_str
 from ..registry import query
 
@@ -711,11 +712,8 @@ def events_user_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.sum("value"), 2).alias("total_value"),
     )
     decay = decayed_terms(ev).groupBy("user_id").agg(ema_agg().alias("ema_value"))
-    wl = Window.partitionBy("user_id").orderBy(F.col("ts").desc(), F.col("event_id").desc())
-    last_ev = (
-        ev.withColumn("rn", F.row_number().over(wl))
-        .filter(F.col("rn") == 1)
-        .select("user_id", F.col("event_type").alias("last_type"))
+    last_ev = latest_wins(ev, "user_id", ["ts", "event_id"]).select(
+        "user_id", F.col("event_type").alias("last_type")
     )
     return base.join(decay, "user_id").join(last_ev, "user_id")
 

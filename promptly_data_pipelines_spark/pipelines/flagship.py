@@ -20,10 +20,11 @@ Reference pipeline, step by step, with its analog here:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
+from ..cdc.batch import latest_wins
 from ..functions import date_key, json_int, nullify_literal
 from ..registry import query
 
@@ -38,8 +39,7 @@ def curated_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("ingestion_date", date_key("ts"))
         .withColumn("event_type_clean", nullify_literal("event_type", "error"))
     )
-    w = Window.partitionBy("user_id").orderBy(F.col("ts").desc(), F.col("event_id").desc())
-    return raw.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1).drop("rn")
+    return latest_wins(raw, "user_id", ["ts", "event_id"])
 
 
 @query(

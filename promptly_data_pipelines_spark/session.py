@@ -120,6 +120,9 @@ def tune_session(spark: SparkSession) -> SparkSession:
     # timezone set above, and exactly what DuckDB's naive TIMESTAMP
     # compares equal to. Scan-level conf, so pushdown is unaffected.
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    # Python data sources may push filters down (the WARC reader's
+    # header filters); a pushFilters-capable reader fails without it.
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     _ship_package(spark)
     return spark
 

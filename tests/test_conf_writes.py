@@ -1,8 +1,9 @@
-"""No-Spark check that only ``session.py`` writes the shuffle partition
-count. Every other module that needs a different count for one job
-(a stream's state partitions) builds it in
-``session.scoped_session``; a ``conf.set`` of the shared session's
-value would leak into, and race with, every other query on it.
+"""No-Spark check that only ``session.py`` writes session conf. Every
+other module that needs a different value for one job (a stream's
+state partitions) builds it in ``session.scoped_session``, and every
+runtime default the package relies on is set once in
+``session.tune_session``; a ``conf.set`` on the caller's session
+anywhere else would leak into, and race with, every other query on it.
 """
 
 from __future__ import annotations
@@ -14,10 +15,9 @@ _PKG = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     "promptly_data_pipelines_spark",
 )
-_KEY = "spark.sql.shuffle.partitions"
 
 
-def _shuffle_conf_sets(path: str) -> list[int]:
+def _conf_sets(path: str) -> list[int]:
     with open(path, encoding="utf-8") as f:
         tree = ast.parse(f.read(), path)
     return [
@@ -28,23 +28,20 @@ def _shuffle_conf_sets(path: str) -> list[int]:
         and node.func.attr == "set"
         and isinstance(node.func.value, ast.Attribute)
         and node.func.value.attr == "conf"
-        and node.args
-        and isinstance(node.args[0], ast.Constant)
-        and node.args[0].value == _KEY
     ]
 
 
-def test_only_session_module_sets_shuffle_partitions():
+def test_only_session_module_sets_conf():
     offenders = []
     for root, _dirs, files in os.walk(_PKG):
         for fn in files:
             path = os.path.join(root, fn)
             if fn.endswith(".py") and path != os.path.join(_PKG, "session.py"):
                 offenders += [
-                    f"{os.path.relpath(path, _PKG)}:{n}" for n in _shuffle_conf_sets(path)
+                    f"{os.path.relpath(path, _PKG)}:{n}" for n in _conf_sets(path)
                 ]
     assert not offenders, (
-        f"conf.set({_KEY!r}, ...) outside session.py: {offenders} — "
-        "use session.scoped_session for a per-stream count"
+        f"conf.set(...) outside session.py: {offenders} — set a runtime "
+        "default in session.tune_session, a per-stream value in "
+        "session.scoped_session"
     )
-

@@ -1,7 +1,8 @@
 """The staged-stream harness (``cdc/staging.py``): one stager, one
-foreachBatch writer, one drain. The no-Spark checks pin that the
-package has no other copy of them; the Spark test pins the stager's
-ordering contract end to end through ``upsert_sink``."""
+foreachBatch writer, one drain, one stream-fed partial store. The
+no-Spark checks pin that the package has no other copy of them; the
+Spark tests pin the stager's ordering contract end to end through
+``upsert_sink`` and the partial store's replay rule."""
 
 from __future__ import annotations
 
@@ -16,20 +17,41 @@ from conftest import SF_DIR
 from promptly_data_pipelines_spark.catalog import table
 from promptly_data_pipelines_spark.cdc import streaming as S
 from promptly_data_pipelines_spark.cdc.envelope import synthesize_envelopes
-from promptly_data_pipelines_spark.cdc.staging import drain_stream, stage_frames
+from promptly_data_pipelines_spark.cdc.staging import (
+    drain_stream,
+    stage_frames,
+    write_batch_partial,
+)
+from promptly_data_pipelines_spark.extensions.kmv import (
+    _user_day,
+    kmv_merge,
+    kmv_sketch_partials,
+)
+from promptly_data_pipelines_spark.extensions.quantiles import (
+    MRLSketch,
+    sketch_partials,
+    sketch_rollup,
+)
 from promptly_data_pipelines_spark.operators.snapshot_store import upsert_history
 
 _PKG = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     "promptly_data_pipelines_spark",
 )
-# call → the one (module, function) allowed to make it; a bare name
-# matches any receiver, a dotted one only that module's function
+# call → the (module, function) pairs allowed to make it; a method
+# name matches any receiver, a dotted one only that module's function,
+# and a plain function name a direct call of it
 _ONLY_IN = {
-    "awaitTermination": ("cdc/staging.py", "drain_stream"),
-    "foreachBatch": ("cdc/staging.py", "foreach_batch_writer"),
-    "os.utime": ("cdc/staging.py", "publish_arrivals"),
-    "shutil.move": ("cdc/staging.py", "publish_arrivals"),
+    "awaitTermination": {("cdc/staging.py", "drain_stream")},
+    "foreachBatch": {("cdc/staging.py", "foreach_batch_writer")},
+    "foreach_batch_writer": {
+        ("cdc/staging.py", "drain_partial_store"),
+        ("cdc/streaming.py", "upsert_sink"),
+        ("cdc/streaming.py", "materialized_view_sink"),
+        ("pipelines/incremental.py", "stream_exec_incremental"),
+    },
+    "os.utime": {("cdc/staging.py", "publish_arrivals")},
+    "shutil.move": {("cdc/staging.py", "publish_arrivals")},
 }
 
 
@@ -54,6 +76,9 @@ def _watched_calls(tree: ast.AST) -> list[tuple[str, str | None, int]]:
                 for call in (attr, dotted):
                     if call in _ONLY_IN:
                         out.append((call, fn, child.lineno))
+            elif isinstance(child, ast.Call) and isinstance(child.func, ast.Name):
+                if child.func.id in _ONLY_IN:
+                    out.append((child.func.id, fn, child.lineno))
             inner = isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef))
             visit(child, child.name if inner else fn)
 
@@ -66,11 +91,12 @@ def test_stage_and_drain_steps_have_one_home():
         f"{rel}:{line} {call} in {fn}"
         for rel, tree in _modules()
         for call, fn, line in _watched_calls(tree)
-        if (rel, fn) != _ONLY_IN[call]
+        if (rel, fn) not in _ONLY_IN[call]
     ]
     assert not offenders, (
         "stage with cdc.staging.stage_frames/publish_arrivals, build writers "
-        f"with foreach_batch_writer, drain with drain_stream: {offenders}"
+        "with foreach_batch_writer, drain with drain_stream, feed a "
+        f"per-batch partial store with drain_partial_store: {offenders}"
     )
 
 
@@ -155,3 +181,54 @@ def test_stage_frames_orders_after_held_files_and_drains_one_snapshot_each(
     q = S.upsert_sink(S.live_rows(stream), tgt, ckpt, keep_snapshots=100).start()
     drain_stream(q, "stager contract")
     assert len(upsert_history(spark, tgt)) == 4
+
+
+def _mrl_n(partials):
+    merged = sketch_rollup(partials, ["event_type"])
+    return {r.event_type: MRLSketch.from_bytes(bytes(r.sketch)).n for r in merged.collect()}
+
+
+def _kmv_hashes(partials):
+    merged = kmv_merge(partials.select("event_type", "hashes"), ["event_type"])
+    return {r.event_type: list(r.hashes) for r in merged.collect()}
+
+
+# sketch → (staged columns, per-batch partial, merged summary)
+_PARTIALS = {
+    "mrl": (
+        lambda ev: ev.select("event_type", "event_id", "value"),
+        lambda batch_df, _batch_id: sketch_partials(batch_df, "value", ["event_type"]),
+        _mrl_n,
+    ),
+    "kmv": (
+        lambda ev: ev.select("event_type", "event_id", _user_day(ev).alias("ud")),
+        lambda batch_df, _batch_id: kmv_sketch_partials(
+            batch_df, ["event_type"], F.col("ud")
+        ),
+        _kmv_hashes,
+    ),
+}
+
+
+@pytest.mark.parametrize("sketch", sorted(_PARTIALS))
+def test_replayed_batch_replaces_its_partial(spark, tmp_path, sketch):
+    """foreachBatch is at-least-once: a redelivered batch_id must
+    REPLACE its partial, not add a second copy. Delivering batch 0
+    twice leaves the store unchanged (for MRL a second copy would
+    double batch 0's n; KMV's merged value would survive it, but the
+    store must not grow), and with batch 1 the store merges to the
+    one-shot summary over the whole table."""
+    stage, partial, summary = _PARTIALS[sketch]
+    ev = stage(table(spark, SF_DIR, "events"))
+    b0, b1 = ev.where("event_id % 2 = 0"), ev.where("event_id % 2 = 1")
+    store = str(tmp_path / "store")
+
+    def stored():
+        return sorted(map(repr, spark.read.parquet(store).collect()))
+
+    write_batch_partial(store, partial, b0, 0)
+    once = stored()
+    write_batch_partial(store, partial, b0, 0)  # redelivery
+    assert stored() == once
+    write_batch_partial(store, partial, b1, 1)
+    assert summary(spark.read.parquet(store)) == summary(partial(ev, None))
