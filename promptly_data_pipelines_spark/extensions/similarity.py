@@ -1,18 +1,26 @@
 """Vector similarity search over ``embeddings`` (SURVEY.md §2j X5):
-brute-force cosine top-k as the exact baseline, an IVF-style
-coarse-quantized variant as the scale path.
+brute-force cosine top-k as the exact baseline; IVF, PQ and IVF-PQ as
+the approximate scale paths.
 
 Scale posture: the query set is always the broadcast side (q ≪ n);
 the corpus never shuffles. Brute force is one pass over corpus
 partitions with a per-partition top-k then a k-way merge
 (TakeOrderedAndProject shape per query via window rank). IVF prunes
 that pass to nprobe/nlist of the corpus.
+
+Every ranked result is built from three helpers: ``_queries`` (the
+query set with its hoisted norm), ``_scored`` (the hoisted cosine,
+rounded to 6 dp) and ``_top_k`` (the per-query rank with the vec_id
+tie-break).
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from ..catalog import table
 from ..registry import query
@@ -20,10 +28,11 @@ from ..registry import query
 TOP_K = 5
 N_QUERIES = 5  # vec_id < 5 are the query vectors
 # IVF recall contract: overlap/exact >= RECALL_NUM/TOP_K (0.8) per query.
-# Observed per-query overlap (r7 probe): sf0.001 {5,4,4,5,4}, sf0.01 all 5,
-# sf0.1 {5,4,5,5,4} — the contract holds everywhere with the driver's
-# correctness SF (0.01) at a full point of margin.
+# Observed per-query overlap: sf0.001 {5,4,4,5,4}, sf0.01 all 5,
+# sf0.1 {5,4,5,5,4} — the contract holds everywhere, with a full point
+# of margin at the driver's correctness SF (0.01).
 RECALL_NUM = 4
+IVF_ITERS = 3  # Lloyd iterations of the coarse k-means (learned_centroids)
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -45,17 +54,13 @@ def _cents_row(cents: DataFrame) -> DataFrame:
     map-only assignment forms consume. array_sort fixes the order
     (collect_list is shuffle-order-dependent; cent_id leads the
     struct, so the sort is a deterministic id sort). Size bound: the
-    array is nlist·dim doubles — the same bytes the old per-row
-    broadcast table carried; beyond ~10^5 centroids (≈50 MB) coarse
+    array is nlist·dim doubles; beyond ~10^5 centroids (≈50 MB) coarse
     assignment should move to a GEMM mapInPandas kernel like
     _gemm_candidates instead.
 
-    r16 (optimization round, guide §1.2 "per-task work"): each struct
-    carries its centroid's norm, precomputed ONCE per centroid here —
-    the old form's per-row `cosine` re-evaluated sqrt(dot(cvec,cvec))
-    for every (row × centroid) pair, i.e. a third of the assignment
-    flops spent recomputing nlist constants per row. Same expression,
-    same doubles — bit-identical scores (see _scored_cells)."""
+    Each struct carries its centroid's norm, computed once per
+    centroid here rather than once per (row × centroid) pair — the same
+    expression over the same doubles (see _scored_cells)."""
     return cents.select(
         "cent_id",
         "cvec",
@@ -69,24 +74,20 @@ def _cents_row(cents: DataFrame) -> DataFrame:
 
 def _scored_cells(vec: Column, nrm: Column) -> Column:
     """Per-row array of struct(dist, cent_id) against the broadcast
-    '_cents' column: the same `1 - cosine` expression the window form
-    computed per exploded row, now evaluated in-row — array_min /
-    array_sort over it reproduce the window's (dist ASC, cent_id ASC)
-    order bit-for-bit (struct comparison is lexicographic), proven by
-    the r13 A/B: identical assignments at sf0.001 and sf0.1 for both
-    the argmin and the top-n forms.
+    '_cents' column: ``1 - cosine(vec, cvec)`` evaluated in-row, so
+    array_min / array_sort over it order by (dist ASC, cent_id ASC)
+    (struct comparison is lexicographic).
 
-    r16: both norms are HOISTED — ``nrm`` is the row's own norm,
-    computed once per row in a projection BELOW the centroid
-    crossJoin (an attribute here, so interpreted-HOF evaluation can't
-    re-expand it per centroid), and ``c.cnorm`` is the per-centroid
-    constant from _cents_row. The expression is algebraically AND
-    bit-identically the old ``1 - cosine(vec, cvec)``: dot(a,b) /
-    (sqrt(dot(a,a)) * sqrt(dot(b,b))) with the two sqrt factors
-    produced by the same `dot` expression over the same values in the
-    same multiplication order — only the redundant re-evaluations are
-    gone (k+1 dots per row instead of 3k). Bit-equality is pinned by
-    tests/test_modules.py::test_scored_cells_norm_hoist_bit_identical."""
+    Both norms are hoisted: ``nrm`` is the row's own norm, computed in
+    a projection BELOW the centroid crossJoin (an attribute here, so
+    interpreted HOF evaluation cannot re-expand it per centroid), and
+    ``c.cnorm`` is the per-centroid constant from _cents_row. The
+    expression is bit-identical to ``1 - cosine(vec, cvec)``: dot(a,b)
+    / (sqrt(dot(a,a)) * sqrt(dot(b,b))) with the two sqrt factors
+    produced by the same `dot` over the same values in the same
+    multiplication order — only the re-evaluations go (k+1 dots per
+    row instead of 3k). test_cosine_norm_hoist_bit_identical pins the
+    same argument for the query-side form (_hoisted_cosine)."""
     return F.transform(
         F.col("_cents"),
         lambda c: F.struct(
@@ -106,71 +107,116 @@ def _with_nrm(df: DataFrame, vec_col: str, out: str = "_nrm") -> DataFrame:
     )
 
 
-def _cells_list(cents: DataFrame) -> list[tuple[int, list[float], float]]:
-    """Collected (cent_id, cvec, cnorm) sorted by cent_id — nlist·dim
-    doubles, model metadata (the same bytes _cents_row broadcasts; the
-    collect mirrors _codebook_by_sub's established pattern). cnorm is
-    the same left-to-right Σx² fold the JVM `dot` performs, through
-    math.sqrt — bit-identical to sqrt(dot(cvec,cvec))."""
-    return _cells_from_rows(cents.collect())
+def _queries(e: DataFrame, *keep: Column) -> DataFrame:
+    """The query set of a (vec_id, vec) corpus: (query_id, qvec, *keep,
+    _qnrm) for vec_id < N_QUERIES, the query norm hoisted into its own
+    projection. Five rows — every search broadcasts it."""
+    return _with_nrm(
+        e.filter(F.col("vec_id") < N_QUERIES).select(
+            F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec"), *keep
+        ),
+        "qvec",
+        out="_qnrm",
+    )
 
 
-def _cell_topn_kernel(
-    cells: list[tuple[int, list[float], float]],
-    n: int,
-    id_col: str,
-    vec_col: str,
-    nrm_col: str,
-):
+def _hoisted_cosine() -> Column:
+    """cosine(qvec, vec) over a (query × corpus) pair frame carrying
+    both hoisted norms (_qnrm from _queries, _nrm from _with_nrm):
+    dot(qvec, vec) / (_qnrm * _nrm). Each norm is the same `dot` over
+    the same values as inside `cosine`, multiplied in the same order,
+    so the value is bit-identical to cosine(qvec, vec) (pinned by
+    test_cosine_norm_hoist_bit_identical) while each norm is computed
+    once per row instead of twice per pair."""
+    return dot(F.col("qvec"), F.col("vec")) / (F.col("_qnrm") * F.col("_nrm"))
+
+
+def _scored(pairs: DataFrame, *keep: str) -> DataFrame:
+    """(query_id, vec_id, *keep, cos_sim): the hoisted cosine rounded to
+    6 dp — the value every exact and re-ranked result publishes."""
+    return pairs.select(
+        "query_id", "vec_id", *keep, F.round(_hoisted_cosine(), 6).alias("cos_sim")
+    )
+
+
+def _top_k(scored: DataFrame, k: int, by: Column | None = None) -> DataFrame:
+    """Each query's first ``k`` rows of ``scored`` in (``by``, vec_id)
+    order, numbered ``rk`` (bigint); ``by`` defaults to cos_sim DESC.
+    The vec_id tie-break keeps the selection deterministic across
+    engines — the oracles mirror it with the same row_number window."""
+    if by is None:
+        by = F.col("cos_sim").desc()
+    w = Window.partitionBy("query_id").orderBy(by, F.col("vec_id"))
+    return scored.withColumn("rk", F.row_number().over(w).cast("bigint")).filter(
+        F.col("rk") <= k
+    )
+
+
+def _cells_from_rows(rows):
+    """(cids, C): collected centroid rows as numpy arrays in cent_id
+    order — nlist·dim doubles, model metadata that rides the cell
+    kernels' closures."""
+    import numpy as np
+
+    rows = sorted(rows, key=lambda r: int(r.cent_id))
+    return (
+        np.array([int(r.cent_id) for r in rows], dtype=np.int64),
+        np.array([list(r.cvec) for r in rows], dtype=np.float64),
+    )
+
+
+def _cell_dists(C, M):
+    """(nrm, D) for a batch ``M`` (rows × dim) against the centroid
+    matrix ``C`` (cells × dim, cent_id order): nrm = sqrt(Σx²) per row
+    and D[r, j] = 1.0 − dot(M[r], C[j]) / (nrm[r]·cnorm[j]), the
+    `_scored_cells` distance with the same operand order. Every Σ folds
+    over dims left to right, one vectorized op per dim, reproducing the
+    JVM `dot` fold exactly — never np.dot/np.sum, whose pairwise/SIMD
+    reassociation rounds differently. The Lloyd core of both cell
+    kernels."""
+    import numpy as np
+
+    def fold(a, b):
+        acc = np.zeros(np.broadcast_shapes(a.shape[:-1], b.shape[:-1]))
+        for i in range(a.shape[-1]):
+            acc = acc + a[..., i] * b[..., i]
+        return acc
+
+    nrm = np.sqrt(fold(M, M))
+    cnorm = np.sqrt(fold(C, C))
+    D = 1.0 - fold(M[:, None, :], C[None, :, :]) / (nrm[:, None] * cnorm[None, :])
+    return nrm, D
+
+
+def _cell_topn_kernel(cells, n: int, id_col: str, vec_col: str, nrm_col: str):
     """mapInPandas kernel for coarse (IVF) cell assignment — the
     Arrow-vectorized twin of the `_scored_cells` + array_sort/array_min
-    expression form (r16 optimization round, guide §4.2: the
-    interpreted per-(row × centroid) cosine fold was the whole cost of
-    learned_centroids / _cell_assign — measured 3.6 s + 1.3 s of the
-    ivfpq build at sf0.1 AFTER the norm hoist). Emits each input row's
-    ``n`` nearest cells in (dist ASC, cent_id ASC) order, plus the
-    row's hoisted norm. Bit-identical by construction (pinned by
-    test_cell_assign_kernel_bit_identical):
-
-    - dot products accumulate SEQUENTIALLY over dims (vectorized over
-      rows), reproducing the JVM fold's left-to-right order — never
-      np.dot/np.sum;
-    - dist = 1.0 − dot/(nrm·cnorm), the hoisted cosine form, same
-      operand order;
-    - per-row ranking via stable argsort over the cent_id-ordered
-      distance matrix: equal dists keep cent_id order (the struct
-      (dist, cent_id) lexicographic tie-break) and NaN sorts last
-      (Spark's double ordering).
-    The expression form stays in-tree (_cell_assign_expr /
-    _scored_cells) as the independent reference twin."""
+    expression form (the interpreted per-(row × centroid) cosine fold
+    was the whole cost of learned_centroids / _cell_assign: 3.6 s +
+    1.3 s of the ivfpq build at sf0.1 even with hoisted norms). Emits
+    each input row's ``n`` nearest cells in (dist ASC, cent_id ASC)
+    order, plus the row's hoisted norm. Bit-identical by construction
+    (pinned by test_cell_assign_kernel_bit_identical): distances come
+    from _cell_dists, and a stable argsort over the cent_id-ordered
+    distance matrix keeps cent_id order on equal dists (the struct
+    (dist, cent_id) lexicographic tie-break) and sorts NaN last
+    (Spark's double ordering). The expression form stays in-tree
+    (_cell_assign_expr / _scored_cells) as the independent reference
+    twin."""
+    cids, C = cells
 
     def fn(batches):
         import numpy as np
         import pandas as pd
 
-        k = len(cells)
-        if k == 0:  # empty centroid table: no cells to assign (the
+        if len(cids) == 0:  # empty centroid table: no cells to assign (the
             return  # explode-of-empty-slice behavior of the expr twin)
-        take = min(n, k)
-        cids = np.array([c for c, _, _ in cells], dtype=np.int64)
-        C = np.array([v for _, v, _ in cells], dtype=np.float64)
-        cn = np.array([x for _, _, x in cells], dtype=np.float64)
+        take = min(n, len(cids))
         for pdf in batches:
-            n_rows = len(pdf)
-            if n_rows == 0:
+            if len(pdf) == 0:
                 continue
             M = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            d = M.shape[1]
-            acc = np.zeros(n_rows, dtype=np.float64)
-            for i in range(d):  # sequential: JVM fold order
-                acc = acc + M[:, i] * M[:, i]
-            nrm = np.sqrt(acc)
-            D = np.empty((n_rows, k), dtype=np.float64)
-            for j in range(k):
-                accj = np.zeros(n_rows, dtype=np.float64)
-                for i in range(d):
-                    accj = accj + M[:, i] * C[j, i]
-                D[:, j] = 1.0 - accj / (nrm * cn[j])
+            nrm, D = _cell_dists(C, M)
             idx = np.argsort(D, axis=1, kind="stable")[:, :take]
             yield pd.DataFrame(
                 {
@@ -186,60 +232,46 @@ def _cell_topn_kernel(
     return fn
 
 
-def _cell_sums_kernel(cells: list[tuple[int, list[float], float]], vec_col: str):
-    """mapInPandas kernel for ONE Lloyd means pass (r17 optimization
-    round, guide §2.3 "aggregate before you shuffle"): assigns each row
-    to its nearest cell with EXACTLY the `_cell_topn_kernel(n=1)` logic
-    (sequential per-dim dot folds, hoisted norms, stable-argsort
+def _cell_sums_kernel(cells, vec_col: str):
+    """mapInPandas kernel for ONE Lloyd means pass ("aggregate before
+    you shuffle"): assigns each row to its nearest cell with EXACTLY the
+    `_cell_topn_kernel(n=1)` logic (_cell_dists, stable-argsort
     first-min/NaN-last), but instead of emitting corpus rows for a
     downstream posexplode→groupBy means reduce, it accumulates per-cell
     vector sums and counts ACROSS ALL BATCHES OF THE TASK and emits one
     (cent_id, n, s[dim]) partial row per non-empty cell per task. The
     exchange then carries k·n_tasks partial rows instead of corpus×dim
-    posexploded rows — the r16 means reduce was the remaining ~2.2 s of
-    the ivfpq build, all of it shuffle/aggregate plumbing around an
-    argmin the assignment kernel had already paid for.
+    posexploded rows — the row-level means reduce cost ~2.2 s of the
+    ivfpq build at sf0.1, all of it shuffle/aggregate plumbing around
+    an argmin the assignment kernel had already paid for.
 
-    Result identity: the published means are round(Σx/Σn, 6); the old
-    form's round(avg(x), 6) accumulated the same values in partition/
-    merge order (already nondeterministic run-to-run — the 6 dp round
-    is what makes Lloyd deterministic, see learned_centroids). The
-    partial-sum order here is just another accumulation order under
-    that same contract; centroid equality vs the expression twin is
-    pinned by test_cell_assign_kernel_bit_identical and was verified
-    at sf0.001/0.01/0.1 (see OPTIMIZATION_r17.md)."""
+    Result identity: the published means are round(Σx/Σn, 6); the
+    row-level form's round(avg(x), 6) accumulates the same values in
+    partition/merge order (already nondeterministic run to run — the
+    6 dp round is what makes Lloyd deterministic, see
+    learned_centroids). The partial-sum order here is just another
+    accumulation order under that same contract; centroid equality vs
+    the expression twin is pinned by
+    test_cell_assign_kernel_bit_identical and was verified at
+    sf0.001/0.01/0.1."""
+    cids, C = cells
 
     def fn(batches):
         import numpy as np
         import pandas as pd
 
-        k = len(cells)
-        if k == 0:
+        if len(cids) == 0:
             return
-        cids = np.array([c for c, _, _ in cells], dtype=np.int64)
-        C = np.array([v for _, v, _ in cells], dtype=np.float64)
-        cn = np.array([x for _, _, x in cells], dtype=np.float64)
         sums = None
         counts = None
         for pdf in batches:
-            n_rows = len(pdf)
-            if n_rows == 0:
+            if len(pdf) == 0:
                 continue
             M = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            d = M.shape[1]
             if sums is None:
-                sums = np.zeros((k, d), dtype=np.float64)
-                counts = np.zeros(k, dtype=np.int64)
-            acc = np.zeros(n_rows, dtype=np.float64)
-            for i in range(d):  # sequential: JVM fold order
-                acc = acc + M[:, i] * M[:, i]
-            nrm = np.sqrt(acc)
-            D = np.empty((n_rows, k), dtype=np.float64)
-            for j in range(k):
-                accj = np.zeros(n_rows, dtype=np.float64)
-                for i in range(d):
-                    accj = accj + M[:, i] * C[j, i]
-                D[:, j] = 1.0 - accj / (nrm * cn[j])
+                sums = np.zeros((len(cids), M.shape[1]), dtype=np.float64)
+                counts = np.zeros(len(cids), dtype=np.int64)
+            _, D = _cell_dists(C, M)
             # stable argsort[:, 0] ≡ _cell_topn_kernel(n=1): first-min
             # tie-break toward the lower cent_id, NaN sorts last
             idx = np.argsort(D, axis=1, kind="stable")[:, 0]
@@ -263,14 +295,34 @@ def _cell_sums_kernel(cells: list[tuple[int, list[float], float]], vec_col: str)
 
 def _cell_means_from_partials(partials: DataFrame) -> DataFrame:
     """(cent_id, cvec) means from _cell_sums_kernel partial rows:
-    round(Σs/Σn, 6) per dim — the same F.round HALF_UP the old
-    round(avg) form published, over totals instead of raw values. The
-    reduce input is k·n_tasks rows (model-sized at any corpus size)."""
+    round(Σs/Σn, 6) per dim — the same F.round HALF_UP the row-level
+    round(avg) form (_means) publishes, over totals instead of raw
+    values. The reduce input is k·n_tasks rows (model-sized at any
+    corpus size)."""
     return (
         partials.select("cent_id", "n", F.posexplode("s").alias("pos", "val"))
         .groupBy("cent_id", "pos")
         .agg(F.round(F.sum("val") / F.sum("n"), 6).alias("m"))
         .groupBy("cent_id")
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda x: x["m"]
+            ).alias("cvec")
+        )
+    )
+
+
+def _means(assigned: DataFrame, keys: list[str], vec: str) -> DataFrame:
+    """Per-group mean vectors of member rows: posexplode ``vec`` →
+    groupBy(*keys, pos) avg rounded 6 dp → ``cvec`` re-assembled in dim
+    order (distributed; never collects vectors). Serves the
+    learned_centroids reference twin (per cell) and pq_train (per
+    subspace code)."""
+    return (
+        assigned.select(*keys, F.posexplode(vec).alias("pos", "val"))
+        .groupBy(*keys, "pos")
+        .agg(F.round(F.avg("val"), 6).alias("m"))
+        .groupBy(*keys)
         .agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda x: x["m"]
@@ -310,57 +362,36 @@ def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X5 baseline: exact brute-force cosine top-k. Queries (vec_id<5)
     broadcast against the full corpus; rank on cosine rounded to 6dp
     with vec_id tiebreak keeps selection deterministic across engines."""
-    # r16 norm hoist (guide §1.2): cosine's two sqrt(dot(x,x)) factors
-    # are per-row / per-query constants — computed once per side below
-    # the crossJoin instead of 3 dots per (row × query) pair. Same
-    # expression, same operand order, bit-identical cos_sim (pinned by
-    # the full value-hash oracle + test_scored_cells_norm_hoist...).
-    e = _with_nrm(_doubled(table(spark, sf_dir, "embeddings")), "vec")
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("vec").alias("qvec"),
-        F.col("_nrm").alias("_qnrm"),
-    )
-    scored = (
-        e.crossJoin(F.broadcast(q))
+    e = _doubled(table(spark, sf_dir, "embeddings"))
+    pairs = (
+        _with_nrm(e, "vec")
+        .crossJoin(F.broadcast(_queries(e)))
         .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                dot(F.col("qvec"), F.col("vec"))
-                / (F.col("_qnrm") * F.col("_nrm")),
-                6,
-            ).alias("cos_sim"),
-        )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= TOP_K)
-        .select("query_id", "vec_id", "cos_sim", "rk")
-    )
+    return _top_k(_scored(pairs), TOP_K)
 
 
-def learned_centroids(
-    e: DataFrame, iters: int = 3, use_kernel: bool = True
-) -> DataFrame:
+def learned_centroids(e: DataFrame, use_kernel: bool = True) -> DataFrame:
     """Deterministic k-means (Lloyd) over the corpus, DataFrame-native:
 
     - init: the positional stand-ins (vec_id ≡ 0 mod 64) — fixed, so
       every run starts identically;
-    - iterate: assign each vector to its nearest centroid MAP-SIDE
-      (array_min over per-row distances against the one-row broadcast
-      centroid array — see _scored_cells; r13 replaced the
-      crossJoin-explode + row_number window, whose sort SHUFFLED k·n
-      assignment rows per iteration — at 10^9 vectors × 64 cells
-      that's a 64× row-amplified network pass paid for an argmin over
-      constants), then recompute per-cell means via posexplode →
-      groupBy(cell, dim) (distributed; never collects vectors).
-      The r13 A/B: assignments bit-equal to the window form at both
-      parity SFs; locally the swap is ~10% (13.8 → 12.4 s on a 200k
-      × 64-cell probe — single-node shuffle is cheap and the HOF
-      cosine dominates), the shuffle elimination is the cluster win.
+    - iterate IVF_ITERS times: assign each vector to its nearest
+      centroid MAP-SIDE, then recompute per-cell means (distributed;
+      never collects vectors). A crossJoin-explode + row_number window
+      would SORT-SHUFFLE k·n assignment rows per iteration — at 10^9
+      vectors × 64 cells a 64× row-amplified network pass paid for an
+      argmin over constants.
+
+    The production form is one map-side pass per iteration: the Arrow
+    kernel assigns every row AND accumulates per-cell vector sums and
+    counts across its task's batches (_cell_sums_kernel), so the only
+    exchange carries k·n_tasks partial rows. ``use_kernel=False`` is
+    the JVM-expression reference twin (array_min over _scored_cells
+    against the one-row broadcast centroid array, then the row-level
+    means reduce), kept so the kernel is pinned bit-identical against
+    an independent implementation
+    (test_cell_assign_kernel_bit_identical).
 
     Means are rounded to 6 dp so double accumulation order cannot make
     runs diverge; per-iteration centroids are re-materialized through
@@ -380,154 +411,97 @@ def learned_centroids(
             "learned_centroids: empty corpus (no centroid seeds, vec_id % 64 == 0)"
         )
     if not use_kernel:
-        # JVM-expression reference twin (norm-hoisted form) — kept so
-        # the Arrow-kernel production path below is pinned bit-identical
-        # against an independent implementation
         en = _with_nrm(e.select("vec"), "vec")
-        for _ in range(iters):
+        for _ in range(IVF_ITERS):
             assigned = en.crossJoin(F.broadcast(_cents_row(cents))).select(
                 F.array_min(_scored_cells(F.col("vec"), F.col("_nrm")))[
                     "cent_id"
                 ].alias("cent_id"),
                 "vec",
             )
-            means = _cell_means(assigned)
+            means = _means(assigned, ["cent_id"], "vec")
             cents = spark.createDataFrame(means.collect(), schema=means.schema)
         return cents
-    # r16 kernel form, r17 partial-sums rewrite (guide §2.3/§5): each
-    # Lloyd iteration is ONE map-side pass — the Arrow kernel assigns
-    # every row to its nearest cell AND accumulates per-cell vector
-    # sums+counts across its task's batches (_cell_sums_kernel), so
-    # the only exchange per iteration carries k·n_tasks partial rows
-    # instead of corpus×dim posexploded assignment rows. The collected
-    # means (k·dim scalars — model metadata) feed the next iteration's
-    # kernel closure; the DataFrame form is built ONCE after the loop
-    # (the r16 form also ran a per-iteration createDataFrame whose
-    # intermediate frames were never consumed). Assignment logic and
-    # the published round(mean, 6) values are pinned against the
-    # expression twin by test_cell_assign_kernel_bit_identical.
-    cells = _cells_list(cents)
+    cells = _cells_from_rows(cents.collect())
     src = e.select("vec")
-    rows = None
-    for _ in range(iters):
+    for _ in range(IVF_ITERS):
         partials = src.mapInPandas(
             _cell_sums_kernel(cells, "vec"),
             "cent_id bigint, n bigint, s array<double>",
         )
         rows = _cell_means_from_partials(partials).collect()
         cells = _cells_from_rows(rows)
-    if rows is None:  # iters=0: the seed table IS the model
-        return cents
     return spark.createDataFrame(rows, schema="cent_id bigint, cvec array<double>")
 
 
-def _cell_means(assigned: DataFrame) -> DataFrame:
-    """The per-cell mean reduce shared by both learned_centroids forms:
-    posexplode → groupBy(cent_id, pos) avg rounded 6dp → re-assembled
-    cvec (distributed; never collects vectors)."""
-    return (
-        assigned.select("cent_id", F.posexplode("vec").alias("pos", "val"))
-        .groupBy("cent_id", "pos")
-        .agg(F.round(F.avg("val"), 6).alias("m"))
-        .groupBy("cent_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda x: x["m"]
-            ).alias("cvec")
+def _exact_rows_with_flag(
+    spark: SparkSession, sf_dir: str, flag: str, ok: Column, **approx: DataFrame
+) -> DataFrame:
+    """The driver-checkable form of an approximate search: the EXACT
+    top-k rows (deterministic, oracle-mirrored) plus one per-query
+    boolean ``flag`` = ``ok``, a predicate over the query's exact-row
+    count ``n_exact`` and, for each named approximate result in
+    ``approx``, a column of that name counting the exact rows it
+    recovered (0 when none). If the approximate path regresses below
+    its contract on any query, the flag flips and the value hash goes
+    red. The exact rows are collected into a local frame: k·q rows (25
+    at the defaults) feed every overlap and the final join, so the
+    corpus pass runs once and no cache needs a lifecycle."""
+    exact_plan = similarity_topk(spark, sf_dir)
+    exact = spark.createDataFrame(exact_plan.collect(), schema=exact_plan.schema)
+    counts = exact.groupBy("query_id").agg(F.count("*").alias("n_exact"))
+    for name, rows in approx.items():
+        hits = (
+            exact.join(rows.select("query_id", "vec_id"), ["query_id", "vec_id"], "left_semi")
+            .groupBy("query_id")
+            .agg(F.count("*").alias(name))
         )
+        counts = counts.join(hits, "query_id", "left").fillna(0, subset=[name])
+    flags = counts.select("query_id", ok.alias(flag))
+    return exact.join(F.broadcast(flags), "query_id").select(
+        "query_id", "vec_id", "cos_sim", "rk", flag
     )
-
-
-def _cells_from_rows(rows) -> list[tuple[int, list[float], float]]:
-    """(cent_id, cvec, cnorm) sorted by cent_id from collected centroid
-    rows — the driver-side twin of _cells_list for rows already in
-    hand (per-iteration Lloyd updates)."""
-    import math
-
-    out = []
-    for r in sorted(rows, key=lambda r: int(r.cent_id)):
-        cv = [float(x) for x in r.cvec]
-        acc = 0.0
-        for x in cv:
-            acc = acc + x * x
-        out.append((int(r.cent_id), cv, math.sqrt(acc)))
-    return out
 
 
 @query(
     "similarity_topk_ivf",
     # the IVF search is approximate, so its rows can't be value-hashed
-    # directly — instead the query emits the EXACT top-k rows (fully
-    # deterministic, mirrored below)
-    # plus a per-query recall contract computed from the IVF candidates
-    # INSIDE the query: ivf_recall_ok = (n_overlap * TOP_K >= n_exact *
+    # directly — the query emits the EXACT top-k rows plus a per-query
+    # recall contract computed from the IVF candidates INSIDE the
+    # query: ivf_recall_ok = (n_overlap * TOP_K >= n_exact *
     # RECALL_NUM), i.e. recall >= 0.8, in pure integer arithmetic
     # (0.8*5 in doubles is 4.000000000000000222 — ceil would demand 5).
-    # The oracle asserts TRUE: if IVF recall ever regresses below the
-    # contract on any query, the boolean flips and the hash goes red.
+    # The oracle asserts TRUE.
     oracle=_EXACT_TOPK_CTE
     + "\n    SELECT query_id, vec_id, cos_sim, rk, TRUE AS ivf_recall_ok FROM exact",
 )
 def similarity_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X5 scale path, driver-checkable form: exact top-k rows joined
     with a per-query IVF recall contract (see the oracle note above).
-    The raw approximate result set is similarity_topk_ivf_raw; exact
-    recall at the bench SF is recorded every round by bench.py."""
-    # exact feeds three consumers (overlap, flags, final join) — run the
-    # brute-force corpus pass ONCE and pin its k·q rows (25 at the
-    # defaults: bounded result-set state, not data) as a local frame.
-    # r7 used .persist(), which leaked cached frames across the ~190-query
-    # parity sweep (never unpersisted — ADVICE r7); an eager materialize
-    # of a k·q-row frame needs no cache lifecycle at any corpus size.
-    exact_plan = similarity_topk(spark, sf_dir)
-    exact = spark.createDataFrame(exact_plan.collect(), schema=exact_plan.schema)
-    ivf = similarity_topk_ivf_raw(spark, sf_dir)
-    overlap = (
-        exact.join(ivf.select("query_id", "vec_id"), ["query_id", "vec_id"], "left_semi")
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_overlap"))
-    )
-    flags = (
-        exact.groupBy("query_id")
-        .agg(F.count("*").alias("n_exact"))
-        .join(overlap, "query_id", "left")
-        .select(
-            "query_id",
-            (
-                F.coalesce(F.col("n_overlap"), F.lit(0)) * F.lit(TOP_K)
-                >= F.col("n_exact") * F.lit(RECALL_NUM)
-            ).alias("ivf_recall_ok"),
-        )
-    )
-    return exact.join(F.broadcast(flags), "query_id").select(
-        "query_id", "vec_id", "cos_sim", "rk", "ivf_recall_ok"
+    The raw approximate result set is similarity_topk_ivf_raw; bench.py
+    records its recall at the bench SF."""
+    return _exact_rows_with_flag(
+        spark,
+        sf_dir,
+        "ivf_recall_ok",
+        F.col("n_overlap") * F.lit(TOP_K) >= F.col("n_exact") * F.lit(RECALL_NUM),
+        n_overlap=similarity_topk_ivf_raw(spark, sf_dir),
     )
 
 
 @query("similarity_topk_ivf_raw")  # approximate: no oracle
 def similarity_topk_ivf_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X5 scale path: IVF-style coarse quantization with LEARNED
-    centroids (deterministic k-means, see learned_centroids — round 1
-    used positional stand-ins). Each corpus vector is indexed in its
-    n_assign=2 nearest cells (multi-assignment: the standard IVF
-    mitigation for boundary loss — a neighbor just across a cell border
-    stays findable at the cost of 2× index size); queries probe their
-    nprobe nearest cells and search only those buckets.
-
-    nprobe ADAPTS to the cell count (round-5 fix): a fixed nprobe=3
-    probed 3/8 cells at sf0.001 (recall 0.88) but 3/32 at sf0.1
-    (recall 0.48, caught by the bench recall line the r4 verdict asked
-    for) — the probed corpus FRACTION, not the probe count, is what
-    recall follows, so the default nprobe = max(3, ceil(nlist/3))
-    holds the fraction as nlist grows with the corpus (sweep at sf0.1,
-    nlist=32: nprobe 3 → 0.48, 8 → 0.80, 16 → 0.96; the default's 11
-    → 0.92 with ~3× pruning). The synthetic embeddings are
-    near-uniform — ANN-hostile, recall tracks probed fraction — so
-    the ratio is the honest knob: a clustered real corpus moves the
-    whole curve up and the ratio down. Same top-k contract as the
-    exact query; recall is approximate so the check is rows-only —
-    tests/test_modules.py pins recall ≥ 0.8, and bench.py records
-    secondary.similarity_ivf_recall at the bench SF every round."""
+    centroids (deterministic k-means, see learned_centroids). Each
+    corpus vector is indexed in its N_ASSIGN=2 nearest cells
+    (multi-assignment: the standard IVF mitigation for boundary loss —
+    a neighbor just across a cell border stays findable at the cost of
+    2× index size); queries probe their nprobe nearest cells and
+    search only those buckets, nprobe adapting to the cell count (see
+    _default_nprobe). Same top-k contract as the exact query; recall
+    is approximate so the check is rows-only — tests/test_modules.py
+    pins recall ≥ 0.8, and bench.py records
+    secondary.similarity_ivf_recall at the bench SF."""
     e = _doubled(table(spark, sf_dir, "embeddings"))
     return ivf_topk(e, learned_centroids(e))
 
@@ -536,29 +510,32 @@ N_ASSIGN = 2  # IVF multi-assignment width — ONE definition for all paths
 
 
 def _default_nprobe(nlist: int) -> int:
-    """The adaptive-nprobe rule (r5: recall follows the probed corpus
-    FRACTION, so the ratio is the knob) — ONE definition shared by
-    ivf_topk and the IVF-PQ composite so a retune cannot silently
-    leave the composite probing a different fraction than the recall
-    pins were measured at."""
+    """The adaptive nprobe = max(3, ceil(nlist/3)), shared by ivf_topk
+    and the IVF-PQ composite so a retune cannot leave the composite
+    probing a different fraction than the recall pins were measured
+    at. Recall follows the probed corpus FRACTION, not the probe
+    count: a fixed nprobe=3 probed 3/8 cells at sf0.001 (recall 0.88)
+    but 3/32 at sf0.1 (recall 0.48). Sweep at sf0.1, nlist=32: nprobe
+    3 → 0.48, 8 → 0.80, 16 → 0.96; this rule's 11 → 0.92 with ~3×
+    pruning. The synthetic embeddings are near-uniform — ANN-hostile,
+    recall tracks probed fraction — so the ratio is the honest knob: a
+    clustered real corpus moves the whole curve up and the ratio
+    down."""
     return max(3, -(-nlist // 3))
 
 
 def _cell_assign(e: DataFrame, cents: DataFrame, n_assign: int) -> DataFrame:
     """(vec_id, vec, _nrm, cell): each corpus vector indexed in its
     n_assign nearest cells — shared by ivf_topk and the IVF-PQ
-    composite so cell semantics cannot drift. MAP-ONLY (r13): the
-    former crossJoin-explode + row_number window SORT-SHUFFLED all k·n
-    candidate rows to rank an argmin over constants (the 100× hazard:
-    at 10^9 vectors that's a 64×-amplified network pass). r16: the
-    per-row top-n runs in the Arrow kernel (_cell_topn_kernel) instead
-    of interpreted array_sort(_scored_cells) expressions — still one
-    map-side pass, zero shuffle (the plan pin
-    test_cell_assign_is_map_only holds unchanged), bit-identical cells
-    (pinned vs _cell_assign_expr), and the row's hoisted norm rides
-    along for the downstream cosine."""
+    composite so cell semantics cannot drift. MAP-ONLY: the per-row
+    top-n runs in the Arrow kernel (_cell_topn_kernel), one map-side
+    pass with zero shuffle (plan pin test_cell_assign_is_map_only),
+    bit-identical cells (pinned vs _cell_assign_expr), and the row's
+    hoisted norm rides along for the downstream cosine."""
     return e.select("vec_id", "vec").mapInPandas(
-        _cell_topn_kernel(_cells_list(cents), n_assign, "vec_id", "vec", "_nrm"),
+        _cell_topn_kernel(
+            _cells_from_rows(cents.collect()), n_assign, "vec_id", "vec", "_nrm"
+        ),
         "vec_id bigint, vec array<double>, _nrm double, cell bigint",
     )
 
@@ -578,59 +555,34 @@ def _cell_assign_expr(e: DataFrame, cents: DataFrame, n_assign: int) -> DataFram
 
 
 def _cell_probes(q: DataFrame, cents: DataFrame, nprobe: int) -> DataFrame:
-    """(query_id, qvec, cell): each query's nprobe nearest cells —
-    same map-only top-n shape as _cell_assign."""
+    """(query_id, qvec, _qnrm, cell): each query's nprobe nearest cells
+    — same map-only top-n shape as _cell_assign."""
     return q.select("query_id", "qvec").mapInPandas(
-        _cell_topn_kernel(_cells_list(cents), nprobe, "query_id", "qvec", "_qnrm"),
+        _cell_topn_kernel(
+            _cells_from_rows(cents.collect()), nprobe, "query_id", "qvec", "_qnrm"
+        ),
         "query_id bigint, qvec array<double>, _qnrm double, cell bigint",
     )
 
 
-def ivf_topk(
-    e: DataFrame,
-    cents: DataFrame,
-    nprobe: int | None = None,
-    n_assign: int = N_ASSIGN,
-) -> DataFrame:
-    """IVF search given a centroid table; ``nprobe=None`` selects the
-    adaptive default max(3, ceil(nlist/3)) — see similarity_topk_ivf."""
-    if nprobe is None:
-        nprobe = _default_nprobe(cents.count())  # centroid table: tiny
-    assigned = _cell_assign(e, cents, n_assign)
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
-    )
-    probes = _cell_probes(q, cents, nprobe)
-    scored = (
-        assigned.join(F.broadcast(probes), "cell")
+def ivf_topk(e: DataFrame, cents: DataFrame) -> DataFrame:
+    """IVF search given a centroid table: corpus vectors in their
+    N_ASSIGN nearest cells, queries probing their _default_nprobe(nlist)
+    nearest cells."""
+    nprobe = _default_nprobe(cents.count())  # centroid table: tiny
+    probes = _cell_probes(_queries(e), cents, nprobe)
+    pairs = (
+        _cell_assign(e, cents, N_ASSIGN)
+        .join(F.broadcast(probes), "cell")
         .filter(F.col("vec_id") != F.col("query_id"))
-        # r16: score BEFORE the dedup exchange — the candidate rows
-        # used to carry both raw vectors (≈1 KB/row) through the
-        # dropDuplicates shuffle just to compute cosine afterwards;
-        # cosine is a pure function of the pair, so computing it in the
-        # join projection shrinks the exchange to (ids, double) and the
-        # surviving value is identical whichever duplicate wins
-        # (guide §2.3 "project before the exchange"). Norms hoisted as
-        # everywhere (bit-identical — see _scored_cells).
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                dot(F.col("qvec"), F.col("vec"))
-                / (F.col("_qnrm") * F.col("_nrm")),
-                6,
-            ).alias("cos_sim"),
-        )
-        # multi-assignment can surface the same (query, vector) pair
-        # through two shared cells — dedupe before ranking
-        .dropDuplicates(["query_id", "vec_id"])
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= TOP_K)
-        .select("query_id", "vec_id", "cos_sim", "rk")
-    )
+    # score BEFORE the dedup exchange: cosine is a pure function of the
+    # pair, so the exchange carries (ids, double) instead of both raw
+    # vectors (≈1 KB/row), and the surviving value is identical
+    # whichever duplicate wins. Multi-assignment can surface the same
+    # (query, vector) pair through two shared cells — dedupe before
+    # ranking.
+    return _top_k(_scored(pairs).dropDuplicates(["query_id", "vec_id"]), TOP_K)
 
 
 @query(
@@ -656,90 +608,6 @@ def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("comp_sum"),
     )
 
-
-N_PLANES = 16  # hyperplane-LSH signature width
-
-
-def hyperplane_signatures(e: DataFrame, dim: int, seed: int = 7) -> DataFrame:
-    """Random-hyperplane LSH (SimHash for real vectors): sign of the
-    dot product against N_PLANES fixed pseudo-random hyperplanes packs
-    into a 16-bit signature; cos(θ) similarity maps to Hamming
-    proximity (P[bit agree] = 1 - θ/π). The planes are generated
-    driver-side from a fixed seed (deterministic across runs and
-    engines) and enter the plan as literal arrays — JVM-side dot
-    products via zip_with/aggregate, no UDF, no shuffle: one linear
-    pass, embarrassingly parallel at any corpus size."""
-    import random
-
-    rng = random.Random(seed)
-    planes = [
-        [rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(N_PLANES)
-    ]
-    sig = None
-    for i, plane in enumerate(planes):
-        lit_plane = F.array(*[F.lit(float(x)) for x in plane])
-        bit = F.when(dot(F.col("vec"), lit_plane) > 0, F.lit(1)).otherwise(0)
-        term = bit.cast("int") * F.lit(2**i).cast("int")
-        sig = term if sig is None else sig + term
-    return e.select("vec_id", "vec", sig.alias("hsig"))
-
-
-def similar_pairs_hyperplane(e: DataFrame, max_hamming: int = 2) -> DataFrame:
-    """ANN candidate pairs via hyperplane-LSH signatures, pigeonhole
-    block join (dedup_simhash's scheme on embedding vectors): the
-    16-bit signature splits into max_hamming+1 blocks — any pair
-    within the Hamming budget matches exactly on ≥1 block — so
-    candidates come from equi-joins on block keys (linear + shuffle,
-    never all-pairs), verified by exact signature Hamming distance.
-    Complements IVF: no centroid training, recall governed by plane
-    count; the right choice for streaming/incremental corpora where
-    retraining centroids is awkward."""
-    n_blocks = max_hamming + 1
-    bits_per_block = N_PLANES // n_blocks
-    mask = (1 << bits_per_block) - 1
-    blocked = e.select(
-        "vec_id",
-        "hsig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("blk"),
-                        F.shiftright(F.col("hsig"), b * bits_per_block)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("key"),
-                    )
-                    for b in range(n_blocks)
-                ]
-            )
-        ).alias("bk"),
-    ).select("vec_id", "hsig", F.col("bk.blk").alias("blk"), F.col("bk.key").alias("key"))
-    a, b = blocked.alias("a"), blocked.alias("b")
-    # r17 (r16 advice): the dedup_simhash filter-before-distinct
-    # rewrite, applied to the identical shape it was missed on —
-    # hamming (two scalar ops) is computed IN the join projection and
-    # the ≤ max_hamming verify runs BEFORE the candidate dropDuplicates,
-    # so rejected block collisions never reach the dedup exchange and
-    # the exchange row carries (ids, int) instead of two signatures.
-    # Same result: filter∘distinct ≡ distinct∘filter for a
-    # deterministic per-pair predicate (every duplicate of a pair
-    # carries the same hamming).
-    hamming = F.bit_count(F.col("a.hsig").bitwiseXOR(F.col("b.hsig")))
-    return (
-        a.join(
-            b,
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("doc_a"),
-            F.col("b.vec_id").alias("doc_b"),
-            hamming.cast("int").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
 
 
 @query(
@@ -771,35 +639,13 @@ def similarity_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``similarity_topk`` with the label-mismatch predicate applied
     before ranking; at 100 TB the pruned variant swaps the corpus scan
     for IVF probing exactly like similarity_topk_ivf does."""
-    # r16 norm hoist — same bit-identical rewrite as similarity_topk
-    e = _with_nrm(_doubled(table(spark, sf_dir, "embeddings")), "vec")
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("q_label"),
-        F.col("vec").alias("qvec"),
-        F.col("_nrm").alias("_qnrm"),
-    )
-    scored = (
-        e.crossJoin(F.broadcast(q))
+    e = _doubled(table(spark, sf_dir, "embeddings"))
+    pairs = (
+        _with_nrm(e, "vec")
+        .crossJoin(F.broadcast(_queries(e, F.col("label").alias("q_label"))))
         .filter(F.col("label") != F.col("q_label"))
-        .select(
-            "query_id",
-            "vec_id",
-            "label",
-            F.round(
-                dot(F.col("qvec"), F.col("vec"))
-                / (F.col("_qnrm") * F.col("_nrm")),
-                6,
-            ).alias("cos_sim"),
-        )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= 3)
-        .select("query_id", "vec_id", "label", "cos_sim", "rk")
-    )
-
+    return _top_k(_scored(pairs, "label"), 3)
 
 @query(
     "embedding_quantize_int8",
@@ -864,7 +710,7 @@ def pca_fit(e: DataFrame, dim: int, k: int = PCA_K):
     inside each batch, (1 + dim + dim²) scalars out per batch — and
     the driver combines the partials and eigendecomposes the dim×dim
     covariance (4096 doubles here: model-sized, like the k-means
-    centroids at extensions/similarity.py:85 — NOT a lineage hazard).
+    centroids of learned_centroids — NOT a lineage hazard).
     Returns (mean: list[float], components: list[list[float]]) with
     components sorted by descending eigenvalue, each sign-normalized
     (first nonzero coordinate positive) so the model is deterministic
@@ -960,7 +806,7 @@ def _kcenter_oracle(k: int = K_CENTERS) -> str:
         # greatest(0.0, ...) before rounding: the |a|²+|b|²-2ab identity
         # can go tiny-negative for distinct-but-near points (catastrophic
         # cancellation); without the clamp the Spark early stop at d<=0
-        # could truncate the coreset on such a pair (advice finding).
+        # could truncate the coreset on such a pair.
         new_d = (
             "round(greatest(0.0, p.nn + c.nn - 2 * list_dot_product(p.vec, c.vec)), 6)"
         )
@@ -1017,9 +863,8 @@ def embedding_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
 def kcenter_select(spark: SparkSession, e: DataFrame, k: int = K_CENTERS) -> DataFrame:
     """Greedy k-center over a (vec_id, vec, nn) frame. Stops early when
     the farthest remaining point is distance 0 from the selected set
-    (corpus has < k distinct points — review finding: without the stop
-    the argmax re-picks a center and the "diversity" set contains
-    duplicates). The min-distance frame is persisted per round and the
+    (corpus has < k distinct points: without the stop the argmax
+    re-picks a center and the "diversity" set contains duplicates). The min-distance frame is persisted per round and the
     previous round's cache released, so round j really is ONE new dot
     product per point (the chained-withColumn form re-evaluated every
     prior round's expression on each action — measured O(k²))."""
@@ -1038,7 +883,7 @@ def kcenter_select(spark: SparkSession, e: DataFrame, k: int = K_CENTERS) -> Dat
         # clamp before rounding (mirrored in the oracle): cancellation in
         # |a|²+|b|²-2ab can round to a tiny NEGATIVE distance for distinct
         # near points, which would trip the d<=0 early stop and truncate
-        # the coreset before k genuinely distinct centers (advice finding)
+        # the coreset before k genuinely distinct centers
         nd = F.round(
             F.greatest(
                 F.lit(0.0),
@@ -1081,7 +926,7 @@ PQ_K = 16  # codes per subspace codebook
 PQ_SHORTLIST_MIN = 50  # ADC shortlist floor; the effective size is
 # max(this, corpus/5) — like IVF's adaptive nprobe, recall follows the
 # SHORTLISTED FRACTION on the ANN-hostile near-uniform fixture.
-# r7 sweep (aggregate recall at sf0.001/0.01/0.1): fixed 50 →
+# Sweep (aggregate recall at sf0.001/0.01/0.1): fixed 50 →
 # 0.72/0.80/0.56; 10% → 0.72/0.80/0.84; 20% → 0.92/0.88/0.92
 # (per-query min 4/5). 20% is honest for uniform synthetic data — a
 # clustered real corpus concentrates the ADC mass and the fraction
@@ -1115,20 +960,19 @@ def _code_expr(svec: Column, codes: list[tuple[int, list[float]]]) -> Column:
     """Argmin over the LITERAL codebook, fully in-row: distances to the
     k codes as a literal-array expression, argmin via array_position of
     the min (first match == lowest code on 6dp-rounded ties — the same
-    determinism contract as the window form it replaced). Embedding the
-    codebook as plan literals (it is k·PQ_DIM doubles — a model, not
-    data) makes code assignment a MAP-SIDE expression: the r7 review
-    found the original join+window form shuffled the whole subvector
-    stream per assignment pass, which at 100 TB is a full-corpus
-    network pass paid for an argmin over 16 constants.
+    determinism contract as a window rank). Embedding the codebook as
+    plan literals (it is k·PQ_DIM doubles — a model, not data) makes
+    code assignment a MAP-SIDE expression: a join+window form shuffles
+    the whole subvector stream per assignment pass, which at 100 TB is
+    a full-corpus network pass paid for an argmin over 16 constants.
 
-    The zip_with+aggregate HOF distance is DELIBERATE (r8 measured):
+    The zip_with+aggregate HOF distance is DELIBERATE (measured):
     unrolling Σ(aᵢ-bᵢ)² into k·PQ_DIM literal getItem/mul/add terms —
     the "codegen-friendly" form — ran 7× SLOWER (6.8 s vs 0.9 s per
     cached-corpus encode pass): the ~4k-node expression tree defeats
     whole-stage codegen and falls back to node-at-a-time interpreted
     eval, while the HOF's small lambda loop is a tight interpreted
-    loop. Measured, not assumed — see BASELINE.md round 8."""
+    loop. The measurement is recorded in BASELINE.md."""
     d_arr = F.array(
         *[
             F.round(_sq_dist(svec, F.array(*[F.lit(float(x)) for x in cvec])), 6)
@@ -1156,17 +1000,17 @@ def pq_train(
     assignment ties break toward the lowest code, and a code that loses
     all members keeps its previous center (standard empty-cell guard).
 
-    iters defaults to 1 (r8): the r8 decomposition measured recall
-    0.88/0.88/1.0 across sf0.001/0.01/0.1 with ONE iteration vs
-    0.92/0.88/0.92 with two — on the near-uniform fixture the second
-    corpus pass buys nothing (at sf0.1 it is strictly worse), and each
-    pass is the dominant PQ cost. A clustered real corpus is where
-    more iterations pay; the knob stays exposed.
+    iters defaults to 1: recall measured 0.88/0.88/1.0 across
+    sf0.001/0.01/0.1 with ONE iteration vs 0.92/0.88/0.92 with two — on
+    the near-uniform fixture the second corpus pass buys nothing (at
+    sf0.1 it is strictly worse), and each pass is the dominant PQ
+    cost. A clustered real corpus is where more iterations pay
+    (tools/probe_pq.py measures both).
 
-    Training runs on a DETERMINISTIC SAMPLE (r8, the FAISS-style
-    posture): codebooks are k·PQ_DIM-double models and never need the
-    full corpus — vectors with vec_id % mod == 0 train them, where mod
-    = max(1, n_corpus // sample_target) keeps ~sample_target training
+    Training runs on a DETERMINISTIC SAMPLE (the FAISS-style posture):
+    codebooks are k·PQ_DIM-double models and never need the full
+    corpus — vectors with vec_id % mod == 0 train them, where mod =
+    max(1, n_corpus // sample_target) keeps ~sample_target training
     vectors at ANY corpus size. At 100 TB this caps every Lloyd pass
     at a fixed-size input (the full-corpus passes are encode + ADC,
     both single-scan); at the parity fixtures (n ≤ 2000 ≤ target) mod
@@ -1178,8 +1022,8 @@ def pq_train(
     (:func:`_assigned_subvectors`, codebook riding the Python closure;
     the literal-codebook JVM form ``_assigned_subvectors_expr`` /
     ``_code_expr`` is kept as the bit-identity reference twin) + the
-    irreducible k-means reduce (groupBy (sub, code, pos) means); the
-    codebook is re-materialized through the driver per iteration,
+    irreducible k-means reduce (_means per (sub, code)); the codebook
+    is re-materialized through the driver per iteration,
     metadata-sized like learned_centroids. Returns the (sub, code,
     cvec) frame a serving layer would persist as the index metadata."""
     seed_rows = sorted(
@@ -1204,17 +1048,7 @@ def pq_train(
     }
     for _ in range(iters):
         assigned = (assign_fn or _assigned_subvectors)(train, by_sub)
-        means = (
-            assigned.select("sub", "code", F.posexplode("svec").alias("pos", "val"))
-            .groupBy("sub", "code", "pos")
-            .agg(F.round(F.avg("val"), 6).alias("m"))
-            .groupBy("sub", "code")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda x: x["m"]
-                ).alias("cvec")
-            )
-        )
+        means = _means(assigned, ["sub", "code"], "svec")
         new = {(int(r.sub), int(r.code)): list(r.cvec) for r in means.collect()}
         by_sub = {
             s: [(c, new.get((s, c), old)) for c, old in by_sub[s]]
@@ -1231,9 +1065,9 @@ def _assigned_subvectors_expr(
 ) -> DataFrame:
     """(vec_id, sub, svec, code) with the code computed in-row against
     the literal codebook — zero shuffle before the consumer's reduce.
-    r16: the JVM-expression REFERENCE TWIN of _assigned_subvectors —
-    kept so the Arrow-kernel production form is pinned bit-identical
-    against an independent implementation (the simhash_signatures /
+    The JVM-expression REFERENCE TWIN of _assigned_subvectors, kept so
+    the Arrow-kernel production form is pinned bit-identical against
+    an independent implementation (the simhash_signatures /
     simhash_signatures_np precedent)."""
     entries = F.array(
         *[
@@ -1260,12 +1094,12 @@ def _round6_np(d):
     BigDecimal.valueOf does. Inputs here are squared distances ≥ 0, so
     no negative-HALF_UP branch is needed.
 
-    The suspect window SCALES with the value (r16 advice): the binary
-    error of x·1e6 is ~ulp(scaled), which exceeds a fixed 1e-7 once
-    the scaled value passes ~4.5e8 (squared distances ≳ 450) — a
-    boundary case there could take the fast path and misround. The
-    window is max(1e-7, 4·ulp(scaled)), so large-magnitude inputs
-    route their near-.5 cases through the exact Decimal path too."""
+    The suspect window SCALES with the value: the binary error of
+    x·1e6 is ~ulp(scaled), which exceeds a fixed 1e-7 once the scaled
+    value passes ~4.5e8 (squared distances ≳ 450) — a boundary case
+    there could take the fast path and misround. The window is
+    max(1e-7, 4·ulp(scaled)), so large-magnitude inputs route their
+    near-.5 cases through the exact Decimal path too."""
     import numpy as np
 
     scaled = d * 1e6
@@ -1290,11 +1124,11 @@ def _round6_np(d):
 
 def _pq_codes_kernel(by_sub: dict[int, list[tuple[int, list[float]]]], with_svec: bool):
     """mapInPandas kernel computing the per-subspace code assignment —
-    the Arrow-vectorized twin of _code_expr (r16 optimization round,
-    guide §4.2: the interpreted zip_with/aggregate fold was ~10 s of
-    the 18.6 s ivfpq build at sf0.1; one numpy pass over each Arrow
-    batch does the same flops at native speed). Bit-identical by
-    construction and pinned by test_pq_codes_kernel_bit_identical:
+    the Arrow-vectorized twin of _code_expr (the interpreted
+    zip_with/aggregate fold was ~10 s of an 18.6 s ivfpq build at
+    sf0.1; one numpy pass over each Arrow batch does the same flops at
+    native speed). Bit-identical by construction and pinned by
+    test_pq_codes_kernel_bit_identical:
 
     - Σ(aᵢ−bᵢ)² is accumulated SEQUENTIALLY over dims (a Python loop
       of vectorized elementwise ops), reproducing the JVM fold's
@@ -1365,10 +1199,10 @@ def pq_encode(e: DataFrame, cents: DataFrame) -> DataFrame:
     """(vec_id, sub, code) — the compressed corpus: PQ_M small ints per
     vector, computed in ONE map-side pass (no join, no shuffle —
     plan-pinned); this is the table a serving layer materializes
-    (4 B/vector where the raw corpus is 512 B). r16: the code argmin
-    runs in the Arrow kernel (_pq_codes_kernel) instead of interpreted
-    per-row HOF expressions — bit-identical (pinned vs pq_encode_expr),
-    measured 4.8 s → ~0.6 s per encode pass at sf0.1."""
+    (4 B/vector where the raw corpus is 512 B). The code argmin runs
+    in the Arrow kernel (_pq_codes_kernel): 4.8 s → ~0.6 s per encode
+    pass at sf0.1 against the interpreted HOF form, bit-identical
+    (pinned vs pq_encode_expr)."""
     by_sub = _codebook_by_sub(cents)
     return e.select("vec_id", "vec").mapInPandas(
         _pq_codes_kernel(by_sub, with_svec=False),
@@ -1410,27 +1244,24 @@ def similarity_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     has; the driver-checkable contract row is the IVF one)."""
     # The corpus feeds five consumers (count, train seeds, train
     # assignment, encode, re-rank) — persist the cast frame so the
-    # parquet scan + array<double> cast happens ONCE (r8 decomposition:
-    # ~1 s/pass repeated per consumer was most of the old 11.3 s).
+    # parquet scan + array<double> cast happens ONCE (~1 s per pass at
+    # sf0.1, repeated per consumer, was most of this query's time).
     # Cache lifetime follows the library convention (shingle_postings /
     # dedup_near_text): ContextCleaner reclaims it once the returned
     # plan's references are GC'd — acceptable for the run-once query
     # shape, and bench/parity runs clearCache() between invocations.
     # NOTE this is a corpus-sized (512 B/vector) cache: at cluster
     # scale a serving layer does NOT cache raw vectors — it builds the
-    # index once via pq_index_save (one scan, no cache needed) and
-    # serves from the 4 B/vector codes; this in-session form exists
-    # for the one-shot query/benchmark shape where the five scans
-    # would otherwise dominate.
-    from pyspark.storagelevel import StorageLevel
-
+    # index once via pq_index_save and serves from the 4 B/vector
+    # codes; this in-session form exists for the one-shot
+    # query/benchmark shape where the five scans would otherwise
+    # dominate.
     e = _doubled(table(spark, sf_dir, "embeddings")).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     n_corpus = e.count()
     cents = pq_train(spark, e, n_corpus=n_corpus)
-    enc = pq_encode(e, cents)
-    return _pq_adc_rerank(e, enc, cents, n_corpus, TOP_K)
+    return _pq_adc_rerank(e, pq_encode(e, cents), cents, n_corpus)
 
 
 def _pq_adc_rerank(
@@ -1438,7 +1269,6 @@ def _pq_adc_rerank(
     enc: DataFrame,
     cents: DataFrame,
     n_corpus: int,
-    top_k: int,
     cand: DataFrame | None = None,
     shortlist_k: int | None = None,
 ) -> DataFrame:
@@ -1450,16 +1280,7 @@ def _pq_adc_rerank(
     None scans every code against every query (flat PQ)."""
     if shortlist_k is None:
         shortlist_k = max(PQ_SHORTLIST_MIN, -(-n_corpus // 5))
-    # r16: the query table carries its hoisted norm (5 rows — free);
-    # the rerank below then pays sqrt(dot) once per shortlist VECTOR
-    # instead of three dots per pair (bit-identical, see _scored_cells)
-    q = _with_nrm(
-        e.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
-        ),
-        "qvec",
-        out="_qnrm",
-    )
+    q = _queries(e)
     qsub = q.select(
         "query_id",
         F.posexplode(
@@ -1475,107 +1296,89 @@ def _pq_adc_rerank(
             F.round(_sq_dist(F.col("qsvec"), F.col("cvec")), 6).alias("pd"),
         )
     )
-    if cand is not None:
-        # IVF-pruned ADC: codes join the candidate (query, vec) pairs
-        # first, so only probed cells' codes are ever scored
-        adc = (
-            cand.join(enc, "vec_id")
-            .join(F.broadcast(partials), ["query_id", "sub", "code"])
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .groupBy("query_id", "vec_id")
-            .agg(F.round(F.sum("pd"), 6).alias("adc_dist"))
-        )
+    if cand is None:
+        codes, keys = enc, ["sub", "code"]
     else:
-        adc = (
-            enc.join(F.broadcast(partials), ["sub", "code"])
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .groupBy("query_id", "vec_id")
-            .agg(F.round(F.sum("pd"), 6).alias("adc_dist"))
-        )
-    short_w = Window.partitionBy("query_id").orderBy(F.col("adc_dist").asc(), F.col("vec_id"))
-    shortlist = (
-        adc.withColumn("srk", F.row_number().over(short_w))
-        .filter(F.col("srk") <= shortlist_k)
-        .select("query_id", "vec_id")
+        # IVF-pruned: codes join the candidate (query, vec) pairs first,
+        # so only the probed cells' codes are ever scored
+        codes, keys = cand.join(enc, "vec_id"), ["query_id", "sub", "code"]
+    adc = (
+        codes.join(F.broadcast(partials), keys)
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .groupBy("query_id", "vec_id")
+        .agg(F.round(F.sum("pd"), 6).alias("adc_dist"))
     )
-    # r17: the CORPUS-side norm is hoisted too (the r16 sweep's
-    # acknowledged leftover) — computed once per corpus row in a
-    # projection BELOW the shortlist join instead of once per
-    # (query × shortlist) pair; same expression, same operand order,
-    # bit-identical cos_sim (the _scored_cells argument).
-    rerank = (
-        shortlist.join(_with_nrm(e.select("vec_id", "vec"), "vec"), "vec_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                dot(F.col("qvec"), F.col("vec"))
-                / (F.col("_qnrm") * F.col("_nrm")),
-                6,
-            ).alias("cos_sim"),
-        )
+    shortlist = _top_k(adc, shortlist_k, F.col("adc_dist").asc()).select(
+        "query_id", "vec_id"
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-    return (
-        rerank.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= top_k)
-        .select("query_id", "vec_id", "cos_sim", "rk")
+    # the corpus-side norm is computed once per corpus row in a
+    # projection BELOW the shortlist join, not once per (query ×
+    # shortlist) pair
+    pairs = shortlist.join(_with_nrm(e.select("vec_id", "vec"), "vec"), "vec_id").join(
+        F.broadcast(q), "query_id"
     )
+    return _top_k(_scored(pairs), TOP_K)
 
 
 # ---------------------------------------------------------------------------
-# PQ index persistence — the serving pattern (r8). similarity_topk_pq
-# measures build+search in one shot; production builds ONCE (the index
-# is the artifact: m×k codebook + 4 B/vector codes) and serves many
-# query batches against the persisted index. pq_index_save/search split
-# the two costs so each is measurable and the search path provably
-# never re-trains or re-encodes.
+# Index persistence — the serving pattern. similarity_topk_pq /
+# similarity_topk_ivfpq measure build+search in one shot; production
+# builds ONCE (the index is the artifact: m×k codebook + 4 B/vector
+# codes, plus cells for IVF-PQ) and serves many query batches against
+# it. The *_index_save / *_index_search pairs split the two costs so
+# each is measurable and the search path provably never re-trains or
+# re-encodes. Both index formats share the PQ layer (_save_pq_layer,
+# _write_codes) and the meta row (_write_meta).
 # ---------------------------------------------------------------------------
 
 
-def pq_index_save(
-    spark: SparkSession, e: DataFrame, dest_dir: str, iters: int = 1
+def _write_codes(e: DataFrame, cb: DataFrame, index_dir: str, mode: str) -> None:
+    """codes.parquet (vec_id, sub, code — 4 B/vector): ``e`` encoded
+    with codebook ``cb``, overwriting on a build, appending on a grow."""
+    pq_encode(e, cb).write.mode(mode).parquet(os.path.join(index_dir, "codes.parquet"))
+
+
+def _save_pq_layer(spark: SparkSession, e: DataFrame, n: int, index_dir: str) -> None:
+    """The PQ layer of either index: codebook.parquet (sub, code, cvec —
+    m·k rows, model metadata) trained on ``e`` (``n`` rows), then
+    codes.parquet."""
+    cb = pq_train(spark, e, n_corpus=n)
+    cb.write.mode("overwrite").parquet(os.path.join(index_dir, "codebook.parquet"))
+    _write_codes(e, cb, index_dir, "overwrite")
+
+
+def _write_meta(
+    spark: SparkSession, index_dir: str, n_corpus: int, nlist: int | None = None
 ) -> None:
-    """Build and persist the PQ index under ``dest_dir``: codebook.parquet
-    (sub, code, cvec — m·k rows, model metadata) and codes.parquet
-    (vec_id, sub, code — the 4 B/vector compressed corpus). The build
-    touches the corpus several times (count, codebook seed/train,
-    encode) — persist bounds that to ONE source read (r8 advice: the
-    uncached form re-scanned the source per pass, the exact cost the
-    in-session path's persist was added to avoid); everything after
+    """meta.parquet, one row, committed after every other layer: the
+    corpus size rides with the index so a search derives its adaptive
+    shortlist WITHOUT a count job over the raw corpus, plus nlist for
+    an IVF-PQ index."""
+    if nlist is None:
+        row, schema = (n_corpus,), "n_corpus bigint"
+    else:
+        row, schema = (n_corpus, nlist), "n_corpus bigint, nlist int"
+    spark.createDataFrame([row], schema).write.mode("overwrite").parquet(
+        os.path.join(index_dir, "meta.parquet")
+    )
+
+
+def pq_index_save(spark: SparkSession, e: DataFrame, dest_dir: str) -> None:
+    """Build and persist the PQ index under ``dest_dir``: the PQ layer
+    (codebook.parquet + codes.parquet) and meta.parquet (n_corpus). The
+    build touches the corpus several times (count, codebook seed/train,
+    encode) — persist bounds that to ONE source read; everything after
     the build reads codes only."""
-    import os
-
-    from pyspark.storagelevel import StorageLevel
-
     e = e.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         n = e.count()
-        cents = pq_train(spark, e, iters=iters, n_corpus=n)
-        cents.write.mode("overwrite").parquet(
-            os.path.join(dest_dir, "codebook.parquet")
-        )
-        pq_encode(e, cents).write.mode("overwrite").parquet(
-            os.path.join(dest_dir, "codes.parquet")
-        )
-        # corpus size rides with the index (meta.parquet, one row): the
-        # serving path derives its adaptive shortlist from it WITHOUT a
-        # per-batch count job over the raw corpus (review finding — the
-        # amortized path was paying a full count per search call)
-        spark.createDataFrame([(n,)], "n_corpus bigint").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(dest_dir, "meta.parquet"))
+        _save_pq_layer(spark, e, n, dest_dir)
+        _write_meta(spark, dest_dir, n)
     finally:
         e.unpersist()
 
 
-def pq_index_search(
-    spark: SparkSession,
-    index_dir: str,
-    e: DataFrame,
-    top_k: int = TOP_K,
-) -> DataFrame:
+def pq_index_search(spark: SparkSession, index_dir: str, e: DataFrame) -> DataFrame:
     """ADC + exact re-rank against a PERSISTED index: the scan side is
     codes.parquet (4 B/vector); raw vectors are read only for the
     shortlist re-rank join. Queries are the standard vec_id < N_QUERIES
@@ -1583,16 +1386,12 @@ def pq_index_search(
     identical to similarity_topk_pq built in-session from the same
     corpus (pinned in tests) — the persisted index changes WHEN the
     build cost is paid, not what is computed."""
-    import os
-
     cents = spark.read.parquet(os.path.join(index_dir, "codebook.parquet"))
     enc = spark.read.parquet(os.path.join(index_dir, "codes.parquet"))
     n_corpus = int(
-        spark.read.parquet(os.path.join(index_dir, "meta.parquet"))
-        .head()
-        .n_corpus
+        spark.read.parquet(os.path.join(index_dir, "meta.parquet")).head().n_corpus
     )
-    return _pq_adc_rerank(e, enc, cents, n_corpus, top_k)
+    return _pq_adc_rerank(e, enc, cents, n_corpus)
 
 
 @query("similarity_topk_ivfpq")  # approximate: recall pinned in tests
@@ -1613,25 +1412,19 @@ def similarity_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     the flat-corpus fixture cannot measure; the trade is documented
     rather than silently taken. The ADC shortlist is max(floor,
     ⌈n/3⌉) — wider than flat PQ's n/5 because the composite pays TWO
-    approximation stages (IVF coverage × ADC ranking) and the r8
-    sweep measured n/5 at exactly 0.80 recall at sf0.001 (zero
-    margin, the ADVICE-r7 IVF lesson) vs n/3 at 0.84/1.0/0.92 across
-    sf0.001/0.01/0.1. Cost honesty: the wider shortlist means the
-    exact RE-RANK reads ~67% MORE raw vectors than flat PQ (n/3 vs
-    n/5) — what IVF prunes is the ADC CODE scan (~60% of codes at
-    these settings, and the probed fraction is the tunable knob);
-    the composite wins where the code scan dominates, which is the
-    100 TB regime, not the re-rank. Approximate by design →
-    rows-only; recall vs exact is pinned ≥0.8 at sf0.001 in tests
-    and recorded at the bench SF every round
+    approximation stages (IVF coverage × ADC ranking): a sweep
+    measured n/5 at exactly 0.80 recall at sf0.001 (zero margin) vs
+    n/3 at 0.84/1.0/0.92 across sf0.001/0.01/0.1. Cost honesty: the
+    wider shortlist means the exact RE-RANK reads ~67% MORE raw
+    vectors than flat PQ (n/3 vs n/5) — what IVF prunes is the ADC
+    CODE scan (~60% of codes at these settings, and the probed
+    fraction is the tunable knob); the composite wins where the code
+    scan dominates, which is the 100 TB regime, not the re-rank.
+    Approximate by design → rows-only; recall vs exact is pinned ≥0.8
+    at sf0.001 in tests and recorded at the bench SF
     (secondary.similarity_ivfpq_recall)."""
     # Corpus cache: same consumers/justification/lifetime as
-    # similarity_topk_pq (see the NOTE there — run-once query shape,
-    # ContextCleaner reclaim, clearCache between bench/parity runs;
-    # a serving deployment uses the persisted-index path instead and
-    # never caches raw vectors).
-    from pyspark.storagelevel import StorageLevel
-
+    # similarity_topk_pq (see the NOTE there).
     e = _doubled(table(spark, sf_dir, "embeddings")).persist(
         StorageLevel.MEMORY_AND_DISK
     )
@@ -1640,8 +1433,8 @@ def similarity_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     nlist = cents.count()
     cb = pq_train(spark, e, n_corpus=n_corpus)
     enc = pq_encode(e, cb)
-    assigned = _cell_assign(e, cents, n_assign=N_ASSIGN).select("vec_id", "cell")
-    return _ivfpq_search(e, cents, cb, enc, assigned, n_corpus, nlist, TOP_K)
+    assigned = _cell_assign(e, cents, N_ASSIGN).select("vec_id", "cell")
+    return _ivfpq_search(e, cents, cb, enc, assigned, n_corpus, nlist)
 
 
 def _ivfpq_search(
@@ -1652,56 +1445,44 @@ def _ivfpq_search(
     assigned: DataFrame,
     n_corpus: int,
     nlist: int,
-    top_k: int,
 ) -> DataFrame:
     """The IVF-PQ search half (probe → candidate equi-join → pruned ADC
     → re-rank), shared by the in-session query and the persisted-index
     form so the two cannot drift."""
-    nprobe = _default_nprobe(nlist)
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
+    probes = _cell_probes(_queries(e), cents, _default_nprobe(nlist)).select(
+        "query_id", "cell"
     )
-    probes = _cell_probes(q, cents, nprobe).select("query_id", "cell")
     cand = (
         assigned.join(F.broadcast(probes), "cell")
         .select("query_id", "vec_id")
         .dropDuplicates(["query_id", "vec_id"])
     )
     shortlist_k = max(PQ_SHORTLIST_MIN, -(-n_corpus // 3))
-    return _pq_adc_rerank(
-        e, enc, cb, n_corpus, top_k, cand=cand, shortlist_k=shortlist_k
-    )
+    return _pq_adc_rerank(e, enc, cb, n_corpus, cand=cand, shortlist_k=shortlist_k)
 
 
-def ivfpq_index_save(
-    spark: SparkSession, e: DataFrame, dest_dir: str, iters: int = 1
-) -> None:
+def ivfpq_index_save(spark: SparkSession, e: DataFrame, dest_dir: str) -> None:
     """Persist the IVF-PQ index under ``dest_dir``: centroids.parquet
     (coarse cells — nlist·dim doubles, model metadata), assign.parquet
-    (vec_id, cell — the inverted lists, N_ASSIGN rows/vector),
-    codebook.parquet + codes.parquet (the PQ layer), and meta.parquet
-    (n_corpus + nlist). The build touches the corpus several times
-    (count, k-means, cell assign, codebook train, encode) — persist
-    bounds that to ONE source read (r8 advice); every subsequent
+    (vec_id, cell — the inverted lists, N_ASSIGN rows/vector), the PQ
+    layer (codebook.parquet + codes.parquet, as pq_index_save writes
+    it), and meta.parquet (n_corpus + nlist). The build touches the
+    corpus several times (count, k-means, cell assign, codebook train,
+    encode) — persist bounds that to ONE source read; every subsequent
     query batch probes cells and scans codes only.
 
-    r17 (guide §2.6 "overlap independent jobs"): the coarse layer
-    (k-means → centroids → inverted lists) and the fine layer
-    (codebook train → codes) share no data dependency — only the
-    persisted corpus — so they run as two concurrent driver threads.
-    Lloyd's per-iteration barrier collects serialize each BRANCH, not
-    the build: while one branch waits on a collect, the other's tasks
-    fill the idle executors (the guide's back-fill shape). Outputs are
-    byte-identical (each branch is deterministic and writes disjoint
-    paths); meta commits last, after both branches. Each branch tags
-    its jobs, so the first branch to fail cancels the other's jobs
-    before its error is raised, instead of waiting for the sibling to
-    finish work that will be thrown away."""
-    import os
+    The coarse layer (k-means → centroids → inverted lists) and the PQ
+    layer share no data dependency — only the persisted corpus — so
+    they run as two concurrent driver threads. Lloyd's per-iteration
+    barrier collects serialize each BRANCH, not the build: while one
+    branch waits on a collect, the other's tasks fill the idle
+    executors. Outputs are byte-identical (each branch is deterministic
+    and writes disjoint paths); meta commits last, after both branches.
+    Each branch tags its jobs, so the first branch to fail cancels the
+    other's jobs before its error is raised, instead of waiting for the
+    sibling to finish work that will be thrown away."""
     import uuid
     from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
-
-    from pyspark.storagelevel import StorageLevel
 
     sc = spark.sparkContext
     build = f"ivfpq-build-{uuid.uuid4().hex}"
@@ -1720,15 +1501,6 @@ def ivfpq_index_save(
             ).parquet(os.path.join(dest_dir, "assign.parquet"))
             return nlist
 
-        def _fine_layer() -> None:
-            cb = pq_train(spark, e, iters=iters, n_corpus=n)
-            cb.write.mode("overwrite").parquet(
-                os.path.join(dest_dir, "codebook.parquet")
-            )
-            pq_encode(e, cb).write.mode("overwrite").parquet(
-                os.path.join(dest_dir, "codes.parquet")
-            )
-
         def _tagged(layer, fn):
             def run():  # job tags and descriptions are per thread
                 sc.addJobTag(f"{build}-{layer}")
@@ -1739,7 +1511,9 @@ def ivfpq_index_save(
 
         with ThreadPoolExecutor(max_workers=2) as pool:
             coarse = pool.submit(_tagged("coarse", _coarse_layer))
-            fine = pool.submit(_tagged("pq", _fine_layer))
+            fine = pool.submit(
+                _tagged("pq", lambda: _save_pq_layer(spark, e, n, dest_dir))
+            )
             layer = {coarse: "coarse", fine: "pq"}
             done, pending = wait(layer, return_when=FIRST_EXCEPTION)
             failed = [f for f in done if f.exception() is not None]
@@ -1752,33 +1526,24 @@ def ivfpq_index_save(
             if failed:
                 raise failed[0].exception()
             nlist = coarse.result()
-        spark.createDataFrame([(n, nlist)], "n_corpus bigint, nlist int").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(dest_dir, "meta.parquet"))
+        _write_meta(spark, dest_dir, n, nlist)
     finally:
         e.unpersist()
 
 
-def ivfpq_index_search(
-    spark: SparkSession,
-    index_dir: str,
-    e: DataFrame,
-    top_k: int = TOP_K,
-) -> DataFrame:
+def ivfpq_index_search(spark: SparkSession, index_dir: str, e: DataFrame) -> DataFrame:
     """IVF-PQ search against a PERSISTED index: probes come from the
     stored centroids, candidates from the stored inverted lists, ADC
     from the stored codes — raw vectors are read only for the re-rank.
     Results identical to similarity_topk_ivfpq built in-session from
     the same corpus (pinned in tests)."""
-    import os
-
     cents = spark.read.parquet(os.path.join(index_dir, "centroids.parquet"))
     assigned = spark.read.parquet(os.path.join(index_dir, "assign.parquet"))
     cb = spark.read.parquet(os.path.join(index_dir, "codebook.parquet"))
     enc = spark.read.parquet(os.path.join(index_dir, "codes.parquet"))
     meta = spark.read.parquet(os.path.join(index_dir, "meta.parquet")).head()
     return _ivfpq_search(
-        e, cents, cb, enc, assigned, int(meta.n_corpus), int(meta.nlist), top_k
+        e, cents, cb, enc, assigned, int(meta.n_corpus), int(meta.nlist)
     )
 
 
@@ -1839,272 +1604,108 @@ def similarity_topk_gemm(spark: SparkSession, sf_dir: str) -> DataFrame:
     matmul (BLAS runs ~10-100× the flop rate of per-row expression
     eval at n·q·d scale), keeps the top 2k per query per block
     (bounded: blocks·q·2k candidate rows — never the corpus), then
-    re-scores ONLY those candidates with the same zip_with/aggregate
-    expression the HOF form uses, so the published cos_sim doubles are
+    re-scores ONLY those candidates with the same hoisted cosine the
+    HOF form uses (_scored), so the published cos_sim doubles are
     bit-identical to similarity_topk and the DuckDB oracle. Correctness
     does not depend on block boundaries: any true top-k member ranks
     within its own block's top-k, so it always ships as a candidate.
     The corpus never shuffles; queries ride into the kernel as a
     closure (q·d doubles)."""
     e = _doubled(table(spark, sf_dir, "embeddings"))
-    qrows = (
-        e.filter(F.col("vec_id") < N_QUERIES).select("vec_id", "vec").collect()
-    )
+    q = _queries(e)
+    qrows = q.select("query_id", "qvec").collect()
     if not qrows:
         return spark.createDataFrame(
             [], "query_id bigint, vec_id bigint, cos_sim double, rk bigint"
         )
     import numpy as np
 
-    qids = [int(r.vec_id) for r in qrows]
-    qmat = np.array([r.vec for r in qrows], dtype=np.float64)
+    qids = [int(r.query_id) for r in qrows]
+    qmat = np.array([r.qvec for r in qrows], dtype=np.float64)
     cands = e.select("vec_id", "vec").mapInPandas(
         _gemm_candidates(qids, qmat, GEMM_MARGIN * TOP_K),
         "query_id bigint, vec_id bigint, vec array<double>",
     )
-    # r17 norm hoist (the r16 sweep's acknowledged leftover): the
-    # query norm is a per-query constant (5 rows) and the candidate's
-    # own norm is computed once per candidate row in a projection
-    # BELOW the broadcast join — dot/(qnrm·nrm) with the same operand
-    # order as cosine(), bit-identical (test_cosine_norm_hoist...).
-    q = _with_nrm(
-        e.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
-        ),
-        "qvec",
-        out="_qnrm",
-    )
-    rescored = (
-        _with_nrm(cands, "vec")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                dot(F.col("qvec"), F.col("vec"))
-                / (F.col("_qnrm") * F.col("_nrm")),
-                6,
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-    return (
-        rescored.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= TOP_K)
-        .select("query_id", "vec_id", "cos_sim", "rk")
-    )
-
-
-def _assert_delta_ids_disjoint(
-    spark: SparkSession, codes_path: str, new_e: DataFrame, op: str
-) -> None:
-    """Shared replay guard for both index formats (r13 review: two
-    copies risked diverging semantics): incoming vec_ids must be
-    absent from the CODES store — the guard's single source of truth,
-    which is why every grow appends codes FIRST. One column-pruned
-    semi join over the codes ids (at 100 TB the cheapest scan in the
-    index)."""
-    existing = spark.read.parquet(codes_path).select("vec_id")
-    n_dup = new_e.join(existing, "vec_id", "left_semi").count()
-    if n_dup:
-        raise ValueError(
-            f"{op}: {n_dup} incoming vec_ids already in the index — "
-            "delta batches must carry fresh ids (replay?)"
-        )
-
-
-def pq_index_add_vectors(
-    spark: SparkSession, index_dir: str, new_e: DataFrame
-) -> int:
-    """Grow a persisted PQ index WITHOUT retraining (r12 verdict #3):
-    encode the new vectors with the STORED codebook (a model is a
-    model — daily arrivals don't re-fit it, exactly as the inverted
-    index's delta merge never re-tokenizes the old corpus,
-    retrieval.py), append the codes to the store, bump meta.n_corpus.
-    Returns the number of vectors added.
-
-    Guards: new vec_ids must be DISJOINT from the store's (a replayed
-    batch would otherwise double its vectors into every shortlist) —
-    checked with one column-pruned semi join over the codes store
-    (reads the vec_id column only; at 100 TB that column is the
-    cheapest scan in the index). Recall contract vs a from-scratch
-    rebuild on the grown corpus is pinned in tests and carried
-    in-query by pq_index_delta_add."""
-    import os
-
-    cb = spark.read.parquet(os.path.join(index_dir, "codebook.parquet"))
-    codes_path = os.path.join(index_dir, "codes.parquet")
-    _assert_delta_ids_disjoint(spark, codes_path, new_e, "pq_index_add_vectors")
-    n_new = new_e.count()
-    if not n_new:
-        return 0
-    pq_encode(new_e, cb).write.mode("append").parquet(codes_path)
-    meta_path = os.path.join(index_dir, "meta.parquet")
-    n_old = int(spark.read.parquet(meta_path).head().n_corpus)
-    spark.createDataFrame([(n_old + n_new,)], "n_corpus bigint").write.mode(
-        "overwrite"
-    ).parquet(meta_path)
-    return n_new
+    pairs = _with_nrm(cands, "vec").join(F.broadcast(q), "query_id")
+    return _top_k(_scored(pairs), TOP_K)
 
 
 def ivfpq_index_add_vectors(
     spark: SparkSession, index_dir: str, new_e: DataFrame
 ) -> int:
-    """IVF-PQ twin of :func:`pq_index_add_vectors`: assign new vectors
-    to the STORED coarse centroids (no k-means re-run — cell geometry
-    is the model), append their inverted-list rows and PQ codes, bump
-    meta.n_corpus (nlist unchanged). Same disjoint-id guard."""
-    import os
+    """Grow a persisted IVF-PQ index WITHOUT retraining: assign the new
+    vectors to the STORED coarse centroids (no k-means re-run — cell
+    geometry is the model) and encode them with the STORED codebook (a
+    model is a model — daily arrivals don't re-fit it, exactly as the
+    inverted index's delta merge never re-tokenizes the old corpus,
+    retrieval.py), append their PQ codes and inverted-list rows, bump
+    meta.n_corpus (nlist unchanged). Returns the number of vectors
+    added; an empty batch is a no-op returning 0.
 
-    cents = spark.read.parquet(os.path.join(index_dir, "centroids.parquet"))
-    cb = spark.read.parquet(os.path.join(index_dir, "codebook.parquet"))
-    codes_path = os.path.join(index_dir, "codes.parquet")
-    assign_path = os.path.join(index_dir, "assign.parquet")
-    _assert_delta_ids_disjoint(
-        spark, codes_path, new_e, "ivfpq_index_add_vectors"
-    )
+    Replay guard: incoming vec_ids must be absent from the CODES store
+    (a replayed batch would otherwise double its vectors into every
+    shortlist) — one column-pruned semi join over the codes ids, at
+    100 TB the cheapest scan in the index. Codes are therefore
+    appended FIRST and the inverted lists SECOND: a grow that dies
+    between the two appends and retries fails LOUDLY (codes committed
+    ⇒ guard trips) rather than silently duplicating the batch's
+    inverted-list rows (assign committed first ⇒ guard passes ⇒
+    2×N_ASSIGN rows per vector)."""
+    existing = spark.read.parquet(os.path.join(index_dir, "codes.parquet"))
+    n_dup = new_e.join(existing.select("vec_id"), "vec_id", "left_semi").count()
+    if n_dup:
+        raise ValueError(
+            f"ivfpq_index_add_vectors: {n_dup} incoming vec_ids already in the "
+            "index — delta batches must carry fresh ids (replay?)"
+        )
     n_new = new_e.count()
     if not n_new:
         return 0
-    # CODES first, ASSIGN second (r13 review): the replay guard reads
-    # codes, so a grow that dies between the two appends and retries
-    # must fail LOUDLY (codes committed ⇒ guard trips) rather than
-    # silently duplicate the batch's inverted-list rows (assign
-    # committed first ⇒ guard passes ⇒ 2×N_ASSIGN rows per vector)
-    pq_encode(new_e, cb).write.mode("append").parquet(codes_path)
+    cents = spark.read.parquet(os.path.join(index_dir, "centroids.parquet"))
+    cb = spark.read.parquet(os.path.join(index_dir, "codebook.parquet"))
+    _write_codes(new_e, cb, index_dir, "append")
     _cell_assign(new_e, cents, N_ASSIGN).select("vec_id", "cell").write.mode(
         "append"
-    ).parquet(assign_path)
-    meta_path = os.path.join(index_dir, "meta.parquet")
-    meta = spark.read.parquet(meta_path).head()
-    spark.createDataFrame(
-        [(int(meta.n_corpus) + n_new, int(meta.nlist))],
-        "n_corpus bigint, nlist int",
-    ).write.mode("overwrite").parquet(meta_path)
+    ).parquet(os.path.join(index_dir, "assign.parquet"))
+    meta = spark.read.parquet(os.path.join(index_dir, "meta.parquet")).head()
+    _write_meta(spark, index_dir, int(meta.n_corpus) + n_new, int(meta.nlist))
     return n_new
 
 
 @query(
-    "pq_index_delta_add",
-    # Contract form in the similarity_topk_ivf family, but the claim is
-    # the r12 verdict's exact wording: recall HOLDS VS A FROM-SCRATCH
-    # REBUILD on the grown corpus. The published rows are the EXACT
-    # top-k on the grown corpus (deterministic, mirrored by the oracle)
-    # plus a per-query boolean — the delta-grown index may lose at most
+    "ivfpq_index_delta_add",
+    # contract form in the similarity_topk_ivf family: the published
+    # rows are the exact top-k on the grown corpus (oracle-mirrored)
+    # plus a per-query boolean — recall HOLDS VS A FROM-SCRATCH REBUILD
+    # on the grown corpus, i.e. the delta-grown index may lose at most
     # ONE exact neighbor per query relative to the rebuild (integer
-    # slack for codebook-training noise: the synthetic embeddings are
-    # near-uniform, ANN-hostile, so a codebook fitted without the delta
+    # slack for model-training noise: the synthetic embeddings are
+    # near-uniform, ANN-hostile, so models fitted without the delta
     # 20% can legitimately tie-break one boundary neighbor away). If
     # delta maintenance ever costs more than that anywhere, the boolean
     # flips and the value hash goes red.
     oracle=_EXACT_TOPK_CTE
     + "\n    SELECT query_id, vec_id, cos_sim, rk, TRUE AS delta_recall_ok FROM exact",
 )
-def pq_index_delta_add(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN index maintenance end to end (r12 verdict #3): build the PQ
-    index on the BASE ~80% of the corpus, delta-add the remaining ~20%
-    with the stored codebook (pq_index_add_vectors — no retraining),
-    build the from-scratch rival on the full corpus, serve the standard
-    queries from BOTH stores, and contract the delta-grown index's
-    per-query overlap with exact against the rebuild's (≥ rebuild − 1).
-    The staging writes are inside the query on purpose (the
-    join_bucketed precedent: the build IS the amortized cost; the
-    measured serve path reads codes only). At 100 TB this is the
-    daily-arrival path — the rebuild rival exists here precisely to
-    show what delta-add avoids re-paying: re-training and re-encoding
-    the entire corpus for a 0.2% arrival."""
-    from ..cdc.staging import fresh_staging_dir
-
-    e = _doubled(table(spark, sf_dir, "embeddings"))
-    # base keeps the deterministic seed range (pq_train seeds its
-    # codebook from vec_id 0..PQ_K-1); the delta is every 5th id above
-    is_delta = (F.col("vec_id") >= PQ_K) & (F.col("vec_id") % 5 == 3)
-    staging = fresh_staging_dir(spark, sf_dir, "pq_delta")
-    grown_idx = staging + "/grown"
-    rebuild_idx = staging + "/rebuild"
-    pq_index_save(spark, e.where(~is_delta), grown_idx)
-    pq_index_add_vectors(spark, grown_idx, e.where(is_delta))
-    pq_index_save(spark, e, rebuild_idx)
-
-    return _delta_recall_rows(
-        spark,
-        sf_dir,
-        pq_index_search(spark, grown_idx, e),
-        pq_index_search(spark, rebuild_idx, e),
-    )
-
-
-def _delta_recall_rows(
-    spark: SparkSession,
-    sf_dir: str,
-    grown_topk: DataFrame,
-    rebuild_topk: DataFrame,
-) -> DataFrame:
-    """Shared contract tail for the delta-add queries (pq +  ivfpq):
-    exact top-k rows on the grown corpus, plus a per-query boolean —
-    the delta-grown index may lose at most ONE exact neighbor per
-    query relative to the from-scratch rebuild. Factored so the two
-    index formats cannot drift on what 'recall holds' means."""
-    exact_plan = similarity_topk(spark, sf_dir)
-    exact = spark.createDataFrame(exact_plan.collect(), schema=exact_plan.schema)
-
-    def per_query_overlap(approx: DataFrame, name: str) -> DataFrame:
-        return (
-            exact.join(
-                approx.select("query_id", "vec_id"),
-                ["query_id", "vec_id"],
-                "left_semi",
-            )
-            .groupBy("query_id")
-            .agg(F.count("*").alias(name))
-        )
-
-    ov_grown = per_query_overlap(grown_topk, "n_grown")
-    ov_rebuild = per_query_overlap(rebuild_topk, "n_rebuild")
-    flags = (
-        exact.select("query_id")
-        .distinct()
-        .join(ov_grown, "query_id", "left")
-        .join(ov_rebuild, "query_id", "left")
-        .select(
-            "query_id",
-            (
-                F.coalesce(F.col("n_grown"), F.lit(0)) + F.lit(1)
-                >= F.coalesce(F.col("n_rebuild"), F.lit(0))
-            ).alias("delta_recall_ok"),
-        )
-    )
-    return exact.join(F.broadcast(flags), "query_id").select(
-        "query_id", "vec_id", "cos_sim", "rk", "delta_recall_ok"
-    )
-
-
-@query(
-    "ivfpq_index_delta_add",
-    # same contract form as pq_index_delta_add: published rows are the
-    # exact top-k (oracle-mirrored) + the per-query delta-recall flag
-    oracle=_EXACT_TOPK_CTE
-    + "\n    SELECT query_id, vec_id, cos_sim, rk, TRUE AS delta_recall_ok FROM exact",
-)
 def ivfpq_index_delta_add(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The COMPOSED serving index is incrementally maintainable end to
-    end (r13 verdict #7): build the IVF-PQ index on the base ~80% of
-    the corpus, delta-add the remaining ~20% against the FROZEN coarse
-    centroids AND frozen codebook (ivfpq_index_add_vectors — new
-    vectors get N_ASSIGN inverted-list rows + PQ codes, no k-means or
-    codebook re-run), build the from-scratch rival on the full corpus,
-    serve the standard queries from BOTH stores, and contract the
+    """The composed serving index is incrementally maintainable end to
+    end: build the IVF-PQ index on the base ~80% of the corpus,
+    delta-add the remaining ~20% against the FROZEN coarse centroids
+    AND frozen codebook (ivfpq_index_add_vectors — new vectors get
+    N_ASSIGN inverted-list rows + PQ codes, no k-means or codebook
+    re-run), build the from-scratch rival on the full corpus, serve
+    the standard queries from BOTH stores, and contract the
     delta-grown index's per-query exact-neighbor overlap against the
-    rebuild's (>= rebuild - 1, the pq_index_delta_add slack: BOTH
-    frozen models may tie-break one boundary neighbor away on the
-    ANN-hostile near-uniform fixture). With pq_index_delta_add this
-    closes the maintenance story: codes-only (PQ) and cells+codes
-    (IVF-PQ) both grow by appending — at 100 TB a daily 0.2% arrival
-    costs one encode+assign pass over the delta instead of re-training
-    and re-encoding the corpus."""
+    rebuild's (≥ rebuild − 1). The staging writes are inside the query
+    on purpose (the join_bucketed precedent: the build IS the amortized
+    cost; the serve path reads cells and codes only). At 100 TB a
+    daily 0.2% arrival costs one encode+assign pass over the delta
+    instead of re-training and re-encoding the corpus."""
     from ..cdc.staging import fresh_staging_dir
 
     e = _doubled(table(spark, sf_dir, "embeddings"))
+    # the base keeps the deterministic seed range (pq_train seeds its
+    # codebook from vec_id 0..PQ_K-1); the delta is every 5th id above
     is_delta = (F.col("vec_id") >= PQ_K) & (F.col("vec_id") % 5 == 3)
     staging = fresh_staging_dir(spark, sf_dir, "ivfpq_delta")
     grown_idx = staging + "/grown"
@@ -2112,9 +1713,11 @@ def ivfpq_index_delta_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     ivfpq_index_save(spark, e.where(~is_delta), grown_idx)
     ivfpq_index_add_vectors(spark, grown_idx, e.where(is_delta))
     ivfpq_index_save(spark, e, rebuild_idx)
-    return _delta_recall_rows(
+    return _exact_rows_with_flag(
         spark,
         sf_dir,
-        ivfpq_index_search(spark, grown_idx, e),
-        ivfpq_index_search(spark, rebuild_idx, e),
+        "delta_recall_ok",
+        F.col("n_grown") + F.lit(1) >= F.col("n_rebuild"),
+        n_grown=ivfpq_index_search(spark, grown_idx, e),
+        n_rebuild=ivfpq_index_search(spark, rebuild_idx, e),
     )

@@ -38,7 +38,6 @@ EXPECTED_DATA_DEPENDENT: dict[str, str] = {
     "similarity_topk_ivfpq": "IVF+PQ index build needs seed vectors",
     # the delta-add demos BUILD their index first (base + rebuild) —
     # same seed contract as every other IVF/PQ build
-    "pq_index_delta_add": "PQ codebook training needs seed vectors",
     "ivfpq_index_delta_add": "IVF+PQ index build needs seed vectors",
 }
 

@@ -1010,31 +1010,6 @@ checks:
     assert out["volume_min"].passed
 
 
-def test_hyperplane_lsh_pairs(spark):
-    """Hyperplane-LSH must surface near-identical vectors as candidate
-    pairs (tiny Hamming distance) and not pair orthogonal ones."""
-    from promptly_data_pipelines_spark.extensions.similarity import (
-        hyperplane_signatures,
-        similar_pairs_hyperplane,
-    )
-
-    dim = 8
-    base = [1.0, 0.5, -0.3, 0.8, -0.1, 0.2, 0.9, -0.6]
-    near = [x * 1.02 + (0.01 if i == 0 else 0) for i, x in enumerate(base)]
-    ortho = [-0.5, 1.0, 0.8, -0.4, 0.9, -0.7, 0.1, 0.6]
-    e = spark.createDataFrame(
-        [(1, base), (2, near), (3, ortho)], "vec_id long, vec array<double>"
-    )
-    sigs = hyperplane_signatures(e, dim)
-    pairs = {(r.doc_a, r.doc_b) for r in similar_pairs_hyperplane(sigs).collect()}
-    assert (1, 2) in pairs, pairs
-    assert (1, 3) not in pairs and (2, 3) not in pairs, pairs
-    # determinism: same signatures on a rerun
-    s1 = sorted((r.vec_id, r.hsig) for r in sigs.collect())
-    s2 = sorted((r.vec_id, r.hsig) for r in hyperplane_signatures(e, dim).collect())
-    assert s1 == s2
-
-
 # ---------------------------------------------------------------- skew posture
 
 
@@ -2274,59 +2249,16 @@ def test_sample_estimator_accuracy(spark):
         assert abs(est[t].est_n_events - r.n) / r.n < 0.40, t
 
 
-def test_pq_index_delta_add_bookkeeping_and_replay_guard(spark, tmp_path):
-    """ANN delta maintenance (the retrieval family's delta-merge
-    contract, ported to the PQ store): adding a batch encodes with the
-    STORED codebook only (no retrain — codebook bytes unchanged),
-    appends PQ_M code rows per vector, bumps meta.n_corpus; a replayed
-    batch (same vec_ids) must refuse loudly instead of double-counting
-    into every shortlist; an empty batch is a no-op returning 0."""
-    from promptly_data_pipelines_spark.catalog import table
-    from promptly_data_pipelines_spark.extensions.similarity import (
-        PQ_K,
-        PQ_M,
-        _doubled,
-        pq_index_add_vectors,
-        pq_index_save,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    e = _doubled(table(spark, sf, "embeddings"))
-    is_delta = (F.col("vec_id") >= PQ_K) & (F.col("vec_id") % 5 == 3)
-    base, delta = e.where(~is_delta), e.where(is_delta)
-    n_base, n_delta = base.count(), delta.count()
-    assert n_delta > 0
-    idx = str(tmp_path / "pq_grow")
-    pq_index_save(spark, base, idx)
-    cb_before = sorted(
-        map(tuple, spark.read.parquet(f"{idx}/codebook.parquet").collect())
-    )
-
-    assert pq_index_add_vectors(spark, idx, delta) == n_delta
-    codes = spark.read.parquet(f"{idx}/codes.parquet")
-    assert codes.count() == PQ_M * (n_base + n_delta)
-    assert codes.select("vec_id").distinct().count() == n_base + n_delta
-    meta = spark.read.parquet(f"{idx}/meta.parquet").head()
-    assert meta.n_corpus == n_base + n_delta
-    cb_after = sorted(
-        map(tuple, spark.read.parquet(f"{idx}/codebook.parquet").collect())
-    )
-    assert cb_before == cb_after  # the model was NOT re-fit
-
-    with pytest.raises(ValueError, match="already in"):
-        pq_index_add_vectors(spark, idx, delta)
-    assert pq_index_add_vectors(spark, idx, delta.limit(0)) == 0
-    assert spark.read.parquet(f"{idx}/meta.parquet").head().n_corpus == (
-        n_base + n_delta
-    )
-
-
 def test_ivfpq_index_delta_add_grows_lists_and_serves(spark, tmp_path):
-    """IVF-PQ twin: delta vectors join the STORED cell geometry
-    (N_ASSIGN inverted-list rows each, nlist unchanged) and the grown
-    store serves the standard queries losing at most one exact
-    neighbor per query against a from-scratch rebuild on the same
-    grown corpus — the executable form of 'recall holds'."""
+    """ANN delta maintenance: delta vectors join the STORED cell
+    geometry (N_ASSIGN inverted-list rows each, nlist unchanged) and
+    are encoded with the STORED codebook (centroid and codebook rows
+    unchanged, so no model is re-fit); a replayed batch (same vec_ids)
+    refuses loudly instead of double-counting into every shortlist;
+    an empty batch is a no-op returning 0. The grown store serves the
+    standard queries losing at most one exact neighbor per query
+    against a from-scratch rebuild on the same grown corpus — the
+    executable form of 'recall holds'."""
     from promptly_data_pipelines_spark.catalog import table
     from promptly_data_pipelines_spark.extensions.similarity import (
         N_ASSIGN,
@@ -2345,11 +2277,25 @@ def test_ivfpq_index_delta_add_grows_lists_and_serves(spark, tmp_path):
     grown = str(tmp_path / "ivfpq_grown")
     rebuild = str(tmp_path / "ivfpq_rebuild")
     ivfpq_index_save(spark, base, grown)
+
+    def model_rows():
+        return {
+            name: sorted(map(tuple, spark.read.parquet(f"{grown}/{name}").collect()))
+            for name in ("codebook.parquet", "centroids.parquet")
+        }
+
+    models_before = model_rows()
     meta_before = spark.read.parquet(f"{grown}/meta.parquet").head()
     assert ivfpq_index_add_vectors(spark, grown, delta) == delta.count()
     meta_after = spark.read.parquet(f"{grown}/meta.parquet").head()
     assert meta_after.n_corpus == e.count()
     assert meta_after.nlist == meta_before.nlist  # geometry untouched
+    assert model_rows() == models_before  # no model was re-fit
+
+    with pytest.raises(ValueError, match="already in"):
+        ivfpq_index_add_vectors(spark, grown, delta)
+    assert ivfpq_index_add_vectors(spark, grown, delta.limit(0)) == 0
+    assert spark.read.parquet(f"{grown}/meta.parquet").head().n_corpus == e.count()
     a = spark.read.parquet(f"{grown}/assign.parquet")
     counts = a.groupBy("vec_id").count().agg(F.min("count"), F.max("count")).first()
     assert counts == (N_ASSIGN, N_ASSIGN)
@@ -3406,19 +3352,19 @@ def test_cell_assign_kernel_bit_identical(spark):
 
 
 def test_cosine_norm_hoist_bit_identical(spark):
-    """The r16 norm hoist rewrites cosine as dot/(nrm·cnorm) with both
-    sqrt factors precomputed. Pin full-precision equality against the
-    original unhoisted `cosine(a, b)` expression on every (query ×
-    corpus) pair of the fixture — the hoist must be a pure
-    re-evaluation-count change, never a value change."""
+    """Every scoring site publishes _hoisted_cosine: cosine as
+    dot/(_qnrm·_nrm) with both sqrt factors precomputed per row. Pin
+    full-precision equality against the unhoisted `cosine(a, b)` on
+    every (query × corpus) pair of the fixture — the hoist must be a
+    pure re-evaluation-count change, never a value change."""
     import pyspark.sql.functions as F
 
     from promptly_data_pipelines_spark.catalog import table
     from promptly_data_pipelines_spark.extensions.similarity import (
         _doubled,
+        _hoisted_cosine,
         _with_nrm,
         cosine,
-        dot,
     )
 
     e = _with_nrm(_doubled(table(spark, SF_DIR, "embeddings")), "vec")
@@ -3429,10 +3375,6 @@ def test_cosine_norm_hoist_bit_identical(spark):
     ).limit(20)
     pairs = e.crossJoin(F.broadcast(q))
     mismatch = pairs.select(
-        (
-            cosine(F.col("qvec"), F.col("vec"))
-            == dot(F.col("qvec"), F.col("vec"))
-            / (F.col("_qnrm") * F.col("_nrm"))
-        ).alias("same")
+        (cosine(F.col("qvec"), F.col("vec")) == _hoisted_cosine()).alias("same")
     ).filter(~F.col("same"))
     assert mismatch.count() == 0
