@@ -38,6 +38,7 @@ from __future__ import annotations
 import glob
 import gzip
 import io
+import itertools
 import os
 import shutil
 import sys as _sys
@@ -406,18 +407,25 @@ def _stage_records(staging: str, iterator, gz: bool = False) -> _WarcCommit:
     nothing (no zero-record files in the final layout). ``gz`` writes
     each record as its own gzip member (record-at-time compression —
     the layout that preserves record-level random access, ISO 28500
-    Annex C / Common Crawl), deterministic via ``mtime=0``."""
+    Annex C / Common Crawl), deterministic via ``mtime=0``.
+
+    The first record's bytes are built before the staging dir is made:
+    an empty task, or one whose first row fails, of an aborted job must
+    not re-create the dir after the driver's ``abort`` removed it."""
+    records = (
+        gzip.compress(rec, mtime=0) if gz else rec
+        for rec in map(_row_record_bytes, iterator)
+    )
+    first = next(records, None)
+    if first is None:
+        return _WarcCommit(None, 0)
     os.makedirs(staging, exist_ok=True)
     staged = os.path.join(staging, f"task-{uuid.uuid4().hex}.warctmp")
     n = 0
     with open(staged, "wb") as fh:
-        for row in iterator:
-            rec = _row_record_bytes(row)
-            fh.write(gzip.compress(rec, mtime=0) if gz else rec)
+        for rec in itertools.chain([first], records):
+            fh.write(rec)
             n += 1
-    if n == 0:
-        os.remove(staged)
-        return _WarcCommit(None, 0)
     return _WarcCommit(staged, n)
 
 

@@ -324,6 +324,25 @@ def test_failed_write_leaves_old_data_intact(spark, tmp_path):
     assert not [d for d in os.listdir(out) if d.startswith("_staging")]
 
 
+def test_stage_records_makes_no_staging_dir_before_a_record(tmp_path):
+    """A task of an aborted job can still run after the driver's abort
+    removed the staging dir. An empty task, or one whose first row
+    fails, must not re-create it."""
+    import pytest
+    from pyspark.sql import Row
+
+    from promptly_data_pipelines_spark.operators.warcsource import _stage_records
+
+    staging = str(tmp_path / "_staging-t")
+    assert _stage_records(staging, iter([])).staged is None
+    assert not os.path.exists(staging)
+    bad = Row(record_id="urn:uuid:t-1", target_uri="https://example.org/1", payload=None)
+    for gz in (False, True):
+        with pytest.raises(ValueError, match="NULL target_uri/payload"):
+            _stage_records(staging, iter([bad]), gz=gz)
+        assert not os.path.exists(staging)
+
+
 def test_stream_commit_is_retry_idempotent(tmp_path):
     """Unit-level: committing the SAME batchId twice (an engine retry)
     replaces the batch's files instead of duplicating them."""

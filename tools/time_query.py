@@ -7,6 +7,11 @@ Run:  python tools/time_query.py [-r REPS] [-w] name...
   -r REPS  timed repetitions (default 3; min is reported)
   -w       one untimed warmup pass first (the bench PAIR_OPS discipline)
 
+PDP_TIME_QUERY_CONF="k=v,k=v" adds session confs for an A/B. Keys of
+session.RUNTIME_DEFAULTS (AQE, timezone, parquet codec) are refused:
+the first table read runs tune_session, which resets them, so both
+sides would measure the default. A/B those by commit instead.
+
 Prints one JSON line {name: {"min": s, "runs": [...]}}.
 """
 
@@ -35,16 +40,23 @@ def main() -> None:
         all_queries,
         local_only_queries,
     )
-    from promptly_data_pipelines_spark.session import get_session
+    from promptly_data_pipelines_spark.session import RUNTIME_DEFAULTS, get_session
 
     # conf A/B hook: PDP_TIME_QUERY_CONF="k=v,k=v" applies extra confs
     # on top of the engine defaults, so a candidate session setting can
-    # be measured without touching session.py
+    # be measured without touching session.py; RUNTIME_DEFAULTS keys are
+    # refused (see the module docstring)
     extra = dict(
         kv.split("=", 1)
         for kv in os.environ.get("PDP_TIME_QUERY_CONF", "").split(",")
         if "=" in kv
     )
+    reset = sorted(set(extra) & set(RUNTIME_DEFAULTS))
+    if reset:
+        sys.exit(
+            f"PDP_TIME_QUERY_CONF: {', '.join(reset)} is reset by tune_session on "
+            "the first table read; A/B a runtime default by commit instead"
+        )
     spark = get_session(
         "pdp-time-query", cpus=CPUS, shuffle_partitions=CPUS, extra_conf=extra or None
     )
